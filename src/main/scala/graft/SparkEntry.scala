@@ -6626,7 +6626,7 @@ object SparkEntry {
       val (_, t3) = mv.refresh(s)
       require(t3.nonEmpty && t3.size <= 4,
         s"a one-dim change must rewrite O(1) state buckets, got ${t3.size}")
-      require(mv.lastApplied(s) == ((2, 2)),
+      require(mv.lastApplied(s)._2 == Seq(2, 2),
         s"ledger must record (fact v2, dim v2), got ${mv.lastApplied(s)}")
       mv.read(s).select($"prio", $"n", $"sqty".cast("double").as("sqty"))
         .orderBy($"prio")
@@ -6872,7 +6872,7 @@ object SparkEntry {
       val (_, t3) = mv.refresh(s)
       require(t3.nonEmpty && t3.size <= 4,
         s"a one-dim flip must rewrite O(1) state buckets, got ${t3.size}")
-      require(mv.lastApplied(s) == ((2, 2)),
+      require(mv.lastApplied(s)._2 == Seq(2, 2),
         s"ledger must record (fact v2, dim v2), got ${mv.lastApplied(s)}")
       mv.read(s).select($"prio", $"n", $"ds").orderBy($"prio")
       }

@@ -149,21 +149,12 @@ final class GoldPipeline(goldDir: String, checkpointRoot: String) {
     * view's ledger, the same property the table stages get from their
     * stream checkpoints. */
   private def refreshView(spark: SparkSession, v: GoldView): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    def has(n: String) = {
-      val p = new org.apache.hadoop.fs.Path(v.root, n)
-      p.getFileSystem(hconf).exists(p)
-    }
-    if (has("_mvj")) {
-      val x = new graft.tables.MaterializedJoinAggView(v.root)
-      x.refresh(spark)
-      if (v.registerRewrite) x.registerRewrite(spark)
-    } else if (has("_mvs")) {
-      val x = new graft.tables.MaterializedStarAggView(v.root)
+    if (graft.tables.isSingleTableView(spark, v.root)) {
+      val x = new graft.tables.MaterializedAggView(v.root)
       x.refresh(spark)
       if (v.registerRewrite) x.registerRewrite(spark)
     } else {
-      val x = new graft.tables.MaterializedAggView(v.root)
+      val x = new graft.tables.MaterializedStarAggView(v.root)
       x.refresh(spark)
       if (v.registerRewrite) x.registerRewrite(spark)
     }

@@ -166,64 +166,37 @@ object AggRollupRewrite extends Rule[LogicalPlan] {
   def unregisterView(basePath: String): Unit =
     registry.remove(canon(basePath))
 
-  /** Join-rollup registration: the (fact, dim) pair, its join keys, and a
-    * live rollup-format provider. */
-  final case class JoinRollup(spark: SparkSession, provider: () => DataFrame,
-      factRoot: String, dimRoot: String, joinKeys: Seq[String],
-      dims: Seq[String], measures: Seq[String],
-      distincts: Map[String, () => DataFrame] = Map.empty,
-      derivedDims: Map[String, Expression] = Map.empty)
-
-  private val joinRegistry = TrieMap.empty[(String, String), JoinRollup]
-
-  /** Point aggregates over `fact ⋈ dim` (inner, equi on `joinKeys`) at a
-    * LIVE join-rollup relation — the incrementally-maintained
-    * [[graft.tables.MaterializedJoinAggView]] registers its state this
-    * way. Same partial format (and `distincts` pair-relation +
-    * `derivedDims` expression-matching contracts) as [[registerView]]. */
-  def registerJoinView(spark: SparkSession, factRoot: String, dimRoot: String,
-      joinKeys: Seq[String], dims: Seq[String], measures: Seq[String],
-      provider: () => DataFrame,
-      distincts: Map[String, () => DataFrame] = Map.empty,
-      derivedDims: Map[String, Expression] = Map.empty): Unit =
-    joinRegistry.put((canon(factRoot), canon(dimRoot)),
-      JoinRollup(spark, provider, factRoot, dimRoot, joinKeys, dims, measures,
-        distincts, derivedDims))
-
-  /** Remove the join routing for the (fact, dim) pair. */
-  def unregisterJoinView(factRoot: String, dimRoot: String): Unit =
-    joinRegistry.remove((canon(factRoot), canon(dimRoot)))
-
   /** Star-rollup registration: the fact root, each dim's (root, join
-    * keys), and a live rollup-format provider. */
-  final case class StarRollup(spark: SparkSession, provider: () => DataFrame,
-      factRoot: String, dims: Seq[(String, Seq[String])],
-      groupBy: Seq[String], measures: Seq[String],
-      distincts: Map[String, () => DataFrame] = Map.empty,
-      derivedDims: Map[String, Expression] = Map.empty)
+    * keys), and the live rollup (its dims are the view's GROUP BY). */
+  final case class StarRollup(rollup: Rollup, factRoot: String,
+      dims: Seq[(String, Seq[String])])
 
-  private val starRegistry = TrieMap.empty[String, StarRollup]
+  /** Keyed by (fact root, dim roots in declared order), canonicalized:
+    * several star (and one-dimension join) views over one fact coexist,
+    * each answering the queries over its own dims. */
+  private val starRegistry = TrieMap.empty[(String, Seq[String]), StarRollup]
 
   /** Point aggregates over the INNER equi-join of fact and ALL the dims
     * (each on its own keys) at a LIVE star-rollup relation — the
     * incrementally-maintained [[graft.tables.MaterializedStarAggView]]
-    * registers its state this way. Same partial format (and `distincts`
-    * pair-relation + `derivedDims` expression-matching contracts) as
-    * [[registerView]]. */
+    * (and so every join view, its one-dimension case) registers its
+    * state this way. Same partial format (and `distincts` pair-relation
+    * + `derivedDims` expression-matching contracts) as [[registerView]]. */
   def registerStarView(spark: SparkSession, factRoot: String,
       dims: Seq[(String, Seq[String])], groupBy: Seq[String],
       measures: Seq[String], provider: () => DataFrame,
       distincts: Map[String, () => DataFrame] = Map.empty,
       derivedDims: Map[String, Expression] = Map.empty): Unit =
-    starRegistry.put(canon(factRoot),
-      StarRollup(spark, provider, factRoot, dims, groupBy, measures, distincts,
-        derivedDims))
+    starRegistry.put((canon(factRoot), dims.map(d => canon(d._1))),
+      StarRollup(Rollup(spark, provider, groupBy, measures, distincts, derivedDims),
+        factRoot, dims))
 
-  /** Remove the star routing for `factRoot`. */
-  def unregisterStarView(factRoot: String): Unit =
-    starRegistry.remove(canon(factRoot))
+  /** Remove the star routing for the (fact, dims) pair; other views over
+    * the same fact keep routing. */
+  def unregisterStarView(factRoot: String, dimRoots: Seq[String]): Unit =
+    starRegistry.remove((canon(factRoot), dimRoots.map(canon)))
 
-  def clear(): Unit = { registry.clear(); joinRegistry.clear(); starRegistry.clear() }
+  def clear(): Unit = { registry.clear(); starRegistry.clear() }
 
   /** Build + write the rollup table for `base` (one full scan, once):
     * per dims-tuple `__cnt` and per-measure sum/min/max partials. Measures
@@ -274,7 +247,7 @@ object AggRollupRewrite extends Rule[LogicalPlan] {
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (registry.isEmpty && joinRegistry.isEmpty && starRegistry.isEmpty) plan
+    if (registry.isEmpty && starRegistry.isEmpty) plan
     else plan.transform {
       case agg @ Aggregate(groupings, aggExprs, child, _) =>
         rewriteAggregate(agg, groupings, aggExprs, child).getOrElse(agg)
@@ -292,14 +265,8 @@ object AggRollupRewrite extends Rule[LogicalPlan] {
       aggExprs: Seq[NamedExpression], child: LogicalPlan): Option[LogicalPlan] = {
     def attempt(gs: Seq[Expression], as: Seq[NamedExpression],
         c: LogicalPlan): Option[LogicalPlan] =
-      baseScanOf(c).flatMap { case (r, fs) =>
-          rewrite(agg, gs, as, r, fs) }
-        .orElse(joinScanOf(c).flatMap { case (j, fs) =>
-          rewrite(agg, gs, as, Rollup(j.spark, j.provider, j.dims,
-            j.measures, j.distincts, j.derivedDims), fs) })
-        .orElse(starScanOf(c).flatMap { case (st, fs) =>
-          rewrite(agg, gs, as, Rollup(st.spark, st.provider, st.groupBy,
-            st.measures, st.distincts, st.derivedDims), fs) })
+      baseScanOf(c).orElse(starScanOf(c)).flatMap { case (r, fs) =>
+        rewrite(agg, gs, as, r, fs) }
     attempt(groupings, aggExprs, child).orElse {
       inlineGroupingProject(groupings, aggExprs, child) match {
         case Some((g2, a2, c2)) => attempt(g2, a2, c2)
@@ -354,7 +321,7 @@ object AggRollupRewrite extends Rule[LogicalPlan] {
     * filtered-distinct aggregate; every other query keeps the optimizer-
     * stage path (identical behavior, post-pushdown shapes). */
   private[graft] def applyFilteredDistinct(plan: LogicalPlan): LogicalPlan =
-    if (registry.isEmpty && joinRegistry.isEmpty && starRegistry.isEmpty) plan
+    if (registry.isEmpty && starRegistry.isEmpty) plan
     else plan.transform {
       case agg @ Aggregate(groupings, aggExprs, child, _)
           if aggExprs.exists(_.exists {
@@ -446,7 +413,7 @@ object AggRollupRewrite extends Rule[LogicalPlan] {
     case other => Seq(other)
   }
 
-  /** ONE copy of the filter-consumption rule all three scan walkers
+  /** ONE copy of the filter-consumption rule both scan walkers
     * share (a change to the tolerated set must reach every routing path
     * at once): tombstone visible-rows conjuncts are CONSUMED and mark
     * the `__DELETED` attributes they reference as covered; everything
@@ -491,7 +458,7 @@ object AggRollupRewrite extends Rule[LogicalPlan] {
     * user filter refuse — the rollup stores full star inner-join group
     * totals and nothing else. */
   private def starScanOf(child: LogicalPlan)
-      : Option[(StarRollup, Seq[Expression])] = {
+      : Option[(Rollup, Seq[Expression])] = {
     if (starRegistry.isEmpty) return None
     val (leaves, conds, raw) = collectJoinTree(child).getOrElse(return None)
     if (leaves.size < 2) return None
@@ -499,9 +466,8 @@ object AggRollupRewrite extends Rule[LogicalPlan] {
       // raw leg/tree conjuncts: dimension-only predicates will be applied
       // to the rollup (derived-dim subtrees substitute to their state
       // columns first); anything else must be an inferred isnotnull(key)
-      val (dimFs, rest) = classifyFilters(raw,
-        Rollup(st.spark, st.provider, st.groupBy, st.measures, st.distincts,
-          st.derivedDims)).partition(dimOnly(_, st.groupBy))
+      val (dimFs, rest) = classifyFilters(raw, st.rollup)
+        .partition(dimOnly(_, st.rollup.dims))
       val nnOpt: Option[Set[String]] = {
         val xs = rest.map {
           case org.apache.spark.sql.catalyst.expressions.IsNotNull(
@@ -572,78 +538,8 @@ object AggRollupRewrite extends Rule[LogicalPlan] {
         }
       }
       }
-      if (matches) Some((st, dimFs)) else None
+      if (matches) Some((st.rollup, dimFs)) else None
     })
-  }
-
-  /** The registered join rollup, if `child` is exactly the INNER equi-join
-    * of the registered (fact, dim) pair on exactly the registered join
-    * keys (either side order; optionally under attribute-only Projects —
-    * the shape `fact.join(dim, keys).groupBy(...)` analyzes to), plus the
-    * dimension-only filter conjuncts to apply to the rollup. A leg may
-    * carry the visible-rows tombstone filter (consumed — and REQUIRED if
-    * the leg's relation carries `__DELETED`), optimizer-inferred
-    * isnotnull(<join key>) conjuncts, and dimension-only predicates
-    * (applied); any other filter, a different condition, or an outer
-    * join refuses: the rollup stores inner-join group totals. */
-  private def joinScanOf(child: LogicalPlan)
-      : Option[(JoinRollup, Seq[Expression])] = child match {
-    case Project(projectList, grandchild) if projectList.forall(_.isInstanceOf[Attribute]) =>
-      joinScanOf(grandchild)
-    case s: org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias =>
-      joinScanOf(s.child)
-    case Join(l, r, Inner, Some(cond), _) =>
-      def rootsOf(p: LogicalPlan, acc: Seq[Expression],
-          covered: Set[org.apache.spark.sql.catalyst.expressions.ExprId])
-          : Option[(List[Path], Seq[Expression])] = p match {
-        case Project(pl, gc) if pl.forall(_.isInstanceOf[Attribute]) =>
-          rootsOf(gc, acc, covered)
-        case s: org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias =>
-          rootsOf(s.child, acc, covered)
-        case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-          val (rest, newCovered) = consumeTombstones(f.condition, covered)
-          rootsOf(f.child, acc ++ rest, newCovered)
-        case lr: LogicalRelation => lr.relation match {
-          case fs: HadoopFsRelation if coveredLeaf(lr, covered) =>
-            Some((fs.location.rootPaths.toList, acc))
-          case _ => None
-        }
-        case _ => None
-      }
-      def regFor(a: List[Path], b: List[Path]): Option[JoinRollup] =
-        joinRegistry.values.find(j =>
-          underRoot(a, canon(j.factRoot)) && underRoot(b, canon(j.dimRoot)))
-      for {
-        (lRoots, lRaw) <- rootsOf(l, Nil, Set.empty)
-        (rRoots, rRaw) <- rootsOf(r, Nil, Set.empty)
-        j <- regFor(lRoots, rRoots).orElse(regFor(rRoots, lRoots))
-        // leg conjuncts: dimension-only predicates apply to the rollup
-        // (derived-dim subtrees substitute to their state columns first,
-        // and isnotnulls the applied substitution provably implies drop);
-        // the rest must be the optimizer's inferred isnotnull(join key)
-        (dimFs, rest) = classifyFilters(lRaw ++ rRaw,
-          Rollup(j.spark, j.provider, j.dims, j.measures, j.distincts,
-            j.derivedDims)).partition(dimOnly(_, j.dims))
-        if rest.forall {
-          case org.apache.spark.sql.catalyst.expressions.IsNotNull(
-            a: AttributeReference) => j.joinKeys.contains(a.name)
-          case _ => false
-        }
-        // condition must be exactly the registered equi-keys — both
-        // operands named the key AND coming from OPPOSITE legs (a
-        // tautological fact.k = fact.k condition over a cross join would
-        // otherwise pass every name check)
-        conds = splitConjunctsShared(cond)
-        if conds.size == j.joinKeys.size && conds.forall {
-          case EqualTo(a: AttributeReference, b: AttributeReference) =>
-            a.name == b.name && j.joinKeys.contains(a.name) &&
-              ((l.outputSet.contains(a) && r.outputSet.contains(b)) ||
-                (r.outputSet.contains(a) && l.outputSet.contains(b)))
-          case _ => false
-        } && conds.collect { case EqualTo(a: AttributeReference, _) => a.name }
-          .toSet == j.joinKeys.toSet
-      } yield (j, dimFs)
-    case _ => None
   }
 
   /** Registry hit for a scan path: exact, or an ANCESTOR directory — a

@@ -258,16 +258,10 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
     case VacuumMv(mv, keep) =>
       VacuumMaterializedViewCommand(mv, Option(keep).map(_.toInt).getOrElse(2))
     case QueryMv(mv) =>
-      // one query form for all three view kinds — dispatch on the spec file
+      // one query form for every view kind — dispatch on the spec file
       val sp = SparkSession.active
-      val hconf = sp.sparkContext.hadoopConfiguration
-      def has(name: String) = {
-        val p = new org.apache.hadoop.fs.Path(mv, name)
-        p.getFileSystem(hconf).exists(p)
-      }
-      (if (has("_mvj")) new graft.tables.MaterializedJoinAggView(mv).read(sp)
-       else if (has("_mvs")) new graft.tables.MaterializedStarAggView(mv).read(sp)
-       else new graft.tables.MaterializedAggView(mv).read(sp))
+      (if (graft.tables.isSingleTableView(sp, mv)) new graft.tables.MaterializedAggView(mv).read(sp)
+       else new graft.tables.MaterializedStarAggView(mv).read(sp))
         .queryExecution.logical
     case Changes(path, fromV, toV, keysOpt, withCols, withPre) =>
       changesPlan(path, Right((fromV.toInt, toV.toInt)), Option(keysOpt),
@@ -950,8 +944,8 @@ case class CreateMaterializedViewCommand(mv: String, src: String,
 /** `CREATE MATERIALIZED JOIN VIEW '<mv>' FACT '<fact>' [KEYS (k…)]
   * DIM '<dim>' [KEYS (k…)] ON (jk…) GROUP BY (g…) AGG (count(*) AS n,
   * sum(x) AS sx…) [INTO <n> BUCKETS]` — declare an incrementally-
-  * maintained aggregate over `fact ⋈ dim`
-  * ([[graft.tables.MaterializedJoinAggView]]). No data moves until
+  * maintained aggregate over `fact ⋈ dim` — a one-dimension star view
+  * ([[graft.tables.MaterializedStarAggView]]). No data moves until
   * REFRESH. */
 case class CreateMaterializedJoinViewCommand(mv: String, fact: String,
     factKeys: Seq[String], dim: String, dimKeys: Seq[String],
@@ -971,14 +965,17 @@ case class CreateMaterializedJoinViewCommand(mv: String, fact: String,
 /** `REFRESH MATERIALIZED JOIN VIEW '<mv>'` — fold BOTH sources' change
   * feeds since the last refresh into the view's bucketed state via the
   * delta-join identity (O(deltas + pruned lookups), exactly-once via the
-  * packed two-version ledger entry). */
+  * star view's numbered version-vector ledger). A root with more than
+  * one dimension fails by name before any work. */
 case class RefreshMaterializedJoinViewCommand(mv: String) extends LeafRunnableCommand {
   override val output: Seq[Attribute] = Seq(
     AttributeReference("fact_version", IntegerType, nullable = false)(),
     AttributeReference("dim_version", IntegerType, nullable = false)(),
     AttributeReference("buckets_rewritten", IntegerType, nullable = false)())
   override def run(spark: SparkSession): Seq[Row] = {
-    val ((f, d), touched) = new graft.tables.MaterializedJoinAggView(mv).refresh(spark)
+    val v = new graft.tables.MaterializedJoinAggView(mv)
+    graft.tables.MaterializedJoinAggView.dimOf(v.spec(spark), mv)
+    val (Seq(f, d), touched) = v.refresh(spark)
     Seq(Row(f, d, touched.size))
   }
 }
@@ -1046,7 +1043,8 @@ case class DescribeMaterializedStarViewCommand(mv: String) extends LeafRunnableC
 
 /** `DESCRIBE MATERIALIZED JOIN VIEW '<mv>'` — the join view's metadata
   * row: both source roots, join keys, grouping, declared aggregates,
-  * state bucket count, and the (fact, dim) versions last applied. */
+  * state bucket count, and the (fact, dim) versions last applied. A root
+  * with more than one dimension fails by name. */
 case class DescribeMaterializedJoinViewCommand(mv: String) extends LeafRunnableCommand {
   override val output: Seq[Attribute] = Seq(
     AttributeReference("fact", StringType, nullable = false)(),
@@ -1060,13 +1058,14 @@ case class DescribeMaterializedJoinViewCommand(mv: String) extends LeafRunnableC
   override def run(spark: SparkSession): Seq[Row] = {
     val v = new graft.tables.MaterializedJoinAggView(mv)
     val sp = v.spec(spark)
-    val (f, d) = v.lastApplied(spark)
+    val dim = graft.tables.MaterializedJoinAggView.dimOf(sp, mv)
+    val Seq(f, d) = v.lastApplied(spark)._2
     // derived dims render inline in group_by as `expr AS name` — the same
     // syntax CREATE accepted, so DESCRIBE round-trips the DDL
     val derivedOf = sp.derived.toMap
     val groupRendered = sp.groupBy.map(g =>
       derivedOf.get(g).map(e => s"$e AS $g").getOrElse(g))
-    Seq(Row(sp.factRoot, sp.dimRoot, sp.joinKeys.mkString(","),
+    Seq(Row(sp.factRoot, dim.root, dim.join.mkString(","),
       groupRendered.mkString(","), sp.aggs.map(_.render).mkString(","),
       sp.numBuckets, f, d))
   }
@@ -1110,19 +1109,11 @@ case class AlterMaterializedViewRewriteCommand(mv: String, enable: Boolean)
     AttributeReference("mv", StringType, nullable = false)(),
     AttributeReference("rewrite", StringType, nullable = false)())
   override def run(spark: SparkSession): Seq[Row] = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    def has(name: String) = {
-      val p = new org.apache.hadoop.fs.Path(mv, name)
-      p.getFileSystem(hconf).exists(p)
-    }
-    if (has("_mvj")) {
-      val v = new graft.tables.MaterializedJoinAggView(mv)
-      if (enable) v.registerRewrite(spark) else v.unregisterRewrite(spark)
-    } else if (has("_mvs")) {
-      val v = new graft.tables.MaterializedStarAggView(mv)
+    if (graft.tables.isSingleTableView(spark, mv)) {
+      val v = new graft.tables.MaterializedAggView(mv)
       if (enable) v.registerRewrite(spark) else v.unregisterRewrite(spark)
     } else {
-      val v = new graft.tables.MaterializedAggView(mv)
+      val v = new graft.tables.MaterializedStarAggView(mv)
       if (enable) v.registerRewrite(spark) else v.unregisterRewrite(spark)
     }
     Seq(Row(mv, if (enable) "enabled" else "disabled"))
@@ -1148,15 +1139,10 @@ case class VacuumMaterializedViewCommand(mv: String, keep: Int)
     if (keep < 1) throw new IllegalArgumentException(
       s"VACUUM MATERIALIZED VIEW: KEEP must be >= 1 (the live version " +
         s"cannot be reclaimed), got $keep")
-    val hconf = spark.sparkContext.hadoopConfiguration
-    def has(name: String) = {
-      val p = new org.apache.hadoop.fs.Path(mv, name)
-      p.getFileSystem(hconf).exists(p)
-    }
     val auxKept: Option[Int] =
-      if (has("_mvj")) new graft.tables.MaterializedJoinAggView(mv).vacuum(spark, keep)
-      else if (has("_mvs")) new graft.tables.MaterializedStarAggView(mv).vacuum(spark, keep)
-      else new graft.tables.MaterializedAggView(mv).vacuum(spark, keep)
+      if (graft.tables.isSingleTableView(spark, mv))
+        new graft.tables.MaterializedAggView(mv).vacuum(spark, keep)
+      else new graft.tables.MaterializedStarAggView(mv).vacuum(spark, keep)
     Seq(Row(mv, keep, auxKept.map(Int.box).orNull))
   }
 }

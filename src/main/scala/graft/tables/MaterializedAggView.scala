@@ -531,7 +531,7 @@ object MaterializedAggView {
   /** Resolve each declared derived expression against `schema` (an empty
     * frame — analysis only, no IO) and NORMALIZE it for the structural
     * grouping-expression match ([[graft.plans.AggRollupRewrite.normalizeDim]]).
-    * Shared by all three view kinds' `registerRewrite`: the single-table
+    * Shared by both view engines' `registerRewrite`: the single-table
     * kind resolves over the source schema, join/star over the JOINED
     * column set (fact columns ++ each dim's non-key columns), which is
     * exactly the namespace a query's grouping expression resolves in. */
@@ -549,7 +549,7 @@ object MaterializedAggView {
       }.toMap
     }
 
-  /** Create-time derived-dim validation shared by all three view kinds
+  /** Create-time derived-dim validation shared by both view engines
     * (the fold/spec machinery is kind-agnostic, so the contract is too). */
   private[tables] def validateDerived(groupBy: Seq[String], aggs: Seq[Agg],
       derived: Seq[(String, String)]): Unit = {
@@ -646,7 +646,7 @@ object MaterializedAggView {
   private def sumCol(as: String) = s"__mv_sum_$as"
   private def sumSqCol(as: String) = s"__mv_sumsq_$as"
   private def mmCol(fn: String, as: String) = s"__mv_${fn}_$as"
-  private def dcCol(as: String) = s"__mv_dc_$as"
+  private[tables] def dcCol(as: String) = s"__mv_dc_$as"
 
   final case class Agg(fn: String, col: Option[String], as: String) {
     def render: String = s"$fn:${col.getOrElse("*")}:$as"
@@ -1076,7 +1076,7 @@ object MaterializedAggView {
 
   /** Accumulator type for one additive measure: exact for integrals
     * (LONG) and decimals (DECIMAL(p+10, s) — Spark's own sum widening);
-    * double for floats. ONE copy shared by all three view kinds — a
+    * double for floats. ONE copy shared by both view engines — a
     * widening fix here reaches every kind. */
   private[tables] def accumulatorType(fn: String, colName: String,
       dt: DataType): DataType = dt match {

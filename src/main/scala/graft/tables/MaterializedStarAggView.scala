@@ -6,10 +6,11 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Incrementally-maintained aggregate over a STAR join — one fact table
-  * inner-joined to N dimensions, each on its own equi-keys — the full
-  * generalization of [[MaterializedJoinAggView]] (which stays as the
-  * simpler two-table API). The telescoping delta identity: replacing one
-  * factor at a time, left to right,
+  * inner-joined to N dimensions, each on its own equi-keys. A join view
+  * ([[MaterializedJoinAggView]], `CREATE MATERIALIZED JOIN VIEW`) is the
+  * N = 1 case: same engine, same state layout, same routing. The
+  * telescoping delta identity: replacing one factor at a time, left to
+  * right,
   *
   * {{{
   * F'D1'…Dn' − F D1…Dn  =  ΔF⋈D1'⋈…⋈Dn'
@@ -45,14 +46,17 @@ import org.apache.spark.sql.types._
   * recovery base is always `_applied_<appliedTxn>`, written by the run
   * that committed it and never touched since.
   *
-  * Contracts: as [[MaterializedJoinAggView]] — additive aggregates plus
-  * `count(distinct c)` (the shared aux occurrence fold over the star's
-  * signed joined delta; the crashed-window vector is recorded in
-  * `_applied_aux_<n>` BEFORE any aux merge so replays pin exactly),
-  * non-null JOIN keys with NULL group keys supported via the shared
+  * Contracts: additive aggregates plus `count(distinct c)` (the shared
+  * aux occurrence fold over the star's signed joined delta; the
+  * crashed-window vector is recorded in `_applied_aux_<n>` BEFORE any aux
+  * merge so replays pin exactly), non-null JOIN keys (they drive the
+  * pruned point reads) with NULL group keys supported via the shared
   * null-mask encoding (legacy pre-mask specs keep the non-null group
-  * contract), distinct column names across sides apart from
-  * join keys, `VACUUM … KEEP` ≥ refresh lag on every source. Refreshes
+  * contract and fail loudly on violation), distinct column names across
+  * sides apart from join keys, `VACUUM … KEEP` ≥ refresh lag on every
+  * source. min/max stay out: they would need rescans over the join, a
+  * cost class [[MaterializedAggView]]'s single-table RESCAN mode prices
+  * but a join cannot bound. Refreshes
   * SERIALIZE on the view root's commit lock: two racing refreshes would
   * both claim number n+1, and the loser's vector overwrite could
   * mislabel the winner's committed window — under the lock the loser
@@ -71,8 +75,10 @@ final class MaterializedStarAggView(val root: String) {
 
   def spec(spark: SparkSession): Spec = {
     val f = fs(spark)
-    if (!f.exists(specPath))
+    if (!f.exists(specPath)) {
+      refuseLegacyJoinRoot(f, root)
       throw new IllegalArgumentException(s"MaterializedStarAggView $root: no _mvs spec")
+    }
     val in = f.open(specPath)
     val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
       .map(_.trim).filter(_.nonEmpty).toVector finally in.close()
@@ -296,8 +302,12 @@ final class MaterializedStarAggView(val root: String) {
       .map(MaterializedAggView.applyDerived(_, sp.derived,
         s"MaterializedStarAggView $root"))
       .map(_.select(need.map(col): _*)).reduce(_.unionByName(_))
-    // null-mask encoding on the JOINED delta (see MaterializedJoinAggView
-    // — group columns are plain data columns until the fold)
+    // null-mask encoding on the JOINED delta: group columns are plain
+    // data columns until the fold, so the single-table view's state-
+    // boundary encoding applies unchanged — nullable group values store
+    // as typed stand-ins + the `__mv_nulls` mask key, measures that ARE
+    // nullable group columns aggregate shadowed raw values, and every
+    // key operation below runs null-free over (groupBy…, mask)
     val gk = groupKeys(sp)
     val overlap: Set[String] =
       if (sp.nullMask) sp.aggs.flatMap(_.col).toSet.intersect(sp.groupBy.toSet)
@@ -351,7 +361,7 @@ final class MaterializedStarAggView(val root: String) {
       distinctAggs.map { a =>
         MaterializedAggView.foldDistinct(spark, auxState(sp, a.as), delta,
           col(SignCol), gk, mcol(a.col.get), TxnId, nextN, lastN,
-          dcCol(a.as),
+          MaterializedAggView.dcCol(a.as),
           beforeMerge = () => lock.check(),
           afterMerge = () => onStep(s"aux-merged:${a.as}"),
           prepared = preparedPairs)
@@ -366,9 +376,9 @@ final class MaterializedStarAggView(val root: String) {
     val grouped = dcPrepared.map(_._1).foldLeft(grouped0)((d, dd) => d.join(dd, gk, "left"))
       .transform(Pin(_)) // three downstream actions re-run the legs otherwise
     // null group keys the state machinery cannot represent fail LOUDLY
-    // instead of silently dropping (legacy pre-mask specs: all group
-    // columns; mask specs: stand-in-less types — see MaterializedJoinAggView
-    // for the routed-query hazard this prevents)
+    // rather than silently dropping through the key-equality merges below
+    // (legacy pre-mask specs: all group columns; mask specs: stand-in-less
+    // types the encoding passes through)
     MaterializedAggView.requireNoUnguardedNullGroups(grouped, sp.nullMask,
       sp.groupBy, s"MaterializedStarAggView $root")
 
@@ -492,8 +502,10 @@ final class MaterializedStarAggView(val root: String) {
 
   /** Remove this view's transparent routing (SQL `ALTER MATERIALIZED
     * STAR VIEW … DISABLE REWRITE`). */
-  def unregisterRewrite(spark: SparkSession): Unit =
-    graft.plans.AggRollupRewrite.unregisterStarView(spec(spark).factRoot)
+  def unregisterRewrite(spark: SparkSession): Unit = {
+    val sp = spec(spark)
+    graft.plans.AggRollupRewrite.unregisterStarView(sp.factRoot, sp.dims.map(_.root))
+  }
 
   /** Reclaim storage accumulated by refresh commits — state table to
     * `keep` versions, count-distinct aux tables to at least 2 (the
@@ -525,9 +537,17 @@ object MaterializedStarAggView {
   private val TxnId = "mvs"
   private val SignCol = "__mvs_sign"
   private val MaxInlineKeys = 1000
-  private def nnCol(as: String) = s"__mv_nn_$as"
-  private def sumCol(as: String) = s"__mv_sum_$as"
-  private def dcCol(as: String) = s"__mv_dc_$as"
+
+  /** Join views written before they became one-dimension star views kept
+    * a `_mvj` spec and a packed two-version ledger. They are refused, not
+    * converted: the state rebuilds from the sources on the bootstrap
+    * refresh of a re-created view. */
+  private def refuseLegacyJoinRoot(f: org.apache.hadoop.fs.FileSystem, root: String): Unit =
+    if (f.exists(new Path(root, "_mvj")))
+      throw new IllegalArgumentException(s"MaterializedStarAggView $root: a legacy " +
+        "join-view root (_mvj spec, packed ledger) is no longer supported — delete " +
+        "the directory and re-create the view with CREATE MATERIALIZED JOIN VIEW; " +
+        "its state rebuilds on the first refresh")
 
   /** One dimension: table root, its CDF business keys (empty = from the
     * bucketed manifest), and the equi-join keys shared with the fact. */
@@ -569,6 +589,7 @@ object MaterializedStarAggView {
     val mv = new MaterializedStarAggView(root)
     val f = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val p = new Path(root, "_mvs")
+    refuseLegacyJoinRoot(f, root)
     if (f.exists(p))
       throw new IllegalArgumentException(s"MaterializedStarAggView $root already exists")
     val dimLines = dims.zipWithIndex.flatMap { case (d, i) => Seq(
@@ -589,4 +610,33 @@ object MaterializedStarAggView {
     try out.write(content.getBytes("UTF-8")) finally out.close()
     mv
   }
+}
+
+/** A join view is a one-dimension star view: `CREATE MATERIALIZED JOIN
+  * VIEW` builds the same spec, state and numbered `_applied_<n>` ledger,
+  * so its refresh vector is `Seq(factVersion, dimVersion)`. The type is
+  * the alias in the `graft.tables` package object; this object keeps the
+  * two-table `create` signature. */
+object MaterializedJoinAggView {
+  def create(spark: SparkSession, root: String,
+      factRoot: String, factKeys: Seq[String],
+      dimRoot: String, dimKeys: Seq[String],
+      joinKeys: Seq[String], groupBy: Seq[String],
+      aggs: Seq[MaterializedAggView.Agg],
+      numBuckets: Int = 16,
+      derived: Seq[(String, String)] = Nil): MaterializedJoinAggView =
+    MaterializedStarAggView.create(spark, root, factRoot, factKeys,
+      Seq(MaterializedStarAggView.Dim(dimRoot, dimKeys, joinKeys)), groupBy, aggs,
+      numBuckets, derived)
+
+  /** The single dimension of a join view's spec. A star root with more
+    * dimensions fails by name: the JOIN VIEW SQL surface reports one fact
+    * and one dim version. */
+  def dimOf(sp: MaterializedStarAggView.Spec, root: String): MaterializedStarAggView.Dim =
+    sp.dims match {
+      case Seq(d) => d
+      case ds => throw new IllegalArgumentException(s"MaterializedJoinAggView $root: " +
+        s"a star view with ${ds.size} dimensions is not a join view — use the " +
+        "MATERIALIZED STAR VIEW commands")
+    }
 }

@@ -784,6 +784,35 @@ class EngineCoreSpec extends AnyFunSuite {
     assert(wm.read(spark, "t").contains("2025-01-01 00:00:00.000000"))
   }
 
+  test("WatermarkStore: a torn cdc.json fails ingest by name instead of re-reading from 1900") {
+    val src = tmp("src"); val bronze = tmp("bronze")
+    val wmStore = new WatermarkStore(bronze)
+    Seq((1L, java.sql.Timestamp.valueOf("2024-01-01 10:00:00")),
+      (2L, java.sql.Timestamp.valueOf("2024-01-02 10:00:00")))
+      .toDF("id", "updated_at").write.parquet(s"$src/t.parquet")
+    val spec = TableSpec("dbo", "t", "updated_at")
+    IncrementalIngest.ingestTable(spark, spec, s"$src/t.parquet", bronze, wmStore, "run1")
+    // a torn overwrite: the file holds only a prefix of its JSON
+    val p = new org.apache.hadoop.fs.Path(s"$bronze/t_cdc/cdc.json")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val out = fs.create(p, true)
+    try out.write("""{"cdc": "2024-01""".getBytes("UTF-8")) finally out.close()
+    val e = intercept[IllegalStateException] {
+      IncrementalIngest.ingestTable(spark, spec, s"$src/t.parquet", bronze, wmStore, "run2")
+    }
+    assert(e.getMessage.contains("cdc.json") &&
+      e.getMessage.contains("WatermarkStore.recover"), e.getMessage)
+    assert(spark.read.parquet(s"$bronze/t/*").count() == 2, "bronze must not be re-ingested")
+    // the named remedy heals it: recover, write back, ingest takes nothing
+    wmStore.write(spark, "t", wmStore.recover(spark, "t", "updated_at").get)
+    val r = IncrementalIngest.ingestTable(spark, spec, s"$src/t.parquet", bronze, wmStore, "run3")
+    assert(r.rowsRead == 0)
+    // a crash between write's delete and rename leaves only the tmp: adopted
+    fs.rename(p, new org.apache.hadoop.fs.Path(s"$bronze/t_cdc/cdc.json.tmp"))
+    assert(wmStore.read(spark, "t").contains("2024-01-02 10:00:00.000000"))
+    assert(fs.exists(p))
+  }
+
   // ── IncrementalIngest ─────────────────────────────────────────────────
 
   test("IncrementalIngest: first run takes all, second run takes none, new data flows") {

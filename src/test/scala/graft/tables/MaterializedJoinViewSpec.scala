@@ -7,8 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
 
-/** Incrementally-maintained join-aggregate views: every refresh must
-  * leave the view EQUAL to a full recompute of
+/** Incrementally-maintained join-aggregate views (one-dimension star
+  * views): every refresh must leave the view EQUAL to a full recompute of
   * `fact ⋈ dim GROUP BY … AGG …` over both tables' visible rows, while
   * reading only the deltas (plus pruned lookups) and rewriting only the
   * state buckets holding changed groups. */
@@ -42,8 +42,8 @@ class MaterializedJoinViewSpec extends AnyFunSuite {
       s"$work/fact", Seq("k"), s"$work/dim", Nil, Seq("jk"), Seq("g"),
       Seq(agg("count", None, "n"), agg("sum", Some("x"), "sx")), numBuckets = 8)
 
-    val ((f1, d1), _) = mv.refresh(spark)
-    assert((f1, d1) == (1, 1) && rows(mv) == recompute(fact, dim))
+    val (vec1, _) = mv.refresh(spark)
+    assert(vec1 == Seq(1, 1) && rows(mv) == recompute(fact, dim))
     assert(rows(mv) == Set(("red", 2L, Some(12L)), ("blue", 1L, Some(11L))))
 
     // ── leg 1: fact-side update + insert + delete in one window
@@ -100,9 +100,9 @@ class MaterializedJoinViewSpec extends AnyFunSuite {
       Seq(agg("sum", Some("x"), "sx")), numBuckets = 4)
     mv.refresh(spark)
     val once = rows0(mv)
-    val ((f, d), touched) = mv.refresh(spark)
-    assert((f, d) == (1, 1) && touched.isEmpty && rows0(mv) == once)
-    assert(mv.lastApplied(spark) == ((1, 1)))
+    val (vec, touched) = mv.refresh(spark)
+    assert(vec == Seq(1, 1) && touched.isEmpty && rows0(mv) == once)
+    assert(mv.lastApplied(spark)._2 == Seq(1, 1))
   }
 
   private def rows0(mv: MaterializedJoinAggView): Set[(String, Option[Long])] =
@@ -249,12 +249,12 @@ class MaterializedJoinViewSpec extends AnyFunSuite {
       Seq(agg("count_distinct", Some("v"), "dv")), numBuckets = 4)
     mv.refresh(spark)
     // Y disappears; the refresh CRASHES after the aux occurrence commit
-    // (packed-ledger value fact=2,dim=1) but before the main state commit
+    // (window vector fact=2,dim=1) but before the main state commit
     fact.write(spark, Seq((1, 10L, "X")).toDF("k", "jk", "v"))
-    mv.onStep = s => if (s.startsWith("aux-merged")) sys.error("boom")
+    TestHooks.onMsvStep(mv, s => if (s.startsWith("aux-merged")) sys.error("boom"))
     intercept[RuntimeException] { mv.refresh(spark) }
-    mv.onStep = _ => ()
-    assert(mv.lastApplied(spark) == ((1, 1)))
+    TestHooks.onMsvStep(mv, _ => ())
+    assert(mv.lastApplied(spark)._2 == Seq(1, 1))
     // the source ADVANCES past the crash: Y REVERTS before the replay —
     // the replay must fold EXACTLY the crashed window against the pinned
     // aux base, then the remainder in a second pass (folding the net
@@ -263,7 +263,7 @@ class MaterializedJoinViewSpec extends AnyFunSuite {
     mv.refresh(spark)
     def got = mv.read(spark).as[(String, Long)].collect().toSet
     assert(got == Set(("red", 2L)), got.toString)
-    assert(mv.lastApplied(spark) == ((3, 1)))
+    assert(mv.lastApplied(spark)._2 == Seq(3, 1))
     // aux truly healed: Y vanishing and returning round-trips exactly
     fact.write(spark, Seq((1, 10L, "X")).toDF("k", "jk", "v"))
     mv.refresh(spark)
@@ -378,15 +378,45 @@ class MaterializedJoinViewSpec extends AnyFunSuite {
     mv.refresh(spark)
     assert(got == Set((Some("blue"), 2L, Some(18L), 1L), (None, 1L, Some(5L), 0L)),
       got.toString)
-    // a LEGACY (pre-mask) spec keeps the non-null contract and refuses
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$work/mv2_spec"), "")
+    // a LEGACY (pre-mask) one-dimension spec keeps the non-null contract
+    // and refuses
     new java.io.File(s"$work/mv2").mkdirs()
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$work/mv2/_mvj"),
-      s"factRoot=$work/fact\nfactKeys=k\ndimRoot=$work/dim\ndimKeys=\n" +
-        "joinKeys=jk\ngroupBy=g\naggs=sum:x:sx\nnumBuckets=4\n")
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$work/mv2/_mvs"),
+      s"factRoot=$work/fact\nfactKeys=k\ndims=1\ndim0.root=$work/dim\n" +
+        "dim0.keys=\ndim0.join=jk\ngroupBy=g\naggs=sum:x:sx\nnumBuckets=4\n")
     val legacy = new MaterializedJoinAggView(s"$work/mv2")
     val e = intercept[IllegalArgumentException] { legacy.refresh(spark) }
     assert(e.getMessage.contains("NULL group-key"), e.getMessage)
+  }
+
+  test("a legacy _mvj join-view root is refused by name, never converted") {
+    val work = tmp("mvjlegacy")
+    def sql(q: String) = org.apache.spark.sql.GraftColumnBridge.graftSql(spark, q)
+    val fact = new SnapshotTable(s"$work/fact")
+    val dim = new BucketedSnapshotTable(s"$work/dim", 4, Seq("jk"))
+    fact.write(spark, Seq((1, 10L, 5L)).toDF("k", "jk", "x"))
+    dim.scd1Merge(spark, Seq((10L, 1L, "red")).toDF("jk", "seq", "g"), "seq")
+    new java.io.File(s"$work/mv").mkdirs()
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$work/mv/_mvj"),
+      s"factRoot=$work/fact\nfactKeys=k\ndimRoot=$work/dim\ndimKeys=\n" +
+        "joinKeys=jk\ngroupBy=g\naggs=sum:x:sx\nnumBuckets=4\nnullMask=1\n")
+    def refused(e: Throwable): Unit = assert(
+      e.getMessage.contains(s"$work/mv") &&
+        e.getMessage.contains("re-create the view with CREATE MATERIALIZED JOIN VIEW"),
+      e.getMessage)
+    refused(intercept[IllegalArgumentException] {
+      new MaterializedJoinAggView(s"$work/mv").refresh(spark) })
+    // the kind-agnostic surfaces open it as a star view and refuse too
+    refused(intercept[IllegalArgumentException] {
+      sql(s"MATERIALIZED VIEW '$work/mv'").collect() })
+    refused(intercept[IllegalArgumentException] {
+      sql(s"VACUUM MATERIALIZED JOIN VIEW '$work/mv'").collect() })
+    // CREATE over the legacy root refuses rather than stacking a new spec
+    refused(intercept[IllegalArgumentException] {
+      MaterializedJoinAggView.create(spark, s"$work/mv", s"$work/fact", Seq("k"),
+        s"$work/dim", Nil, Seq("jk"), Seq("g"), Seq(agg("sum", Some("x"), "sx")))
+    })
+    assert(!new java.io.File(s"$work/mv/_mvs").exists())
   }
 
   test("refresh rewrites only the buckets holding changed groups") {

@@ -195,12 +195,67 @@ class MaterializedStarViewSpec extends AnyFunSuite {
       d.getString(1) == s"$work/d1 ON (jk1); $work/d2 ON (jk2)" &&
       d.getString(3) == "count:*:n,sum:x:sx" &&
       d.getLong(5) == 1L && d.getString(6) == "1,1,1", d.toString)
+    // the JOIN VIEW surface reports one fact and one dim version: on a
+    // two-dimension root it fails by name, and REFRESH does no work first
+    Seq("REFRESH", "DESCRIBE").foreach { verb =>
+      val ej = intercept[IllegalArgumentException] {
+        sql(s"$verb MATERIALIZED JOIN VIEW '$work/mv'").collect()
+      }
+      assert(ej.getMessage.contains("2 dimensions is not a join view"), ej.getMessage)
+    }
     // non-additive aggregates refuse with a named error
     val e = intercept[IllegalArgumentException] {
       sql(s"CREATE MATERIALIZED STAR VIEW '$work/mv2' FACT '$work/fact' KEYS (k) " +
         s"DIM '$work/d1' ON (jk1) GROUP BY (c) AGG (min(x) AS mn)").collect()
     }
     assert(e.getMessage.contains("additive"))
+  }
+
+  test("two star views over one fact with different dims each route; DISABLE REWRITE is per view") {
+    val work = tmp("mvs2")
+    val ext = new org.apache.spark.sql.SparkSessionExtensions
+    new graft.GraftExtensions().apply(ext)
+    org.apache.spark.sql.GraftColumnBridge.applyExtensions(ext, spark)
+    def sql(q: String) = org.apache.spark.sql.GraftColumnBridge.graftSql(spark, q)
+    val fact = new SnapshotTable(s"$work/fact")
+    val da = new BucketedSnapshotTable(s"$work/da", 4, Seq("ja"))
+    val db = new BucketedSnapshotTable(s"$work/db", 4, Seq("jb"))
+    fact.write(spark, Seq((1, 10L, 100L, 5L), (2, 10L, 200L, 7L), (3, 20L, 100L, 11L))
+      .toDF("k", "ja", "jb", "x"))
+    da.scd1Merge(spark, Seq((10L, 1L, "red"), (20L, 1L, "blue"))
+      .toDF("ja", "seq", "c"), "seq")
+    db.scd1Merge(spark, Seq((100L, 1L, "eu"), (200L, 1L, "us"))
+      .toDF("jb", "seq", "r"), "seq")
+    val mvA = MaterializedStarAggView.create(spark, s"$work/mva", s"$work/fact",
+      Seq("k"), Seq(dim(s"$work/da", Nil, Seq("ja"))), Seq("c"),
+      Seq(agg("sum", Some("x"), "sx")), numBuckets = 4)
+    val mvB = MaterializedStarAggView.create(spark, s"$work/mvb", s"$work/fact",
+      Seq("k"), Seq(dim(s"$work/db", Nil, Seq("jb"))), Seq("r"),
+      Seq(agg("sum", Some("x"), "sx")), numBuckets = 4)
+    mvA.refresh(spark); mvB.refresh(spark)
+    try {
+      mvA.registerRewrite(spark); mvB.registerRewrite(spark)
+      def qa = fact.readIndexed(spark)
+        .join(graft.cdc.ScdMerge.scd1Current(da.readIndexed(spark)), Seq("ja"))
+        .groupBy(col("c")).agg(sum(col("x")).as("sx"))
+      def qb = fact.readIndexed(spark)
+        .join(graft.cdc.ScdMerge.scd1Current(db.readIndexed(spark)), Seq("jb"))
+        .groupBy(col("r")).agg(sum(col("x")).as("sx"))
+      // each query groups by its own view's only dimension column, so a
+      // plan reading view partials can only be reading that view
+      def routed(q: org.apache.spark.sql.DataFrame): Boolean = {
+        val p = q.queryExecution.optimizedPlan.toString
+        p.contains("__sum_x") && !p.contains("/fact/_v")
+      }
+      assert(routed(qa), qa.queryExecution.optimizedPlan.toString)
+      assert(routed(qb), qb.queryExecution.optimizedPlan.toString)
+      assert(qa.as[(String, Long)].collect().toSet == Set(("red", 12L), ("blue", 11L)))
+      assert(qb.as[(String, Long)].collect().toSet == Set(("eu", 16L), ("us", 7L)))
+      // disabling one view's routing removes only its own entry
+      sql(s"ALTER MATERIALIZED STAR VIEW '$work/mva' DISABLE REWRITE").collect()
+      assert(!routed(qa) && routed(qb))
+      assert(qa.as[(String, Long)].collect().toSet == Set(("red", 12L), ("blue", 11L)))
+    } finally graft.plans.AggRollupRewrite.clear()
   }
 
   test("count(distinct c) over the star: exact through all three telescoping legs") {

@@ -5,6 +5,5 @@ package graft.tables
 object TestHooks {
   def onStep(t: BucketedSnapshotTable, f: String => Unit): Unit = t.onStep = f
   def onMvStep(v: MaterializedAggView, f: String => Unit): Unit = v.onStep = f
-  def onMjvStep(v: MaterializedJoinAggView, f: String => Unit): Unit = v.onStep = f
   def onMsvStep(v: MaterializedStarAggView, f: String => Unit): Unit = v.onStep = f
 }
