@@ -2,6 +2,7 @@ package graft.ingest
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
+import graft.tables.MetaIO
 
 /** Per-table CDC watermark store: `bronze/<table>_cdc/cdc.json` holding
   * `{"cdc": "<max seen value>"}` — the reference's watermark file exactly
@@ -19,24 +20,15 @@ final class WatermarkStore(bronzeDir: String) {
 
   private val CdcValue = """.*"cdc"\s*:\s*"([^"]*)".*""".r
 
-  private def tmpFile(table: String) = new Path(s"$bronzeDir/${table}_cdc/cdc.json.tmp")
-
   /** S2 — watermark lookup. None when no run has committed yet. A
     * `cdc.json` that exists but does not parse is a torn or corrupt
     * watermark: reading on from the initial watermark would re-ingest
     * (duplicate) all of bronze, so it fails by name instead. */
   def read(spark: SparkSession, table: String): Option[String] = {
-    val f = fs(spark)
     val p = file(table)
-    // a crash between `write`'s delete and rename leaves only the complete
-    // tmp: adopt it, as the table pointer flip does
-    if (!f.exists(p) && f.exists(tmpFile(table))) f.rename(tmpFile(table), p)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+    MetaIO.read(fs(spark), p).map { text =>
       text.linesIterator.mkString(" ") match {
-        case CdcValue(v) => Some(v)
+        case CdcValue(v) => v
         case _ => throw new IllegalStateException(s"watermark file $p exists but does " +
           "not parse; rebuild it from bronze with WatermarkStore.recover and write " +
           "the result back before the next ingest")
@@ -45,19 +37,10 @@ final class WatermarkStore(bronzeDir: String) {
   }
 
   /** K2 — replace the watermark (the reference overwrites the same
-    * cdc.json each run). Atomic: the value is written to a tmp file, then
-    * renamed over `cdc.json`, so a crash never leaves a torn watermark. */
-  def write(spark: SparkSession, table: String, value: String): Unit = {
-    val f = fs(spark)
-    val p = file(table)
-    val tmp = tmpFile(table)
-    f.mkdirs(p.getParent)
-    val out = f.create(tmp, true)
-    try out.write(s"""{"cdc": "$value"}""".getBytes("UTF-8")) finally out.close()
-    if (f.exists(p)) f.delete(p, false)
-    if (!f.rename(tmp, p))
-      throw new IllegalStateException(s"watermark file $p: rename from $tmp failed")
-  }
+    * cdc.json each run), crash-safe through [[MetaIO.replace]]: a crash
+    * never leaves a torn watermark. */
+  def write(spark: SparkSession, table: String, value: String): Unit =
+    MetaIO.replace(fs(spark), file(table), s"""{"cdc": "$value"}""")
 
   /** Disaster path: cdc.json is lost but bronze survives — rebuild the
     * watermark as max(cdcCol) over EVERY bronze increment of the table.

@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{DataType, StringType, StructType}
 
+import graft.tables.MetaIO
+
 /** Streaming file ingestion with schema persistence + rescue — the
   * Autoloader surface the reference's silver layer uses
   * (silver_Dimensions.py:25-29: `cloudFiles` + `schemaLocation` +
@@ -47,16 +49,15 @@ object AutoIngest {
     extends RuntimeException(
       s"schema evolved: new columns ${newColumns.mkString(", ")} persisted; restart the stream")
 
+  private def schemaFile(spark: SparkSession, cfg: Config) = {
+    val file = new Path(cfg.schemaDir, "schema.json")
+    (file.getFileSystem(spark.sparkContext.hadoopConfiguration), file)
+  }
+
   /** The persisted schema if one exists. */
   private def persistedSchema(spark: SparkSession, cfg: Config): Option[StructType] = {
-    val fs = new Path(cfg.schemaDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val file = new Path(cfg.schemaDir, "schema.json")
-    if (!fs.exists(file)) None
-    else {
-      val in = fs.open(file)
-      val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      Some(DataType.fromJson(json).asInstanceOf[StructType])
-    }
+    val (fs, file) = schemaFile(spark, cfg)
+    MetaIO.read(fs, file).map(DataType.fromJson(_).asInstanceOf[StructType])
   }
 
   /** Load the persisted schema, inferring + persisting on first contact.
@@ -70,11 +71,8 @@ object AutoIngest {
     }
 
   private def persistSchema(spark: SparkSession, cfg: Config, schema: StructType): Unit = {
-    val fs = new Path(cfg.schemaDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val file = new Path(cfg.schemaDir, "schema.json")
-    fs.mkdirs(file.getParent)
-    val out = fs.create(file, true)
-    try out.write(schema.json.getBytes("UTF-8")) finally out.close()
+    val (fs, file) = schemaFile(spark, cfg)
+    MetaIO.replace(fs, file, schema.json)
   }
 
   /** S3 — open the incremental file stream over `sourceDir`, with rescue

@@ -87,36 +87,11 @@ final class BucketedSnapshotTable(
     * kill a writer between any two steps. */
   private[tables] var onStep: String => Unit = _ => ()
 
-  def currentVersion(spark: SparkSession): Option[Int] = {
-    val f = fs(spark)
-    // MetaIO rides out a concurrent flip's transient states (missing-file
-    // window, checksum-sidecar skew); a genuinely absent pointer falls
-    // through to tmp adoption below.
-    val direct = MetaIO.readSmall(f, pointer)
-    if (direct.isDefined) {
-      direct.map(_.trim.toInt)
-    } else {
-      // Mid-flip crash recovery: the flip is delete(pointer) → rename(tmp,
-      // pointer). A missing pointer with a `_current.tmp.v` present means a
-      // writer died between the two; its manifest + batch dir are complete
-      // (they precede the flip), so the version IS committed — the commit
-      // point is the pointer delete. Adopt the highest tmp, self-healing
-      // the rename. On success the tmp is consumed, so stale tmps can only
-      // be crashed flips.
-      val tmps =
-        if (!f.exists(new Path(root))) Array.empty[Int]
-        else f.listStatus(new Path(root))
-          .map(_.getPath.getName)
-          .filter(_.startsWith("_current.tmp."))
-          .map(_.stripPrefix("_current.tmp.").toInt)
-      if (tmps.isEmpty) None
-      else {
-        val v = tmps.max
-        f.rename(new Path(root, s"_current.tmp.$v"), pointer) // best-effort heal
-        Some(v)
-      }
-    }
-  }
+  /** Lock-free: [[MetaIO.readPointer]] rides out a concurrent flip and
+    * adopts a crashed one's tmp — the commit point is the pointer delete,
+    * and the manifest + batch dir precede it. */
+  def currentVersion(spark: SparkSession): Option[Int] =
+    MetaIO.readPointer(fs(spark), pointer)
 
   def exists(spark: SparkSession): Boolean = currentVersion(spark).isDefined
 
@@ -257,13 +232,7 @@ final class BucketedSnapshotTable(
     val out = f.create(new Path(root, s"_manifest_v$v"), true)
     try out.write(body.getBytes("UTF-8")) finally out.close()
     onStep("manifest_file")
-    val tmp = new Path(root, s"_current.tmp.$v")
-    val o2 = f.create(tmp, true)
-    try o2.write(v.toString.getBytes("UTF-8")) finally o2.close()
-    if (f.exists(pointer)) f.delete(pointer, false)
-    onStep("mid_flip")
-    if (!f.rename(tmp, pointer))
-      throw new IllegalStateException(s"BucketedSnapshotTable $root: pointer flip failed")
+    MetaIO.replace(f, pointer, v.toString, () => onStep("mid_flip"))
   }
 
   /** Read a subset of buckets (directory-pruned: only the named bucket
@@ -517,64 +486,34 @@ final class BucketedSnapshotTable(
 
   // ── CHECK constraints (Delta semantics, plain-table parity) ────────────
   //
-  // Stored as "name\tpredicate" lines in `_constraints`, validated against
-  // the VISIBLE table on add, enforced inline in every merge/DML staging
-  // write via assert_true-in-filter (fused into the write plan — no second
-  // scan). Tombstone bookkeeping rows (`__DELETED`) are exempt: a CHECK
+  // Stored by [[Constraints]], validated against the VISIBLE table on add,
+  // enforced inline in every merge/DML staging write via
+  // assert_true-in-filter (fused into the write plan — no second scan).
+  // Tombstone bookkeeping rows (`__DELETED`) are exempt: a CHECK
   // constrains the data a reader can see, not the delete marker that
   // removes it.
 
-  private def constraintsFile = new Path(root, "_constraints")
-
   /** Active CHECK constraints, name → SQL predicate. */
-  def constraints(spark: SparkSession): Map[String, String] = {
-    val f = fs(spark)
-    MetaIO.readSmall(f, constraintsFile) match {
-      case None => Map.empty
-      case Some(txt) => txt.linesIterator.filter(_.nonEmpty).map { l =>
-        val Array(n, p) = l.split("\t", 2); n -> p
-      }.toMap
-    }
-  }
-
-  private def writeConstraints(f: org.apache.hadoop.fs.FileSystem,
-      cs: Map[String, String]): Unit = {
-    val tmp = new Path(root, "_constraints.tmp")
-    val out = f.create(tmp, true)
-    try out.write(cs.toSeq.sortBy(_._1)
-      .map { case (n, p) => s"$n\t$p" }.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    if (f.exists(constraintsFile)) f.delete(constraintsFile, false)
-    if (!f.rename(tmp, constraintsFile))
-      throw new IllegalStateException(s"BucketedSnapshotTable $root: constraints write failed")
-  }
+  def constraints(spark: SparkSession): Map[String, String] =
+    Constraints.read(fs(spark), root)
 
   /** Add a CHECK constraint: the existing VISIBLE snapshot is validated
     * first (rejecting the constraint, not the data, if any row breaks
     * it), then every subsequent merge/DML batch is checked inline. */
   def addConstraint(spark: SparkSession, name: String, predicate: String): Unit = {
-    require(!name.contains("\t") && !name.contains("\n") &&
-      !predicate.contains("\t") && !predicate.contains("\n"),
-      "constraint name/predicate must not contain tabs or newlines")
     val f = fs(spark)
     CommitLock.withLockHandle(f, root, commitStaleMs) { _ =>
-      if (exists(spark)) {
-        val bad = ScdMerge.scd1Current(read(spark))
-          .filter(!coalesce(expr(predicate), lit(false))).count()
-        if (bad > 0) throw new IllegalArgumentException(
-          s"CONSTRAINT_VIOLATION: cannot add CHECK $name ($predicate) — " +
-            s"$bad existing row(s) violate it")
-      }
-      writeConstraints(f, constraints(spark) + (name -> predicate))
+      Constraints.add(f, root, name, predicate)(
+        if (!exists(spark)) 0L
+        else ScdMerge.scd1Current(read(spark))
+          .filter(!coalesce(expr(predicate), lit(false))).count())
     }
   }
 
   /** Drop a CHECK constraint (no-op if absent). */
   def dropConstraint(spark: SparkSession, name: String): Unit = {
     val f = fs(spark)
-    CommitLock.withLockHandle(f, root, commitStaleMs) { _ =>
-      writeConstraints(f, constraints(spark) - name)
-    }
+    CommitLock.withLockHandle(f, root, commitStaleMs)(_ => Constraints.drop(f, root, name))
   }
 
   /** Inline enforcement on a staging write's content: raises
@@ -618,7 +557,7 @@ final class BucketedSnapshotTable(
     val ckPath = new Path(checkpointFile)
     val live = currentVersion(spark).getOrElse(
       throw new IllegalStateException(s"BucketedSnapshotTable $root is empty"))
-    val last = MetaIO.readSmall(f, ckPath).map(_.trim.toInt).getOrElse(0)
+    val last = MetaIO.read(f, ckPath).map(_.trim.toInt).getOrElse(0)
     if (live > last) {
       val feed =
         if (last == 0) {
@@ -629,8 +568,7 @@ final class BucketedSnapshotTable(
           else base
         } else changes(spark, last, live, withChangedColumns)
       fn(feed, last, live)
-      val out = f.create(ckPath, true)
-      try out.write(live.toString.getBytes("UTF-8")) finally out.close()
+      MetaIO.replace(f, ckPath, live.toString)
     }
     math.max(live, last)
   }
@@ -2175,11 +2113,8 @@ object BucketedSnapshotTable {
     val spark = SparkSession.active
     val ckPath = new Path(checkpointFile)
     val applied = target.appliedTxn(spark, s"cdf:$consumerId").getOrElse(0L).toInt
-    val ckV = MetaIO.readSmall(f, ckPath).map(_.trim.toInt).getOrElse(0)
-    if (applied > ckV) {
-      val out = f.create(ckPath, true)
-      try out.write(applied.toString.getBytes("UTF-8")) finally out.close()
-    }
+    val ckV = MetaIO.read(f, ckPath).map(_.trim.toInt).getOrElse(0)
+    if (applied > ckV) MetaIO.replace(f, ckPath, applied.toString)
   }
 
   /** Identity of a bucketed table as recorded in its manifest header:

@@ -64,12 +64,8 @@ final class MaterializedAggView(val root: String) {
   private def specPath = new Path(root, "_mv")
 
   def spec(spark: SparkSession): Spec = {
-    val f = fs(spark)
-    if (!f.exists(specPath))
-      throw new IllegalArgumentException(s"MaterializedAggView $root: no _mv spec")
-    val in = f.open(specPath)
-    val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      .map(_.trim).filter(_.nonEmpty).toVector finally in.close()
+    val lines = MetaIO.read(fs(spark), specPath).getOrElse(throw new IllegalArgumentException(
+      s"MaterializedAggView $root: no _mv spec")).linesIterator.map(_.trim).filter(_.nonEmpty).toVector
     val kv = lines.map { l =>
       val i = l.indexOf('=')
       require(i > 0, s"MaterializedAggView $root: malformed _mv line '$l'")
@@ -1155,8 +1151,6 @@ object MaterializedAggView {
     val mv = new MaterializedAggView(root)
     val f = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val p = new Path(root, "_mv")
-    if (f.exists(p))
-      throw new IllegalArgumentException(s"MaterializedAggView $root already exists")
     val content =
       s"""sourceRoot=$sourceRoot
          |sourceKeys=${sourceKeys.mkString(",")}
@@ -1166,8 +1160,13 @@ object MaterializedAggView {
          |nullMask=1
          |""".stripMargin +
         derived.map { case (n, e) => s"derived.$n=$e\n" }.mkString
-    val out = f.create(p, false)
-    try out.write(content.getBytes("UTF-8")) finally out.close()
+    // the view's lock makes the exists check and the write one step:
+    // of two concurrent CREATEs exactly one writes the spec
+    CommitLock.withLock(f, root) {
+      if (f.exists(p))
+        throw new IllegalArgumentException(s"MaterializedAggView $root already exists")
+      MetaIO.replace(f, p, content)
+    }
     mv
   }
 }

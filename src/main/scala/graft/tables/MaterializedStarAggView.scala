@@ -75,13 +75,10 @@ final class MaterializedStarAggView(val root: String) {
 
   def spec(spark: SparkSession): Spec = {
     val f = fs(spark)
-    if (!f.exists(specPath)) {
+    val lines = MetaIO.read(f, specPath).getOrElse {
       refuseLegacyJoinRoot(f, root)
       throw new IllegalArgumentException(s"MaterializedStarAggView $root: no _mvs spec")
-    }
-    val in = f.open(specPath)
-    val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      .map(_.trim).filter(_.nonEmpty).toVector finally in.close()
+    }.linesIterator.map(_.trim).filter(_.nonEmpty).toVector
     val kv = lines.map { l =>
       val i = l.indexOf('=')
       require(i > 0, s"MaterializedStarAggView $root: malformed _mvs line '$l'")
@@ -142,22 +139,17 @@ final class MaterializedStarAggView(val root: String) {
     * the aux vector is the crashed window's only durable record. */
   private def auxVectorPath(n: Long) = new Path(root, s"_applied_aux_$n")
 
-  private def readVector(spark: SparkSession, p: Path): Seq[Int] = {
-    val f = fs(spark)
-    val in = f.open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
-    txt.split(",").map(_.trim.toInt).toSeq
-  }
+  private def readVector(spark: SparkSession, p: Path): Seq[Int] =
+    MetaIO.read(fs(spark), p).getOrElse(throw new IllegalStateException(
+      s"MaterializedStarAggView $root: version vector $p missing"))
+      .trim.split(",").map(_.trim.toInt).toSeq
 
   private def readVector(spark: SparkSession, n: Long): Seq[Int] =
     readVector(spark, vectorPath(n))
 
-  private def writeVector(spark: SparkSession, p: Path, vs: Seq[Int]): Unit = {
-    val out = fs(spark).create(p, true) // overwrite: a stale vector from
-    // a crashed attempt is re-derived, never trusted
-    try out.write(vs.mkString(",").getBytes("UTF-8")) finally out.close()
-  }
+  // a stale vector from a crashed attempt is re-derived, never trusted
+  private def writeVector(spark: SparkSession, p: Path, vs: Seq[Int]): Unit =
+    MetaIO.replace(fs(spark), p, vs.mkString(","))
 
   /** Fold every source's window since the last refresh into the state;
     * returns (version vector now applied, state buckets rewritten).
@@ -589,9 +581,6 @@ object MaterializedStarAggView {
     val mv = new MaterializedStarAggView(root)
     val f = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val p = new Path(root, "_mvs")
-    refuseLegacyJoinRoot(f, root)
-    if (f.exists(p))
-      throw new IllegalArgumentException(s"MaterializedStarAggView $root already exists")
     val dimLines = dims.zipWithIndex.flatMap { case (d, i) => Seq(
       s"dim$i.root=${d.root}",
       s"dim$i.keys=${d.keys.mkString(",")}",
@@ -606,8 +595,12 @@ object MaterializedStarAggView {
       s"numBuckets=$numBuckets",
       "nullMask=1") ++
       derived.map { case (n, e) => s"derived.$n=$e" }).mkString("", "\n", "\n")
-    val out = f.create(p, false)
-    try out.write(content.getBytes("UTF-8")) finally out.close()
+    CommitLock.withLock(f, root) { // see MaterializedAggView.create
+      refuseLegacyJoinRoot(f, root)
+      if (f.exists(p))
+        throw new IllegalArgumentException(s"MaterializedStarAggView $root already exists")
+      MetaIO.replace(f, p, content)
+    }
     mv
   }
 }

@@ -60,32 +60,10 @@ final class SnapshotTable(val root: String,
 
   private val pointer = new Path(root, "_current")
 
-  def currentVersion(spark: SparkSession): Option[Int] = {
-    val f = fs(spark)
-    // MetaIO rides out a concurrent writer's delete→rename pointer flip
-    // (missing-file window + checksum-sidecar skew on local FS)
-    MetaIO.readSmall(f, pointer).map(_.trim.toInt).orElse {
-      // Mid-flip CRASH recovery (the bucketed table's rule, same protocol):
-      // pointer absent but a `_current.tmp.v` present means a writer died
-      // between delete(pointer) and rename(tmp, pointer). Its version dir
-      // and manifest are complete (they precede the flip), so the version
-      // IS committed — without adoption the table would read as v0 and the
-      // next writer's claimVersionDir would RECLAIM (delete) live version
-      // dirs. Adopt the highest tmp and self-heal the rename.
-      val tmps =
-        if (!f.exists(new Path(root))) Array.empty[Int]
-        else f.listStatus(new Path(root))
-          .map(_.getPath.getName)
-          .filter(_.startsWith("_current.tmp."))
-          .map(_.stripPrefix("_current.tmp.").toInt)
-      if (tmps.isEmpty) None
-      else {
-        val v = tmps.max
-        f.rename(new Path(root, s"_current.tmp.$v"), pointer) // best-effort heal
-        Some(v)
-      }
-    }
-  }
+  /** Lock-free: [[MetaIO.readPointer]] rides out a concurrent flip and
+    * adopts a crashed one's tmp. */
+  def currentVersion(spark: SparkSession): Option[Int] =
+    MetaIO.readPointer(fs(spark), pointer)
 
   def exists(spark: SparkSession): Boolean = currentVersion(spark).isDefined
 
@@ -466,24 +444,8 @@ final class SnapshotTable(val root: String,
       (body: CommitLock.Handle => T): T =
     CommitLock.withLockHandle(f, root, commitStaleMs)(body)
 
-  private def commitPointer(spark: SparkSession, v: Int): Unit = {
-    val f = fs(spark)
-    val tmp = new Path(root, s"_current.tmp.$v")
-    val out = f.create(tmp, true)
-    try out.write(v.toString.getBytes("UTF-8")) finally out.close()
-    if (f.exists(pointer)) f.delete(pointer, false)
-    if (!f.rename(tmp, pointer)) {
-      // A reader that observed the pointer missing during our delete→rename
-      // window may have ADOPTED our tmp itself (currentVersion's crash-heal
-      // path runs without the commit lock) — then our rename fails even
-      // though the flip landed. If the pointer now reads v, the commit is
-      // in effect: treat it as success instead of failing a landed commit.
-      val healed = MetaIO.readSmall(f, pointer).map(_.trim.toInt).contains(v)
-      if (!healed)
-        throw new IllegalStateException(s"SnapshotTable $root: pointer flip failed")
-      if (f.exists(tmp)) f.delete(tmp, false)
-    }
-  }
+  private def commitPointer(spark: SparkSession, v: Int): Unit =
+    MetaIO.replace(fs(spark), pointer, v.toString)
 
   /** Compact the live snapshot into `targetFiles` output files (small-file
     * remediation after many incremental commits) — a new version is
@@ -647,7 +609,7 @@ final class SnapshotTable(val root: String,
       if (rest.nonEmpty && rest.forall(_.isDigit)) {
         // a marker can vanish between list and open (another process's
         // pruneTxnMarkers) — a vanished marker is simply not a marker
-        MetaIO.readSmall(f, st.getPath, attempts = 4)
+        MetaIO.read(f, st.getPath, attempts = 4)
           .map(b => rest.toInt -> b.trim.toLong).toSeq
       } else Nil
     }
@@ -664,15 +626,8 @@ final class SnapshotTable(val root: String,
   }
 
   private def recordTxn(f: org.apache.hadoop.fs.FileSystem, appId: String,
-      batch: Long, version: Int): Unit = {
-    val tmp = new Path(root, s"_txn.tmp.${java.util.UUID.randomUUID().toString.take(8)}")
-    val out = f.create(tmp, true)
-    try out.write(batch.toString.getBytes("UTF-8")) finally out.close()
-    val p = new Path(root, s"${txnPrefix(appId)}_v$version")
-    if (f.exists(p)) f.delete(p, false)
-    if (!f.rename(tmp, p))
-      throw new IllegalStateException(s"SnapshotTable $root: txn record flip failed")
-  }
+      batch: Long, version: Int): Unit =
+    MetaIO.replace(f, new Path(root, s"${txnPrefix(appId)}_v$version"), batch.toString)
 
   /** Keep only the newest committed marker per app (the skip check needs
     * just the high-water batch); runs after a successful flip, so a crash
@@ -812,38 +767,14 @@ final class SnapshotTable(val root: String,
   // ranges are disjoint and pruning is maximally selective.
 
   // ── CHECK constraints (ALTER TABLE … ADD CONSTRAINT analog) ───────────
-  // Stored as "name\tpredicate" lines in _constraints; enforced INLINE in
-  // every write path via assert_true inside a filter (one pass, fused into
-  // the staging write's plan — no second scan of the batch, and a filter
-  // condition cannot be pruned away like a dropped projection could).
-
-  private def constraintsFile = new Path(root, "_constraints")
+  // Stored by [[Constraints]]; enforced INLINE in every write path via
+  // assert_true inside a filter (one pass, fused into the staging write's
+  // plan — no second scan of the batch, and a filter condition cannot be
+  // pruned away like a dropped projection could).
 
   /** Active constraints, name → SQL predicate. */
-  def constraints(spark: SparkSession): Map[String, String] = {
-    val f = fs(spark)
-    if (!f.exists(constraintsFile)) Map.empty
-    else {
-      val in = f.open(constraintsFile)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      txt.linesIterator.filter(_.nonEmpty).map { l =>
-        val Array(n, p) = l.split("\t", 2); n -> p
-      }.toMap
-    }
-  }
-
-  private def writeConstraints(f: org.apache.hadoop.fs.FileSystem,
-      cs: Map[String, String]): Unit = {
-    val tmp = new Path(root, "_constraints.tmp")
-    val out = f.create(tmp, true)
-    try out.write(cs.toSeq.sortBy(_._1)
-      .map { case (n, p) => s"$n\t$p" }.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    if (f.exists(constraintsFile)) f.delete(constraintsFile, false)
-    if (!f.rename(tmp, constraintsFile))
-      throw new IllegalStateException(s"SnapshotTable $root: constraints write failed")
-  }
+  def constraints(spark: SparkSession): Map[String, String] =
+    Constraints.read(fs(spark), root)
 
   /** Add a CHECK constraint. Delta semantics: the EXISTING snapshot is
     * validated first (one distributed count of violations — rejecting the
@@ -851,27 +782,17 @@ final class SnapshotTable(val root: String,
     * constraint persists and every subsequent write/append/merge batch is
     * checked inline. DDL serializes under the commit lock. */
   def addConstraint(spark: SparkSession, name: String, predicate: String): Unit = {
-    require(!name.contains("\t") && !name.contains("\n") &&
-      !predicate.contains("\t") && !predicate.contains("\n"),
-      "constraint name/predicate must not contain tabs or newlines")
     val f = fs(spark)
     withCommitLock(f) { _ =>
-      readOption(spark).foreach { df =>
-        val bad = df.filter(!org.apache.spark.sql.functions.expr(predicate)).count()
-        if (bad > 0) throw new IllegalArgumentException(
-          s"CONSTRAINT_VIOLATION: cannot add CHECK $name ($predicate) — " +
-            s"$bad existing row(s) violate it")
-      }
-      writeConstraints(f, constraints(spark) + (name -> predicate))
+      Constraints.add(f, root, name, predicate)(readOption(spark).fold(0L)(
+        _.filter(!org.apache.spark.sql.functions.expr(predicate)).count()))
     }
   }
 
   /** Drop a CHECK constraint (no-op if absent). */
   def dropConstraint(spark: SparkSession, name: String): Unit = {
     val f = fs(spark)
-    withCommitLock(f) { _ =>
-      writeConstraints(f, constraints(spark) - name)
-    }
+    withCommitLock(f)(_ => Constraints.drop(f, root, name))
   }
 
   /** Wrap `df` so scanning it raises CONSTRAINT_VIOLATION on the first
@@ -1403,7 +1324,7 @@ final class SnapshotTable(val root: String,
     val ckPath = new Path(checkpointFile)
     val live = currentVersion(spark).getOrElse(
       throw new IllegalStateException(s"SnapshotTable $root is empty"))
-    val last = MetaIO.readSmall(f, ckPath).map(_.trim.toInt).getOrElse(0)
+    val last = MetaIO.read(f, ckPath).map(_.trim.toInt).getOrElse(0)
     if (live > last) {
       val feed =
         if (last == 0) {
@@ -1423,8 +1344,7 @@ final class SnapshotTable(val root: String,
             keys, withChangedColumns)
         }
       fn(feed, last, live)
-      val out = f.create(ckPath, true)
-      try out.write(live.toString.getBytes("UTF-8")) finally out.close()
+      MetaIO.replace(f, ckPath, live.toString)
     }
     math.max(live, last)
   }

@@ -77,4 +77,40 @@ class ConstraintsSpec extends AnyFunSuite {
     t.write(spark, Seq((7L, 99.0)).toDF("id", "value"))
     assert(t.read(spark).as[(Long, Double)].collect().toSet == Set((7L, 99.0)))
   }
+
+  /** The state a crash between `delete(_constraints)` and the rename
+    * leaves: only the complete tmp. */
+  private def crashMidReplace(root: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(root, "_constraints")
+    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(f.rename(p, new org.apache.hadoop.fs.Path(root, "_constraints.tmp")))
+  }
+
+  private def assertViolation(body: => Unit): Unit = {
+    val e = intercept[Exception](body)
+    val msg = Option(e.getMessage).getOrElse("") +
+      Option(e.getCause).map(_.getMessage).getOrElse("")
+    assert(msg.contains("CONSTRAINT_VIOLATION"), s"unexpected error: $e")
+  }
+
+  test("plain table: constraints survive a crash mid-replace of _constraints") {
+    val t = new SnapshotTable(s"${tmp()}/t")
+    t.write(spark, Seq((1L, 10.0)).toDF("id", "value"))
+    t.addConstraint(spark, "value_nonneg", "value >= 0")
+    crashMidReplace(t.root)
+    assertViolation(t.append(spark, Seq((2L, -1.0)).toDF("id", "value")))
+    assert(t.read(spark).count() == 1)
+    assert(t.constraints(spark) == Map("value_nonneg" -> "value >= 0"))
+  }
+
+  test("bucketed table: constraints survive a crash mid-replace of _constraints") {
+    val t = new BucketedSnapshotTable(tmp(), numBuckets = 2, keys = Seq("k"))
+    t.scd1Merge(spark, Seq((1L, 1L, 10.0)).toDF("k", "seq", "value"), "seq")
+    t.addConstraint(spark, "value_nonneg", "value >= 0")
+    crashMidReplace(t.root)
+    assertViolation(
+      t.scd1Merge(spark, Seq((2L, 1L, -1.0)).toDF("k", "seq", "value"), "seq"))
+    assert(t.read(spark).count() == 1)
+    assert(t.constraints(spark) == Map("value_nonneg" -> "value >= 0"))
+  }
 }

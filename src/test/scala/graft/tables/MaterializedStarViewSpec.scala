@@ -484,4 +484,19 @@ class MaterializedStarViewSpec extends AnyFunSuite {
         "year(dt) must refuse — the star view maintains month(dt)")
     } finally graft.plans.AggRollupRewrite.clear()
   }
+
+  test("two concurrent star CREATEs on one root: one spec lands, the other fails as existing") {
+    val work = tmp("mvsrace")
+    (1 to 4).foreach { round =>
+      val groups = Seq("c", "r")
+      val out = MaterializedViewSpec.raceAll(groups.map(g => () =>
+        MaterializedStarAggView.create(spark, s"$work/mv$round", s"$work/fact",
+          Seq("k"), Seq(dim(s"$work/d1", Nil, Seq("jk1"))), Seq(g),
+          Seq(agg("count", None, "n")))))
+      val won = out.zip(groups).collect { case (Right(mv), g) => (mv, g) }
+      assert(won.size == 1, out)
+      assert(won.head._1.spec(spark).groupBy == Seq(won.head._2))
+      assert(MaterializedViewSpec.lostAsExisting(out), out)
+    }
+  }
 }

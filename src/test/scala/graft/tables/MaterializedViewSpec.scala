@@ -1075,4 +1075,35 @@ class MaterializedViewSpec extends AnyFunSuite {
     }
     assert(bad.getMessage.contains("pin.mode"))
   }
+
+  test("two concurrent CREATEs on one root: one spec lands, the other fails as existing") {
+    val work = tmp("mvrace")
+    (1 to 4).foreach { round =>
+      val groups = Seq("g", "h")
+      val out = MaterializedViewSpec.raceAll(groups.map(g => () =>
+        MaterializedAggView.create(spark, s"$work/mv$round", s"$work/src",
+          Seq("k"), Seq(g), Seq(MaterializedAggView.Agg("count", None, "n")))))
+      val won = out.zip(groups).collect { case (Right(mv), g) => (mv, g) }
+      assert(won.size == 1, out)
+      assert(won.head._1.spec(spark).groupBy == Seq(won.head._2))
+      assert(MaterializedViewSpec.lostAsExisting(out), out)
+    }
+  }
+}
+
+object MaterializedViewSpec {
+  /** Run `bodies` on their own threads, released together. */
+  def raceAll[T](bodies: Seq[() => T]): Seq[Either[Throwable, T]] = {
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val out = new Array[Either[Throwable, T]](bodies.size)
+    val ts = bodies.zipWithIndex.map { case (b, i) =>
+      new Thread(() => { start.await(); out(i) = scala.util.Try(b()).toEither })
+    }
+    ts.foreach(_.start()); start.countDown(); ts.foreach(_.join())
+    out.toSeq
+  }
+
+  def lostAsExisting(out: Seq[Either[Throwable, _]]): Boolean =
+    out.collect { case Left(e) => e }.forall(e =>
+      e.isInstanceOf[IllegalArgumentException] && e.getMessage.contains("already exists"))
 }

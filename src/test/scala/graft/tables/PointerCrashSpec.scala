@@ -39,4 +39,19 @@ class PointerCrashSpec extends AnyFunSuite {
       Set((1L, "a"), (2L, "b"), (3L, "c")))
     assert(t.readVersion(spark, 2).count() == 2) // time travel unharmed
   }
+
+  test("bucketed flip: a reader mid-flip does not fail the landed commit") {
+    val root = s"${java.nio.file.Files.createTempDirectory("ptrflip")}/t"
+    val t = new BucketedSnapshotTable(root, numBuckets = 2, keys = Seq("k"))
+    t.scd1Merge(spark, Seq((1L, 1L, "a")).toDF("k", "seq", "v"), "seq")
+    val v0 = t.currentVersion(spark).get
+    // a lock-free reader lands in the delete→rename window; the commit
+    // must still land once, and report success
+    TestHooks.onStep(t, s => if (s == "mid_flip") t.currentVersion(spark))
+    try t.scd1Merge(spark, Seq((1L, 2L, "b"), (2L, 1L, "c")).toDF("k", "seq", "v"), "seq")
+    finally TestHooks.onStep(t, _ => ())
+    assert(t.currentVersion(spark).contains(v0 + 1))
+    assert(t.read(spark).select("k", "seq", "v").as[(Long, Long, String)].collect().toSet ==
+      Set((1L, 2L, "b"), (2L, 1L, "c")))
+  }
 }
