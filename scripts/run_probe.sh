@@ -18,6 +18,10 @@ while [[ $# -gt 0 && "$1" != "--" ]]; do EXTRA+=("$1"); shift; done
 [[ $# -gt 0 ]] || { echo "usage: run_probe.sh [jvm flags...] -- <mainClass> [args...]" >&2; exit 2; }
 shift
 [[ $# -gt 0 ]] || { echo "usage: run_probe.sh [jvm flags...] -- <mainClass> [args...]" >&2; exit 2; }
+# Heap mirrors build.sbt: half of MemTotal, clamped to 2g..20g (20g where
+# /proc/meminfo is absent); SPARK_DRIVER_MEM overrides it.
+HEAP=$(awk '/^MemTotal:/ {g = int($2 / 2097152); print (g < 2 ? 2 : g > 20 ? 20 : g) "g"}' \
+  /proc/meminfo 2>/dev/null)
 # GC mirrors build.sbt: default ParallelGC, SPARK_GRAFT_GC overrides
 # (comma-separated -XX: suffixes, e.g. SPARK_GRAFT_GC="+UseG1GC").
 GC=()
@@ -27,6 +31,6 @@ if [[ -n "${SPARK_GRAFT_GC:-}" ]]; then
 else
   GC=("-XX:+UseParallelGC" "-XX:ParallelGCThreads=8")
 fi
-exec java -Xmx${SPARK_DRIVER_MEM:-20g} ${GC[@]+"${GC[@]}"} $OPENS \
+exec java -Xmx${SPARK_DRIVER_MEM:-${HEAP:-20g}} ${GC[@]+"${GC[@]}"} $OPENS \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   ${EXTRA[@]+"${EXTRA[@]}"} -cp "$CP" "$@"

@@ -149,15 +149,9 @@ final class GoldPipeline(goldDir: String, checkpointRoot: String) {
     * view's ledger, the same property the table stages get from their
     * stream checkpoints. */
   private def refreshView(spark: SparkSession, v: GoldView): Unit = {
-    if (graft.tables.isSingleTableView(spark, v.root)) {
-      val x = new graft.tables.MaterializedAggView(v.root)
-      x.refresh(spark)
-      if (v.registerRewrite) x.registerRewrite(spark)
-    } else {
-      val x = new graft.tables.MaterializedStarAggView(v.root)
-      x.refresh(spark)
-      if (v.registerRewrite) x.registerRewrite(spark)
-    }
+    val x = graft.tables.openView(spark, v.root)
+    x.refresh(spark)
+    if (v.registerRewrite) x.registerRewrite(spark)
   }
 
   private def runTable(spark: SparkSession, t: GoldTable): Unit = {

@@ -949,14 +949,13 @@ object AggRollupRewrite extends Rule[LogicalPlan] {
     }.zipWithIndex.map { case (c, idx) => c.as(s"__o_$idx") }
     if (!sawDistinct) return None // additive-only queries stay on rewriteExact
 
-    val aDf =
-      if (additive.nonEmpty) {
-        val aggsSeq = additive.toSeq
-        // groupBy() (global) returns exactly ONE row even over an empty
-        // state — SQL's global-aggregate shape
-        state.groupBy(groupNames.map(fc): _*).agg(aggsSeq.head, aggsSeq.tail: _*)
-      } else if (groupNames.nonEmpty) state.select(groupNames.map(fc): _*).distinct()
-      else r.spark.range(1).select() // one empty row: the global anchor
+    // the anchor frame: one row per group, and exactly ONE row for a
+    // global aggregate even over an empty state (SQL's global-aggregate
+    // shape). It is an aggregation, never a distinct(): this rule runs
+    // after the optimizer has replaced Deduplicate nodes, so a new one
+    // fails to plan. A distinct-only query aggregates an unused anchor.
+    val aggsSeq = if (additive.nonEmpty) additive.toSeq else Seq(fsum(fc("__cnt")).as(fresh()))
+    val aDf = state.groupBy(groupNames.map(fc): _*).agg(aggsSeq.head, aggsSeq.tail: _*)
     // one pair-frame read + one aggregation per distinct MEASURE, carrying
     // every slot (unfiltered + each filtered occurrence) in one agg
     val byMeasure: Seq[(String, Seq[(Option[Column], String)])] =

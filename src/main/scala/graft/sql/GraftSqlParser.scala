@@ -260,9 +260,7 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
     case QueryMv(mv) =>
       // one query form for every view kind — dispatch on the spec file
       val sp = SparkSession.active
-      (if (graft.tables.isSingleTableView(sp, mv)) new graft.tables.MaterializedAggView(mv).read(sp)
-       else new graft.tables.MaterializedStarAggView(mv).read(sp))
-        .queryExecution.logical
+      graft.tables.openView(sp, mv).read(sp).queryExecution.logical
     case Changes(path, fromV, toV, keysOpt, withCols, withPre) =>
       changesPlan(path, Right((fromV.toInt, toV.toInt)), Option(keysOpt),
         withCols != null, withPre != null)
@@ -1109,13 +1107,8 @@ case class AlterMaterializedViewRewriteCommand(mv: String, enable: Boolean)
     AttributeReference("mv", StringType, nullable = false)(),
     AttributeReference("rewrite", StringType, nullable = false)())
   override def run(spark: SparkSession): Seq[Row] = {
-    if (graft.tables.isSingleTableView(spark, mv)) {
-      val v = new graft.tables.MaterializedAggView(mv)
-      if (enable) v.registerRewrite(spark) else v.unregisterRewrite(spark)
-    } else {
-      val v = new graft.tables.MaterializedStarAggView(mv)
-      if (enable) v.registerRewrite(spark) else v.unregisterRewrite(spark)
-    }
+    val v = graft.tables.openView(spark, mv)
+    if (enable) v.registerRewrite(spark) else v.unregisterRewrite(spark)
     Seq(Row(mv, if (enable) "enabled" else "disabled"))
   }
 }
@@ -1139,10 +1132,7 @@ case class VacuumMaterializedViewCommand(mv: String, keep: Int)
     if (keep < 1) throw new IllegalArgumentException(
       s"VACUUM MATERIALIZED VIEW: KEEP must be >= 1 (the live version " +
         s"cannot be reclaimed), got $keep")
-    val auxKept: Option[Int] =
-      if (graft.tables.isSingleTableView(spark, mv))
-        new graft.tables.MaterializedAggView(mv).vacuum(spark, keep)
-      else new graft.tables.MaterializedStarAggView(mv).vacuum(spark, keep)
+    val auxKept = graft.tables.openView(spark, mv).vacuum(spark, keep)
     Seq(Row(mv, keep, auxKept.map(Int.box).orNull))
   }
 }

@@ -1,6 +1,5 @@
 package graft.tables
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -55,95 +54,36 @@ import org.apache.spark.sql.types._
   * (groupBy…, mask). Nullable group columns of exotic types without a
   * zero stand-in (arrays, binary, …) keep the legacy non-null contract.
   */
-final class MaterializedAggView(val root: String) {
+final class MaterializedAggView(root: String) extends MaterializedView(root) {
   import MaterializedAggView._
 
-  private def fs(spark: SparkSession) =
-    new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  type SpecT = Spec
+  /** The source version applied. */
+  type Applied = Int
 
-  private def specPath = new Path(root, "_mv")
+  protected def specFile = "_mv"
+  protected def txnId = TxnId
 
   def spec(spark: SparkSession): Spec = {
-    val lines = MetaIO.read(fs(spark), specPath).getOrElse(throw new IllegalArgumentException(
-      s"MaterializedAggView $root: no _mv spec")).linesIterator.map(_.trim).filter(_.nonEmpty).toVector
-    val kv = lines.map { l =>
-      val i = l.indexOf('=')
-      require(i > 0, s"MaterializedAggView $root: malformed _mv line '$l'")
-      l.take(i) -> l.drop(i + 1)
-    }.toMap
-    def list(k: String) = kv.getOrElse(k, "").split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val groupBy = list("groupBy")
-    // derived dims (r13): `derived.<name>=<expr sql>` lines, ordered by
-    // their position in groupBy
-    val derived = derivedOf(kv, groupBy)
-    Spec(
-      sourceRoot = kv.getOrElse("sourceRoot", throw new IllegalArgumentException(
-        s"MaterializedAggView $root: _mv lacks sourceRoot")),
-      sourceKeys = list("sourceKeys"),
-      groupBy = groupBy,
-      aggs = list("aggs").map(Agg.parse),
-      numBuckets = kv.getOrElse("numBuckets", "16").toInt,
-      // null-mask encoding is recorded in the spec at create time: state
-      // written by a pre-mask build has neither the __mv_nulls key column
-      // nor its bucket hashing, and must keep reading/merging with the
-      // legacy layout (and the legacy non-null group contract)
-      nullMask = kv.get("nullMask").contains("1"),
-      derived = derived)
+    val kv = specLines(spark)
+    Spec(kv.need("sourceRoot"), kv.list("sourceKeys"), kv.groupBy, kv.aggs,
+      kv.numBuckets, kv.nullMask, kv.derived)
   }
 
-  /** State business keys: the group columns plus the null-mask (see
-    * [[MaterializedAggView.NullsCol]]) — every internal key join, bucket
-    * probe, and merge runs null-free over these. Views created before
-    * the mask existed keep their recorded legacy layout. */
-  private def groupKeys(sp: Spec): Seq[String] =
-    if (sp.nullMask) sp.groupBy :+ NullsCol else sp.groupBy
-
-  private def state(sp: Spec) =
-    new BucketedSnapshotTable(s"$root/state", sp.numBuckets, groupKeys(sp))
-
-  /** Auxiliary occurrence-count table for one `count(distinct c)`
-    * aggregate: keyed (and bucketed) by (groupKeys…, value) so a
-    * refresh's changed pairs prune to their buckets exactly like the
-    * main state. */
-  private def auxState(sp: Spec, as: String) =
-    new BucketedSnapshotTable(s"$root/dstate_$as", sp.numBuckets,
-      groupKeys(sp) :+ ValCol)
-
-  /** Fault-injection hook for crash-recovery specs (same pattern as
-    * [[BucketedSnapshotTable.onStep]]): called between the aux-table and
-    * main-state commits of a refresh. */
-  private[tables] var onStep: String => Unit = _ => ()
+  private def feedOf(spark: SparkSession, sp: Spec) =
+    graft.streaming.ChangeFeedSource.adapter(spark, Map(
+      "path" -> sp.sourceRoot) ++
+      (if (sp.sourceKeys.nonEmpty) Map("keys" -> sp.sourceKeys.mkString(",")) else Map.empty))
 
   /** Source version the state table's ledger records as applied (0 =
     * never refreshed). */
-  def lastApplied(spark: SparkSession): Int = {
-    val sp = spec(spark)
-    state(sp).appliedTxn(spark, TxnId).map(_.toInt).getOrElse(0)
-  }
+  def lastApplied(spark: SparkSession): Int =
+    state(spec(spark)).appliedTxn(spark, TxnId).map(_.toInt).getOrElse(0)
 
-  /** Fold everything the source committed since the last refresh into the
-    * state table; returns (source version now applied, state buckets
-    * rewritten — those holding CHANGED groups only, the scale pin).
-    *
-    * Refreshes SERIALIZE on the view root's commit lock: two racing
-    * refreshers would otherwise both read the same ledger base and, if a
-    * source commit lands between their reads, the later merge (a higher
-    * txn value, so not a no-op) would fold a window the state already
-    * holds — double-counting the overlap. Under the lock the loser
-    * re-reads the ledger and folds only the remainder. A holder paused
-    * past the staleness bound is stolen from; it re-verifies ownership
-    * immediately before its first irreversible mutation and aborts with
-    * `ConcurrentModificationException` instead of double-committing. */
-  def refresh(spark: SparkSession): (Int, Set[Int]) =
-    CommitLock.withHeartbeatLock(fs(spark), root)(h => refreshLocked(spark, h))
-
-  private def refreshLocked(spark: SparkSession, lock: CommitLock.Handle): (Int, Set[Int]) = {
+  protected def refreshLocked(spark: SparkSession, lock: CommitLock.Handle): (Int, Set[Int]) = {
     val sp = spec(spark)
-    val st = state(sp)
-    val lastV = st.appliedTxn(spark, TxnId).map(_.toInt).getOrElse(0)
-    val feedable = graft.streaming.ChangeFeedSource.adapter(spark, Map(
-      "path" -> sp.sourceRoot) ++
-      (if (sp.sourceKeys.nonEmpty) Map("keys" -> sp.sourceKeys.mkString(",")) else Map.empty))
+    val lastV = state(sp).appliedTxn(spark, TxnId).map(_.toInt).getOrElse(0)
+    val feedable = feedOf(spark, sp)
     val liveV = feedable.currentVersion.getOrElse(return (lastV, Set.empty))
     // crash-replay window pinning: if a distinct agg's aux table committed
     // a refresh the MAIN state never saw, the replay must cover EXACTLY
@@ -153,190 +93,21 @@ final class MaterializedAggView(val root: String) {
     // between the crash and the replay would keep its crashed count
     // forever (its later zero-crossing then never fires). The remainder
     // (crashedV, live] folds in an ordinary second pass below.
-    val crashedV = sp.aggs.filter(_.fn == "count_distinct").flatMap { a =>
-      val dst = auxState(sp, a.as)
-      if (!dst.exists(spark)) None
-      else dst.appliedTxn(spark, TxnId).filter(_ > lastV)
-    }
+    val crashedV = auxAhead(spark, sp, lastV)
     val srcV = if (crashedV.nonEmpty) crashedV.max.toInt else liveV
     if (srcV <= lastV) return (lastV, Set.empty)
 
-    val feedRaw0 =
+    val feedRaw =
       if (lastV == 0) feedable.visibleAt(srcV).withColumn("_change_type", lit("insert"))
       else feedable.feed(lastV, srcV, withColumns = false, withPreimage = true)
     // derived dims compute on the raw window BEFORE any encoding: a
     // preimage row derives the same value its insert did, so retraction
     // algebra is untouched — a derived dim is just another group column
-    val feedRaw = applyDerived(feedRaw0, sp.derived, s"MaterializedAggView $root")
-    // null-mask encoding: from here on every group-key operation is
-    // null-free over (groupBy…, __mv_nulls). A measure column that is
-    // ALSO a nullable group column would be encoded away — its RAW
-    // values are shadowed first and every aggregation reads the shadow
-    // (SQL aggregates over g in `SELECT g, count(g) … GROUP BY g` see
-    // NULLs, not the stand-in)
-    val gk = groupKeys(sp)
-    val overlap: Set[String] =
-      if (sp.nullMask) sp.aggs.flatMap(_.col).toSet.intersect(sp.groupBy.toSet)
-      else Set.empty
-    def shadowCol(m: String) = s"__mv_raw_$m"
-    def mcol(m: String): String = if (overlap(m)) shadowCol(m) else m
-    def withShadows(df: DataFrame): DataFrame =
-      overlap.foldLeft(df)((d, m) => d.withColumn(shadowCol(m), col(m)))
-    val feed0 =
-      if (sp.nullMask) encodeNulls(withShadows(feedRaw), sp.groupBy)
-      else feedRaw
-    // EXACTLY-ONE-distinct views (the dominant shape) take the ONE-PASS
-    // fold: both maintenance grains derive from a single (group, value)-
-    // grain base aggregation of the feed (onePassDeltas), so the feed is
-    // scanned once and needs no pin of its own. Multi-distinct views keep
-    // the per-agg pair passes and pin the O(changed) window diff so each
-    // consumer doesn't re-derive it (NOT on a bootstrap: the bootstrap
-    // feed is the FULL table, and materializing it costs more than the
-    // ≤(1 + #distinct aggs) recomputations)
-    val distinctAggs = sp.aggs.filter(_.fn == "count_distinct")
-    val onePass = distinctAggs.size == 1
-    val feed =
-      if (!onePass && lastV != 0 && distinctAggs.nonEmpty)
-        feed0.transform(Pin(_))
-      else feed0
-    val sign = when(col("_change_type").isin("insert", "update_postimage"), lit(1L))
-      .otherwise(lit(-1L))
-
-    // one shuffle on the group key: the shared fold algebra (deltaAggsFor)
-    val accTypes = accumulatorTypes(sp.aggs, feed.schema)
-    val sqTypes = sumSqTypes(sp.aggs, feed.schema)
-    val deltaAggs: Seq[Column] =
-      deltaAggsFor(sp.aggs, mcol, sign, accTypes, sqTypes, feed.schema)
-    val (delta0, preparedPairs): (DataFrame, Option[DataFrame]) =
-      if (onePass) {
-        val (d0, pp) = onePassDeltas(feed, sign, gk,
-          mcol(distinctAggs.head.col.get), deltaAggs,
-          sumTypesOf(accTypes, sqTypes))
-        (d0, Some(pp))
-      } else
-        (feed.groupBy(gk.map(col): _*).agg(deltaAggs.head, deltaAggs.tail: _*),
-          None)
-
-    // count(distinct c): per-(group, value) signed occurrence deltas →
-    // aux-table transitions → a distinct-count delta ONLY where an
-    // occurrence count crosses zero. The transition frame is eagerly
-    // pinned (localCheckpoint) BEFORE the aux merge so the delta the main
-    // state folds is derived from the PRE-merge aux state; the aux merge
-    // itself is txn-stamped with the same source version, so any
-    // crash/replay interleaving re-derives the identical delta (a
-    // replayed run whose aux table already committed re-reads the aux as
-    // of the last FULLY-applied refresh via the ledger-pinned version).
-    // r13: the aux COMMITS come back as thunks and run on [[auxEc]]
-    // CONCURRENTLY with the main-side fold and staging below — the dc
-    // deltas derive from the pinned pre-merge transition frames, so the
-    // only ordering the crash matrix needs is "every aux commit completes
-    // before the main commit", enforced by the Await before it.
-    val dcPrepared: Seq[(DataFrame, () => Unit)] = distinctAggs.map { a =>
-      foldDistinct(spark, auxState(sp, a.as), feed, sign, gk,
-        mcol(a.col.get), TxnId, srcV.toLong, lastV.toLong, dcCol(a.as),
-        beforeMerge = () => lock.check(),
-        afterMerge = () => onStep(s"aux-merged:${a.as}"),
-        prepared = preparedPairs)
-    }
-    val auxFuts = dcPrepared.map { case (_, commit) =>
-      scala.concurrent.Future(commit())(auxEc) }
-    // dc-delta groups ⊆ feed groups (both derive from the feed), so a
-    // left join is complete; absent → 0 in the generic fold below.
-    // Pinned: the grouped delta is consumed by THREE actions downstream
-    // (the state's bucket-pruned key probe, the merge's bucket discovery,
-    // and the state write) — without the pin each re-executes the whole
-    // O(changed) window diff; the checkpoint is O(changed groups) rows
-    val delta = dcPrepared.map(_._1).foldLeft(delta0)((d, dd) => d.join(dd, gk, "left"))
-      .transform(Pin(_))
-    // null group keys the state machinery cannot represent fail loudly
-    // here instead of silently dropping through the key-equality merges
-    // (legacy specs: all group columns; mask specs: stand-in-less types)
-    requireNoUnguardedNullGroups(delta, sp.nullMask, sp.groupBy,
-      s"MaterializedAggView $root")
-
-    val accCols: Seq[(String, DataType)] = accColsFor(sp.aggs, accTypes, sqTypes)
-
-    // STAGE the main-state merge (the expensive data half) while the aux
-    // commits are still in flight on auxEc, then serialize only the
-    // metadata commits: every aux commit completes strictly before the
-    // main pointer flip — the same happens-before the sequential layout
-    // provided, with the two tables' staging writes overlapped. The
-    // finally-Await guarantees no aux commit is ever in flight past this
-    // frame on ANY exit path: an orphan aux commit landing after a
-    // successor refresher read the ledger could evade the aux-ahead
-    // replay pin.
-    val stagedMain: Option[BucketedSnapshotTable.StagedScd1] = try {
-      // current state of ONLY the changed groups: bucket-pruned point read.
-      // The probe's bucket set is REUSED by the staged merge below (r15
-      // job fusion): the upserts are a left join of the delta — same gk
-      // value set, hence the same buckets — so the merge's own probe job
-      // is redundant.
-      var deltaBuckets: Option[Set[Int]] = None
-      val cur: DataFrame =
-        if (!st.exists(spark)) {
-          val fields = gk.map(g => delta.schema(g)) ++
-            accCols.map { case (n, t) => StructField(n, t, nullable = true) }
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], StructType(fields))
-        } else {
-          val (df, w) = st.readKeysWithBuckets(spark, delta.select(gk.map(col): _*))
-          deltaBuckets = Some(w)
-          graft.cdc.ScdMerge.scd1Current(df)
-            .select((gk ++ accCols.map(_._1)).map(col): _*)
-        }
-
-      val curA = cur.select(gk.map(col) ++
-        accCols.map { case (n, t) => col(n).as(s"__cur_$n") }: _*)
-      val merged0 = delta.join(curA, gk, "left")
-      val folded = accCols.foldLeft(merged0) { case (df, (n, t)) =>
-        df.withColumn(n,
-          (coalesce(col(s"__cur_$n").cast(t), lit(0).cast(t)) +
-            coalesce(col(n).cast(t), lit(0).cast(t))).cast(t))
-      }.select((gk ++ accCols.map(_._1)).map(col): _*)
-
-      // min/max are NOT invertible — the opt-in RESCAN mode recomputes them
-      // from the source for EXACTLY the changed groups (one semi-joined
-      // grouped scan of the source per refresh: the documented extra cost
-      // class the caller accepted at create); the source side is encoded so
-      // the semi-join and regrouping run null-free like everything else
-      val rescans = sp.aggs.filter(a => a.fn == "min" || a.fn == "max")
-      val withMm =
-        if (rescans.isEmpty) folded
-        else {
-          val aggsR = rescans.map { a =>
-            (if (a.fn == "min") min(col(mcol(a.col.get))) else max(col(mcol(a.col.get))))
-              .as(mmCol(a.fn, a.as))
-          }
-          val rsVis = applyDerived(feedable.visibleAt(srcV), sp.derived,
-            s"MaterializedAggView $root")
-          val rsBase =
-            if (sp.nullMask) encodeNulls(withShadows(rsVis), sp.groupBy)
-            else rsVis
-          val rs = rsBase
-            .join(folded.select(gk.map(col): _*), gk, "left_semi")
-            .groupBy(gk.map(col): _*).agg(aggsR.head, aggsR.tail: _*)
-          folded.join(rs, gk, "left")
-        }
-      // pinned: the merge executes its updates plan twice (bucket-probe
-      // collect + staging write), and this plan carries the state
-      // readKeys scan — O(changed groups) rows, cheap to pin
-      val upserts = withMm.withColumn(SeqCol, lit(srcV.toLong))
-        .transform(Pin(_))
-      st.stageScd1Merge(spark, upserts, SeqCol,
-        applyAsDeletes = Some(col(NCol) === 0L),
-        txn = Some((TxnId, srcV.toLong)),
-        knownBuckets = deltaBuckets)
-    } finally auxFuts.foreach(fu =>
-      scala.concurrent.Await.ready(fu, scala.concurrent.duration.Duration.Inf))
-    // surface any aux-commit failure BEFORE the main commit (instant: the
-    // futures are complete)
-    auxFuts.foreach(fu =>
-      scala.concurrent.Await.result(fu, scala.concurrent.duration.Duration.Inf))
-    lock.check() // abort rather than double-commit if the lock was stolen
-    val touched = stagedMain match {
-      case Some(h) => st.commitStagedScd1(spark, h)
-      case None => Set.empty[Int] // empty window / ledger-replayed batch
-    }
+    val touched = foldAndCommit(spark, sp, applyDerived(feedRaw, sp.derived, what),
+      when(col("_change_type").isin("insert", "update_postimage"), lit(1L))
+        .otherwise(lit(-1L)),
+      srcV.toLong, lastV.toLong, lock,
+      rescanSource = Some(() => applyDerived(feedable.visibleAt(srcV), sp.derived, what)))
     if (srcV < liveV) {
       // the pinned replay stopped at the crashed window's end — fold the
       // rest of the history in an ordinary pass (same lock: the view
@@ -346,102 +117,22 @@ final class MaterializedAggView(val root: String) {
     } else (srcV, touched)
   }
 
-  /** The state in ROLLUP-PARTIAL format (`__cnt`, `__sum_<measure>`,
-    * `__nn_<measure>` keyed by the group columns) — what the transparent
-    * [[graft.plans.AggRollupRewrite]] routing consumes. Measure names are
-    * the SOURCE column names (queries aggregate those, not the view's
-    * aliases); when several declared aggregates cover one measure, the
-    * first one's accumulators win (identical by construction). */
-  private def rollupFormat(spark: SparkSession, version: Int): DataFrame = {
-    val sp = spec(spark)
-    val raw0 = graft.cdc.ScdMerge.scd1Current(state(sp).readVersion(spark, version))
-    val raw = if (sp.nullMask) decodeNulls(raw0, sp.groupBy) else raw0
-    raw.select(rollupColumns(sp.aggs, sp.groupBy): _*)
+  /** Routing covers any `Aggregate` over the SOURCE table's snapshot
+    * relation — a kilobyte-scale read in place of a fact-table scan.
+    * Derived dims resolve against the live source schema. */
+  protected def derivedNamespace(spark: SparkSession, sp: Spec): Option[StructType] = {
+    val feedable = feedOf(spark, sp)
+    feedable.currentVersion.map(v => feedable.visibleAt(v).schema)
   }
 
-
-  /** Register TRANSPARENT routing: any `Aggregate` over the SOURCE
-    * table's snapshot relation whose grouping ⊆ the view's GROUP BY and
-    * whose aggregates are covered (COUNT(*)/COUNT(c)/SUM(c)/AVG(c) over
-    * maintained measures) is rewritten by the optimizer to read this
-    * view's state instead — a kilobyte-scale read in place of a fact-table
-    * scan, with NO query change. The provider re-reads the live state per
-    * query, so a REFRESH is visible immediately; answers are exact as of
-    * the last refreshed source version (the usual materialized-view
-    * staleness contract). */
-  /** The (state provider, per-measure pair providers) pair registerRewrite
-    * wires — exposed for specs that pin the cross-provider version
-    * consistency under concurrent refreshes (the thread-local txn pin). */
-  private[tables] def routingProviders(spark: SparkSession)
-      : (() => DataFrame, Map[String, () => DataFrame]) = {
-    val sp = spec(spark)
-    rewriteProviders(spark, state(sp), TxnId,
-      sp.aggs, as => auxState(sp, as), groupKeys(sp),
-      v => rollupFormat(spark, v),
-      if (sp.nullMask) df => decodeNulls(df, sp.groupBy) else identity)
-  }
-
-  def registerRewrite(spark: SparkSession): Unit = {
-    val sp = spec(spark)
-    val measures = sp.aggs.filterNot(a => a.fn == "count" && a.col.isEmpty)
-      .flatMap(_.col).distinct
-    // count-distinct measures also register their live pair relations, so
-    // COUNT(DISTINCT m) routes at COARSER groupings too (the `__dc_`
-    // partial only answers the view's own grain); the shared wiring pins
-    // (state version, ledger value) per query for cross-read consistency.
-    // Pair relations select the FULL state keys (incl. the null mask) and
-    // decode, so null groups round-trip through routing
-    val (provider, distincts) = routingProviders(spark)
-    // derived dims (r13): resolve each declared expression against the
-    // live SOURCE schema once, normalized for structural matching — a
-    // query grouping by the same expression tree routes to the derived
-    // state column (AggRollupRewrite.derivedDims)
-    val derivedExprs: Map[String, org.apache.spark.sql.catalyst.expressions.Expression] =
-      if (sp.derived.isEmpty) Map.empty
-      else {
-        val feedable = graft.streaming.ChangeFeedSource.adapter(spark, Map(
-          "path" -> sp.sourceRoot) ++
-          (if (sp.sourceKeys.nonEmpty) Map("keys" -> sp.sourceKeys.mkString(",")) else Map.empty))
-        feedable.currentVersion match {
-          case None => Map.empty // empty source: the provider refuses anyway
-          case Some(v) => resolveDerivedDims(spark, feedable.visibleAt(v).schema,
-            sp.derived, s"MaterializedAggView $root")
-        }
-      }
+  protected def route(spark: SparkSession, sp: Spec, measures: Seq[String],
+      provider: () => DataFrame, distincts: Map[String, () => DataFrame],
+      derivedExprs: Map[String, org.apache.spark.sql.catalyst.expressions.Expression]): Unit =
     graft.plans.AggRollupRewrite.registerView(spark, sp.sourceRoot,
       sp.groupBy, measures, provider, distincts, derivedExprs)
-  }
 
-  /** Remove this view's transparent routing (SQL `ALTER MATERIALIZED
-    * VIEW … DISABLE REWRITE`); queries read the base table again. */
   def unregisterRewrite(spark: SparkSession): Unit =
     graft.plans.AggRollupRewrite.unregisterView(spec(spark).sourceRoot)
-
-  /** Reclaim storage: every refresh commits a new version of the state
-    * (and aux) tables, so a long-lived view accumulates history like any
-    * transactional table. Vacuums the state table to `keep` versions and
-    * each count-distinct aux table to at least 2 — the crash-replay pin
-    * reads the aux AS OF the last fully-applied refresh, which is at most
-    * one version behind the aux head (aux commits lead main commits by
-    * exactly one refresh), so two versions always suffice. Standard
-    * vacuum contract: not concurrent with an active refresher. Returns
-    * the aux retention applied (None = no aux tables). */
-  def vacuum(spark: SparkSession, keep: Int = 2): Option[Int] = {
-    val sp = spec(spark)
-    vacuumView(spark, state(sp), sp.aggs, as => auxState(sp, as), keep)
-  }
-
-  /** The view's USER-FACING rows: group columns + one column per declared
-    * aggregate (avg as DOUBLE, SQL null semantics — count-0 sums and avgs
-    * read back null like a recompute would). */
-  def read(spark: SparkSession): DataFrame = {
-    val sp = spec(spark)
-    val st = state(sp)
-    val raw0 = graft.cdc.ScdMerge.scd1Current(st.read(spark))
-    val raw = if (sp.nullMask) decodeNulls(raw0, sp.groupBy) else raw0
-    val outs: Seq[Column] = readOutputs(sp.aggs)
-    raw.select(sp.groupBy.map(col) ++ outs: _*)
-  }
 }
 
 object MaterializedAggView {
@@ -641,7 +332,7 @@ object MaterializedAggView {
   private def nnCol(as: String) = s"__mv_nn_$as"
   private def sumCol(as: String) = s"__mv_sum_$as"
   private def sumSqCol(as: String) = s"__mv_sumsq_$as"
-  private def mmCol(fn: String, as: String) = s"__mv_${fn}_$as"
+  private[tables] def mmCol(fn: String, as: String) = s"__mv_${fn}_$as"
   private[tables] def dcCol(as: String) = s"__mv_dc_$as"
 
   final case class Agg(fn: String, col: Option[String], as: String) {
@@ -665,7 +356,7 @@ object MaterializedAggView {
         * routing matches a query grouping by the same expression tree
         * (the single most common dashboard rollup shape). Names appear
         * in `groupBy` like any other dim. */
-      derived: Seq[(String, String)] = Nil)
+      derived: Seq[(String, String)] = Nil) extends ViewSpec
 
   /** Dedicated daemon pool for aux-table merges that run CONCURRENTLY
     * with the main-state fold (see [[foldDistinct]]'s commit thunk): the
@@ -825,7 +516,7 @@ object MaterializedAggView {
     // fast-path read from it: `appliedTxn` + `read` were two separate head
     // reads, and a refresh committing the aux between them handed a routed
     // query pair counts NEWER than the pinned rollup state — the exact
-    // mixed-version read rewriteProviders closes for the main state
+    // mixed-version read routingProviders closes for the main state
     // (COUNT(DISTINCT) could exceed COUNT(*) in one query).
     val headV = dst.currentVersion(spark)
     val auxV = headV.flatMap(v => dst.appliedTxnAt(spark, txnId, v)).getOrElse(0L)
@@ -842,56 +533,6 @@ object MaterializedAggView {
     graft.cdc.ScdMerge.scd1Current(raw).filter(col(VcCol) > 0L)
       .select(groupBy.map(col) :+
         col(ValCol).as(graft.plans.AggRollupRewrite.DistinctValCol): _*)
-  }
-
-  /** Shared rewrite-registration wiring for every view kind: a state
-    * provider that pins (state version, ledger value) ATOMICALLY per
-    * query — the rollup frame reads that pinned version and each
-    * distinct-measure pair provider reads its aux table AS OF the pinned
-    * ledger value — so one routed query never mixes two view versions
-    * even when a refresh commits between the state and pair reads. The
-    * pin is THREAD-LOCAL: the optimizer calls the provider and then the
-    * distinct providers on the query's own planning thread, so two
-    * concurrently-optimizing queries each read their own pin — a shared
-    * cell would let query B's provider call re-pin between A's two reads
-    * and hand A a mixed-version result. */
-  private[tables] def rewriteProviders(spark: SparkSession,
-      st: BucketedSnapshotTable, txnId: String, aggs: Seq[Agg],
-      auxOf: String => BucketedSnapshotTable, groupBy: Seq[String],
-      rollupAt: Int => DataFrame,
-      decodePairs: DataFrame => DataFrame = identity)
-      : (() => DataFrame, Map[String, () => DataFrame]) = {
-    val pinnedTxn = ThreadLocal.withInitial[java.lang.Long](() => 0L)
-    val provider: () => DataFrame = () => {
-      val v = st.currentVersion(spark).getOrElse(throw new IllegalStateException(
-        s"materialized view state ${st.root}: no committed version — REFRESH first"))
-      pinnedTxn.set(Long.box(st.appliedTxnAt(spark, txnId, v).getOrElse(0L)))
-      rollupAt(v)
-    }
-    val distincts: Map[String, () => DataFrame] =
-      aggs.filter(_.fn == "count_distinct").groupBy(_.col.get)
-        .map { case (m, as) =>
-          m -> (() => decodePairs(auxPairs(spark, auxOf(as.head.as),
-            pinnedTxn.get.longValue, txnId, groupBy)))
-        }
-    (provider, distincts)
-  }
-
-  /** Shared vacuum for every view kind: state to `keep` versions, each
-    * count-distinct aux table to at least 2 (the crash-replay pin reads
-    * the aux AS OF the last fully-applied refresh, at most one version
-    * behind the aux head). Returns the aux retention actually applied —
-    * None when the view has no materialized aux tables (no distinct
-    * aggregates, or none refreshed yet), so callers report honestly
-    * instead of claiming a retention that was never exercised. */
-  private[tables] def vacuumView(spark: SparkSession, st: BucketedSnapshotTable,
-      aggs: Seq[Agg], auxOf: String => BucketedSnapshotTable,
-      keep: Int): Option[Int] = {
-    st.vacuum(spark, keep)
-    val auxes = aggs.filter(_.fn == "count_distinct").map(a => auxOf(a.as))
-      .filter(_.exists(spark))
-    auxes.foreach(_.vacuum(spark, math.max(keep, 2)))
-    if (auxes.isEmpty) None else Some(math.max(keep, 2))
   }
 
   /** Variance-family aggregates (r12): maintained EXACTLY via sum +
@@ -1124,49 +765,22 @@ object MaterializedAggView {
     }.toMap
 
   /** Declare the view: persist the spec (no data moves until the first
-    * [[MaterializedAggView.refresh]]). Rejects non-invertible aggregates. */
+    * [[MaterializedAggView.refresh]]). Rejects non-invertible aggregates
+    * unless `allowRescan`. */
   def create(spark: SparkSession, root: String, sourceRoot: String,
       sourceKeys: Seq[String], groupBy: Seq[String], aggs: Seq[Agg],
       numBuckets: Int = 16, allowRescan: Boolean = false,
       derived: Seq[(String, String)] = Nil): MaterializedAggView = {
-    require(groupBy.nonEmpty, "materialized view needs GROUP BY columns")
-    validateDerived(groupBy, aggs, derived)
-    require(groupBy.size <= 63, "the null mask is a 64-bit bitmask — at " +
-      "most 63 GROUP BY columns")
-    require(!(groupBy ++ aggs.flatMap(_.col)).exists(_.startsWith("__mv_")),
-      "column names starting with __mv_ are reserved for view bookkeeping")
-    require(aggs.nonEmpty, "materialized view needs at least one aggregate")
-    aggs.foreach { a =>
-      require(
-        (Set("count", "sum", "avg", "min", "max", "count_distinct") ++ VarFns)(a.fn),
-        s"unsupported aggregate '${a.fn}'")
-      require(allowRescan ||
-        (Set("count", "sum", "avg", "count_distinct") ++ VarFns)(a.fn),
-        s"'${a.fn}' is not invertible and cannot be maintained from the " +
+    MaterializedView.createSpec(spark, root, "_mv", "MaterializedAggView",
+      "materialized view",
+      Seq(s"sourceRoot=$sourceRoot", s"sourceKeys=${sourceKeys.mkString(",")}"),
+      groupBy, aggs, numBuckets, derived,
+      if (allowRescan) MaterializedView.AllFns else MaterializedView.InvertibleFns,
+      fn =>
+        if (!MaterializedView.AllFns(fn)) s"unsupported aggregate '$fn'"
+        else s"'$fn' is not invertible and cannot be maintained from the " +
           "change feed alone — opt into WITH RESCAN (each refresh then " +
           "recomputes min/max for the changed groups from the source)")
-      require(a.fn == "count" || a.col.nonEmpty, s"${a.fn} needs a column")
-    }
-    require(aggs.map(_.as).distinct.size == aggs.size, "duplicate aggregate aliases")
-    val mv = new MaterializedAggView(root)
-    val f = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val p = new Path(root, "_mv")
-    val content =
-      s"""sourceRoot=$sourceRoot
-         |sourceKeys=${sourceKeys.mkString(",")}
-         |groupBy=${groupBy.mkString(",")}
-         |aggs=${aggs.map(_.render).mkString(",")}
-         |numBuckets=$numBuckets
-         |nullMask=1
-         |""".stripMargin +
-        derived.map { case (n, e) => s"derived.$n=$e\n" }.mkString
-    // the view's lock makes the exists check and the write one step:
-    // of two concurrent CREATEs exactly one writes the spec
-    CommitLock.withLock(f, root) {
-      if (f.exists(p))
-        throw new IllegalArgumentException(s"MaterializedAggView $root already exists")
-      MetaIO.replace(f, p, content)
-    }
-    mv
+    new MaterializedAggView(root)
   }
 }

@@ -9,12 +9,15 @@ package object tables {
     * companion `MaterializedJoinAggView.create`). */
   type MaterializedJoinAggView = MaterializedStarAggView
 
-  /** View-kind dispatch for the kind-agnostic surfaces (query form, ALTER
-    * … REWRITE, VACUUM, pipeline refresh): true when `root` holds a
-    * single-table [[MaterializedAggView]] spec. Every other root opens as
-    * a star view, whose spec read names what it finds instead. */
-  private[graft] def isSingleTableView(spark: SparkSession, root: String): Boolean = {
+  /** The view at `root` as the kind its spec file names, for the
+    * kind-agnostic surfaces (query form, ALTER … REWRITE, VACUUM, pipeline
+    * refresh): a `_mv` spec opens a single-table [[MaterializedAggView]];
+    * every other root opens as a star view, whose spec read names what it
+    * finds instead. */
+  private[graft] def openView(spark: SparkSession, root: String): MaterializedView = {
     val p = new Path(root, "_mv")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+      new MaterializedAggView(root)
+    else new MaterializedStarAggView(root)
   }
 }

@@ -347,6 +347,38 @@ class MaterializedViewSpec extends AnyFunSuite {
     } finally graft.plans.AggRollupRewrite.clear()
   }
 
+  test("a COUNT(DISTINCT)-only query routes at a coarser grain and globally") {
+    val work = tmp("mvdconly")
+    val ext = new org.apache.spark.sql.SparkSessionExtensions
+    new graft.GraftExtensions().apply(ext)
+    org.apache.spark.sql.GraftColumnBridge.applyExtensions(ext, spark)
+    val src = new SnapshotTable(s"$work/src")
+    src.write(spark, Seq((1, "a", "r1", "X"), (2, "a", "r2", "X"), (3, "a", "r2", "Y"),
+      (4, "b", "r1", "Z")).toDF("k", "g", "h", "v"))
+    val mv = MaterializedAggView.create(spark, s"$work/mv", s"$work/src",
+      Seq("k"), Seq("g", "h"),
+      Seq(MaterializedAggView.Agg("count_distinct", Some("v"), "dv")), 4)
+    mv.refresh(spark)
+    // no additive output at all: the rewrite's anchor frame carries only
+    // the grouping, the pair relation supplies every output column
+    def coarse = src.readIndexed(spark).groupBy(col("g"))
+      .agg(countDistinct(col("v")).as("dv"))
+    def global = src.readIndexed(spark).agg(countDistinct(col("v")).as("dv"))
+    val wantCoarse = coarse.as[(String, Long)].collect().toSet
+    val wantGlobal = global.as[Long].collect().toSeq
+    assert(wantCoarse == Set(("a", 2L), ("b", 1L)) && wantGlobal == Seq(3L))
+    try {
+      mv.registerRewrite(spark)
+      for (q <- Seq(coarse, global)) {
+        val plan = q.queryExecution.optimizedPlan.toString
+        assert(plan.contains("__dval") && !plan.contains("/src/_v"),
+          s"distinct-only query must route via the pair relation:\n$plan")
+      }
+      assert(coarse.as[(String, Long)].collect().toSet == wantCoarse)
+      assert(global.as[Long].collect().toSeq == wantGlobal)
+    } finally graft.plans.AggRollupRewrite.clear()
+  }
+
   test("FILTER (WHERE dim-pred) aggregates route; measure/key filters refuse") {
     val work = tmp("mvaggfilt")
     val ext = new org.apache.spark.sql.SparkSessionExtensions
