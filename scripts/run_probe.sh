@@ -3,7 +3,8 @@
 # bypassing sbt startup, with arbitrary -Dspark.* conf experiments.
 # Usage: scripts/run_probe.sh [extra JVM flags...] -- <mainClass> [args...]
 set -u
-CP="/root/repo/target/scala-2.13/classes"
+# classes of the checkout this script lives in, wherever it is cloned
+CP="$(cd "$(dirname "$0")/.." && pwd)/target/scala-2.13/classes"
 for j in /opt/spark/jars/*.jar; do CP="$CP:$j"; done
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \

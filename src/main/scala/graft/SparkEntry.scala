@@ -1133,9 +1133,9 @@ object SparkEntry {
         .agg(count(lit(1)).cast("long").as("n"),
           Relational.sumMoney($"value").as("total"))
         .withColumn("dim", lit(tag))
-      slice(t.readPruned(s, "user_id", 100, 199)
+      slice(t.readIndexed(s)
           .filter($"user_id".between(100, 199)), "user_slice")
-        .unionByName(slice(t.readPruned(s, "value", 400.0, 500.0)
+        .unionByName(slice(t.readIndexed(s)
           .filter($"value".between(400.0, 500.0)), "value_slice"))
         .select($"dim", $"n", $"total")
         .orderBy($"dim")
@@ -2845,11 +2845,7 @@ object SparkEntry {
       val t = new graft.tables.SnapshotTable(s"$work/t")
       t.writeWithStats(s, Tables.events(s, dir), statsCols = Seq("ts"),
         clusterBy = Seq("ts"), clusterPartitions = 16)
-      def utcMicros(t: String) = java.time.LocalDateTime.parse(t)
-        .toInstant(java.time.ZoneOffset.UTC).toEpochMilli * 1000.0
-      val lo = utcMicros("2024-01-10T00:00:00")
-      val hi = utcMicros("2024-01-20T00:00:00")
-      t.readPruned(s, "ts", lo, hi - 1)
+      t.readIndexed(s)
         .filter($"ts" >= lit("2024-01-10 00:00:00").cast("timestamp") &&
           $"ts" < lit("2024-01-20 00:00:00").cast("timestamp"))
         .groupBy($"event_type")
@@ -2868,7 +2864,7 @@ object SparkEntry {
       val t = new graft.tables.SnapshotTable(s"$work/t")
       t.writeWithStats(s, Tables.documents(s, dir), statsCols = Seq("lang"),
         clusterBy = Seq("lang"), clusterPartitions = 10)
-      t.readPrunedEq(s, "lang", "en")
+      t.readIndexed(s)
         .filter($"lang" === "en")
         .groupBy($"source")
         .agg(count(lit(1)).as("n"), sum($"n_chars").cast("long").as("total_chars"))
@@ -2900,9 +2896,7 @@ object SparkEntry {
         .withColumn("o_orderdate", date_add($"o_orderdate", 30))
         .withColumn("op_seq", lit(2))
       t.scd1Merge(s, upd, "op_seq")
-      val lo = java.time.LocalDate.parse("1996-01-01").toEpochDay.toDouble
-      val hi = java.time.LocalDate.parse("1996-12-31").toEpochDay.toDouble
-      t.readPruned(s, "o_orderdate", lo, hi)
+      t.readIndexed(s)
         .filter($"o_orderdate".between("1996-01-01", "1996-12-31"))
         .groupBy(month($"o_orderdate").as("m"))
         .agg(count(lit(1)).as("n"), Relational.sumMoney($"o_totalprice").as("total"))
@@ -3282,7 +3276,7 @@ object SparkEntry {
           pmod($"user_id", lit(1024)), pmod($"__day", lit(1024)), 10))
       t.writeWithStats(s, e, statsCols = Seq("user_id", "__day"),
         clusterBy = Seq("__z"), clusterPartitions = 16)
-      t.readPruned(s, "user_id", 0.0, 99.0)
+      t.readIndexed(s)
         .filter($"user_id".between(0, 99))
         .groupBy($"event_type")
         .agg(count(lit(1)).as("n"), Relational.sumMoney($"value").as("total"))
@@ -3907,7 +3901,7 @@ object SparkEntry {
       t.writeIndexed(s, Tables.orders(s, dir),
         bloomCols = Seq("o_custkey"), bloomFpp = 0.01,
         clusterBy = Seq("o_orderdate"), clusterPartitions = 16)
-      t.readPrunedBloomLong(s, "o_custkey", 42L)
+      t.readIndexed(s)
         .filter($"o_custkey" === 42)
         .select($"o_orderkey", $"o_orderdate", $"o_totalprice", $"o_orderpriority")
         .orderBy($"o_orderkey")
@@ -5498,11 +5492,10 @@ object SparkEntry {
         .withColumn("c_acctbal", $"c_acctbal" + 3)
         .withColumn("op_seq", lit(2L)), "op_seq")
       val target = "Customer#000000077"
-      val full = bt.read(s).inputFiles.length
-      val look = bt.readPrunedPoint(s, "c_name", target)
-      require(look.inputFiles.nonEmpty && look.inputFiles.length * 4 <= full,
-        s"bloom point read must prune files: ${look.inputFiles.length} of $full")
-      look.filter($"c_name" === target)
+      val (kept, full) = bt.pruneStats(s, $"c_name" === target)
+      require(kept > 0 && kept * 4 <= full,
+        s"bloom point read must prune files: $kept of $full")
+      bt.readIndexed(s).filter($"c_name" === target)
         .select($"c_custkey", $"c_name", $"c_acctbal")
         .orderBy($"c_custkey")
       }

@@ -213,33 +213,6 @@ private[graft] object BloomIndex {
       }
   }
 
-  private def filesWhere(fs: FileSystem, dir: Path, column: String,
-      mightContain: BloomFilter => Boolean): Option[Vector[String]] =
-    StatsManifest.readLines(fs, new Path(dir, "_MANIFEST")).map { manifest =>
-      probeReads.incrementAndGet()
-      val reader = entryReader(fs, dir, manifest)
-      parProbe(manifest) { parts =>
-        val entry = reader(parts(1))
-          .flatMap(_.split("\t").drop(1).find(_.startsWith(s"$column:")))
-        // no sidecar / no entry for this column → keep (superset guarantee)
-        entry.forall { e =>
-          val Array(_, _, blob) = e.split(":", 3)
-          mightContain(BloomFilter.readFrom(new ByteArrayInputStream(unb64(blob))))
-        }
-      }
-    }
-
-  /** Files whose Bloom filter for `column` might contain the long key
-    * (None = no index at `dir`). */
-  def filesMightContainLong(fs: FileSystem, dir: Path, column: String,
-      value: Long): Option[Vector[String]] =
-    filesWhere(fs, dir, column, _.mightContainLong(value))
-
-  /** Files whose Bloom filter for `column` might contain the string key. */
-  def filesMightContainString(fs: FileSystem, dir: Path, column: String,
-      value: String): Option[Vector[String]] =
-    filesWhere(fs, dir, column, _.mightContainString(value))
-
   /** Files whose filter for `column` might contain ANY of the point
     * values (the IN-list / OR-of-equalities probe), PER VALUE and
     * coercion-aware: each value converts to the filter's hash kind when

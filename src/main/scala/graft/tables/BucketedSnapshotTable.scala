@@ -712,7 +712,9 @@ final class BucketedSnapshotTable(
     * analog of Delta's data-skipping on UPDATE/DELETE): buckets whose every
     * file's recorded [min,max] for some bounded stats column lies outside
     * the predicate's extracted range CANNOT contain a match, so the
-    * discovery scan skips them. Returns None when the predicate yields no
+    * discovery scan skips them. The per-file verdict (stats ranges and
+    * Bloom membership) is [[PruningFileIndex.dirKeep]], the one the read
+    * path uses. Returns None when the predicate yields no
     * usable bounds (scan everything, the pre-r9 behavior); a batch dir
     * without a stats manifest keeps all its buckets — pruning is always a
     * superset guarantee, and the row-level filter still applies. */
@@ -738,52 +740,19 @@ final class BucketedSnapshotTable(
     if (nBounds.isEmpty && sBounds.isEmpty && pSets.isEmpty) return byKey
     val f = fs(spark)
     def norm(p: String) = new Path(p).toUri.getPath
+    // per batch dir: the files its sidecars list (no bucket-dir listing),
+    // judged by the read path's per-file verdict. No usable metadata keeps
+    // the batch's buckets; a bucket no sidecar lists is kept too.
     val sidecarCands = Some(m.groupBy(_._2).flatMap { case (dir, entries) =>
-      // range pass: files whose every bounded column's recorded [min,max]
-      // intersects (a column missing from a file's stats entry keeps the
-      // file — superset guarantee); None = no stats manifest for the batch
-      val rangePass: Option[Set[String]] =
-        if (nBounds.isEmpty && sBounds.isEmpty) None
-        else StatsManifest.readLines(f, batchStatsPath(dir)).map { lines =>
-          lines.filter { l =>
-            val ents = l.split("\t").drop(1)
-            nBounds.forall { case (c, (lo, hi)) =>
-              ents.find(_.startsWith(s"$c:n:")) match {
-                case None => true
-                case Some(s) =>
-                  val Array(_, _, mn, mx) = s.split(":", 4)
-                  !(mx.toDouble < lo || mn.toDouble > hi)
-              }
-            } && sBounds.forall { case (c, (lo, hi)) =>
-              ents.find(_.startsWith(s"$c:s:")) match {
-                case None => true
-                case Some(s) =>
-                  StatsManifest.stringEntryIntersects(s.split(":", 5), lo, hi)
-              }
-            }
-          }.map(l => norm(l.split("\t")(0))).toSet
-        }
-      // bloom pass: files whose per-file filter might contain at least one
-      // point value, for EVERY point-constrained indexed column; None = no
-      // bloom index for the batch (or no point constraints)
-      val bloomPass: Option[Set[String]] = {
-        val perCol = pSets.toSeq.flatMap { case (c, pts) =>
-          BloomIndex.filesMightContainAny(f, batchBloomPath(dir), c, pts.longs, pts.strs, pts.dbls)
-            .map(_.map(norm).toSet)
-        }
-        if (perCol.isEmpty) None else Some(perCol.reduce(_ intersect _))
-      }
-      val pass: Option[Set[String]] = (rangePass, bloomPass) match {
-        case (Some(a), Some(b)) => Some(a intersect b)
-        case (a, b)             => a.orElse(b)
-      }
-      pass match {
-        case None => entries.keys // no skipping metadata → keep the batch's buckets
-        case Some(passFiles) =>
-          entries.keys.filter { b =>
-            val d = norm(s"$root/$dir/$BucketCol=$b") + "/"
-            passFiles.exists(_.startsWith(d))
-          }
+      val stats = StatsManifest.readLines(f, batchStatsPath(dir))
+      PruningFileIndex.dirKeep(f, stats, batchBloomPath(dir), nBounds, sBounds, pSets) match {
+        case None => entries.keys
+        case Some(keep) =>
+          val listed = (stats.toSeq.flatten.map(_.split("\t")(0)) ++
+            BloomIndex.indexedFiles(f, batchBloomPath(dir)).toSeq.flatten).map(norm)
+          val byBucketDir = listed.groupBy(p => new Path(p).getParent.toUri.getPath)
+          entries.keys.filter(b =>
+            byBucketDir.get(norm(s"$root/$dir/$BucketCol=$b")).forall(_.exists(keep)))
       }
     }.toSet)
     // both analyses are supersets of the matching buckets → intersect
@@ -1155,85 +1124,13 @@ final class BucketedSnapshotTable(
     }
   }
 
-  /** Range-pruned full-table read: live buckets only, and within them only
-    * files whose per-batch stats for `column` intersect [lo,hi] (timestamp
-    * bounds in epoch micros, dates in epoch days). Batches written without
-    * stats keep all their files — pruning is always a superset guarantee,
-    * and the caller still applies the row-level filter. */
-  def readPruned(spark: SparkSession, column: String, lo: Double, hi: Double): DataFrame = {
-    val m = manifest(spark)
-    if (m.isEmpty) throw new IllegalStateException(s"BucketedSnapshotTable $root is empty")
-    val f = fs(spark)
-    // scheme-insensitive path (input_file_name() records file: URIs while
-    // root may be a plain local path)
-    def norm(p: String) = new Path(p).toUri.getPath
-    val parts = m.groupBy(_._2).flatMap { case (dir, entries) =>
-      val liveBucketFiles = entries.keys.toSeq.sorted.map(b => s"$root/$dir/$BucketCol=$b")
-      val picked = StatsManifest.readLines(f, batchStatsPath(dir)) match {
-        case None => liveBucketFiles // no stats for this batch → keep all
-        case Some(lines) =>
-          val inRange = StatsManifest.filesInRange(lines, column, lo, hi)
-          // stats entries are absolute file paths; keep those under a live
-          // bucket dir of THIS batch (stale buckets are skipped; the
-          // trailing "/" keeps __bucket=1 from matching __bucket=11)
-          val liveDirs = liveBucketFiles.map(d => norm(d) + "/")
-          inRange.filter(p => liveDirs.exists(norm(p).startsWith)).sorted
-      }
-      if (picked.isEmpty) None
-      else Some(spark.read.option("basePath", s"$root/$dir").parquet(picked: _*))
-    }.toSeq
-    if (parts.isEmpty) read(spark).limit(0) // schema-preserving empty relation
-    else unionEvolvingParts(parts).drop(BucketCol)
-  }
-
-  /** Bloom-pruned point read on a NON-key column: live buckets only, and
-    * within them only the files whose per-batch Bloom filter might contain
-    * the key — the read-side complement of the bloom-pruned DML discovery
-    * (the bucket layout itself only prunes lookups on the bucket KEYS;
-    * this serves `WHERE order_id = k` on a table bucketed by customer).
-    * Superset guarantee — apply the row filter after; batches without a
-    * bloom sidecar keep all their files. Integral values probe long-hashed
-    * filters, strings string-hashed ones. */
-  def readPrunedPoint(spark: SparkSession, column: String, value: Any): DataFrame =
-    readPrunedPoints(spark, column, Seq(value))
-
-  /** IN-list form of [[readPrunedPoint]]: a file is kept when its filter
-    * might contain ANY of the values. */
-  def readPrunedPoints(spark: SparkSession, column: String, values: Seq[Any]): DataFrame = {
-    require(values.nonEmpty, "readPrunedPoints needs at least one value")
-    val m = manifest(spark)
-    if (m.isEmpty) throw new IllegalStateException(s"BucketedSnapshotTable $root is empty")
-    val f = fs(spark)
-    def norm(p: String) = new Path(p).toUri.getPath
-    val longs = values.collect { case l: Long => l; case i: Int => i.toLong }.toSet
-    val strs = values.collect { case s: String => s }.toSet
-    val dbls = values.collect { case d: Double => d; case fl: Float => fl.toDouble }.toSet
-    require(longs.size + strs.size + dbls.size == values.distinct.size,
-      s"readPrunedPoints probes long/double/string-hashed filters; got " +
-        values.map(_.getClass.getSimpleName).distinct.mkString(","))
-    val parts = m.groupBy(_._2).flatMap { case (dir, entries) =>
-      val liveBucketDirs = entries.keys.toSeq.sorted.map(b => s"$root/$dir/$BucketCol=$b")
-      val picked = BloomIndex.filesMightContainAny(
-          f, batchBloomPath(dir), column, longs, strs, dbls) match {
-        case None => liveBucketDirs // no index for this batch → keep all
-        case Some(files) =>
-          val liveDirs = liveBucketDirs.map(d => norm(d) + "/")
-          files.filter(p => liveDirs.exists(norm(p).startsWith)).sorted
-      }
-      if (picked.isEmpty) None
-      else Some(spark.read.option("basePath", s"$root/$dir").parquet(picked: _*))
-    }.toSeq
-    if (parts.isEmpty) read(spark).limit(0) // schema-preserving empty relation
-    else unionEvolvingParts(parts).drop(BucketCol)
-  }
-
   /** Pruning-aware read — the general SNAPSHOT relation: a plain parquet
     * scan whose FILE LISTING goes through [[PruningFileIndex]], so ANY
     * predicate Catalyst pushes into the scan (a later `.filter`, a SQL
     * WHERE over `SNAPSHOT '<root>'`, a join's pushed equality) prunes the
     * scheduled files through the per-batch stats AND Bloom sidecars at
-    * planning time — the read-side twin of the predicate-DML pre-filter,
-    * with no dedicated `readPruned*` call required. Superset guarantee
+    * planning time — the same per-file verdict ([[PruningFileIndex.dirKeep]])
+    * the predicate-DML pre-filter uses. Superset guarantee
     * throughout: the row filter still runs on the survivors.
     *
     * Falls back to the union-cast read when batch dirs disagree on a
@@ -1464,7 +1361,7 @@ final class BucketedSnapshotTable(
   /** ANALYZE: backfill per-batch file stats for THIS instance's
     * `statsCols` over every batch dir the live manifest reaches, then
     * commit a metadata-only version whose header records the stats
-    * columns — after which [[readPruned]] and the predicate-DML stats
+    * columns — after which [[readIndexed]] and the predicate-DML stats
     * pre-filter work on data written before stats existed (or with a
     * different column set). One column-pruned scan per batch dir, no data
     * rewrite: the batch dirs are immutable, only their `_stats` sidecars
@@ -1839,7 +1736,23 @@ object BucketedSnapshotTable {
     def attr(e: Expression): Option[String] = e match {
       case a: UnresolvedAttribute => Some(a.name)
       case a: AttributeReference  => Some(a.name)
+      // analysis widens the column to meet a wider literal (`oid = 1.5`
+      // becomes `CAST(oid AS DOUBLE) = 1.5`). A widening numeric cast keeps
+      // order and SQL equality, and the stats hold the column as a double,
+      // so the constraint is the column's, as in the unanalyzed form.
+      case c: Cast if c.child.isInstanceOf[AttributeReference] &&
+          widens(c.child.dataType, c.dataType) => attr(c.child)
       case _ => None
+    }
+    def widens(from: org.apache.spark.sql.types.DataType,
+        to: org.apache.spark.sql.types.DataType): Boolean = {
+      import org.apache.spark.sql.types._
+      (from, to) match {
+        case (_: NumericType, DoubleType) => true
+        case (ByteType | ShortType | IntegerType, LongType) => true
+        case (ByteType | ShortType, IntegerType) => true
+        case _ => false
+      }
     }
     def folded(e0: Expression): Option[Any] = {
       val e = e0 match {

@@ -14,9 +14,11 @@ import org.apache.spark.sql.types.StructType
   * pushes a query's data filters into `listFiles`, so ANY predicate over
   * the relation (a later `.filter`, a SQL WHERE over `SNAPSHOT '<root>'`,
   * a join's pushed-down equality) prunes the scheduled file list through
-  * the table's stats/Bloom sidecars automatically — no dedicated
-  * `readPruned*` call required. On a 100 TB table the planner lists
-  * O(matching files), never O(table).
+  * the table's stats/Bloom sidecars automatically. [[PruningFileIndex.dirKeep]]
+  * is the one per-file skipping verdict: reads use it here, predicate DML
+  * discovery (`BucketedSnapshotTable.statsCandidates`) over the sidecars'
+  * own file lists. On a 100 TB table the planner lists O(matching files),
+  * never O(table).
   *
   * `keep` receives the pushed data filters and returns a predicate over
   * NORMALIZED (scheme-less) file paths; it must be a superset guarantee —

@@ -131,8 +131,19 @@ final class SnapshotTable(val root: String,
   private def snapshotDF(spark: SparkSession, v: Int): DataFrame =
     fileManifest(fs(spark), v) match {
       case Some(uris) => readManifest(spark, uris)
-      case None       => spark.read.parquet(s"$root/_v$v")
+      case None       => readDir(spark, s"$root/_v$v")
     }
+
+  /** `spark.read.parquet(dir)` for one of the table's own `_`-named dirs
+    * (`_v<N>`, `_tomb_v<N>`). Spark counts a `_` name as hidden and logs
+    * "All paths were ignored" on every read that names one, so the
+    * relation is resolved without that existence/hidden-name pass (the
+    * caller knows the dir exists). Listing, schema and hive partition
+    * inference are those of the plain read. */
+  private def readDir(spark: SparkSession, dir: String): DataFrame =
+    spark.baseRelationToDataFrame(
+      org.apache.spark.sql.execution.datasources.DataSource(spark, "parquet",
+        paths = Seq(dir)).resolveRelation(checkFilesExist = false))
 
   /** Read an explicit manifest file list WITHOUT losing hive partition
     * values: a bare `spark.read.parquet(files)` has no `basePath`, so
@@ -205,8 +216,8 @@ final class SnapshotTable(val root: String,
   /** ANALYZE-style Bloom backfill: (re)build the live version's per-file
     * Bloom sidecar over `cols` without rewriting data — the plain-table
     * analog of the bucketed per-batch bloom, after which
-    * [[readPrunedBloomLong]]/[[readPrunedBloomString]] prune on a table
-    * whose snapshot was written without an index. */
+    * [[readIndexed]] point lookups prune on a table whose snapshot was
+    * written without an index. */
   def refreshBloom(spark: SparkSession, cols: Seq[String],
       fpp: Double = 0.03): Unit = {
     val v = currentVersion(spark).getOrElse(
@@ -348,7 +359,7 @@ final class SnapshotTable(val root: String,
     val p = tombPath(v)
     if (!fs(spark).exists(p)) df
     else {
-      val tombs = spark.read.parquet(p.toString)
+      val tombs = readDir(spark, p.toString)
       df.join(tombs, tombs.columns.toSeq, "left_anti")
     }
   }
@@ -560,11 +571,9 @@ final class SnapshotTable(val root: String,
         StatsManifest.writeLines(f, filesPath(next), (prior ++ added).map(canonical))
         v0.foreach { v =>
           StatsManifest.readLines(f, statsPath(v)).foreach { old =>
-            // An evolving increment may lack a stats column; a file with
-            // no manifest line would be SILENTLY EXCLUDED by pruned reads
-            // (keepFiles semantics), so in that case the new version drops
-            // its stats manifest — full scans until the next writeWithStats
-            // (superset-safe, the readPruned fallback).
+            // An evolving increment may lack a stats column, so in that
+            // case the new version drops its stats manifest — full scans
+            // until the next writeWithStats (superset-safe).
             val statsCols = StatsManifest.statsColumns(old)
             if (statsCols.forall(df.columns.contains)) {
               val newLines =
@@ -758,12 +767,11 @@ final class SnapshotTable(val root: String,
   // Delta/Iceberg solve that with per-file column stats in the commit
   // metadata. Same here: `writeWithStats` records per-file min/max for the
   // requested columns in `_stats_v<N>` (one extra scan of the immutable
-  // just-written snapshot, once per commit); `readPruned` turns a range
-  // predicate into a file list BEFORE Spark ever lists the directory, so
-  // the scan's task count is proportional to matching files, not table
-  // size. Values are stored as doubles (timestamps as epoch micros) —
-  // numeric/timestamp stats columns only, which is what range predicates
-  // at scale filter on. Pair with `clusterBy` on the same column so file
+  // just-written snapshot, once per commit); [[readIndexed]] turns a
+  // pushed range predicate into a file list at planning time, so the
+  // scan's task count is proportional to matching files, not table size.
+  // Numeric values are stored as doubles (timestamps as epoch micros,
+  // dates as epoch days), strings as truncated prefixes. Pair with `clusterBy` on the same column so file
   // ranges are disjoint and pruning is maximally selective.
 
   // ── CHECK constraints (ALTER TABLE … ADD CONSTRAINT analog) ───────────
@@ -814,43 +822,9 @@ final class SnapshotTable(val root: String,
   def writeWithStats(spark: SparkSession, df: DataFrame, statsCols: Seq[String],
       clusterBy: Seq[String] = Nil, clusterPartitions: Int = 0): Int = {
     val v = write(spark, df, Nil, clusterBy, clusterPartitions)
-    StatsManifest.write(spark.read.parquet(s"$root/_v$v"), statsCols, fs(spark), statsPath(v))
+    StatsManifest.write(readDir(spark, s"$root/_v$v"), statsCols, fs(spark), statsPath(v))
     v
   }
-
-  private def readFiles(spark: SparkSession,
-      prune: Vector[String] => Vector[String]): DataFrame = {
-    val v = currentVersion(spark).getOrElse(
-      throw new IllegalStateException(s"SnapshotTable $root has no committed version"))
-    StatsManifest.readLines(fs(spark), statsPath(v)).map(prune) match {
-      case None => read(spark) // no manifest -> full scan
-      case Some(files) if files.isEmpty =>
-        read(spark).limit(0) // schema-preserving empty relation
-      case Some(files) =>
-        // per-dir basePath grouping (readManifest) keeps any hive
-        // partition values even though surviving files span several _v dirs
-        applyTombstones(spark, v, readManifest(spark, files))
-    }
-  }
-
-  /** Range-pruned read: only files whose recorded [min,max] for `column`
-    * intersects [lo,hi] are handed to the scan (timestamp columns: pass
-    * epoch-micros bounds; date columns epoch days). Falls back to a full
-    * read when the live version has no stats manifest. The caller still
-    * applies the row-level filter -- stats pruning is a superset
-    * guarantee, exactly like partition pruning. */
-  def readPruned(spark: SparkSession, column: String, lo: Double, hi: Double): DataFrame =
-    readFiles(spark, StatsManifest.filesInRange(_, column, lo, hi))
-
-  /** String-range-pruned read over a string stats column ([lo,hi]
-    * inclusive). Truncated maxes prune against their prefix-successor, so
-    * pruning stays a superset guarantee. */
-  def readPrunedString(spark: SparkSession, column: String, lo: String, hi: String): DataFrame =
-    readFiles(spark, StatsManifest.filesInStringRange(_, column, lo, hi))
-
-  /** Point-lookup convenience: [[readPrunedString]] with lo = hi. */
-  def readPrunedEq(spark: SparkSession, column: String, value: String): DataFrame =
-    readPrunedString(spark, column, value, value)
 
   // ── Per-file Bloom filter index (point lookups off the clustering order) ─
   //
@@ -859,7 +833,7 @@ final class SnapshotTable(val root: String,
   // high-cardinality column a point lookup still touches all files. The
   // Delta answer is a bloom filter index; same here: `writeIndexed` builds
   // a per-file Bloom filter sidecar (`_bloom_v<N>`, built distributed, only
-  // the serialized filters reach the driver), and the bloom-pruned reads
+  // the serialized filters reach the driver), and [[readIndexed]] point reads
   // schedule O(1 + fpp·files) scan tasks for an equality probe no matter
   // how the table is laid out. Pruning is a superset guarantee (Bloom: no
   // false negatives); the caller still applies the row filter.
@@ -875,7 +849,7 @@ final class SnapshotTable(val root: String,
       clusterBy: Seq[String] = Nil, clusterPartitions: Int = 0,
       partitionByCols: Seq[String] = Nil): Int = {
     val v = write(spark, df, partitionByCols, clusterBy, clusterPartitions)
-    val snap = spark.read.parquet(s"$root/_v$v")
+    val snap = readDir(spark, s"$root/_v$v")
     if (statsCols.nonEmpty)
       StatsManifest.write(snap, statsCols, fs(spark), statsPath(v))
     if (bloomCols.nonEmpty)
@@ -883,35 +857,11 @@ final class SnapshotTable(val root: String,
     v
   }
 
-  private def readBloomFiles(spark: SparkSession,
-      prune: (org.apache.hadoop.fs.FileSystem, Path) => Option[Vector[String]]): DataFrame = {
-    val v = currentVersion(spark).getOrElse(
-      throw new IllegalStateException(s"SnapshotTable $root has no committed version"))
-    prune(fs(spark), bloomPath(v)) match {
-      case None => read(spark)
-      case Some(files) if files.isEmpty => read(spark).limit(0)
-      case Some(files) =>
-        applyTombstones(spark, v,
-          spark.read.option("basePath", s"$root/_v$v").parquet(files: _*))
-    }
-  }
-
-  /** Bloom-pruned point lookup on an integral column: only files whose
-    * filter might contain `value` are scanned. Superset guarantee — apply
-    * the row filter after. */
-  def readPrunedBloomLong(spark: SparkSession, column: String, value: Long): DataFrame =
-    readBloomFiles(spark, BloomIndex.filesMightContainLong(_, _, column, value))
-
-  /** Bloom-pruned point lookup on a string column. */
-  def readPrunedBloomString(spark: SparkSession, column: String, value: String): DataFrame =
-    readBloomFiles(spark, BloomIndex.filesMightContainString(_, _, column, value))
-
   /** Pruning-aware read — the general SNAPSHOT relation on the plain
     * format: file listing goes through [[PruningFileIndex]], so any
     * predicate Catalyst pushes into the scan prunes the version's file
     * list through the `_stats_v` range manifest AND the `_bloom_v`
-    * point-lookup sidecar at planning time (no dedicated `readPruned*`
-    * call). Tombstones anti-join on top as in [[read]] — sound, the
+    * point-lookup sidecar at planning time. Tombstones anti-join on top as in [[read]] — sound, the
     * tombstone side is its own relation. Hive-partitioned versions (r11)
     * route through the partition-aware index — partition-value rows are
     * reattached from the `k=v` directory segments, so Catalyst's partition

@@ -126,26 +126,6 @@ private[tables] object StatsManifest {
     finally in.close()
   }
 
-  private def keepFiles(lines: Vector[String], entry: String => Boolean): Vector[String] =
-    lines.collect { case l if l.split("\t").drop(1).exists(entry) => l.split("\t")(0) }
-
-  /** Files whose recorded numeric [min,max] for `column` intersects [lo,hi]. */
-  def filesInRange(lines: Vector[String], column: String, lo: Double, hi: Double): Vector[String] =
-    keepFiles(lines, { s =>
-      val Array(c, tag, mn, mx) = s.split(":", 4)
-      c == column && tag == "n" && !(mx.toDouble < lo || mn.toDouble > hi)
-    })
-
-  /** Files whose recorded string prefix [min,max] for `column` can
-    * intersect [lo,hi] (inclusive; Java/UTF-16 ordering — codepoint order
-    * for ASCII, same as Spark's). */
-  def filesInStringRange(lines: Vector[String], column: String, lo: String, hi: String): Vector[String] =
-    keepFiles(lines, { s =>
-      val parts = s.split(":", 5)
-      parts(0) == column && parts(1) == "s" &&
-        stringEntryIntersects(parts, Some(lo), Some(hi))
-    })
-
   /** Can a `col:s:…` stats entry's recorded [min,max] prefix range
     * intersect [lo,hi] (either side optionally unbounded)? Skip iff the
     * file's max < lo or the file's min > hi. A stored min prefix is ≤ the

@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions._
   * THAT column only; every other column's ranges span the whole domain in
   * every file. Interleaving the bits of several columns' rank codes and
   * range-clustering on the interleaved value gives every participating
-  * column locality ∝ 2^(-bits/d) per file, so a [[SnapshotTable.readPruned]]
-  * range probe on ANY of them skips most files — the property linear
+  * column locality ∝ 2^(-bits/d) per file, so a [[SnapshotTable.readIndexed]]
+  * range filter on ANY of them skips most files — the property linear
   * sort order cannot provide for more than one column.
   *
   * Mechanics: each column is scaled to a 16-bit rank code from its

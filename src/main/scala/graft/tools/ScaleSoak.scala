@@ -346,7 +346,7 @@ object ScaleSoak {
       results("bucketed_update_bloom_point") = blW
       // the read-side lookup rides the same probe: flat in table size
       val (nL, prW) = time(s"$tag/bucketed_read_bloom_point") {
-        tb.readPrunedPoint(spark, "o_custkey", probeCust)
+        tb.readIndexed(spark)
           .filter(col("o_custkey") === probeCust).count()
       }
       println(s"[soak]   bloom-point read rows=$nL")

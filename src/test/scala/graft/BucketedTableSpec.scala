@@ -6,6 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.ScannedFiles.scannedFiles
 import graft.cdc.ScdMerge
 import graft.tables.BucketedSnapshotTable
 
@@ -197,9 +198,9 @@ class BucketedTableSpec extends AnyFunSuite {
     assert(ScdMerge.current(t.read(spark)).count() == 64)
 
     // per-batch stats prune: only batch-2 files can hold seq=2 versions
-    val pr = t.readPruned(spark, "seq", 2.0, 2.0)
-    assert(pr.inputFiles.length <= touched.size)
-    assert(pr.filter($"seq" === 2).select("k").as[Int].collect().toSet == Set(1, 2))
+    val pr = t.readIndexed(spark).filter($"seq" === 2)
+    assert(scannedFiles(pr) <= touched.size)
+    assert(pr.select("k").as[Int].collect().toSet == Set(1, 2))
   }
 
   test("bucketed deletes: SCD1 hides keys (tombstone state persists); SCD2 stays bucket-pruned") {
@@ -473,18 +474,21 @@ class BucketedTableSpec extends AnyFunSuite {
     val touched = t.scd1Merge(spark, Seq((1, 2, 2), (2, 2, 2)).toDF("k", "seq", "d"), "seq")
 
     val full = t.read(spark)
-    val pr = t.readPruned(spark, "d", 2.0, 2.0)
+    val pr = t.readIndexed(spark).filter($"d" === 2)
     // only the batch-2 bucket files can contain d=2; batch-1 files
     // (max d=1) are pruned even though their buckets are still live
-    assert(pr.inputFiles.length <= touched.size)
-    assert(pr.inputFiles.length < full.inputFiles.length)
-    assert(pr.filter($"d" === 2).count() == 2)
-    assert(pr.filter($"d" === 2).select("k").as[Int].collect().toSet == Set(1, 2))
+    val kept = scannedFiles(pr)
+    assert(kept <= touched.size)
+    assert(kept < full.inputFiles.length)
+    assert(pr.count() == 2)
+    assert(pr.select("k").as[Int].collect().toSet == Set(1, 2))
 
     // a covering range sees the whole merged table; a disjoint one is empty
-    assert(t.readPruned(spark, "d", 1.0, 2.0).count() == full.count())
-    assert(t.readPruned(spark, "d", 99.0, 100.0).count() == 0)
-    assert(t.readPruned(spark, "d", 99.0, 100.0).columns.toSeq == full.columns.toSeq)
+    assert(t.readIndexed(spark).filter($"d".between(1, 2)).count() == full.count())
+    val none = t.readIndexed(spark).filter($"d".between(99, 100))
+    assert(none.count() == 0)
+    assert(scannedFiles(none) == 0)
+    assert(none.columns.toSeq == full.columns.toSeq)
   }
 
   test("copy-on-write UPDATE/DELETE: affected-buckets-only IO, simultaneous SET, key columns protected") {
@@ -541,9 +545,9 @@ class BucketedTableSpec extends AnyFunSuite {
       .as[(String, Boolean)].head() == (("v4", true)))
     // stats stay complete across evolved batches: seq=2 prunes to the new
     // batch's bucket only; a covering range still sees every row
-    val pr = t.readPruned(spark, "seq", 2.0, 2.0)
-    assert(pr.filter($"seq" === 2).select("k").as[Int].collect().toSeq == Seq(3))
-    assert(t.readPruned(spark, "seq", 1.0, 2.0).count() == 80)
+    val pr = t.readIndexed(spark).filter($"seq" === 2)
+    assert(pr.select("k").as[Int].collect().toSeq == Seq(3))
+    assert(t.readIndexed(spark).filter($"seq".between(1, 2)).count() == 80)
     // round-trip the other way: a later full-schema merge on the evolved
     // table unions cleanly
     t.scd1Merge(spark, Seq((5, 3, "v5b")).toDF("k", "seq", "v"), "seq")
@@ -728,19 +732,19 @@ class BucketedTableSpec extends AnyFunSuite {
 
     // read-side point lookup on the non-key column: scans only the files
     // whose filter might contain the key, exact after the row filter
-    val look = t.readPrunedPoint(spark, "oid", 888888L)
-    assert(look.inputFiles.length <= 3,
-      s"point read must prune files: ${look.inputFiles.length}")
-    assert(look.filter($"oid" === 888888L).select("name").as[String].head() == "upd2")
-    val lookS = t.readPrunedPoint(spark, "name", "upd")
-    assert(lookS.filter($"name" === "upd").select("k").as[Int].head() == 3)
+    val look = t.readIndexed(spark).filter($"oid" === 888888L)
+    val lookFiles = scannedFiles(look)
+    assert(lookFiles <= 3, s"point read must prune files: $lookFiles")
+    assert(look.select("name").as[String].head() == "upd2")
+    val lookS = t.readIndexed(spark).filter($"name" === "upd")
+    assert(lookS.select("k").as[Int].head() == 3)
     // r10: doubles probe the index now — a fractional value can equal no
     // long, so the probe proves absence and schedules NOTHING
-    assert(t.readPrunedPoint(spark, "oid", 1.5).inputFiles.isEmpty)
+    assert(scannedFiles(t.readIndexed(spark).filter($"oid" === 1.5)) == 0)
     // IN-list form: keeps a file when ANY value might be contained
-    val lookIn = t.readPrunedPoints(spark, "oid", Seq(888888L, 5000L))
-    assert(lookIn.inputFiles.length <= 4)
-    assert(lookIn.filter($"oid".isin(888888L, 5000L)).count() == 2)
+    val lookIn = t.readIndexed(spark).filter($"oid".isin(888888L, 5000L))
+    assert(scannedFiles(lookIn) <= 4)
+    assert(lookIn.count() == 2)
 
     // ANALYZE BLOOM backfills an index on a table written without one, and
     // INCREMENTAL re-ANALYZE skips covered dirs (immutable batch dirs)

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.ScannedFiles.scannedFiles
 import graft.cdc.ScdMerge
 import graft.ingest.{IncrementalIngest, TableSpec, WatermarkStore}
 import graft.ops.{Expectation, Expectations}
@@ -74,7 +75,7 @@ class EngineCoreSpec extends AnyFunSuite {
     t.writeWithStats(spark, (1 to 100).map(i => (i, i * 10)).toDF("k", "v"),
       statsCols = Seq("k"), clusterBy = Seq("k"), clusterPartitions = 4)
     t.deleteKeys(spark, Seq(10, 15).toDF("k"))
-    val pruned = t.readPruned(spark, "k", 1, 25)
+    val pruned = t.readIndexed(spark)
     assert(pruned.filter($"k" between (1, 25)).select("k").as[Int].collect().toSet ==
       ((1 to 25).toSet -- Set(10, 15)))
   }
@@ -247,16 +248,19 @@ class EngineCoreSpec extends AnyFunSuite {
     t.writeWithStats(spark, spark.range(1000).toDF("x").withColumn("y", col("x") * 2),
       statsCols = Seq("x"), clusterBy = Seq("x"), clusterPartitions = 10)
     val full = t.read(spark)
-    val pruned = t.readPruned(spark, "x", 100.0, 199.0)
-    assert(pruned.inputFiles.length < full.inputFiles.length,
-      s"expected pruning: ${pruned.inputFiles.length} vs ${full.inputFiles.length}")
+    val pruned = t.readIndexed(spark).filter(col("x").between(100, 199))
+    val kept = scannedFiles(pruned)
+    assert(kept < full.inputFiles.length,
+      s"expected pruning: $kept vs ${full.inputFiles.length}")
     // superset guarantee + exactness after row filter
     val exact = full.filter(col("x").between(100, 199)).as[(Long, Long)].collect().toSet
-    val got = pruned.filter(col("x").between(100, 199)).as[(Long, Long)].collect().toSet
+    val got = pruned.as[(Long, Long)].collect().toSet
     assert(got == exact)
-    // disjoint range ⇒ empty relation, schema preserved
-    assert(t.readPruned(spark, "x", 5000.0, 6000.0).count() == 0)
-    assert(t.readPruned(spark, "x", 5000.0, 6000.0).columns.toSeq == Seq("x", "y"))
+    // disjoint range ⇒ no file scanned, schema preserved
+    val none = t.readIndexed(spark).filter(col("x").between(5000, 6000))
+    assert(none.count() == 0)
+    assert(scannedFiles(none) == 0)
+    assert(none.columns.toSeq == Seq("x", "y"))
   }
 
   test("append + optimizeCompact: O(increment) commits, only small files rewritten, stats carried") {
@@ -287,8 +291,8 @@ class EngineCoreSpec extends AnyFunSuite {
     assert(rowsBefore == 20040)
     // appended files are stats-covered too: a probe into appended key space
     // touches only small files
-    val appendProbe = t.readPruned(spark, "k", 20000, 20040)
-    assert(appendProbe.inputFiles.length <= 4)
+    val appendProbe = t.readIndexed(spark).filter(col("k").between(20000, 20040))
+    assert(scannedFiles(appendProbe) <= 4)
 
     // compaction: the 4 small files pack into 1; the 2 big ones survive in place
     val next = t.optimizeCompact(spark, targetBytes = 100000)
@@ -300,9 +304,9 @@ class EngineCoreSpec extends AnyFunSuite {
     assert((after -- before).forall(_.contains(s"_v$next/")), "new files live in the new version dir")
 
     // stats manifest carried: range probe still prunes and is exact
-    val pruned = t.readPruned(spark, "k", 0, 999)
-    assert(pruned.inputFiles.length == 1)
-    assert(pruned.filter(col("k") <= 999).count() == 1000)
+    val pruned = t.readIndexed(spark).filter(col("k").between(0, 999))
+    assert(scannedFiles(pruned) == 1)
+    assert(pruned.count() == 1000)
 
     // time travel: pre-compaction version intact
     assert(t.readVersion(spark, v).count() == rowsBefore)
@@ -344,9 +348,10 @@ class EngineCoreSpec extends AnyFunSuite {
     val packed = t.read(spark).inputFiles.filter(_.contains(s"_v$v/"))
     assert(packed.length >= 2, s"expected >=2 range-packed files, got ${packed.length}")
     // a probe into one appended range touches exactly one packed file
-    val probe = t.readPruned(spark, "k", 30000, 30009)
-    assert(probe.inputFiles.length == 1, s"probe should hit 1 file, got ${probe.inputFiles.length}")
-    assert(probe.filter($"k".between(30000, 30009)).count() == 10)
+    val probe = t.readIndexed(spark).filter($"k".between(30000, 30009))
+    val probeFiles = scannedFiles(probe)
+    assert(probeFiles == 1, s"probe should hit 1 file, got $probeFiles")
+    assert(probe.count() == 10)
   }
 
   test("appendTxn: per-app batch watermark makes replays no-ops; apps are independent") {
@@ -414,9 +419,11 @@ class EngineCoreSpec extends AnyFunSuite {
 
     val z = new SnapshotTable(tmp("zord"))
     graft.tables.Zorder.writeZordered(z, spark, df, Seq("a", "b"), clusterPartitions = 16)
+    def lowRange(t: SnapshotTable, c: String) =
+      t.readIndexed(spark).filter(col(c).between(0, 255))
     val zAll = z.read(spark).inputFiles.length
-    val zByA = z.readPruned(spark, "a", 0.0, 255.0).inputFiles.length
-    val zByB = z.readPruned(spark, "b", 0.0, 255.0).inputFiles.length
+    val zByA = scannedFiles(lowRange(z, "a"))
+    val zByB = scannedFiles(lowRange(z, "b"))
     assert(zByA < zAll, s"z-order should prune on a: $zByA vs $zAll")
     assert(zByB < zAll, s"z-order should prune on b: $zByB vs $zAll")
 
@@ -424,17 +431,14 @@ class EngineCoreSpec extends AnyFunSuite {
     val lin = new SnapshotTable(tmp("linord"))
     lin.writeWithStats(spark, df, Seq("a", "b"),
       clusterBy = Seq("a"), clusterPartitions = 16)
-    assert(lin.readPruned(spark, "b", 0.0, 255.0).inputFiles.length ==
-      lin.read(spark).inputFiles.length)
+    assert(scannedFiles(lowRange(lin, "b")) == lin.read(spark).inputFiles.length)
 
     // superset guarantee: pruned + row filter ≡ full filter, both axes
     val wantA = df.filter(col("a") <= 255).select("id").as[Long].collect().toSet
-    val gotA = z.readPruned(spark, "a", 0.0, 255.0)
-      .filter(col("a") <= 255).select("id").as[Long].collect().toSet
+    val gotA = lowRange(z, "a").select("id").as[Long].collect().toSet
     assert(gotA == wantA)
     val wantB = df.filter(col("b") <= 255).select("id").as[Long].collect().toSet
-    val gotB = z.readPruned(spark, "b", 0.0, 255.0)
-      .filter(col("b") <= 255).select("id").as[Long].collect().toSet
+    val gotB = lowRange(z, "b").select("id").as[Long].collect().toSet
     assert(gotB == wantB)
   }
 
@@ -447,25 +451,27 @@ class EngineCoreSpec extends AnyFunSuite {
       .withColumn("longk", concat(format_string("p%03d", (col("id") / 100).cast("int")), lit("x" * 40)))
     t.writeWithStats(spark, df, statsCols = Seq("k", "longk"),
       clusterBy = Seq("k"), clusterPartitions = 10)
-    val full = t.read(spark)
+    val total = t.read(spark).inputFiles.length
 
-    val eq = t.readPrunedEq(spark, "k", "k500")
-    assert(eq.inputFiles.length < full.inputFiles.length,
-      s"expected pruning: ${eq.inputFiles.length} vs ${full.inputFiles.length}")
-    assert(eq.filter(col("k") === "k500").count() == 1)
+    val eq = t.readIndexed(spark).filter(col("k") === "k500")
+    val eqFiles = scannedFiles(eq)
+    assert(eqFiles < total, s"expected pruning: $eqFiles vs $total")
+    assert(eq.count() == 1)
 
-    val rng = t.readPrunedString(spark, "k", "k100", "k199")
-    assert(rng.inputFiles.length < full.inputFiles.length)
-    assert(rng.filter(col("k").between("k100", "k199")).count() == 100)
+    val rng = t.readIndexed(spark).filter(col("k").between("k100", "k199"))
+    assert(scannedFiles(rng) < total)
+    assert(rng.count() == 100)
 
     // truncated column: stored max prefix is p0..x*28 (< full value), so the
     // prefix-successor bound must still admit every real match (superset)
-    val tr = t.readPrunedString(spark, "longk", "p005", "p005" + "x" * 40)
+    val tr = t.readIndexed(spark).filter(col("longk").between("p005", "p005" + "x" * 40))
     assert(tr.filter(col("longk") === "p005" + "x" * 40).count() == 100)
 
-    // out-of-range point ⇒ empty relation, schema preserved
-    assert(t.readPrunedEq(spark, "k", "zzz").count() == 0)
-    assert(t.readPrunedEq(spark, "k", "zzz").columns.toSeq == Seq("id", "k", "longk"))
+    // out-of-range point ⇒ no file scanned, schema preserved
+    val none = t.readIndexed(spark).filter(col("k") === "zzz")
+    assert(none.count() == 0)
+    assert(scannedFiles(none) == 0)
+    assert(none.columns.toSeq == Seq("id", "k", "longk"))
   }
 
   test("SnapshotTable.restore: forward-history rollback; history reports every version") {
@@ -530,29 +536,26 @@ class EngineCoreSpec extends AnyFunSuite {
 
     // present long key: exact rows, fewer files scheduled
     val probe = full.orderBy(col("x")).select("k").as[Long].head()
-    val prunedL = t.readPrunedBloomLong(spark, "k", probe)
-    assert(prunedL.inputFiles.length < nFiles,
-      s"expected bloom pruning: ${prunedL.inputFiles.length} vs $nFiles")
-    assert(prunedL.filter(col("k") === probe).collect().toSet ==
-      full.filter(col("k") === probe).collect().toSet)
+    def byK(v: Long) = t.readIndexed(spark).filter(col("k") === v)
+    val prunedL = byK(probe)
+    val keptL = scannedFiles(prunedL)
+    assert(keptL < nFiles, s"expected bloom pruning: $keptL vs $nFiles")
+    assert(prunedL.collect().toSet == full.filter(col("k") === probe).collect().toSet)
 
     // present string key
     val sProbe = full.orderBy(col("x")).select("s").as[String].head()
-    val prunedS = t.readPrunedBloomString(spark, "s", sProbe)
-    assert(prunedS.inputFiles.length < nFiles)
-    assert(prunedS.filter(col("s") === sProbe).collect().toSet ==
-      full.filter(col("s") === sProbe).collect().toSet)
+    val prunedS = t.readIndexed(spark).filter(col("s") === sProbe)
+    assert(scannedFiles(prunedS) < nFiles)
+    assert(prunedS.collect().toSet == full.filter(col("s") === sProbe).collect().toSet)
 
     // absent keys: across many probes, false positives stay near fpp
-    val absentHits = (1 to 25).map(i => t.readPrunedBloomLong(spark, "k", 7000000L + i)
-      .inputFiles.length).sum
+    val absentHits = (1 to 25).map(i => scannedFiles(byK(7000000L + i))).sum
     assert(absentHits <= 0.2 * 25 * nFiles, s"fpp blowout: $absentHits files kept")
 
     // superset guarantee over every key of one file's domain slice
     val keys = full.filter(col("x") < 20).select("k").as[Long].collect()
     keys.foreach { kk =>
-      assert(t.readPrunedBloomLong(spark, "k", kk).filter(col("k") === kk).count() ==
-        full.filter(col("k") === kk).count())
+      assert(byK(kk).count() == full.filter(col("k") === kk).count())
     }
   }
 
@@ -571,13 +574,13 @@ class EngineCoreSpec extends AnyFunSuite {
     t.writeWithStats(spark, grid, statsCols = Seq("x", "y"),
       clusterBy = Seq("z"), clusterPartitions = 16)
     val full = t.read(spark).inputFiles.length
-    val px = t.readPruned(spark, "x", 0.0, 7.0).inputFiles.length
-    val py = t.readPruned(spark, "y", 0.0, 7.0).inputFiles.length
+    val xRange = t.readIndexed(spark).filter(col("x").between(0, 7))
+    val px = scannedFiles(xRange)
+    val py = scannedFiles(t.readIndexed(spark).filter(col("y").between(0, 7)))
     assert(px < full, s"x-range did not prune ($px of $full)")
     assert(py < full, s"y-range did not prune ($py of $full)")
     // superset guarantee + exactness after the row filter
-    assert(t.readPruned(spark, "x", 0.0, 7.0)
-      .filter(col("x") <= 7).count() == 8L * 64)
+    assert(xRange.count() == 8L * 64)
   }
 
   test("SnapshotTable.changes: keyed diff classifies insert/update/delete, skips unchanged") {

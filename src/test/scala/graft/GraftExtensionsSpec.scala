@@ -503,10 +503,10 @@ class GraftExtensionsSpec extends AnyFunSuite {
       .repartition(8))
     sqlRun(s"ANALYZE '$work/pb' BLOOM (k)").collect()
     val full = pt.read(spark).inputFiles.length
-    val pruned = pt.readPrunedBloomLong(spark, "k", 7L)
-    assert(pruned.inputFiles.length < full,
-      s"plain bloom backfill must prune (${pruned.inputFiles.length} of $full)")
-    assert(pruned.filter($"k" === 7L).count() == 1)
+    val pruned = pt.readIndexed(spark).filter($"k" === 7L)
+    val kept = graft.ScannedFiles.scannedFiles(pruned)
+    assert(kept < full, s"plain bloom backfill must prune ($kept of $full)")
+    assert(pruned.count() == 1)
     // bare ANALYZE with neither STATS nor BLOOM refuses
     assert(intercept[Exception](sqlRun(s"ANALYZE '$work/pb'").collect())
       .getMessage.contains("STATS"))

@@ -128,11 +128,14 @@ class SnapshotTableProps extends AnyFunSuite {
     val work = java.nio.file.Files.createTempDirectory("evostats").toString
     val t = new SnapshotTable(s"$work/t")
     t.writeWithStats(spark, Seq((1L, 10.0), (2L, 20.0)).toDF("k", "m"), Seq("m"))
-    // increment lacks the stats column m → stats manifest must NOT carry
-    // (a file without a line would be silently excluded by pruned reads)
+    // increment lacks the stats column m → stats manifest must NOT carry,
+    // and a range-filtered read still scans every file
     t.appendEvolving(spark, Seq(Tuple1(3L)).toDF("k").coalesce(1))
-    val pruned = t.readPruned(spark, "m", 0.0, 100.0)
-      .select("k").as[Long].collect().toSet
-    assert(pruned == Set(1L, 2L, 3L), s"pruned read lost rows: $pruned")
+    assert(t.statsColumns(spark).isEmpty, "the stats manifest must not carry")
+    val pruned = t.readIndexed(spark).filter($"m".between(0.0, 100.0))
+    val scanned = graft.ScannedFiles.scannedFiles(pruned)
+    assert(scanned == t.read(spark).inputFiles.length, s"pruned read skipped files: $scanned")
+    val rows = pruned.select("k").as[Long].collect().toSet
+    assert(rows == Set(1L, 2L), s"pruned read lost rows: $rows")
   }
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.ScannedFiles.scannedFiles
 import graft.SparkTestSession
 
 /** Read-side data skipping through the pruning file index: any predicate
@@ -20,17 +21,6 @@ class PruningReadSpec extends AnyFunSuite {
 
   private def sql(q: String): DataFrame =
     org.apache.spark.sql.GraftColumnBridge.graftSql(spark, q)
-
-  /** Files the EXECUTED scan actually read (the planner's listFiles
-    * output), summed over every parquet scan in the plan. */
-  private def scannedFiles(df: DataFrame): Long = {
-    df.collect()
-    val scans = df.queryExecution.executedPlan.collect {
-      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
-    }
-    assert(scans.nonEmpty, "expected a FileSourceScanExec in the executed plan")
-    scans.map(_.metrics("numFiles").value).sum
-  }
 
   test("bucketed SNAPSHOT: WHERE prunes files via stats AND bloom; results exact") {
     val root = tmp("bpread")
@@ -50,8 +40,7 @@ class PruningReadSpec extends AnyFunSuite {
       s"stats skipping must prune the range scan: $rangeFiles of $total files")
 
     // point predicate on the bloom column, pushed through a plain .filter
-    // on the relation (NO dedicated readPruned call — the file index does
-    // it at planning time)
+    // on the relation (the file index prunes at planning time)
     val snap = sql(s"SNAPSHOT '$root'")
     val point = snap.filter($"oid" === 999999L)
     assert(point.select("k").as[Int].collect().toSeq == Seq(3))
@@ -303,10 +292,42 @@ class PruningReadSpec extends AnyFunSuite {
     assert(tS.readIndexed(spark).filter($"ref" === "000294").select("k")
       .as[Int].collect().toSeq == Seq(42))
 
-    // serving API: readPrunedPoints accepts doubles now
-    val look = t.readPrunedPoints(spark, "price", Seq(42.25, 77.25))
-    assert(look.inputFiles.length * 4 <= total)
-    assert(look.filter($"price".isin(42.25, 77.25)).count() == 2)
+    // a double IN-list prunes the read through the "d" filters
+    val look = t.readIndexed(spark).filter($"price".isin(42.25, 77.25))
+    assert(scannedFiles(look) * 4 <= total)
+    assert(look.count() == 2)
+  }
+
+  test("timestamp and date stats prune the readIndexed scan; rows exact in a non-UTC session") {
+    // 400 hourly rows from 2024-01-01T00:00Z, clustered into 8 files of 50
+    val prevTz = spark.conf.get("spark.sql.session.timeZone")
+    try {
+      // stats hold zone-free epoch micros while the literal folds in the
+      // session zone: Tokyo 09:00 on Jan 5 is 00:00Z, i.e. rows 96..119
+      spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
+      val t = new SnapshotTable(tmp("tsstats"))
+      t.writeWithStats(spark, (0 until 400).toDF("i")
+          .withColumn("ts", timestamp_seconds(lit(1704067200L) + $"i" * 3600)),
+        statsCols = Seq("ts"), clusterBy = Seq("ts"), clusterPartitions = 8)
+      val total = t.read(spark).inputFiles.length
+      val day = t.readIndexed(spark)
+        .filter($"ts" >= lit("2024-01-05 09:00:00").cast("timestamp") &&
+          $"ts" < lit("2024-01-06 09:00:00").cast("timestamp"))
+      assert(day.select("i").as[Int].collect().toSet == (96 until 120).toSet)
+      val kept = scannedFiles(day)
+      assert(kept > 0 && kept < total, s"timestamp stats must prune: $kept of $total")
+    } finally spark.conf.set("spark.sql.session.timeZone", prevTz)
+
+    // one row per day from 2024-01-01: March is rows 60..90 (leap year)
+    val d = new SnapshotTable(tmp("datestats"))
+    d.writeWithStats(spark, (0 until 400).toDF("i")
+        .withColumn("d", date_add(lit("2024-01-01").cast("date"), $"i")),
+      statsCols = Seq("d"), clusterBy = Seq("d"), clusterPartitions = 8)
+    val total = d.read(spark).inputFiles.length
+    val march = d.readIndexed(spark).filter($"d".between("2024-03-01", "2024-03-31"))
+    assert(march.select("i").as[Int].collect().toSet == (60 to 90).toSet)
+    val kept = scannedFiles(march)
+    assert(kept > 0 && kept < total, s"date stats must prune: $kept of $total")
   }
 
   test("decimal columns take the double bloom kind and prune") {
