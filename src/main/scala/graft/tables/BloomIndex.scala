@@ -149,13 +149,6 @@ private[graft] object BloomIndex {
       .flatMap(_.headOption.filter(l => l.startsWith("cols=") && !l.contains("\t")))
       .map(_.stripPrefix("cols=").split(",").map(_.trim).filter(_.nonEmpty).toSeq)
 
-  /** The data files an index at `dir` LISTS (None = no index) — what a
-    * probe needs to distinguish "provably absent" from "never indexed":
-    * files outside this set must always be kept (superset guarantee). */
-  def indexedFiles(fs: FileSystem, dir: Path): Option[Set[String]] =
-    StatsManifest.readLines(fs, new Path(dir, "_MANIFEST")).map(
-      _.collect { case l if l.contains("\t") => l.split("\t", 2)(0) }.toSet)
-
   /** Probe-IO counter (reads of sidecars, blobs, and probe manifests) —
     * the observable the consolidation pin asserts on: a consolidated dir
     * probe costs O(1) reads, a per-file one O(files). Test-only. */
@@ -213,23 +206,35 @@ private[graft] object BloomIndex {
       }
   }
 
-  /** Files whose filter for `column` might contain ANY of the point
-    * values (the IN-list / OR-of-equalities probe), PER VALUE and
-    * coercion-aware: each value converts to the filter's hash kind when
-    * the conversion provably preserves SQL-equality semantics, proves
-    * absence when no stored value of the kind can equal it, and KEEPS the
-    * file when neither holds — so a mixed-kind IN-list still prunes on
-    * its convertible items instead of degrading to a full scan. An empty
-    * constraint (an unsatisfiable conjunction) prunes every indexed file.
-    * None = no index at `dir`. */
-  def filesMightContainAny(fs: FileSystem, dir: Path, column: String,
-      longs: Set[Long], strs: Set[String],
-      dbls: Set[Double] = Set.empty): Option[Vector[String]] =
-    StatsManifest.readLines(fs, new Path(dir, "_MANIFEST")).map { manifest =>
-      probeReads.incrementAndGet()
-      val reader = entryReader(fs, dir, manifest)
-      parProbe(manifest) { parts =>
-        val entry = reader(parts(1))
+  /** The index at `dir`, its manifest and blobs read at most ONCE however
+    * many questions a planning or DML pass asks of it — every
+    * point-constrained column of a predicate and the DML candidate pass
+    * share the reads. */
+  final class Probe(fs: FileSystem, dir: Path) {
+    private lazy val manifest: Option[Vector[String]] =
+      StatsManifest.readLines(fs, new Path(dir, "_MANIFEST"))
+        .map { m => probeReads.incrementAndGet(); m }
+    private lazy val reader = manifest.map(entryReader(fs, dir, _))
+
+    /** The data files the index LISTS (None = no index) — what a probe
+      * needs to distinguish "provably absent" from "never indexed": files
+      * outside this set must always be kept (superset guarantee). */
+    lazy val indexedFiles: Option[Set[String]] = manifest.map(
+      _.collect { case l if l.contains("\t") => l.split("\t", 2)(0) }.toSet)
+
+    /** Files whose filter for `column` might contain ANY of the point
+      * values (the IN-list / OR-of-equalities probe), PER VALUE and
+      * coercion-aware: each value converts to the filter's hash kind when
+      * the conversion provably preserves SQL-equality semantics, proves
+      * absence when no stored value of the kind can equal it, and KEEPS
+      * the file when neither holds — so a mixed-kind IN-list still prunes
+      * on its convertible items instead of degrading to a full scan. An
+      * empty constraint (an unsatisfiable conjunction) prunes every
+      * indexed file. None = no index at `dir`. */
+    def filesMightContainAny(column: String, longs: Set[Long], strs: Set[String],
+        dbls: Set[Double] = Set.empty): Option[Vector[String]] =
+      for (m <- manifest; read <- reader) yield parProbe(m) { parts =>
+        val entry = read(parts(1))
           .flatMap(_.split("\t").drop(1).find(_.startsWith(s"$column:")))
         entry.forall { e =>
           val Array(_, kind, blob) = e.split(":", 3)
@@ -238,7 +243,7 @@ private[graft] object BloomIndex {
           longs.exists(might) || strs.exists(might) || dbls.exists(might)
         }
       }
-    }
+  }
 
   /** Consolidate a per-file sidecar directory into ONE blob file plus an
     * offset-indexed manifest (`path\t@<blob>:<off>:<len>`), cutting probe

@@ -38,15 +38,16 @@ import graft.cdc.ScdMerge
   *   root/_batch_v<N>/_stats            // per-file min/max (when statsCols)
   * }}}
   *
-  * Commit protocol identical to [[SnapshotTable]]: batches stage under
-  * `_staging_*`, then rename + manifest + pointer flip inside the
-  * [[CommitLock]] critical section. Merges are optimistic read-modify-
-  * write — a merge that loses the commit race REBASES when the
-  * intervening commits left its affected buckets' manifest entries
-  * unmoved (disjoint writers each stage once and serialize only on the
-  * metadata commit), and otherwise recomputes against the fresh state
-  * and retries, so racing writers on a shared table all land and none
-  * is lost.
+  * Commit protocol — ONE path: every data commit (merge, DML, two-phase
+  * SCD1, compaction) stages under `_staging_*` through `stageBatch`, then
+  * renames + writes the manifest + flips the pointer through
+  * `lockedCommit`'s [[CommitLock]] critical section; writers differ only
+  * in the ENTRY RULE applied to the manifest found under the lock. Merges
+  * are optimistic read-modify-write — a merge that loses the commit race
+  * REBASES when the intervening commits left its affected buckets'
+  * entries unmoved (disjoint writers each stage once), and otherwise
+  * recomputes against the fresh state and retries, so racing writers all
+  * land and none is lost. Compaction re-points only unmoved buckets.
   *
   * Reference semantics carried over: SCD1 = FactStream.py:12-21, SCD2 =
   * DimUser.py:20-29 (via [[ScdMerge]]).
@@ -83,8 +84,9 @@ final class BucketedSnapshotTable(
 
   /** Test-only fault injection (no-op in production): invoked at named
     * commit-protocol steps ("staged", "renamed", "manifest_file",
-    * "mid_flip", "committed") so the crash-recovery property spec can
-    * kill a writer between any two steps. */
+    * "mid_flip", "committed"; "compact_staged", "analyze_built") so the
+    * crash-recovery property spec can kill a writer between any two
+    * steps. */
   private[tables] var onStep: String => Unit = _ => ()
 
   /** Lock-free: [[MetaIO.readPointer]] rides out a concurrent flip and
@@ -745,11 +747,12 @@ final class BucketedSnapshotTable(
     // the batch's buckets; a bucket no sidecar lists is kept too.
     val sidecarCands = Some(m.groupBy(_._2).flatMap { case (dir, entries) =>
       val stats = StatsManifest.readLines(f, batchStatsPath(dir))
-      PruningFileIndex.dirKeep(f, stats, batchBloomPath(dir), nBounds, sBounds, pSets) match {
+      val bloom = new BloomIndex.Probe(f, batchBloomPath(dir))
+      PruningFileIndex.dirKeep(stats, bloom, nBounds, sBounds, pSets) match {
         case None => entries.keys
         case Some(keep) =>
           val listed = (stats.toSeq.flatten.map(_.split("\t")(0)) ++
-            BloomIndex.indexedFiles(f, batchBloomPath(dir)).toSeq.flatten).map(norm)
+            bloom.indexedFiles.toSeq.flatten).map(norm)
           val byBucketDir = listed.groupBy(p => new Path(p).getParent.toUri.getPath)
           entries.keys.filter(b =>
             byBucketDir.get(norm(s"$root/$dir/$BucketCol=$b")).forall(_.exists(keep)))
@@ -842,11 +845,9 @@ final class BucketedSnapshotTable(
         case None => return Set.empty
         case Some(x) => x
       }
-      val (staging, effBloomC, stagedStats, stagedSchema) =
-        stageBatch(spark, merged, v0)
-      lockedCommit(spark, staging, affected, v0, m0, wholeTableRead, txn,
-        effBloomC, stagedStats, stagedSchema) match {
-        case Some(replayed) => return if (replayed) Set.empty else affected
+      val staged = stageBatch(spark, enforceConstraints(spark, merged), v0, m0)
+      lockedCommit(spark, staged, txn)(rebase(affected, m0, wholeTableRead)) match {
+        case Some(committed) => return if (committed.isEmpty) Set.empty else affected
         case None => ()
       }
       attempt += 1
@@ -864,20 +865,22 @@ final class BucketedSnapshotTable(
   /** The DATA half of a commit: write `merged` under a fresh `_staging_*`
     * dir (invisible — no manifest references it) and compute its sidecar
     * inputs. Runnable outside, and concurrently with, any lock — two
-    * tables' staging writes may overlap. Returns (staging dir name,
-    * effective bloom columns, staged stats lines, staged FILE schema DDL
-    * — None when the batch wrote no data files). */
-  private def stageBatch(spark: SparkSession, merged: DataFrame, v0: Int)
-      : (String, Seq[String], Seq[String], Option[String]) = {
+    * tables' staging writes may overlap. `v0`/`m0` = the version and
+    * manifest the batch was computed from (the entry rule's base);
+    * `sortWithin` sorts each bucket's file on those columns. */
+  private def stageBatch(spark: SparkSession, merged: DataFrame, v0: Int,
+      m0: Map[Int, BucketEntry], sortWithin: Seq[String] = Nil)
+      : BucketedSnapshotTable.StagedBatch = {
     val f = fs(spark)
     val staging = s"_staging_${java.util.UUID.randomUUID().toString.take(12)}"
     // repartition on the bucket id so each bucket dir gets ONE writer task
     // (one file), not shufflePartitions × buckets stragglers — at scale a
     // bucket is exactly one task's output, and the shuffle is the same
-    // key-hash the merge already clustered on. CHECK constraints enforce
-    // inline in this same plan (no second scan of the batch).
-    enforceConstraints(spark, merged)
-      .repartition(col(BucketCol)).write.mode(SaveMode.Overwrite)
+    // key-hash the merge already clustered on
+    val shaped = merged.repartition(col(BucketCol))
+    (if (sortWithin.isEmpty) shaped
+     else shaped.sortWithinPartitions((BucketCol +: sortWithin).map(col): _*))
+      .write.mode(SaveMode.Overwrite)
       .partitionBy(BucketCol)
       .parquet(s"$root/$staging")
     onStep("staged")
@@ -891,108 +894,102 @@ final class BucketedSnapshotTable(
     // Index columns come from the writer OR the manifest header
     // (effectiveIndexCols): every commit keeps the table's index fresh
     val (effStatsC, effBloomC) = effectiveIndexCols(spark, v0)
+    lazy val snap = SnapshotTable.readDir(spark, s"$root/$staging")
     val stagedStats: Seq[String] =
       if (effStatsC.isEmpty || !stagedHasData) Nil
-      else StatsManifest.lines(spark.read.parquet(s"$root/$staging"), effStatsC)
+      else StatsManifest.lines(snap, effStatsC)
     // bloom sidecars land INSIDE the staging dir (underscore-hidden from
     // parquet reads) so the rename carries them; only the manifest's
     // file paths need re-pointing after the flip
-    if (effBloomC.nonEmpty && stagedHasData)
-      writeBloom(spark, spark.read.parquet(s"$root/$staging"), staging, effBloomC)
+    if (effBloomC.nonEmpty && stagedHasData) writeBloom(spark, snap, staging, effBloomC)
     // the staged FILE schema (bucket partition column excluded), recorded
     // in the manifest header at commit so planning skips the footer read
     val stagedSchema =
       if (!stagedHasData) None
       else Some(BucketedSnapshotTable.schemaDdl(merged.schema, BucketCol))
-    (staging, effBloomC, stagedStats, stagedSchema)
+    BucketedSnapshotTable.StagedBatch(staging, v0, m0, effBloomC, stagedStats, stagedSchema)
   }
 
-  /** The LOCKED metadata half of a commit: rename + sidecar repoint +
-    * manifest + pointer flip, all metadata-sized. Returns Some(replayed)
-    * on success (replayed = the txn ledger already recorded this batch, a
-    * clean no-op), None when the staged batch lost the commit race
-    * unrebasably (staging deleted — the caller restages from fresh state). */
-  private def lockedCommit(spark: SparkSession, staging: String,
-      affected: Set[Int], v0: Int, m0: Map[Int, BucketEntry],
-      wholeTableRead: Boolean, txn: Option[(String, Long)],
-      effBloomC: Seq[String], stagedStats: Seq[String],
-      stagedSchema: Option[String] = None): Option[Boolean] = {
+  /** The merge/DML entry rule for [[lockedCommit]] — DISJOINT-WRITER
+    * REBASE: a lost version race invalidates the staged batch only if an
+    * intervening commit moved one of its affected buckets' entries;
+    * otherwise the staged bytes still rewrite those buckets' current state
+    * and commit on the fresh manifest, each at the commit's own version.
+    * Predicate DML (`wholeTableRead`) scanned the whole table for its
+    * affected set, so ANY moved entry could hide rows its predicate never
+    * saw — it rebases only onto an identical manifest. */
+  private def rebase(affected: Set[Int], m0: Map[Int, BucketEntry],
+      wholeTableRead: Boolean)(mCur: Map[Int, BucketEntry], next: Int)
+      : Option[Map[Int, Int]] =
+    if (if (wholeTableRead) mCur == m0 else affected.forall(b => mCur.get(b) == m0.get(b)))
+      Some(affected.iterator.map(_ -> next).toMap)
+    else None
+
+  /** The LOCKED metadata half of every data commit: rename + sidecar
+    * repoint + manifest + pointer flip, all metadata-sized. `rule` maps
+    * the manifest found under the lock and the claimed version to the
+    * buckets this commit REPLACES, each with its new entry's contentV —
+    * None = lost the race unrebasably (staging deleted, the caller
+    * restages). Staged buckets the rule leaves out are dropped with their
+    * sidecar lines. Returns Some(Some(version)) on commit, Some(None) when
+    * the txn ledger already records the batch, None on a lost race. */
+  private def lockedCommit(spark: SparkSession,
+      s: BucketedSnapshotTable.StagedBatch, txn: Option[(String, Long)])
+      (rule: (Map[Int, BucketEntry], Int) => Option[Map[Int, Int]])
+      : Option[Option[Int]] = {
     val f = fs(spark)
-    var replayed = false
-    var committedDir: Option[String] = None
-    val committed = CommitLock.withLockHandle(f, root, commitStaleMs) { lockH =>
+    val stagingPath = new Path(s"$root/${s.dir}")
+    val result = CommitLock.withLockHandle(f, root, commitStaleMs) { lockH =>
       val cur = currentVersion(spark).getOrElse(0)
+      val mCur = if (cur == s.v0) s.m0 else readEntries(spark, cur)
+      val next = cur + 1
       // authoritative exactly-once check, inside the critical section: a
       // racing restart of the same stream that committed this batch
       // first makes ours a clean no-op
-      if (txnApplied(spark, cur, txn)) {
-        f.delete(new Path(s"$root/$staging"), true)
-        replayed = true
-        true
-      } else {
-      // DISJOINT-WRITER REBASE: losing the version race only invalidates
-      // our staged batch if an intervening commit touched one of OUR
-      // affected buckets (its manifest entry moved). Otherwise the bytes
-      // we staged are still exactly the rewrite of the current state of
-      // those buckets — commit on top of the fresh manifest without
-      // recomputing. N writers on disjoint key ranges each stage ONCE
-      // and serialize only on this metadata-sized critical section,
-      // instead of each loser re-reading and re-staging its buckets.
-      // A merge's affected set comes from the BATCH (buckets of its
-      // keys), so only those entries must be unmoved; predicate DML
-      // (`wholeTableRead`) discovered its affected set by scanning the
-      // whole table, so ANY moved entry could hide rows its predicate
-      // never saw — rebase only when the manifests are identical.
-      val mCur = if (cur == v0) m0 else readEntries(spark, cur)
-      val rebasable = cur == v0 ||
-        (if (wholeTableRead) mCur == m0
-         else affected.forall(b => mCur.get(b) == m0.get(b)))
-      if (!rebasable) {
-        f.delete(new Path(s"$root/$staging"), true); false
-      } else {
-        val next = cur + 1
-        val batchDir = s"_batch_v$next"
-        // a crashed writer may have left an orphan _batch_v<next> (it
-        // died between rename and pointer flip): unreachable — claiming
-        // the version purges it, else our rename would nest into it
-        val batchPath = new Path(s"$root/$batchDir")
-        if (f.exists(batchPath)) f.delete(batchPath, true)
-        if (!f.rename(new Path(s"$root/$staging"), batchPath))
-          throw new IllegalStateException(s"BucketedSnapshotTable $root: staging rename failed")
-        onStep("renamed")
-        if (stagedStats.nonEmpty)
-          StatsManifest.writeLines(f, batchStatsPath(batchDir),
-            stagedStats.map(_.replace(s"/$staging/", s"/$batchDir/")))
-        if (effBloomC.nonEmpty) repointBloom(f, batchDir, staging, None)
-        lockH.check() // paused-holder guard: abort rather than double-flip
-        // A bucket whose merged content is EMPTY (every key tombstoned
-        // by a delete flow) writes no partition dir — its manifest entry
-        // must be REMOVED, not pointed at a missing path.
-        val written = f.listStatus(batchPath).map(_.getPath.getName)
-          .collect { case n if n.startsWith(s"$BucketCol=") =>
-            n.stripPrefix(s"$BucketCol=").toInt }.toSet
-        writeManifest(spark, next,
-          (mCur -- affected) ++
-            affected.intersect(written)
-              .map(_ -> BucketEntry(batchDir, next)).toMap,
-          txnsOf(spark, cur) ++ txn,
-          stagedSchema.map(batchDir -> _).toMap)
-        onStep("committed")
-        committedDir = Some(batchDir)
-        true
-      }
+      if (txnApplied(spark, cur, txn)) { f.delete(stagingPath, true); Some(None) }
+      else rule(mCur, next) match {
+        case None => f.delete(stagingPath, true); None
+        case Some(replaced) =>
+          val batchDir = s"_batch_v$next"
+          // a crashed writer may have left an orphan _batch_v<next> (it
+          // died between rename and pointer flip): unreachable — claiming
+          // the version purges it, else our rename would nest into it
+          val batchPath = new Path(s"$root/$batchDir")
+          if (f.exists(batchPath)) f.delete(batchPath, true)
+          if (!f.rename(stagingPath, batchPath))
+            throw new IllegalStateException(s"BucketedSnapshotTable $root: staging rename failed")
+          onStep("renamed")
+          // A bucket whose merged content is EMPTY (every key tombstoned
+          // by a delete flow) writes no partition dir — its manifest entry
+          // must be REMOVED, not pointed at a missing path. A staged
+          // bucket the rule leaves out is stale, unreferenced output.
+          val written = f.listStatus(batchPath).map(_.getPath.getName)
+            .collect { case n if n.startsWith(s"$BucketCol=") =>
+              n.stripPrefix(s"$BucketCol=").toInt }.toSet
+          val dropped = written -- replaced.keySet
+          dropped.foreach(b => f.delete(new Path(batchPath, s"$BucketCol=$b"), true))
+          def kept(line: String) =
+            !dropped.exists(b => line.contains(s"/$batchDir/$BucketCol=$b/"))
+          if (s.stats.nonEmpty)
+            StatsManifest.writeLines(f, batchStatsPath(batchDir),
+              s.stats.map(_.replace(s"/${s.dir}/", s"/$batchDir/")).filter(kept))
+          if (s.bloomCols.nonEmpty) repointBloom(f, batchDir, s.dir, kept)
+          lockH.check() // paused-holder guard: abort rather than double-flip
+          writeManifest(spark, next,
+            (mCur -- replaced.keySet) ++ replaced.collect {
+              case (b, contentV) if written(b) => b -> BucketEntry(batchDir, contentV)
+            },
+            txnsOf(spark, cur) ++ txn, // the exactly-once ledger carries forward
+            s.schema.map(batchDir -> _).toMap)
+          onStep("committed")
+          Some(Some(next))
       }
     }
-    if (committed) {
-      // post-commit, outside the lock: the fresh batch dir is immutable
-      // now — collapse its per-file bloom sidecars into the O(1)-probe
-      // blob (the compaction/ANALYZE paths already do; without this,
-      // point probes paid O(files) sidecar reads on every batch merged
-      // since the last ANALYZE — the r11 soak's growing dim-leg IO)
-      if (effBloomC.nonEmpty) committedDir.foreach(d =>
-        BloomIndex.consolidate(f, batchBloomPath(d)))
-      Some(replayed)
-    } else None
+    // post-commit, outside the lock: the fresh batch dir is immutable now
+    // — collapse its per-file bloom sidecars into the O(1)-probe blob
+    if (s.bloomCols.nonEmpty) result.flatten.foreach(v =>
+      BloomIndex.consolidate(f, batchBloomPath(s"_batch_v$v")))
+    result
   }
 
   /** TWO-PHASE SCD1 merge for multi-table coordinators (the MV refresh,
@@ -1035,11 +1032,9 @@ final class BucketedSnapshotTable(
     val merged = ScdMerge.scd1Upsert(
       fromManifest(spark, m0.map { case (b, e) => b -> e.dir }, Some(updBuckets)),
       upd, keys, seqCol, Nil, applyAsDeletes)
-    val (staging, effBloomC, stagedStats, stagedSchema) =
-      stageBatch(spark, merged, v0)
-    Some(BucketedSnapshotTable.StagedScd1(staging, updBuckets, v0, m0,
-      effBloomC, stagedStats, updates, seqCol, applyAsDeletes, txn,
-      stagedSchema))
+    Some(BucketedSnapshotTable.StagedScd1(
+      stageBatch(spark, enforceConstraints(spark, merged), v0, m0),
+      updBuckets, updates, seqCol, applyAsDeletes, txn))
   }
 
   /** Commit a [[stageScd1Merge]] batch. The metadata-sized happy path; a
@@ -1049,10 +1044,9 @@ final class BucketedSnapshotTable(
     * re-staging merge loop. Returns the buckets rewritten. */
   private[graft] def commitStagedScd1(spark: SparkSession,
       h: BucketedSnapshotTable.StagedScd1): Set[Int] =
-    lockedCommit(spark, h.staging, h.affected, h.v0, h.m0,
-      wholeTableRead = false, h.txn, h.effBloomC, h.stagedStats,
-      h.stagedSchema) match {
-      case Some(replayed) => if (replayed) Set.empty else h.affected
+    lockedCommit(spark, h.batch, h.txn)(
+        rebase(h.affected, h.batch.m0, wholeTableRead = false)) match {
+      case Some(committed) => if (committed.isEmpty) Set.empty else h.affected
       case None =>
         scd1Merge(spark, h.updates, h.seqCol, Nil, h.applyAsDeletes, h.txn)
     }
@@ -1110,16 +1104,15 @@ final class BucketedSnapshotTable(
 
   /** Re-point a staged `_bloom/_MANIFEST`'s file paths at the renamed
     * batch dir (the sidecar blobs themselves are path-agnostic — only the
-    * manifest's data-file paths matter to the probe), optionally dropping
-    * entries outside `keptDirs` (compaction's moved-bucket filter). The
-    * `cols=` header line carries through untouched. */
+    * manifest's data-file paths matter to the probe), dropping entries
+    * `kept` rejects (a commit's dropped buckets). The `cols=` header line
+    * carries through untouched. */
   private def repointBloom(f: org.apache.hadoop.fs.FileSystem, batchDir: String,
-      staging: String, keptDirs: Option[Set[String]]): Unit = {
+      staging: String, kept: String => Boolean): Unit = {
     val mPath = new Path(batchBloomPath(batchDir), "_MANIFEST")
     StatsManifest.readLines(f, mPath).foreach { ls =>
-      val out = ls.map(_.replace(s"/$staging/", s"/$batchDir/")).filter { l =>
-        !l.contains("\t") || keptDirs.forall(ds => ds.exists(l.contains))
-      }
+      val out = ls.map(_.replace(s"/$staging/", s"/$batchDir/"))
+        .filter(l => !l.contains("\t") || kept(l))
       StatsManifest.writeLines(f, mPath, out)
     }
   }
@@ -1263,9 +1256,8 @@ final class BucketedSnapshotTable(
     if (nB.isEmpty && sB.isEmpty && pS.isEmpty) (_: String) => true
     else {
       val perDir: Map[String, Option[String => Boolean]] = byDir.map { case (dir, _) =>
-        dir -> PruningFileIndex.dirKeep(f,
-          StatsManifest.readLines(f, batchStatsPath(dir)), batchBloomPath(dir),
-          nB, sB, pS)
+        dir -> PruningFileIndex.dirKeep(StatsManifest.readLines(f, batchStatsPath(dir)),
+          new BloomIndex.Probe(f, batchBloomPath(dir)), nB, sB, pS)
       }.toMap
       val fileDir: Map[String, String] = byDir.flatMap { case (dir, fls) =>
         fls.map(st => st.getPath.toUri.getPath -> dir)
@@ -1457,75 +1449,23 @@ final class BucketedSnapshotTable(
     * consistent: every bucket shows either its compacted bytes (equal
     * content) or the newer merge's bytes. Returns the committed version. */
   def compact(spark: SparkSession, clusterBy: Seq[String] = Nil): Int = {
-    val f = fs(spark)
     val v0 = currentVersion(spark).getOrElse(0)
     val m0 = if (v0 == 0) Map.empty[Int, BucketEntry] else readEntries(spark, v0)
-    var committed = v0
-    readBuckets(spark, None).foreach { df =>
-      val staging = s"_staging_${java.util.UUID.randomUUID().toString.take(12)}"
+    fromManifest(spark, m0.map { case (b, e) => b -> e.dir }, None).fold(v0) { df =>
       // clusterBy: sort WITHIN each bucket's file so parquet row-group
       // min/max become selective on those columns (the bucket layout is
-      // the file-level index; this is the row-group-level one)
-      val shaped = df.repartition(col(BucketCol))
-      (if (clusterBy.isEmpty) shaped
-       else shaped.sortWithinPartitions(
-         (BucketCol +: clusterBy).map(col): _*))
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy(BucketCol)
-        .parquet(s"$root/$staging")
-      val stagedHasData = f.listStatus(new Path(s"$root/$staging"))
-        .exists(_.getPath.getName.startsWith(s"$BucketCol="))
-      val (effStatsC, effBloomC) = effectiveIndexCols(spark, v0)
-      val stagedStats: Seq[String] =
-        if (effStatsC.isEmpty || !stagedHasData) Nil
-        else StatsManifest.lines(spark.read.parquet(s"$root/$staging"), effStatsC)
-      if (effBloomC.nonEmpty && stagedHasData)
-        writeBloom(spark, spark.read.parquet(s"$root/$staging"), staging, effBloomC)
+      // the file-level index; this is the row-group-level one). No CHECK
+      // pass: compaction rewrites content that already committed
+      val staged = stageBatch(spark, df, v0, m0, clusterBy)
       onStep("compact_staged")
-      CommitLock.withLockHandle(f, root, commitStaleMs) { lockH =>
-        val cur = currentVersion(spark).getOrElse(0)
-        val mCur = if (cur == v0) m0 else readEntries(spark, cur)
-        val next = cur + 1
-        val batchDir = s"_batch_v$next"
-        val batchPath = new Path(s"$root/$batchDir")
-        if (f.exists(batchPath)) f.delete(batchPath, true) // crashed writer's orphan
-        if (!f.rename(new Path(s"$root/$staging"), batchPath))
-          throw new IllegalStateException(s"BucketedSnapshotTable $root: staging rename failed")
-        // entries moved by intervening merges win; their compacted output
-        // is stale — drop it (not yet referenced, safe under the lock).
-        // A bucket DELETED since the read (entry gone) stays deleted.
-        val unmoved = m0.keySet.filter(b => mCur.get(b) == m0.get(b))
-        m0.keySet.diff(unmoved).foreach { b =>
-          f.delete(new Path(batchPath, s"$BucketCol=$b"), true)
-        }
-        if (stagedStats.nonEmpty) {
-          val keptDirs = unmoved.map(b => s"/$batchDir/$BucketCol=$b/")
-          StatsManifest.writeLines(f, batchStatsPath(batchDir),
-            stagedStats.map(_.replace(s"/$staging/", s"/$batchDir/"))
-              .filter(l => keptDirs.exists(l.contains)))
-        }
-        if (effBloomC.nonEmpty)
-          repointBloom(f, batchDir, staging,
-            Some(unmoved.map(b => s"/$batchDir/$BucketCol=$b/")))
-        lockH.check() // paused-holder guard: abort rather than double-flip
-        // compaction is content-preserving: re-pointed buckets KEEP their
-        // contentV, so a change-feed window spanning this commit still
-        // prunes them as unchanged
-        writeManifest(spark, next,
-          mCur ++ unmoved.filter(mCur.contains)
-            .map(b => b -> BucketEntry(batchDir, mCur(b).contentV)).toMap,
-          txnsOf(spark, cur), // the exactly-once ledger survives maintenance
-          // compacted files carry the UNION schema (the union read casts
-          // to first-seen types before the rewrite)
-          Map(batchDir -> BucketedSnapshotTable.schemaDdl(df.schema, BucketCol)))
-        committed = next
-      }
-      // post-commit, outside the lock: the new batch dir is immutable now —
-      // collapse its per-file bloom sidecars into the O(1)-probe blob
-      if (effBloomC.nonEmpty)
-        BloomIndex.consolidate(f, batchBloomPath(s"_batch_v$committed"))
+      // entries moved by intervening merges win; a bucket DELETED since
+      // the read stays deleted. Re-pointed buckets KEEP their contentV
+      // (compaction is content-preserving), so a change-feed window
+      // spanning this commit still prunes them as unchanged
+      lockedCommit(spark, staged, None) { (mCur, _) =>
+        Some(m0.collect { case (b, e) if mCur.get(b).contains(e) => b -> e.contentV })
+      }.flatten.get
     }
-    committed
   }
 
   /** Delete batch dirs unreachable from the newest `keepVersions`
@@ -1633,17 +1573,19 @@ object BucketedSnapshotTable {
     * Carries the original merge inputs so a lost commit race can fall
     * back to the standard re-staging loop. */
   private[graft] final case class StagedScd1(
-      private[tables] val staging: String,
+      private[tables] val batch: StagedBatch,
       private[tables] val affected: Set[Int],
-      private[tables] val v0: Int,
-      private[tables] val m0: Map[Int, BucketEntry],
-      private[tables] val effBloomC: Seq[String],
-      private[tables] val stagedStats: Seq[String],
       private[tables] val updates: org.apache.spark.sql.DataFrame,
       private[tables] val seqCol: String,
       private[tables] val applyAsDeletes: Option[org.apache.spark.sql.Column],
-      private[tables] val txn: Option[(String, Long)],
-      private[tables] val stagedSchema: Option[String] = None)
+      private[tables] val txn: Option[(String, Long)])
+
+  /** A `stageBatch` result: staging dir name, the version (and its
+    * manifest) the batch was computed from, Bloom columns, stats lines
+    * (staging paths), FILE schema DDL (None = no data files). */
+  private[tables] final case class StagedBatch(dir: String, v0: Int,
+      m0: Map[Int, BucketEntry], bloomCols: Seq[String], stats: Seq[String],
+      schema: Option[String])
 
   /** Did a bucket's CONTENT change between two manifest entries? Normally
     * a contentV comparison, with one guard: the legacy 2-field-manifest
@@ -1674,7 +1616,7 @@ object BucketedSnapshotTable {
     * canonical-bits-hashed "d" kind. Probes convert per filter kind with
     * coercion-aware rules, and a value that cannot be soundly evaluated
     * against a kind keeps the file (see
-    * [[BloomIndex.filesMightContainAny]]). */
+    * [[BloomIndex.Probe.filesMightContainAny]]). */
   private[graft] final case class PointSet(longs: Set[Long], strs: Set[String],
       dbls: Set[Double] = Set.empty) {
 

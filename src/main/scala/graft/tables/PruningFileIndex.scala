@@ -1,6 +1,6 @@
 package graft.tables
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -225,11 +225,12 @@ private[graft] object PruningFileIndex {
 
   /** Keep-predicate (over normalized paths) for ONE immutable dir's
     * sidecars under the extracted constraints: range stats verdicts per
-    * listed file, Bloom membership per point-constrained column, all
+    * listed file, Bloom membership per point-constrained column (all
+    * columns share `bloom`'s one read of the dir's index), all
     * conjoined. Files the sidecars do not list are ALWAYS kept, as is
     * everything when no usable metadata exists (None) — superset
     * guarantee, the row filter runs regardless. */
-  def dirKeep(f: FileSystem, statsLines: Option[Vector[String]], bloomDir: Path,
+  def dirKeep(statsLines: Option[Vector[String]], bloom: BloomIndex.Probe,
       nB: NumB, sB: StrB, pS: PtB): Option[String => Boolean] = {
     val rangeKeep: Option[String => Boolean] =
       if (nB.isEmpty && sB.isEmpty) None
@@ -255,14 +256,14 @@ private[graft] object PruningFileIndex {
         p => verdict.getOrElse(p, true)
       }
     val bloomKeep: Option[String => Boolean] = {
+      lazy val listedN = bloom.indexedFiles.map(_.map(norm))
       val perCol: Seq[String => Boolean] = pS.toSeq.flatMap { case (c, pts) =>
         for {
-          listed <- BloomIndex.indexedFiles(f, bloomDir)
-          pass <- BloomIndex.filesMightContainAny(f, bloomDir, c, pts.longs, pts.strs, pts.dbls)
+          listed <- listedN
+          pass <- bloom.filesMightContainAny(c, pts.longs, pts.strs, pts.dbls)
         } yield {
-          val listedN = listed.map(norm)
           val passN = pass.map(norm).toSet
-          (p: String) => !listedN.contains(p) || passN(p)
+          (p: String) => !listed.contains(p) || passN(p)
         }
       }
       if (perCol.isEmpty) None else Some(p => perCol.forall(_(p)))

@@ -1,6 +1,6 @@
 package graft.tables
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Versioned parquet table with an atomic current-version pointer — the
@@ -15,12 +15,16 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *   root/_current                // one line: the live version number
   * }}}
   *
-  * Commit protocol: stage the snapshot fully under `_staging_*`, then — in
-  * a short critical section guarded by the `_lock` file (atomic
-  * create-if-absent, stale-steal after a timeout) — rename it to `_v(N+1)`
-  * and flip `_current` via write-temp + rename. Readers resolve the
-  * pointer first, so they only ever see complete snapshots; concurrent
-  * writers serialize on the rename+flip only (data writes overlap freely).
+  * Commit protocol — ONE path, `commitNext`: every writer ([[writeIf]],
+  * [[appendTxn]], [[deleteKeysVersioned]], [[optimizeCompact]]) stages its
+  * data fully under `_staging_*` with no lock held, then — in a short
+  * critical section guarded by the `_lock` file (atomic create-if-absent,
+  * stale-steal after a timeout) — re-reads the pointer, claims `_v(N+1)`
+  * (a crashed writer's leftovers for it are removed), moves the staged
+  * data and the version's sidecars into place, and flips `_current`
+  * through [[MetaIO.replace]]. Readers resolve the pointer first, so they
+  * only ever see complete snapshots; concurrent writers serialize on the
+  * metadata-sized critical section only (data writes overlap freely).
   * [[writeIf]] adds read-modify-write conflict DETECTION on top: a merge
   * job that read version N commits with `expected = N` and aborts cleanly
   * if someone else advanced the table meanwhile — optimistic concurrency,
@@ -46,10 +50,22 @@ object SnapshotTable {
     * driver-side single-writer, not a synchronization primitive. */
   private[graft] val lastDiffMode =
     new java.util.concurrent.atomic.AtomicReference[String]("")
+
+  /** `spark.read.parquet(dir)` for one of a table's own `_`-named dirs
+    * (`_v<N>`, `_tomb_v<N>`, `_staging_*`). Spark counts a `_` name as
+    * hidden and logs "All paths were ignored" on every read that names
+    * one, so the relation is resolved without that existence/hidden-name
+    * pass (the caller knows the dir exists). Listing, schema and hive
+    * partition inference are those of the plain read. */
+  private[tables] def readDir(spark: SparkSession, dir: String): DataFrame =
+    spark.baseRelationToDataFrame(
+      org.apache.spark.sql.execution.datasources.DataSource(spark, "parquet",
+        paths = Seq(dir)).resolveRelation(checkFilesExist = false))
 }
 
 final class SnapshotTable(val root: String,
     commitStaleMs: Long = CommitLock.StaleMs) {
+  import SnapshotTable.readDir
 
   // (SQL forms of the maintenance entry points — OPTIMIZE / VACUUM /
   // DESCRIBE HISTORY — live in graft.sql.GraftSqlParser, injected by
@@ -68,6 +84,9 @@ final class SnapshotTable(val root: String,
   def exists(spark: SparkSession): Boolean = currentVersion(spark).isDefined
 
   private def filesPath(v: Int) = new Path(root, s"_files_v$v")
+
+  /** Everything a version carries beside its `_v<N>` dir. */
+  private def sidecars(v: Int) = Seq(filesPath(v), statsPath(v), bloomPath(v), tombPath(v))
 
   /** The version's data file URIs when it carries a `_files_v<N>` manifest
     * (a compacted version referencing a mix of its own and older files);
@@ -133,17 +152,6 @@ final class SnapshotTable(val root: String,
       case Some(uris) => readManifest(spark, uris)
       case None       => readDir(spark, s"$root/_v$v")
     }
-
-  /** `spark.read.parquet(dir)` for one of the table's own `_`-named dirs
-    * (`_v<N>`, `_tomb_v<N>`). Spark counts a `_` name as hidden and logs
-    * "All paths were ignored" on every read that names one, so the
-    * relation is resolved without that existence/hidden-name pass (the
-    * caller knows the dir exists). Listing, schema and hive partition
-    * inference are those of the plain read. */
-  private def readDir(spark: SparkSession, dir: String): DataFrame =
-    spark.baseRelationToDataFrame(
-      org.apache.spark.sql.execution.datasources.DataSource(spark, "parquet",
-        paths = Seq(dir)).resolveRelation(checkFilesExist = false))
 
   /** Read an explicit manifest file list WITHOUT losing hive partition
     * values: a bare `spark.read.parquet(files)` has no `basePath`, so
@@ -313,34 +321,16 @@ final class SnapshotTable(val root: String,
     * tombstones) IO. Returns the committed version. */
   def deleteKeysVersioned(spark: SparkSession, keys: DataFrame): Int = {
     val f = fs(spark)
-    val staging = new Path(root, s"_staging_${java.util.UUID.randomUUID().toString.take(12)}")
-    try keys.dropDuplicates().write.mode(SaveMode.Overwrite).parquet(staging.toString)
-    catch { case t: Throwable => f.delete(staging, true); throw t }
-    // any failure inside the critical section (stolen lock, rename error)
-    // must not leak the staged tombstone batch — nothing else reaps
-    // _staging_ dirs at this root outside vacuum
-    def cleanupOnFailure[T](body: => T): T =
-      try body catch { case t: Throwable => f.delete(staging, true); throw t }
-    cleanupOnFailure(withCommitLock(f) { lockH =>
-      val cur = currentVersion(spark).getOrElse {
-        throw new IllegalStateException(s"SnapshotTable $root has no committed version")
-      }
-      val next = cur + 1
-      lockH.check()
-      // claim: a crashed writer's stale artifacts for `next` must not
-      // attach to OUR commit
-      (Seq(filesPath(next), statsPath(next), bloomPath(next), tombPath(next),
-        new Path(s"$root/_v$next"))).foreach(p => if (f.exists(p)) f.delete(p, true))
+    if (!exists(spark))
+      throw new IllegalStateException(s"SnapshotTable $root has no committed version")
+    val staging = stage(f, keys.dropDuplicates())
+    commitNext(spark, staging, None) { (cur, next) =>
       StatsManifest.writeLines(f, filesPath(next),
         listDataFiles(f, cur).map(_._1).map(canonical))
-      StatsManifest.readLines(f, statsPath(cur)).foreach(ls =>
-        StatsManifest.writeLines(f, statsPath(next), ls))
+      carryStats(spark, f, cur, next, Vector.empty)
       if (f.exists(bloomPath(cur)))
-        org.apache.hadoop.fs.FileUtil.copy(f, bloomPath(cur), f, bloomPath(next),
-          false, f.getConf)
-      if (f.exists(tombPath(cur)))
-        org.apache.hadoop.fs.FileUtil.copy(f, tombPath(cur), f, tombPath(next),
-          false, f.getConf)
+        FileUtil.copy(f, bloomPath(cur), f, bloomPath(next), false, f.getConf)
+      carryTombstones(f, cur, next)
       f.mkdirs(tombPath(next))
       f.listStatus(staging).filter(_.getPath.getName.endsWith(".parquet"))
         .foreach { st =>
@@ -349,10 +339,7 @@ final class SnapshotTable(val root: String,
               s"SnapshotTable $root: tombstone batch move failed")
         }
       f.delete(staging, true)
-      lockH.check()
-      commitPointer(spark, next)
-      next
-    })
+    }
   }
 
   private def applyTombstones(spark: SparkSession, v: Int, df: DataFrame): DataFrame = {
@@ -397,66 +384,101 @@ final class SnapshotTable(val root: String,
       else (if (clusterPartitions > 0) checked.repartitionByRange(clusterPartitions, cols: _*)
             else checked.repartitionByRange(cols: _*))
         .sortWithinPartitions(cols: _*)
-    // Stage outside the lock — the expensive distributed write runs with NO
-    // mutual exclusion (concurrent writers overlap here); only the
-    // metadata-sized rename + pointer flip serializes.
     val f = fs(spark)
+    val staging = stage(f, prepared, partitionByCols)
+    commitNext(spark, staging, expected)((_, next) => install(f, staging, next))
+  }
+
+  /** Test-only fault injection (no-op in production): invoked at the
+    * named steps of [[commitNext]] ("claimed", "carried", "mid_flip",
+    * "committed") so the crash-matrix spec can kill a writer between any
+    * two of them. */
+  private[tables] var onStep: String => Unit = _ => ()
+
+  /** Write `df` to a fresh `_staging_*` dir — the expensive distributed
+    * half of a commit, run with NO lock held (concurrent writers overlap
+    * here). A failed write leaves nothing behind: CHECK-constraint
+    * rejection fires mid-write and is a routine path. */
+  private def stage(f: FileSystem, df: DataFrame, partitionBy: Seq[String] = Nil): Path = {
     val staging = new Path(root, s"_staging_${java.util.UUID.randomUUID().toString.take(12)}")
-    val writer = prepared.write.mode(SaveMode.Overwrite)
-    // CHECK-constraint rejection (enforceConstraints fires mid-write) is a
-    // routine expected path — never leave the staging dir behind for it
-    try (if (partitionByCols.nonEmpty) writer.partitionBy(partitionByCols: _*) else writer)
-      .parquet(staging.toString)
+    val w = df.write.mode(SaveMode.Overwrite)
+    try (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(staging.toString)
     catch { case t: Throwable => f.delete(staging, true); throw t }
-    withCommitLock(f) { lockH =>
+    staging
+  }
+
+  /** The one commit critical section of this format. Under the commit
+    * lock: re-read the pointer (`cur`; a `replayed` batch drops `staging`
+    * and returns it); check `expected` (moved: raise
+    * ConcurrentModificationException, the caller re-reads and retries);
+    * claim `next = cur + 1` — a `_v<next>`, its sidecars and any
+    * `_txn_*_v<next>` marker are a crashed writer's (the pointer proves
+    * it) and must not attach to this commit; `carry(cur, next)` moves the
+    * staged data and the version's sidecars into place; flip the pointer,
+    * the commit point. The paused-holder guard runs before the first
+    * destructive step and again right before the flip; `staging` never
+    * outlives a failure. */
+  private def commitNext(spark: SparkSession, staging: Path, expected: Option[Int],
+      replayed: => Boolean = false)(carry: (Int, Int) => Unit): Int = {
+    val f = fs(spark)
+    try withCommitLock(f) { lockH =>
       val cur = currentVersion(spark).getOrElse(0)
-      expected.foreach { e =>
-        if (cur != e) {
-          f.delete(staging, true)
+      if (replayed) { f.delete(staging, true); cur }
+      else {
+        expected.filter(_ != cur).foreach { e =>
           throw new java.util.ConcurrentModificationException(
             s"SnapshotTable $root: expected version $e but found $cur — " +
-              "another writer committed first; re-read and retry the merge")
+              "another writer committed first; re-read and retry")
         }
+        val next = cur + 1
+        lockH.check()
+        (new Path(s"$root/_v$next") +: sidecars(next))
+          .foreach(p => if (f.exists(p)) f.delete(p, true))
+        f.listStatus(new Path(root)).foreach { st =>
+          val n = st.getPath.getName
+          if (n.startsWith("_txn_") && n.endsWith(s"_v$next")) f.delete(st.getPath, false)
+        }
+        onStep("claimed")
+        carry(cur, next)
+        onStep("carried")
+        lockH.check()
+        MetaIO.replace(f, pointer, next.toString, () => onStep("mid_flip"))
+        onStep("committed")
+        next
       }
-      val next = cur + 1
-      // paused-holder guard BEFORE the first destructive step: a writer
-      // whose lock was stolen mid-pause must not reclaim (and thereby
-      // delete) the stealer's committed _v<next> dir
-      lockH.check()
-      claimVersionDir(f, next, staging)
-      lockH.check() // and again right before the irreversible flip
-      commitPointer(spark, next)
-      next
-    }
+    } catch { case t: Throwable => f.delete(staging, true); throw t }
   }
 
-  /** Rename `staging` to `_v<next>` inside the commit lock. An existing
-    * `_v<next>` is an orphan from a writer that crashed before its pointer
-    * flip (the pointer proves it was never committed) — reclaim it, along
-    * with any txn markers that crashed writer staged for this version
-    * (they must not spring to life when OUR flip advances the pointer). */
-  private def claimVersionDir(f: org.apache.hadoop.fs.FileSystem, next: Int,
-      staging: Path): Unit = {
-    val target = new Path(s"$root/_v$next")
-    if (f.exists(target)) f.delete(target, true)
-    f.listStatus(new Path(root)).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("_txn_") && n.endsWith(s"_v$next")) f.delete(st.getPath, false)
-    }
-    // same for the crashed writer's sidecars: a stale _files_v/_stats_v/
-    // _bloom_v/_tomb_v for this version would silently attach to OUR commit
-    Seq(filesPath(next), statsPath(next), bloomPath(next), tombPath(next))
-      .foreach(p => if (f.exists(p)) f.delete(p, true))
-    if (!f.rename(staging, target))
-      throw new IllegalStateException(s"SnapshotTable $root: staging rename failed")
-  }
-
-  private def withCommitLock[T](f: org.apache.hadoop.fs.FileSystem)
-      (body: CommitLock.Handle => T): T =
+  private def withCommitLock[T](f: FileSystem)(body: CommitLock.Handle => T): T =
     CommitLock.withLockHandle(f, root, commitStaleMs)(body)
 
-  private def commitPointer(spark: SparkSession, v: Int): Unit =
-    MetaIO.replace(fs(spark), pointer, v.toString)
+  /** Carry step: the staged snapshot becomes the `_v<next>` dir. */
+  private def install(f: FileSystem, staging: Path, next: Int): Unit =
+    if (!f.rename(staging, new Path(s"$root/_v$next")))
+      throw new IllegalStateException(s"SnapshotTable $root: staging rename failed")
+
+  /** Carry step: version `from`'s pending tombstones ride to `next` — COPY,
+    * not move: `from`'s time-travel read still needs its own
+    * (O(deleted keys) bytes). */
+  private def carryTombstones(f: FileSystem, from: Int, next: Int): Unit =
+    if (f.exists(tombPath(from)))
+      FileUtil.copy(f, tombPath(from), f, tombPath(next), false, f.getConf)
+
+  /** Carry step: version `from`'s stats manifest rides to `next` — the
+    * lines of the files `next` keeps verbatim, plus one scan of the `added`
+    * files only (O(increment), never O(table)). An added batch lacking a
+    * stats column (an evolving append) drops the manifest instead: full
+    * scans until the next writeWithStats, superset-safe. */
+  private def carryStats(spark: SparkSession, f: FileSystem, from: Int, next: Int,
+      added: Vector[String], kept: String => Boolean = _ => true): Unit =
+    StatsManifest.readLines(f, statsPath(from)).foreach { old =>
+      val cols = StatsManifest.statsColumns(old)
+      val addedDf = if (added.isEmpty) None else Some(readManifest(spark, added))
+      if (addedDf.forall(d => cols.forall(d.columns.contains)))
+        StatsManifest.writeLines(f, statsPath(next),
+          old.filter(l => kept(canonical(l.split("\t")(0)))) ++
+            addedDf.toSeq.flatMap(StatsManifest.lines(_, cols)))
+    }
 
   /** Compact the live snapshot into `targetFiles` output files (small-file
     * remediation after many incremental commits) — a new version is
@@ -527,9 +549,9 @@ final class SnapshotTable(val root: String,
       spark: SparkSession, df: DataFrame, txn: Option[(String, Long)],
       mergeSchema: Boolean = false): Int = {
     val f = fs(spark)
+    def applied = txn.exists { case (app, batch) => lastTxn(spark, app).exists(_ >= batch) }
     // fast-path skip outside the lock (authoritative re-check inside)
-    if (txn.exists { case (app, batch) => lastTxn(spark, app).exists(_ >= batch) })
-      return currentVersion(spark).getOrElse(0)
+    if (applied) return currentVersion(spark).getOrElse(0)
     val v0 = currentVersion(spark)
     val checked = enforceConstraints(spark, df)
     val aligned = v0 match {
@@ -543,63 +565,35 @@ final class SnapshotTable(val root: String,
       case _ => checked // mergeSchema: files keep their own schema; the
                         // manifest read resolves to the union by name
     }
-    val staging = new Path(root, s"_staging_${java.util.UUID.randomUUID().toString.take(12)}")
     // keep the live table's hive partitioning on the increment, so the
     // appended files' partition values live in their paths exactly like
     // the base version's and manifest reads reattach them uniformly
     val partCols = v0.map(partitionColsOf(f, _)).getOrElse(Nil)
     require(partCols.forall(df.columns.contains),
       s"append increment must carry the table's partition columns ${partCols.mkString(",")}")
-    val w = aligned.write.mode(SaveMode.Overwrite)
-    try (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w).parquet(staging.toString)
-    catch { case t: Throwable => f.delete(staging, true); throw t }
-    withCommitLock(f) { lockH =>
-      val cur = currentVersion(spark).getOrElse(0)
-      val skip = txn.exists { case (app, batch) => lastTxn(spark, app).exists(_ >= batch) }
-      if (skip) { f.delete(staging, true); cur }
-      else {
-        if (cur != v0.getOrElse(0)) {
-          f.delete(staging, true)
-          throw new java.util.ConcurrentModificationException(
-            s"SnapshotTable $root: append read version ${v0.getOrElse(0)} but found $cur — retry")
-        }
-        val next = cur + 1
-        lockH.check() // paused-holder guard before the first destructive step
-        claimVersionDir(f, next, staging)
+    val staging = stage(f, aligned, partCols)
+    var appended = false
+    val committed = commitNext(spark, staging, Some(v0.getOrElse(0)), replayed = applied) {
+      (cur, next) =>
+        install(f, staging, next)
         val prior = v0.map(v => listDataFiles(f, v).map(_._1)).getOrElse(Vector.empty)
         val added = listDataFiles(f, next).map(_._1)
         StatsManifest.writeLines(f, filesPath(next), (prior ++ added).map(canonical))
-        v0.foreach { v =>
-          StatsManifest.readLines(f, statsPath(v)).foreach { old =>
-            // An evolving increment may lack a stats column, so in that
-            // case the new version drops its stats manifest — full scans
-            // until the next writeWithStats (superset-safe).
-            val statsCols = StatsManifest.statsColumns(old)
-            if (statsCols.forall(df.columns.contains)) {
-              val newLines =
-                if (added.isEmpty) Nil
-                else StatsManifest.lines(readManifest(spark, added), statsCols)
-              StatsManifest.writeLines(f, statsPath(next), old ++ newLines)
-            }
-          }
-          if (f.exists(tombPath(v)))
-            org.apache.hadoop.fs.FileUtil.copy(f, tombPath(v), f, tombPath(next),
-              false, f.getConf)
-        }
+        carryStats(spark, f, cur, next, added)
+        carryTombstones(f, cur, next)
         // The txn watermark is part of the atomic commit: the marker names
         // the version it rides on and is written BEFORE the pointer flip,
         // and lastTxn only honors markers whose version is <= the committed
         // pointer. A crash after the marker but before the flip therefore
-        // reads as "batch not committed" (the retry re-appends — correct),
-        // and a crash after the flip reads as committed (the retry no-ops)
-        // — no window where a committed batch is unrecorded.
+        // reads as "batch not committed" (the retry re-appends — correct;
+        // the next commit's claim removes the marker), and a crash after
+        // the flip reads as committed (the retry no-ops) — no window where
+        // a committed batch is unrecorded.
         txn.foreach { case (app, batch) => recordTxn(f, app, batch, next) }
-        lockH.check() // paused-holder guard: abort rather than double-flip
-        commitPointer(spark, next)
-        txn.foreach { case (app, _) => pruneTxnMarkers(f, app, next) }
-        next
-      }
+        appended = true
     }
+    if (appended) txn.foreach { case (app, _) => pruneTxnMarkers(f, app, committed) }
+    committed
   }
 
   private def txnPrefix(appId: String) =
@@ -702,7 +696,6 @@ final class SnapshotTable(val root: String,
     val (small, kept) = files.partition(_._2 < targetBytes)
     if (small.size < 2) return v
     val nOut = math.max(1, math.ceil(small.map(_._2).sum.toDouble / targetBytes).toInt)
-    val staging = new Path(root, s"_staging_${java.util.UUID.randomUUID().toString.take(12)}")
     // partition-aware read: hive partition values of the small files ride
     // along as ordinary columns and are MATERIALIZED into the packed
     // output (flat files), so no value is lost when their dirs vacuum away
@@ -713,39 +706,16 @@ final class SnapshotTable(val root: String,
         val cols = clusterBy.map(org.apache.spark.sql.functions.col)
         smallDf.repartitionByRange(nOut, cols: _*).sortWithinPartitions(cols: _*)
       }
-    try packed.write.mode(SaveMode.Overwrite).parquet(staging.toString)
-    catch { case t: Throwable => f.delete(staging, true); throw t }
-    withCommitLock(f) { lockH =>
-      val cur = currentVersion(spark).getOrElse(0)
-      if (cur != v) {
-        f.delete(staging, true)
-        throw new java.util.ConcurrentModificationException(
-          s"SnapshotTable $root: compaction read version $v but found $cur — retry")
-      }
-      val next = v + 1
-      lockH.check() // paused-holder guard before the first destructive step
-      claimVersionDir(f, next, staging)
+    val staging = stage(f, packed)
+    commitNext(spark, staging, Some(v)) { (_, next) =>
+      install(f, staging, next)
       val rewritten = listDataFiles(f, next).map(_._1)
       StatsManifest.writeLines(f, filesPath(next),
         (kept.map(_._1) ++ rewritten).map(canonical))
-      // carry stats: kept files keep their manifest lines; only the
-      // rewritten output is rescanned (O(small files), like the write)
-      StatsManifest.readLines(f, statsPath(v)).foreach { old =>
-        val keptSet = kept.map(x => canonical(x._1)).toSet
-        val keptLines = old.filter(l => keptSet(canonical(l.split("\t")(0))))
-        val newLines =
-          if (rewritten.isEmpty) Nil
-          else StatsManifest.lines(spark.read.parquet(rewritten: _*),
-            StatsManifest.statsColumns(old))
-        StatsManifest.writeLines(f, statsPath(next), keptLines ++ newLines)
-      }
-      if (f.exists(tombPath(v))) // COPY, not move: version v's time-travel
-        // read still needs its own tombstones (O(deleted keys) bytes)
-        org.apache.hadoop.fs.FileUtil.copy(f, tombPath(v), f, tombPath(next),
-          false, f.getConf)
-      lockH.check() // paused-holder guard: abort rather than double-flip
-      commitPointer(spark, next)
-      next
+      // kept files keep their stats lines; only the rewritten output is
+      // rescanned (O(small files), like the write)
+      carryStats(spark, f, v, next, rewritten, kept.map(x => canonical(x._1)).toSet)
+      carryTombstones(f, v, next)
     }
   }
 
@@ -1008,8 +978,8 @@ final class SnapshotTable(val root: String,
     val (nB, sB, pS) = BucketedSnapshotTable.extractBounds(
       preds.reduce(org.apache.spark.sql.catalyst.expressions.And))
     if (nB.isEmpty && sB.isEmpty && pS.isEmpty) (_: String) => true
-    else PruningFileIndex.dirKeep(f,
-      StatsManifest.readLines(f, statsPath(v)), bloomPath(v), nB, sB, pS)
+    else PruningFileIndex.dirKeep(StatsManifest.readLines(f, statsPath(v)),
+      new BloomIndex.Probe(f, bloomPath(v)), nB, sB, pS)
       .getOrElse((_: String) => true)
   }
 
@@ -1384,8 +1354,7 @@ final class SnapshotTable(val root: String,
           }.toSet
         }
       (1 to cur - keep).foreach { v =>
-        val sidecars = Seq(tombPath(v), statsPath(v), bloomPath(v), filesPath(v))
-        val dirs = if (referenced(v)) sidecars else new Path(s"$root/_v$v") +: sidecars
+        val dirs = if (referenced(v)) sidecars(v) else new Path(s"$root/_v$v") +: sidecars(v)
         dirs.foreach { p => if (f.exists(p)) f.delete(p, true) }
         // a dir kept only because a retained manifest points into it is no
         // longer a readable VERSION — mark it so history/readVersion skip it

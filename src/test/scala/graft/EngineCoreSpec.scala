@@ -1123,4 +1123,22 @@ class EngineCoreSpec extends AnyFunSuite {
     assert(t.appendTxn(spark, Seq(4).toDF("x"), Some(("other", 9L))) == 4) // lands
     assert(t.read(spark).as[Int].collect().sorted.toSeq == Seq(1, 2, 3, 4))
   }
+
+  test("appendTxn crash window: a versioned delete's claim purges the crashed marker; the retry lands") {
+    val t = new SnapshotTable(tmp("txndel"))
+    t.write(spark, Seq((1L, "a"), (2L, "b")).toDF("k", "x")) // v1
+    val f = new org.apache.hadoop.fs.Path(t.root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // what appendTxn leaves when it dies after recording its marker for v2
+    // and before the pointer flip
+    graft.tables.MetaIO.replace(f, new org.apache.hadoop.fs.Path(t.root, "_txn_app_v2"), "7")
+    assert(t.deleteKeysVersioned(spark, Seq(1L).toDF("k")) == 2)
+    assert(t.lastTxn(spark, "app").isEmpty,
+      "the crashed append's marker must not come into force with the delete's commit")
+    // so the retried batch lands instead of being skipped as applied
+    assert(t.appendTxn(spark, Seq((3L, "c")).toDF("k", "x"), Some(("app", 7L))) == 3)
+    assert(t.read(spark).as[(Long, String)].collect().sorted.toSeq ==
+      Seq((2L, "b"), (3L, "c")))
+    assert(t.lastTxn(spark, "app").contains(7L))
+  }
 }

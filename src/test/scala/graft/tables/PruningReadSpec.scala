@@ -379,6 +379,29 @@ class PruningReadSpec extends AnyFunSuite {
       .as[Int].collect().toSeq == Seq(42))
   }
 
+  test("a two-column point probe reads the dir's Bloom manifest and blob once") {
+    val t = new BucketedSnapshotTable(tmp("bprobe2"), numBuckets = 8, keys = Seq("k"),
+      bloomCols = Seq("a", "b"))
+    // one merge = one batch dir, consolidated into one blob post-commit
+    t.scd1Merge(spark, (1 to 80).map(i => (i, 1L, i * 10L, s"s$i"))
+      .toDF("k", "seq", "a", "b"), "seq")
+    val pred = $"a" === 420L && $"b" === "s42"
+    def reads[T](body: => T): (T, Long) = {
+      BloomIndex.probeReads.set(0)
+      val r = body
+      (r, BloomIndex.probeReads.get)
+    }
+    // the read path (planning-time file keep) and DML discovery each ask
+    // both columns; they must share one read of the manifest and the blob
+    val ((kept, all), readReads) = reads(t.pruneStats(spark, pred))
+    val (cand, dmlReads) = reads(t.statsCandidates(spark, t.manifest(spark), pred))
+    assert(kept >= 1 && kept < all, s"two-column point probe must prune: $kept of $all")
+    assert(cand.exists(c => c.nonEmpty && c.size < 8))
+    assert(readReads == 2, s"read-path probe must read manifest + blob once: $readReads")
+    assert(dmlReads == 2, s"DML discovery must read manifest + blob once: $dmlReads")
+    assert(t.readIndexed(spark).filter(pred).select("k").as[Int].collect().toSeq == Seq(42))
+  }
+
   test("bucket-key point lookup through the file index: hash replay prunes to the key's bucket") {
     // INT-typed key pins the literal-type handling: Murmur3(int 5) and
     // Murmur3(long 5) differ, so hashing the literal in the STORED type is
