@@ -2348,19 +2348,19 @@ object SparkEntry {
     }),
 
     // ── §7: row-level delete via key tombstones (deletion-vector analog)
-    //    — each delete is an O(deleted-rows) tombstone append anti-joined
-    //    out at read (broadcast: the tombstone side is tiny), never a
-    //    snapshot rewrite; compact() materializes the stacked tombstones
-    //    into the next clean version.
+    //    — each delete commits an O(deleted-rows) tombstone batch
+    //    anti-joined out at read (broadcast: the tombstone side is tiny),
+    //    never a snapshot rewrite; compact() materializes the stacked
+    //    tombstones into the next clean version.
     "q149_row_delete" -> ((s, dir) => {
       import s.implicits._
       val work = java.nio.file.Files.createTempDirectory("rowdel149").toString
       val t = new graft.tables.SnapshotTable(s"$work/t")
       val cust = Tables.customer(s, dir)
       t.write(s, cust)
-      t.deleteKeys(s, cust.filter($"c_custkey" % 7 === 0).select($"c_custkey"))
-      t.deleteKeys(s, cust.filter($"c_custkey" % 11 === 3).select($"c_custkey"))
-      t.compact(s) // materializes the tombstones into _v2
+      t.deleteKeysVersioned(s, cust.filter($"c_custkey" % 7 === 0).select($"c_custkey"))
+      t.deleteKeysVersioned(s, cust.filter($"c_custkey" % 11 === 3).select($"c_custkey"))
+      t.compact(s) // materializes the tombstones into _v4
       t.read(s)
         .groupBy($"c_mktsegment")
         .agg(count(lit(1)).as("n"), Relational.sumMoney($"c_acctbal").as("total_bal"))
@@ -5540,9 +5540,9 @@ object SparkEntry {
     }),
 
     // ── READ-SIDE DATA SKIPPING THROUGH SQL (r10, plain format): same
-    //    serving queries on a plain snapshot — `_stats_v` range manifest
-    //    (clustered by order date, so file ranges are disjoint) and the
-    //    `_bloom_v` sidecar (point lookups OFF the clustering order) both
+    //    serving queries on a plain snapshot — the data dir's range stats
+    //    (clustered by order date, so file ranges are disjoint) and its
+    //    Bloom sidecar (point lookups OFF the clustering order) both
     //    prune the SNAPSHOT relation's file list at planning time.
     "q311_sql_read_skipping_plain" -> ((s, dir) => {
       import s.implicits._

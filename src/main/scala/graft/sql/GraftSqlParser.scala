@@ -518,13 +518,10 @@ case class UpdateSnapshotCommand(path: String, sets: Seq[(String, String)],
             sqlWhen(p, e).otherwise(col(c)).as(c)
           }.getOrElse(col(c))
         }: _*)
-        // carry the physical layout forward: hive partitioning and the
-        // stats manifest survive the rewrite (they are table properties,
-        // not properties of one version)
-        val partCols = t.partitionColumns(spark)
-        val statsCols = t.statsColumns(spark)
-        val v = t.write(spark, updated, partCols)
-        statsCols.foreach(t.refreshStats(spark, _))
+        // carry the physical layout forward: hive partitioning survives
+        // the rewrite (a table property, not one version's); the write
+        // indexes the columns the live version records by itself
+        val v = t.write(spark, updated, t.partitionColumns(spark))
         Seq(Row(v, n))
     }
   }
@@ -664,7 +661,7 @@ case class DescribeDetailCommand(path: String) extends LeafRunnableCommand {
         Seq(Row("snapshot", t.currentVersion(spark).getOrElse(0), null, null,
           if (parts.isEmpty) null else parts.mkString(","),
           if (stats.isEmpty) null else stats.mkString(","),
-          null, // plain bloom sidecars are per-version, not a header fact
+          null, // plain Bloom columns are per data dir, not a header fact
           t.constraints(spark).size, files.size.toLong, sizeOf(files)))
     }
   }
@@ -704,9 +701,7 @@ case class CreateTableAsCommand(path: String, bucketKeys: Seq[String],
         graft.cdc.ScdMerge.scd1Current(bt.read(spark)).count()))
     } else {
       val t = new SnapshotTable(path)
-      val v = t.write(spark, df, partitionCols)
-      if (statsCols.nonEmpty) t.refreshStats(spark, statsCols)
-      if (bloomCols.nonEmpty) t.refreshBloom(spark, bloomCols)
+      val v = t.writeIndexed(spark, df, statsCols, bloomCols, partitionByCols = partitionCols)
       Seq(Row(v, t.read(spark).count()))
     }
   }
@@ -771,15 +766,15 @@ case class ApplyChangesCommand(dst: String, src: String, checkpoint: String,
   * data-skipping metadata for data already on disk: STATS builds min/max
   * range stats, BLOOM per-file Bloom filters (the point-lookup complement
   * for high-cardinality non-key columns whose ranges span the domain).
-  * Plain roots rebuild the live snapshot's sidecars
-  * ([[SnapshotTable.refreshStats]]/[[SnapshotTable.refreshBloom]]);
-  * bucketed roots write per-batch `_stats`/`_bloom` sidecars for every
-  * reachable batch dir and commit a metadata-only version recording the
-  * indexed columns in the manifest header — after which range reads AND
-  * the predicate-DML pre-filter prune on tables written before the index
-  * existed. INCREMENTAL skips batch dirs whose sidecars already cover the
-  * requested columns (immutable dirs → never stale), making re-ANALYZE
-  * O(new batches). One column-pruned scan per analyzed dir; no rewrite. */
+  * Both formats index every data dir the live version reaches, inside
+  * the dir ([[graft.tables.DirIndex]]); plain roots commit no version
+  * ([[SnapshotTable.analyze]]), bucketed roots commit a metadata-only one
+  * recording the indexed columns in the manifest header — after which
+  * range reads AND the predicate-DML pre-filter prune on tables written
+  * before the index existed. INCREMENTAL skips dirs whose index already
+  * covers the requested columns (immutable dirs → never stale), making
+  * re-ANALYZE O(new dirs). One column-pruned scan per analyzed dir; no
+  * rewrite. */
 case class AnalyzeSnapshotCommand(path: String, cols: Seq[String],
     bloomCols: Seq[String] = Nil, onlyMissing: Boolean = false)
     extends LeafRunnableCommand {
@@ -798,8 +793,7 @@ case class AnalyzeSnapshotCommand(path: String, cols: Seq[String],
           cols.mkString(","), bloomCols.mkString(",")))
       case None =>
         val t = new SnapshotTable(path)
-        if (cols.nonEmpty) t.refreshStats(spark, cols)
-        if (bloomCols.nonEmpty) t.refreshBloom(spark, bloomCols)
+        t.analyze(spark, cols, bloomCols, onlyMissing)
         Seq(Row(t.currentVersion(spark).getOrElse(0),
           cols.mkString(","), bloomCols.mkString(",")))
     }

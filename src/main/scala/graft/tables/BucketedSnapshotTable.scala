@@ -35,7 +35,7 @@ import graft.cdc.ScdMerge
   *   root/_current                      // one line: live manifest version
   *   root/_manifest_v<N>                // header + bucket→(batchDir, contentV)
   *   root/_batch_v<N>/__bucket=<b>/...  // immutable bucket snapshots
-  *   root/_batch_v<N>/_stats            // per-file min/max (when statsCols)
+  *   root/_batch_v<N>/_stats, _bloom/   // the dir's index ([[DirIndex]])
   * }}}
   *
   * Commit protocol — ONE path: every data commit (merge, DML, two-phase
@@ -746,8 +746,8 @@ final class BucketedSnapshotTable(
     // judged by the read path's per-file verdict. No usable metadata keeps
     // the batch's buckets; a bucket no sidecar lists is kept too.
     val sidecarCands = Some(m.groupBy(_._2).flatMap { case (dir, entries) =>
-      val stats = StatsManifest.readLines(f, batchStatsPath(dir))
-      val bloom = new BloomIndex.Probe(f, batchBloomPath(dir))
+      val stats = StatsManifest.readLines(f, DirIndex.statsPath(batchDir(dir)))
+      val bloom = new BloomIndex.Probe(f, DirIndex.bloomPath(batchDir(dir)))
       PruningFileIndex.dirKeep(stats, bloom, nBounds, sBounds, pSets) match {
         case None => entries.keys
         case Some(keep) =>
@@ -889,25 +889,19 @@ final class BucketedSnapshotTable(
     // would fail schema inference
     val stagedHasData = f.listStatus(new Path(s"$root/$staging"))
       .exists(_.getPath.getName.startsWith(s"$BucketCol="))
-    // per-batch stats computed on the staging files, then re-pointed at
-    // the final dir — keeps the locked critical section metadata-sized.
+    // the batch's index is built INSIDE the staging dir, so the rename
+    // carries it and the locked section only re-points its file paths.
     // Index columns come from the writer OR the manifest header
     // (effectiveIndexCols): every commit keeps the table's index fresh
-    val (effStatsC, effBloomC) = effectiveIndexCols(spark, v0)
-    lazy val snap = SnapshotTable.readDir(spark, s"$root/$staging")
-    val stagedStats: Seq[String] =
-      if (effStatsC.isEmpty || !stagedHasData) Nil
-      else StatsManifest.lines(snap, effStatsC)
-    // bloom sidecars land INSIDE the staging dir (underscore-hidden from
-    // parquet reads) so the rename carries them; only the manifest's
-    // file paths need re-pointing after the flip
-    if (effBloomC.nonEmpty && stagedHasData) writeBloom(spark, snap, staging, effBloomC)
+    val (effStatsC, effBloomC) = if (stagedHasData) effectiveIndexCols(spark, v0) else (Nil, Nil)
+    DirIndex.build(f, new Path(s"$root/$staging"), SnapshotTable.readDir(spark, s"$root/$staging"),
+      effStatsC, effBloomC, BucketedSnapshotTable.BloomFpp)
     // the staged FILE schema (bucket partition column excluded), recorded
     // in the manifest header at commit so planning skips the footer read
     val stagedSchema =
       if (!stagedHasData) None
       else Some(BucketedSnapshotTable.schemaDdl(merged.schema, BucketCol))
-    BucketedSnapshotTable.StagedBatch(staging, v0, m0, effBloomC, stagedStats, stagedSchema)
+    BucketedSnapshotTable.StagedBatch(staging, v0, m0, stagedSchema)
   }
 
   /** The merge/DML entry rule for [[lockedCommit]] — DISJOINT-WRITER
@@ -925,7 +919,7 @@ final class BucketedSnapshotTable(
       Some(affected.iterator.map(_ -> next).toMap)
     else None
 
-  /** The LOCKED metadata half of every data commit: rename + sidecar
+  /** The LOCKED metadata half of every data commit: rename + index
     * repoint + manifest + pointer flip, all metadata-sized. `rule` maps
     * the manifest found under the lock and the claimed version to the
     * buckets this commit REPLACES, each with its new entry's contentV —
@@ -939,7 +933,7 @@ final class BucketedSnapshotTable(
       : Option[Option[Int]] = {
     val f = fs(spark)
     val stagingPath = new Path(s"$root/${s.dir}")
-    val result = CommitLock.withLockHandle(f, root, commitStaleMs) { lockH =>
+    CommitLock.withLockHandle(f, root, commitStaleMs) { lockH =>
       val cur = currentVersion(spark).getOrElse(0)
       val mCur = if (cur == s.v0) s.m0 else readEntries(spark, cur)
       val next = cur + 1
@@ -968,12 +962,8 @@ final class BucketedSnapshotTable(
               n.stripPrefix(s"$BucketCol=").toInt }.toSet
           val dropped = written -- replaced.keySet
           dropped.foreach(b => f.delete(new Path(batchPath, s"$BucketCol=$b"), true))
-          def kept(line: String) =
-            !dropped.exists(b => line.contains(s"/$batchDir/$BucketCol=$b/"))
-          if (s.stats.nonEmpty)
-            StatsManifest.writeLines(f, batchStatsPath(batchDir),
-              s.stats.map(_.replace(s"/${s.dir}/", s"/$batchDir/")).filter(kept))
-          if (s.bloomCols.nonEmpty) repointBloom(f, batchDir, s.dir, kept)
+          DirIndex.repoint(f, batchPath, s.dir,
+            line => !dropped.exists(b => line.contains(s"/$batchDir/$BucketCol=$b/")))
           lockH.check() // paused-holder guard: abort rather than double-flip
           writeManifest(spark, next,
             (mCur -- replaced.keySet) ++ replaced.collect {
@@ -985,11 +975,6 @@ final class BucketedSnapshotTable(
           Some(Some(next))
       }
     }
-    // post-commit, outside the lock: the fresh batch dir is immutable now
-    // — collapse its per-file bloom sidecars into the O(1)-probe blob
-    if (s.bloomCols.nonEmpty) result.flatten.foreach(v =>
-      BloomIndex.consolidate(f, batchBloomPath(s"_batch_v$v")))
-    result
   }
 
   /** TWO-PHASE SCD1 merge for multi-table coordinators (the MV refresh,
@@ -1051,71 +1036,30 @@ final class BucketedSnapshotTable(
         scd1Merge(spark, h.updates, h.seqCol, Nil, h.applyAsDeletes, h.txn)
     }
 
-  // ── Per-batch file stats (SCD-merge × data-skipping composition) ───────
+  // ── Per-batch index (SCD-merge × data-skipping composition) ──────────
   //
-  // The bucket layout prunes by KEY (which buckets a merge touches / an
-  // equi-lookup reads); stats prune by VALUE range (which files a
-  // time/range predicate can match). They compose because each immutable
-  // batch dir carries its own `_stats` manifest, written once with the
-  // batch — buckets carried over by reference keep their old batch's
-  // stats. A 100 TB SCD table thus answers "current rows in this date
-  // range" scanning only matching files of live buckets, without ever
-  // rewriting untouched data or rescanning for stats.
+  // The bucket layout prunes by KEY; each immutable batch dir's own index
+  // ([[DirIndex]]) prunes by VALUE, and buckets carried over by reference
+  // keep their old batch's index — no rewrite, no rescan.
 
-  private def batchStatsPath(batchDir: String) = new Path(s"$root/$batchDir", "_stats")
-  private def batchBloomPath(batchDir: String) = new Path(s"$root/$batchDir", "_bloom")
+  private def batchDir(dir: String) = new Path(s"$root/$dir")
 
-  /** Build the per-batch Bloom sidecar directory for a freshly staged (or
-    * analyzed) snapshot — one extra distributed pass over the immutable
-    * files; filter bytes never aggregate at the driver (see
-    * [[BloomIndex.write]]). Columns a pre-evolution batch lacks are
-    * skipped (their absent entries keep files — superset guarantee). */
-  private def writeBloom(spark: SparkSession, snap: DataFrame, dir: String,
-      cols: Seq[String] = bloomCols): Unit = {
-    val present = cols.filter(snap.columns.contains)
-    if (present.nonEmpty)
-      BloomIndex.write(snap, present, BucketedSnapshotTable.BloomFpp,
-        fs(spark), batchBloomPath(dir))
-  }
-
-  /** The index columns THIS commit should sidecar its staged batch with:
-    * the writer's own statsCols/bloomCols when constructed with any, else
-    * the columns the manifest header RECORDS (what ANALYZE declared) —
-    * indexed columns are table metadata, so a maintenance writer or a
-    * default-routed merge constructed without them must keep the index
-    * FRESH per commit (O(staged batch)) instead of leaving recent batch
-    * dirs unindexed until the next hand-run ANALYZE (the r11 soak's
-    * stale-dim-leg cost). */
-  private def effectiveIndexCols(spark: SparkSession, v: Int): (Seq[String], Seq[String]) = {
-    val (hs, hb) =
-      if (v < 1 || (statsCols.nonEmpty && bloomCols.nonEmpty)) (Nil, Nil)
+  /** The index columns THIS commit sidecars its staged batch with
+    * ([[DirIndex.effective]]): the writer's own statsCols/bloomCols, else
+    * per kind the columns the manifest header RECORDS (what ANALYZE
+    * declared) — so a maintenance writer or a default-routed merge keeps
+    * the index FRESH per commit (O(staged batch)) instead of leaving
+    * recent batch dirs unindexed until the next hand-run ANALYZE (the r11
+    * soak's stale-dim-leg cost). */
+  private def effectiveIndexCols(spark: SparkSession, v: Int): (Seq[String], Seq[String]) =
+    DirIndex.effective(statsCols, bloomCols,
+      if (v < 1) (Nil, Nil)
       else try {
         val h = headerOf(spark, v)
         def csv(k: String) = h.get(k).toSeq
           .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty))
         (csv("statsCols"), csv("bloomCols"))
-      } catch { case _: java.io.IOException => (Nil, Nil) }
-    // per-KIND fallback, mirroring writeManifest's header inheritance: a
-    // stats-only writer must still bloom-index its batch when the header
-    // records bloom columns, and vice versa
-    (if (statsCols.nonEmpty) statsCols else hs,
-      if (bloomCols.nonEmpty) bloomCols else hb)
-  }
-
-  /** Re-point a staged `_bloom/_MANIFEST`'s file paths at the renamed
-    * batch dir (the sidecar blobs themselves are path-agnostic — only the
-    * manifest's data-file paths matter to the probe), dropping entries
-    * `kept` rejects (a commit's dropped buckets). The `cols=` header line
-    * carries through untouched. */
-  private def repointBloom(f: org.apache.hadoop.fs.FileSystem, batchDir: String,
-      staging: String, kept: String => Boolean): Unit = {
-    val mPath = new Path(batchBloomPath(batchDir), "_MANIFEST")
-    StatsManifest.readLines(f, mPath).foreach { ls =>
-      val out = ls.map(_.replace(s"/$staging/", s"/$batchDir/"))
-        .filter(l => !l.contains("\t") || kept(l))
-      StatsManifest.writeLines(f, mPath, out)
-    }
-  }
+      } catch { case _: java.io.IOException => (Nil, Nil) })
 
   /** Pruning-aware read — the general SNAPSHOT relation: a plain parquet
     * scan whose FILE LISTING goes through [[PruningFileIndex]], so ANY
@@ -1255,13 +1199,11 @@ final class BucketedSnapshotTable(
       preds.reduce(org.apache.spark.sql.catalyst.expressions.And))
     if (nB.isEmpty && sB.isEmpty && pS.isEmpty) (_: String) => true
     else {
-      val perDir: Map[String, Option[String => Boolean]] = byDir.map { case (dir, _) =>
-        dir -> PruningFileIndex.dirKeep(StatsManifest.readLines(f, batchStatsPath(dir)),
-          new BloomIndex.Probe(f, batchBloomPath(dir)), nB, sB, pS)
-      }.toMap
       val fileDir: Map[String, String] = byDir.flatMap { case (dir, fls) =>
         fls.map(st => st.getPath.toUri.getPath -> dir)
       }.toMap
+      val dirKeep = DirIndex.keep(f, byDir.map { case (dir, _) => dir -> batchDir(dir) },
+        fileDir.get, nB, sB, pS)
       val wantedBuckets: Option[Set[Int]] =
         schema.flatMap(sc => keyBuckets(sc, pS))
       val fileBucket: Map[String, Int] = byDir.flatMap { case (_, fls) =>
@@ -1271,14 +1213,8 @@ final class BucketedSnapshotTable(
             .map(m => p -> m.group(1).toInt)
         }
       }.toMap
-      (p: String) => {
-        val bucketPass = wantedBuckets.forall(bs =>
-          fileBucket.get(p).forall(bs.contains))
-        bucketPass && (fileDir.get(p) match {
-          case None      => true
-          case Some(dir) => perDir(dir).forall(_(p))
-        })
-      }
+      (p: String) =>
+        wantedBuckets.forall(bs => fileBucket.get(p).forall(bs.contains)) && dirKeep(p)
     }
   }
 
@@ -1356,8 +1292,9 @@ final class BucketedSnapshotTable(
     * columns — after which [[readIndexed]] and the predicate-DML stats
     * pre-filter work on data written before stats existed (or with a
     * different column set). One column-pruned scan per batch dir, no data
-    * rewrite: the batch dirs are immutable, only their `_stats` sidecars
-    * and the manifest header change. Returns the committed version. */
+    * rewrite: the batch dirs are immutable, only their index
+    * ([[DirIndex.backfill]]) and the manifest header change. Returns the
+    * committed version. */
   def analyze(spark: SparkSession, onlyMissing: Boolean = false): Int = {
     require(statsCols.nonEmpty || bloomCols.nonEmpty,
       s"BucketedSnapshotTable $root: analyze needs statsCols or bloomCols — " +
@@ -1371,17 +1308,13 @@ final class BucketedSnapshotTable(
     // invariant every other commit path here keeps.
     val cur0 = currentVersion(spark).getOrElse(
       throw new IllegalStateException(s"BucketedSnapshotTable $root is empty"))
-    val entries0 = readEntries(spark, cur0)
-    buildSidecars(spark, entries0, skipCovered = onlyMissing)
-    // maintenance-time probe-IO consolidation: per-file bloom sidecars
-    // collapse into one offset-indexed blob per batch dir, so a point
-    // probe costs O(dirs) reads instead of O(files); still unlocked —
-    // dirs are immutable and the swap is rename-atomic (no-op when
-    // already consolidated, so INCREMENTAL re-ANALYZE stays O(new))
-    if (bloomCols.nonEmpty)
-      entries0.values.map(_.dir).toSet.foreach { (dir: String) =>
-        BloomIndex.consolidate(f, batchBloomPath(dir))
-      }
+    // per batch dir, its LIVE buckets read explicitly (`__bucket=…`
+    // children are underscore-hidden from a directory-level read)
+    readEntries(spark, cur0).groupBy(_._2.dir).foreach { case (dir, es) =>
+      DirIndex.backfill(f, batchDir(dir), spark.read.option("basePath", s"$root/$dir")
+          .parquet(es.keys.toSeq.sorted.map(b => s"$root/$dir/$BucketCol=$b"): _*),
+        statsCols, bloomCols, BucketedSnapshotTable.BloomFpp, onlyMissing)
+    }
     onStep("analyze_built")
     CommitLock.withLockHandle(f, root, commitStaleMs) { lockH =>
       // re-read under the lock: commits that raced the unlocked build keep
@@ -1396,43 +1329,6 @@ final class BucketedSnapshotTable(
       // statsCols so path-only consumers (SQL DML routing) see them
       writeManifest(spark, cur + 1, entries, txnsOf(spark, cur))
       cur + 1
-    }
-  }
-
-  /** The ANALYZE work-horse: per batch dir of `entries`, scan its LIVE
-    * buckets explicitly (`__bucket=…` children are underscore-prefixed —
-    * hidden from a directory-level read) and (re)write the `_stats` /
-    * `_bloom` sidecars. `skipCovered` makes re-ANALYZE O(new batches): a
-    * dir whose existing sidecars already cover every requested column is
-    * skipped (batch dirs are immutable, so existing stats cannot be
-    * stale). Sidecar writes are tmp-then-rename, so concurrent probes on
-    * live dirs never see a torn manifest. */
-  private def buildSidecars(spark: SparkSession, entries: Map[Int, BucketEntry],
-      skipCovered: Boolean): Unit = {
-    val f = fs(spark)
-    entries.groupBy(_._2.dir).foreach { case (dir, es) =>
-      val statsCovered = statsCols.isEmpty || (skipCovered &&
-        StatsManifest.readLines(f, batchStatsPath(dir)).exists { ls =>
-          val have = StatsManifest.statsColumns(ls).toSet
-          statsCols.forall(have.contains)
-        })
-      val bloomCovered = bloomCols.isEmpty || (skipCovered &&
-        BloomIndex.indexedColumns(f, batchBloomPath(dir)).exists { have =>
-          bloomCols.forall(have.toSet.contains)
-        })
-      if (!(statsCovered && bloomCovered)) {
-        val snap = spark.read.option("basePath", s"$root/$dir")
-          .parquet(es.keys.toSeq.sorted.map(b => s"$root/$dir/$BucketCol=$b"): _*)
-        // a batch written before a schema evolution may lack a stats
-        // column — record the ones it has (missing entries keep files,
-        // superset guarantee)
-        if (!statsCovered) {
-          val present = statsCols.filter(snap.columns.contains)
-          if (present.nonEmpty)
-            StatsManifest.write(snap, present, f, batchStatsPath(dir))
-        }
-        if (!bloomCovered) writeBloom(spark, snap, dir)
-      }
     }
   }
 
@@ -1580,12 +1476,11 @@ object BucketedSnapshotTable {
       private[tables] val applyAsDeletes: Option[org.apache.spark.sql.Column],
       private[tables] val txn: Option[(String, Long)])
 
-  /** A `stageBatch` result: staging dir name, the version (and its
-    * manifest) the batch was computed from, Bloom columns, stats lines
-    * (staging paths), FILE schema DDL (None = no data files). */
+  /** A `stageBatch` result: staging dir name (its index inside it), the
+    * version (and its manifest) the batch was computed from, FILE schema
+    * DDL (None = no data files). */
   private[tables] final case class StagedBatch(dir: String, v0: Int,
-      m0: Map[Int, BucketEntry], bloomCols: Seq[String], stats: Seq[String],
-      schema: Option[String])
+      m0: Map[Int, BucketEntry], schema: Option[String])
 
   /** Did a bucket's CONTENT change between two manifest entries? Normally
     * a contentV comparison, with one guard: the legacy 2-field-manifest

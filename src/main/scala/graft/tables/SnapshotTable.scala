@@ -9,9 +9,11 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *
   * Layout:
   * {{{
-  *   root/_v1/part-*.parquet      // immutable full snapshots
+  *   root/_v1/part-*.parquet      // immutable data dirs
+  *   root/_v1/_stats, _v1/_bloom/ // each dir's own index ([[DirIndex]])
   *   root/_v2/part-*.parquet
-  *   root/_tomb_v2/part-*.parquet // key tombstones pending against _v2
+  *   root/_files_v3               // a version's exact data files (see below)
+  *   root/_tomb_v3/part-*.parquet // key tombstones pending against _v3
   *   root/_current                // one line: the live version number
   * }}}
   *
@@ -21,7 +23,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * critical section guarded by the `_lock` file (atomic create-if-absent,
   * stale-steal after a timeout) — re-reads the pointer, claims `_v(N+1)`
   * (a crashed writer's leftovers for it are removed), moves the staged
-  * data and the version's sidecars into place, and flips `_current`
+  * data (its index built inside the staging dir, before the lock) and the
+  * version's file list and tombstones into place, and flips `_current`
   * through [[MetaIO.replace]]. Readers resolve the pointer first, so they
   * only ever see complete snapshots; concurrent writers serialize on the
   * metadata-sized critical section only (data writes overlap freely).
@@ -61,6 +64,9 @@ object SnapshotTable {
     spark.baseRelationToDataFrame(
       org.apache.spark.sql.execution.datasources.DataSource(spark, "parquet",
         paths = Seq(dir)).resolveRelation(checkFilesExist = false))
+
+  /** Bloom false-positive rate of a plain table's index. */
+  val BloomFpp = 0.03
 }
 
 final class SnapshotTable(val root: String,
@@ -84,9 +90,10 @@ final class SnapshotTable(val root: String,
   def exists(spark: SparkSession): Boolean = currentVersion(spark).isDefined
 
   private def filesPath(v: Int) = new Path(root, s"_files_v$v")
+  private def dataDir(v: Int) = new Path(root, s"_v$v")
 
   /** Everything a version carries beside its `_v<N>` dir. */
-  private def sidecars(v: Int) = Seq(filesPath(v), statsPath(v), bloomPath(v), tombPath(v))
+  private def sidecars(v: Int) = Seq(filesPath(v), tombPath(v))
 
   /** The version's data file URIs when it carries a `_files_v<N>` manifest
     * (a compacted version referencing a mix of its own and older files);
@@ -114,8 +121,10 @@ final class SnapshotTable(val root: String,
     val stack = scala.collection.mutable.Stack(dir)
     while (stack.nonEmpty) {
       f.listStatus(stack.pop()).foreach { st =>
-        if (st.isDirectory) stack.push(st.getPath)
-        else if (st.getPath.getName.endsWith(".parquet")) buf += st
+        val n = st.getPath.getName
+        // a `_`-named child is the dir's index, never a hive partition
+        if (st.isDirectory) { if (!n.startsWith("_") || n.contains("=")) stack.push(st.getPath) }
+        else if (n.endsWith(".parquet")) buf += st
       }
     }
     buf.result()
@@ -185,9 +194,16 @@ final class SnapshotTable(val root: String,
   }
 
   private def versionDirOf(uri: String): Int =
-    "_v(\\d+)/".r.findFirstMatchIn(uri).map(_.group(1).toInt).getOrElse(
-      throw new IllegalStateException(
-        s"SnapshotTable $root: manifest file outside any version dir: $uri"))
+    dirNum(uri).getOrElse(throw new IllegalStateException(
+      s"SnapshotTable $root: manifest file outside any version dir: $uri"))
+
+  /** The `_v<N>` dir a data file lives in (its innermost such segment). */
+  private def dirNum(uri: String): Option[Int] =
+    uri.split('/').reverseIterator.find(_.matches("_v\\d+")).map(_.drop(2).toInt)
+
+  /** The data dirs holding version `v`'s files, oldest first (no listing). */
+  private def dataDirs(f: FileSystem, v: Int): Seq[Path] =
+    fileManifest(f, v).fold(Seq(v))(_.flatMap(dirNum).distinct.sorted).map(dataDir)
 
   /** Hive partition column names of version `v` (in directory order), from
     * the `k=v` path segments of its data files; empty when the version's
@@ -207,32 +223,23 @@ final class SnapshotTable(val root: String,
   def partitionColumns(spark: SparkSession): Seq[String] =
     currentVersion(spark).map(partitionColsOf(fs(spark), _)).getOrElse(Nil)
 
-  /** Stats-manifest columns of the live version, when it carries one. */
+  /** Stats columns indexing every data dir of the live version, if any. */
   def statsColumns(spark: SparkSession): Option[Seq[String]] =
-    currentVersion(spark).flatMap(v =>
-      StatsManifest.readLines(fs(spark), statsPath(v)).map(StatsManifest.statsColumns))
+    currentVersion(spark).map(v => DirIndex.recorded(fs(spark), dataDirs(fs(spark), v))._1)
+      .filter(_.nonEmpty)
 
-  /** (Re)build the LIVE version's stats manifest over `cols` — one scan of
-    * the immutable just-committed snapshot; used by rewrite DML so data
-    * skipping survives a copy-on-write commit. */
-  def refreshStats(spark: SparkSession, cols: Seq[String]): Unit = {
+  /** ANALYZE: index every data dir of the live version over `statsCols` /
+    * `bloomCols`, no data rewritten, no version committed, no lock held
+    * (each index is swapped into its immutable dir tmp-then-rename); later
+    * commits keep indexing those columns. `onlyMissing` skips dirs already
+    * covered, so re-ANALYZE is O(new dirs). */
+  def analyze(spark: SparkSession, statsCols: Seq[String], bloomCols: Seq[String],
+      onlyMissing: Boolean = false): Unit = {
+    val f = fs(spark)
     val v = currentVersion(spark).getOrElse(
       throw new IllegalStateException(s"SnapshotTable $root has no committed version"))
-    StatsManifest.write(snapshotDF(spark, v), cols, fs(spark), statsPath(v))
-  }
-
-  /** ANALYZE-style Bloom backfill: (re)build the live version's per-file
-    * Bloom sidecar over `cols` without rewriting data — the plain-table
-    * analog of the bucketed per-batch bloom, after which
-    * [[readIndexed]] point lookups prune on a table whose snapshot was
-    * written without an index. */
-  def refreshBloom(spark: SparkSession, cols: Seq[String],
-      fpp: Double = 0.03): Unit = {
-    val v = currentVersion(spark).getOrElse(
-      throw new IllegalStateException(s"SnapshotTable $root has no committed version"))
-    BloomIndex.write(snapshotDF(spark, v), cols, fpp, fs(spark), bloomPath(v))
-    // ANALYZE-time probe-IO consolidation (one blob per version dir)
-    BloomIndex.consolidate(fs(spark), bloomPath(v))
+    dataDirs(f, v).foreach(d => DirIndex.backfill(f, d, readDir(spark, d.toString),
+      statsCols, bloomCols, SnapshotTable.BloomFpp, onlyMissing))
   }
 
   def read(spark: SparkSession): DataFrame = {
@@ -248,14 +255,17 @@ final class SnapshotTable(val root: String,
     * yet vacuumed), minus that version's own tombstones. The live pointer
     * is untouched. */
   def readVersion(spark: SparkSession, version: Int): DataFrame = {
-    val f = fs(spark)
-    val p = new Path(s"$root/_v$version")
-    val gone = f.exists(new Path(root, s"_gone_v$version"))
-    if (gone || (!f.exists(p) && !f.exists(filesPath(version))))
-      throw new IllegalArgumentException(
-        s"SnapshotTable $root: version $version does not exist (vacuumed or never committed)")
+    requireVersion(fs(spark), version)
     applyTombstones(spark, version, snapshotDF(spark, version))
   }
+
+  /** Vacuumed (or never committed) versions are unreadable. */
+  private def missing(f: FileSystem, v: Int) = f.exists(new Path(root, s"_gone_v$v")) ||
+    (!f.exists(dataDir(v)) && !f.exists(filesPath(v)))
+
+  private def requireVersion(f: FileSystem, v: Int): Unit = if (missing(f, v))
+    throw new IllegalArgumentException(
+      s"SnapshotTable $root: version $v does not exist (vacuumed or never committed)")
 
   /** Timestamp time travel (Delta `TIMESTAMP AS OF` analog): the newest
     * version committed at or before `tsMillis`, by the commit artifact's
@@ -289,36 +299,25 @@ final class SnapshotTable(val root: String,
   //
   // Deleting a handful of rows from a 100 TB snapshot must not rewrite the
   // snapshot: Delta solves this with deletion vectors, we solve it with KEY
-  // TOMBSTONES — `deleteKeys` appends the doomed keys as a tiny parquet
-  // batch under `_tomb_v<live>` (an O(deleted-rows) write), and every read
-  // path anti-joins them out. The tombstone side is a small file relation,
-  // so Spark broadcasts the anti join (no shuffle of the big side); once
-  // tombstones accumulate, `compact` — whose input is the tombstone-applied
-  // `read` — materializes the deletes into a clean next version.
+  // TOMBSTONES — `deleteKeysVersioned` commits the doomed keys as a tiny
+  // parquet batch under the next version's `_tomb_v<N>` (an O(deleted-rows)
+  // write), and every read path anti-joins them out. The tombstone side is
+  // a small file relation, so Spark broadcasts the anti join (no shuffle of
+  // the big side); once tombstones accumulate, `compact` — whose input is
+  // the tombstone-applied `read` — materializes the deletes into a clean
+  // next version.
 
   private def tombPath(v: Int) = new Path(root, s"_tomb_v$v")
 
-  /** Delete rows of the LIVE version matching `keys` (anti-join on all of
-    * `keys`' columns, matched by name). Appends a tombstone batch — the
-    * snapshot itself is untouched, so the cost is O(|keys|), not O(table).
-    * Idempotent: re-deleting the same keys changes nothing. */
-  def deleteKeys(spark: SparkSession, keys: DataFrame): Unit = {
-    val v = currentVersion(spark).getOrElse(
-      throw new IllegalStateException(s"SnapshotTable $root has no committed version"))
-    keys.dropDuplicates().write.mode(SaveMode.Append).parquet(tombPath(v).toString)
-  }
-
-  /** Versioned row delete — commit a NEW version whose data files are the
-    * live version's BY REFERENCE (`_files_v`, zero data IO) and whose
-    * tombstone set adds `keys`: the delete becomes an EVENT between two
-    * versions, so time travel to the prior version still shows the rows
-    * and a CDF window spanning the commit reports them as `delete`s
-    * through the tombstone-delta diff. (An in-place [[deleteKeys]]
-    * retroactively mutates the live version's visibility, which a
-    * checkpointed CDF consumer can never observe — use this form wherever
-    * downstream mirrors consume the table.) Stats carry verbatim (same
-    * files), the Bloom sidecar by copy. O(deleted + accumulated
-    * tombstones) IO. Returns the committed version. */
+  /** Row delete — commit a NEW version whose data files are the live
+    * version's BY REFERENCE (`_files_v`, zero data IO; their dirs keep
+    * their index) and whose tombstone set adds `keys` (anti-join on all of
+    * `keys`' columns, matched by name): the delete becomes an EVENT
+    * between two versions, so time travel to the prior version still
+    * shows the rows and a CDF window spanning the commit reports them as
+    * `delete`s through the tombstone-delta diff. Re-deleting a key hides
+    * nothing new. O(deleted + accumulated tombstones) IO. Returns the
+    * committed version. */
   def deleteKeysVersioned(spark: SparkSession, keys: DataFrame): Int = {
     val f = fs(spark)
     if (!exists(spark))
@@ -327,9 +326,6 @@ final class SnapshotTable(val root: String,
     commitNext(spark, staging, None) { (cur, next) =>
       StatsManifest.writeLines(f, filesPath(next),
         listDataFiles(f, cur).map(_._1).map(canonical))
-      carryStats(spark, f, cur, next, Vector.empty)
-      if (f.exists(bloomPath(cur)))
-        FileUtil.copy(f, bloomPath(cur), f, bloomPath(next), false, f.getConf)
       carryTombstones(f, cur, next)
       f.mkdirs(tombPath(next))
       f.listStatus(staging).filter(_.getPath.getName.endsWith(".parquet"))
@@ -376,7 +372,14 @@ final class SnapshotTable(val root: String,
   def writeIf(spark: SparkSession, df: DataFrame, expected: Option[Int],
       partitionByCols: Seq[String] = Nil,
       clusterBy: Seq[String] = Nil,
-      clusterPartitions: Int = 0): Int = {
+      clusterPartitions: Int = 0): Int =
+    writeSnapshot(spark, df, expected, partitionByCols, clusterBy, clusterPartitions)
+
+  /** The full-snapshot commit behind [[writeIf]] and [[writeIndexed]]. */
+  private def writeSnapshot(spark: SparkSession, df: DataFrame, expected: Option[Int],
+      partitionByCols: Seq[String], clusterBy: Seq[String], clusterPartitions: Int,
+      statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
+      bloomFpp: Double = SnapshotTable.BloomFpp): Int = {
     val cols = clusterBy.map(org.apache.spark.sql.functions.col)
     val checked = enforceConstraints(spark, df)
     val prepared =
@@ -384,9 +387,8 @@ final class SnapshotTable(val root: String,
       else (if (clusterPartitions > 0) checked.repartitionByRange(clusterPartitions, cols: _*)
             else checked.repartitionByRange(cols: _*))
         .sortWithinPartitions(cols: _*)
-    val f = fs(spark)
-    val staging = stage(f, prepared, partitionByCols)
-    commitNext(spark, staging, expected)((_, next) => install(f, staging, next))
+    val staging = stageData(spark, prepared, partitionByCols, statsCols, bloomCols, bloomFpp)
+    commitNext(spark, staging, expected)((_, next) => install(fs(spark), staging, next))
   }
 
   /** Test-only fault injection (no-op in production): invoked at the
@@ -397,14 +399,33 @@ final class SnapshotTable(val root: String,
 
   /** Write `df` to a fresh `_staging_*` dir — the expensive distributed
     * half of a commit, run with NO lock held (concurrent writers overlap
-    * here). A failed write leaves nothing behind: CHECK-constraint
-    * rejection fires mid-write and is a routine path. */
-  private def stage(f: FileSystem, df: DataFrame, partitionBy: Seq[String] = Nil): Path = {
+    * here), then `index` it. A failed write or index leaves nothing
+    * behind: CHECK-constraint rejection fires mid-write and is a routine
+    * path. */
+  private def stage(f: FileSystem, df: DataFrame, partitionBy: Seq[String] = Nil,
+      index: Path => Unit = _ => ()): Path = {
     val staging = new Path(root, s"_staging_${java.util.UUID.randomUUID().toString.take(12)}")
     val w = df.write.mode(SaveMode.Overwrite)
-    try (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(staging.toString)
-    catch { case t: Throwable => f.delete(staging, true); throw t }
+    try {
+      (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(staging.toString)
+      index(staging)
+    } catch { case t: Throwable => f.delete(staging, true); throw t }
     staging
+  }
+
+  /** [[stage]] a data dir and build its index inside it, still with no
+    * lock held, over the writer's columns or, per kind, the ones the live
+    * version records ([[DirIndex.effective]]). */
+  private def stageData(spark: SparkSession, df: DataFrame, partitionBy: Seq[String] = Nil,
+      statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
+      bloomFpp: Double = SnapshotTable.BloomFpp): Path = {
+    val f = fs(spark)
+    stage(f, df, partitionBy, staging => {
+      val (sc, bc) = DirIndex.effective(statsCols, bloomCols,
+        DirIndex.recorded(f, currentVersion(spark).toSeq.flatMap(dataDirs(f, _))))
+      if ((sc.nonEmpty || bc.nonEmpty) && walkParquet(f, staging).nonEmpty)
+        DirIndex.build(f, staging, readDir(spark, staging.toString), sc, bc, bloomFpp)
+    })
   }
 
   /** The one commit critical section of this format. Under the commit
@@ -452,10 +473,13 @@ final class SnapshotTable(val root: String,
   private def withCommitLock[T](f: FileSystem)(body: CommitLock.Handle => T): T =
     CommitLock.withLockHandle(f, root, commitStaleMs)(body)
 
-  /** Carry step: the staged snapshot becomes the `_v<next>` dir. */
-  private def install(f: FileSystem, staging: Path, next: Int): Unit =
-    if (!f.rename(staging, new Path(s"$root/_v$next")))
+  /** Carry step: the staged snapshot becomes the `_v<next>` dir, its
+    * index re-pointed at it. */
+  private def install(f: FileSystem, staging: Path, next: Int): Unit = {
+    if (!f.rename(staging, dataDir(next)))
       throw new IllegalStateException(s"SnapshotTable $root: staging rename failed")
+    DirIndex.repoint(f, dataDir(next), staging.getName)
+  }
 
   /** Carry step: version `from`'s pending tombstones ride to `next` — COPY,
     * not move: `from`'s time-travel read still needs its own
@@ -463,22 +487,6 @@ final class SnapshotTable(val root: String,
   private def carryTombstones(f: FileSystem, from: Int, next: Int): Unit =
     if (f.exists(tombPath(from)))
       FileUtil.copy(f, tombPath(from), f, tombPath(next), false, f.getConf)
-
-  /** Carry step: version `from`'s stats manifest rides to `next` — the
-    * lines of the files `next` keeps verbatim, plus one scan of the `added`
-    * files only (O(increment), never O(table)). An added batch lacking a
-    * stats column (an evolving append) drops the manifest instead: full
-    * scans until the next writeWithStats, superset-safe. */
-  private def carryStats(spark: SparkSession, f: FileSystem, from: Int, next: Int,
-      added: Vector[String], kept: String => Boolean = _ => true): Unit =
-    StatsManifest.readLines(f, statsPath(from)).foreach { old =>
-      val cols = StatsManifest.statsColumns(old)
-      val addedDf = if (added.isEmpty) None else Some(readManifest(spark, added))
-      if (addedDf.forall(d => cols.forall(d.columns.contains)))
-        StatsManifest.writeLines(f, statsPath(next),
-          old.filter(l => kept(canonical(l.split("\t")(0)))) ++
-            addedDf.toSeq.flatMap(StatsManifest.lines(_, cols)))
-    }
 
   /** Compact the live snapshot into `targetFiles` output files (small-file
     * remediation after many incremental commits) — a new version is
@@ -494,9 +502,9 @@ final class SnapshotTable(val root: String,
     * increment — the 100 TB daily-ingest shape ([[write]]'s full-snapshot
     * rewrite is right for restatements, ruinous for a 10-row late batch).
     * Pending tombstones carry forward (copied, so the prior version's
-    * time-travel read keeps its own); the stats manifest gains lines for
-    * the new files only. Schema must match the live snapshot (enforced by
-    * name: the increment is aligned to the live column order). */
+    * time-travel read keeps its own); only the increment's dir is indexed.
+    * Schema must match the live snapshot (enforced by name: the increment
+    * is aligned to the live column order). */
   def append(spark: SparkSession, df: DataFrame): Int =
     appendTxn(spark, df, None)
 
@@ -504,10 +512,9 @@ final class SnapshotTable(val root: String,
     * columns (older files read them as null) and/or OMIT live columns
     * (the increment's files read them as null) — the manifest read
     * resolves every version to the union schema by name. Partition
-    * columns must be present. The stats manifest is carried only when the
-    * increment carries every stats column; otherwise the new version
-    * drops it (pruned reads fall back to full scans — superset-safe —
-    * until the next writeWithStats). */
+    * columns must be present. An increment lacking an indexed column is
+    * indexed on the ones it has, and later commits stop indexing that
+    * column until [[analyze]] (only columns every dir records carry). */
   def appendEvolving(spark: SparkSession, df: DataFrame): Int =
     appendTxn(spark, df, None, mergeSchema = true)
 
@@ -571,7 +578,7 @@ final class SnapshotTable(val root: String,
     val partCols = v0.map(partitionColsOf(f, _)).getOrElse(Nil)
     require(partCols.forall(df.columns.contains),
       s"append increment must carry the table's partition columns ${partCols.mkString(",")}")
-    val staging = stage(f, aligned, partCols)
+    val staging = stageData(spark, aligned, partCols)
     var appended = false
     val committed = commitNext(spark, staging, Some(v0.getOrElse(0)), replayed = applied) {
       (cur, next) =>
@@ -579,7 +586,6 @@ final class SnapshotTable(val root: String,
         val prior = v0.map(v => listDataFiles(f, v).map(_._1)).getOrElse(Vector.empty)
         val added = listDataFiles(f, next).map(_._1)
         StatsManifest.writeLines(f, filesPath(next), (prior ++ added).map(canonical))
-        carryStats(spark, f, cur, next, added)
         carryTombstones(f, cur, next)
         // The txn watermark is part of the atomic commit: the marker names
         // the version it rides on and is written BEFORE the pointer flip,
@@ -649,21 +655,19 @@ final class SnapshotTable(val root: String,
     * and an impossible one at 100 TB. The rewrite is a shuffle-free
     * `coalesce` (tasks merge input splits; nothing repartitions).
     * Pending tombstones carry forward unmaterialized (reads keep
-    * anti-joining them — key-based, so doubly-applied is a no-op); the
-    * stats manifest carries kept files' lines verbatim and rescans only
-    * the rewritten output; a Bloom index is NOT carried (point reads fall
-    * back to full scans — superset-safe — until `writeIndexed` runs
-    * again, the same rebuild Delta needs after OPTIMIZE). Returns the new
+    * anti-joining them — key-based, so doubly-applied is a no-op); kept
+    * files keep their dirs' index, and only the rewritten output is
+    * indexed, over the columns the live version records. Returns the new
     * version, or the current one when fewer than 2 files qualify.
     *
     * `clusterBy`: range-repartition the REWRITTEN subset on these columns
     * (a shuffle of the small files only — the big ones never move), so
-    * packed files carry disjoint value ranges and the carried stats
-    * manifest stays selective; default is a shuffle-free coalesce. */
+    * packed files carry disjoint value ranges and their stats stay
+    * selective; default is a shuffle-free coalesce. */
   /** Z-ORDER rewrite (`OPTIMIZE … ZORDER BY`): recommit the VISIBLE table
     * range-partitioned and sorted by the interleaved z-value of
-    * `zorderBy`, sized to `targetBytes` per file, then refresh the stats
-    * manifest over (prior stats ∪ zorder) columns — after which range
+    * `zorderBy`, sized to `targetBytes` per file, indexed over (recorded
+    * stats ∪ zorder) columns — after which range
     * reads prune on EVERY clustering dimension (each file covers a
     * hyper-rectangle, not a leading-column slab; see [[Zorder]]). A full
     * rewrite commit like compaction — time travel keeps the old layout;
@@ -681,10 +685,8 @@ final class SnapshotTable(val root: String,
     // rewrite must surface as ConcurrentModificationException (same
     // contract as optimizeCompact) — an unguarded write would silently
     // revert that writer's rows to version v's content
-    val next = writeIf(spark, Zorder.shape(df, zorderBy, nOut, bits), Some(v))
-    refreshStats(spark,
-      (statsColumns(spark).getOrElse(Nil) ++ zorderBy).distinct)
-    next
+    writeSnapshot(spark, Zorder.shape(df, zorderBy, nOut, bits), Some(v), Nil, Nil, 0,
+      statsCols = (DirIndex.recorded(f, dataDirs(f, v))._1 ++ zorderBy).distinct)
   }
 
   def optimizeCompact(spark: SparkSession, targetBytes: Long = 128L << 20,
@@ -706,15 +708,11 @@ final class SnapshotTable(val root: String,
         val cols = clusterBy.map(org.apache.spark.sql.functions.col)
         smallDf.repartitionByRange(nOut, cols: _*).sortWithinPartitions(cols: _*)
       }
-    val staging = stage(f, packed)
+    val staging = stageData(spark, packed)
     commitNext(spark, staging, Some(v)) { (_, next) =>
       install(f, staging, next)
-      val rewritten = listDataFiles(f, next).map(_._1)
       StatsManifest.writeLines(f, filesPath(next),
-        (kept.map(_._1) ++ rewritten).map(canonical))
-      // kept files keep their stats lines; only the rewritten output is
-      // rescanned (O(small files), like the write)
-      carryStats(spark, f, v, next, rewritten, kept.map(x => canonical(x._1)).toSet)
+        (kept.map(_._1) ++ listDataFiles(f, next).map(_._1)).map(canonical))
       carryTombstones(f, v, next)
     }
   }
@@ -736,13 +734,14 @@ final class SnapshotTable(val root: String,
   // table's planner cost is dominated by *which files to list/schedule* —
   // Delta/Iceberg solve that with per-file column stats in the commit
   // metadata. Same here: `writeWithStats` records per-file min/max for the
-  // requested columns in `_stats_v<N>` (one extra scan of the immutable
-  // just-written snapshot, once per commit); [[readIndexed]] turns a
+  // requested columns in the data dir's `_stats` (one extra scan of the
+  // staged files, once per commit — [[DirIndex]]); [[readIndexed]] turns a
   // pushed range predicate into a file list at planning time, so the
   // scan's task count is proportional to matching files, not table size.
   // Numeric values are stored as doubles (timestamps as epoch micros,
-  // dates as epoch days), strings as truncated prefixes. Pair with `clusterBy` on the same column so file
-  // ranges are disjoint and pruning is maximally selective.
+  // dates as epoch days), strings as truncated prefixes. Pair with
+  // `clusterBy` on the same column so file ranges are disjoint and pruning
+  // is maximally selective.
 
   // ── CHECK constraints (ALTER TABLE … ADD CONSTRAINT analog) ───────────
   // Stored by [[Constraints]]; enforced INLINE in every write path via
@@ -785,16 +784,11 @@ final class SnapshotTable(val root: String,
     }
   }
 
-  private def statsPath(v: Int) = new Path(root, s"_stats_v$v")
-
-  /** [[write]] + per-file min/max stats manifest over `statsCols` (format
-    * and string-truncation rules in [[StatsManifest]]). */
+  /** [[write]] + per-file min/max stats over `statsCols` (format and
+    * string-truncation rules in [[StatsManifest]]). */
   def writeWithStats(spark: SparkSession, df: DataFrame, statsCols: Seq[String],
-      clusterBy: Seq[String] = Nil, clusterPartitions: Int = 0): Int = {
-    val v = write(spark, df, Nil, clusterBy, clusterPartitions)
-    StatsManifest.write(readDir(spark, s"$root/_v$v"), statsCols, fs(spark), statsPath(v))
-    v
-  }
+      clusterBy: Seq[String] = Nil, clusterPartitions: Int = 0): Int =
+    writeIndexed(spark, df, statsCols, clusterBy = clusterBy, clusterPartitions = clusterPartitions)
 
   // ── Per-file Bloom filter index (point lookups off the clustering order) ─
   //
@@ -802,36 +796,29 @@ final class SnapshotTable(val root: String,
   // column — and a table has ONE clustering order. For every OTHER
   // high-cardinality column a point lookup still touches all files. The
   // Delta answer is a bloom filter index; same here: `writeIndexed` builds
-  // a per-file Bloom filter sidecar (`_bloom_v<N>`, built distributed, only
-  // the serialized filters reach the driver), and [[readIndexed]] point reads
-  // schedule O(1 + fpp·files) scan tasks for an equality probe no matter
-  // how the table is laid out. Pruning is a superset guarantee (Bloom: no
-  // false negatives); the caller still applies the row filter.
+  // a per-file Bloom filter sidecar in the data dir's `_bloom` (built
+  // distributed, only the serialized filters reach the driver), and
+  // [[readIndexed]] point reads schedule O(1 + fpp·files) scan tasks for an
+  // equality probe no matter how the table is laid out. Pruning is a
+  // superset guarantee (Bloom: no false negatives); the caller still
+  // applies the row filter.
 
-  private def bloomPath(v: Int) = new Path(root, s"_bloom_v$v")
-
-  /** [[write]] + min/max stats manifest over `statsCols` + per-file Bloom
-    * filter sidecar over `bloomCols`. Cluster by the range-probed column;
-    * bloom-index the point-probed ones. */
+  /** [[write]] + min/max stats over `statsCols` + per-file Bloom filters
+    * over `bloomCols`, both built before the commit. Cluster by the
+    * range-probed column; bloom-index the point-probed ones. */
   def writeIndexed(spark: SparkSession, df: DataFrame,
       statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
-      bloomFpp: Double = 0.03,
+      bloomFpp: Double = SnapshotTable.BloomFpp,
       clusterBy: Seq[String] = Nil, clusterPartitions: Int = 0,
-      partitionByCols: Seq[String] = Nil): Int = {
-    val v = write(spark, df, partitionByCols, clusterBy, clusterPartitions)
-    val snap = readDir(spark, s"$root/_v$v")
-    if (statsCols.nonEmpty)
-      StatsManifest.write(snap, statsCols, fs(spark), statsPath(v))
-    if (bloomCols.nonEmpty)
-      BloomIndex.write(snap, bloomCols, bloomFpp, fs(spark), bloomPath(v))
-    v
-  }
+      partitionByCols: Seq[String] = Nil): Int =
+    writeSnapshot(spark, df, None, partitionByCols, clusterBy, clusterPartitions,
+      statsCols, bloomCols, bloomFpp)
 
   /** Pruning-aware read — the general SNAPSHOT relation on the plain
     * format: file listing goes through [[PruningFileIndex]], so any
     * predicate Catalyst pushes into the scan prunes the version's file
-    * list through the `_stats_v` range manifest AND the `_bloom_v`
-    * point-lookup sidecar at planning time. Tombstones anti-join on top as in [[read]] — sound, the
+    * list through each data dir's range stats AND Bloom sidecar
+    * ([[DirIndex]]) at planning time. Tombstones anti-join on top as in [[read]] — sound, the
     * tombstone side is its own relation. Hive-partitioned versions (r11)
     * route through the partition-aware index — partition-value rows are
     * reattached from the `k=v` directory segments, so Catalyst's partition
@@ -846,10 +833,7 @@ final class SnapshotTable(val root: String,
     val v = version.getOrElse(currentVersion(spark).getOrElse(
       throw new IllegalStateException(s"SnapshotTable $root has no committed version")))
     def fallback = version.map(readVersion(spark, _)).getOrElse(read(spark))
-    val gone = f.exists(new Path(root, s"_gone_v$v"))
-    if (gone || (!f.exists(new Path(s"$root/_v$v")) && !f.exists(filesPath(v))))
-      throw new IllegalArgumentException(
-        s"SnapshotTable $root: version $v does not exist (vacuumed or never committed)")
+    requireVersion(f, v)
     val partCols = partitionColsOf(f, v)
     if (partCols.nonEmpty)
       return readIndexedPartitioned(spark, f, v, partCols).getOrElse(fallback)
@@ -869,7 +853,7 @@ final class SnapshotTable(val root: String,
     PruningFileIndex.unionSchema(spark, reps) match {
       case None => fallback
       case Some(schema) =>
-        val base = PruningFileIndex.relation(spark, statuses, schema, keepFor(f, v))
+        val base = PruningFileIndex.relation(spark, statuses, schema, keepFor(f, uris))
         applyTombstones(spark, v, base)
     }
   }
@@ -951,7 +935,7 @@ final class SnapshotTable(val root: String,
     PruningFileIndex.unionSchema(spark, reps) match {
       case Some(dataSchema) if !dataSchema.fieldNames.exists(partCols.contains) =>
         val hiveDf = PruningFileIndex.partitionedRelation(
-          spark, groups, partSchema, dataSchema, keepFor(f, v))
+          spark, groups, partSchema, dataSchema, keepFor(f, reps))
         val combined = flatSchema match {
           case None => hiveDf
           case Some(fsch) =>
@@ -963,24 +947,23 @@ final class SnapshotTable(val root: String,
                   fsch.fields.find(_.name == d.name).exists(_.dataType == d.dataType))
             if (!aligned) return None
             hiveDf.unionByName(
-              PruningFileIndex.relation(spark, flat, fsch, keepFor(f, v)))
+              PruningFileIndex.relation(spark, flat, fsch, keepFor(f, flat.map(_.getPath.toString))))
         }
         Some(applyTombstones(spark, v, combined))
       case _ => None
     }
   }
 
-  /** The [[PruningFileIndex]] keep-callback over version `v`'s stats
-    * manifest + Bloom sidecar (both whole-version on this format). */
-  private def keepFor(f: org.apache.hadoop.fs.FileSystem, v: Int)
+  /** The [[PruningFileIndex]] keep-callback over the index of every data
+    * dir holding one of `files` (one file per dir suffices). */
+  private def keepFor(f: org.apache.hadoop.fs.FileSystem, files: Seq[String])
       (preds: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
       : String => Boolean = {
     val (nB, sB, pS) = BucketedSnapshotTable.extractBounds(
       preds.reduce(org.apache.spark.sql.catalyst.expressions.And))
     if (nB.isEmpty && sB.isEmpty && pS.isEmpty) (_: String) => true
-    else PruningFileIndex.dirKeep(StatsManifest.readLines(f, statsPath(v)),
-      new BloomIndex.Probe(f, bloomPath(v)), nB, sB, pS)
-      .getOrElse((_: String) => true)
+    else DirIndex.keep(f, files.flatMap(dirNum).distinct.map(n => n -> dataDir(n)),
+      dirNum, nB, sB, pS)
   }
 
   /** Metadata-only: of the live version's data files, how many survive
@@ -997,7 +980,7 @@ final class SnapshotTable(val root: String,
     // keys by (escaped partition values break the uri-string round trip)
     val all = listDataFileStatuses(f, v).map(_.getPath.toUri.getPath)
     val expr = org.apache.spark.sql.GraftColumnBridge.catalystExpression(pred)
-    val k = keepFor(f, v)(Seq(expr))
+    val k = keepFor(f, all)(Seq(expr))
     val pk = partitionKeep(spark, f, v, expr)
     (all.count(p => pk(p) && k(p)), all.size)
   }
@@ -1162,7 +1145,7 @@ final class SnapshotTable(val root: String,
     }
     // tombstones flip row visibility without touching file bytes — BUT
     // [[append]] carries the prior version's tombstone batch forward by
-    // file copy and a new deleteKeys only ADDS fresh part files, so the
+    // file copy and a new delete only ADDS fresh part files, so the
     // from-side's tombstone files are normally a SUBSET of the to-side's
     // (name+length). Identical sets → the plain pruned diff; a GROWN set →
     // the tombstone-delta diff below (the only changes shared files can
@@ -1177,9 +1160,7 @@ final class SnapshotTable(val root: String,
     if (!tFrom.subsetOf(tTo)) return full
     // cheap existence guards first — a vacuumed or never-committed version
     // must surface readVersion's named error, not a raw listing failure
-    def missing(v: Int) = f.exists(new Path(root, s"_gone_v$v")) ||
-      (!f.exists(new Path(s"$root/_v$v")) && !f.exists(filesPath(v)))
-    if (missing(fromV) || missing(toV)) return full
+    if (missing(f, fromV) || missing(f, toV)) return full
     val oldFiles = listDataFiles(f, fromV).map(_._1)
     val newFiles = listDataFiles(f, toV).map(_._1)
     val shared = oldFiles.toSet intersect newFiles.toSet
@@ -1339,8 +1320,7 @@ final class SnapshotTable(val root: String,
   }
 
   /** Drop snapshot dirs older than the `keep` most recent (time travel
-    * window), along with their tombstone/stats/bloom/file-manifest
-    * sidecars. Never touches the live version (`keep >= 1` enforced), and
+    * window), along with their tombstone/file-manifest sidecars. Never touches the live version (`keep >= 1` enforced), and
     * never a dir that a RETAINED version's file manifest still references
     * (a compacted version may point into older dirs). */
   def vacuum(spark: SparkSession, keep: Int = 2): Unit = {
@@ -1349,16 +1329,14 @@ final class SnapshotTable(val root: String,
     currentVersion(spark).foreach { cur =>
       val referenced: Set[Int] =
         (math.max(1, cur - keep + 1) to cur).toSet.flatMap { (v: Int) =>
-          fileManifest(f, v).getOrElse(Vector.empty).flatMap { uri =>
-            "_v(\\d+)/".r.findFirstMatchIn(uri).map(_.group(1).toInt)
-          }.toSet
+          fileManifest(f, v).getOrElse(Vector.empty).flatMap(dirNum).toSet
         }
       (1 to cur - keep).foreach { v =>
-        val dirs = if (referenced(v)) sidecars(v) else new Path(s"$root/_v$v") +: sidecars(v)
+        val dirs = if (referenced(v)) sidecars(v) else dataDir(v) +: sidecars(v)
         dirs.foreach { p => if (f.exists(p)) f.delete(p, true) }
         // a dir kept only because a retained manifest points into it is no
         // longer a readable VERSION — mark it so history/readVersion skip it
-        if (referenced(v) && f.exists(new Path(s"$root/_v$v")))
+        if (referenced(v) && f.exists(dataDir(v)))
           f.create(new Path(root, s"_gone_v$v"), true).close()
       }
       // Reap _staging_* orphans from crashed writers (the bucketed table's
@@ -1366,10 +1344,13 @@ final class SnapshotTable(val root: String,
       // never clobbered — and gated on the MAX mtime across the dir tree,
       // not the root's: Spark writes task files under _staging_*/_temporary
       // without bumping the staging root's mtime, so a root-mtime gate
-      // would reap a healthy long-running write mid-job.
+      // would reap a healthy long-running write mid-job. Per-version index
+      // files of the legacy layout (nothing reads them) go too.
       val now = System.currentTimeMillis()
       f.listStatus(new Path(root)).foreach { st =>
-        if (st.getPath.getName.startsWith("_staging_")) {
+        val n = st.getPath.getName
+        if (n.startsWith("_stats_v") || n.startsWith("_bloom_v")) f.delete(st.getPath, true)
+        else if (n.startsWith("_staging_")) {
           var newest = st.getModificationTime
           val files = f.listFiles(st.getPath, true)
           while (files.hasNext) newest = math.max(newest, files.next().getModificationTime)

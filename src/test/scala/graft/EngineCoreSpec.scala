@@ -50,9 +50,9 @@ class EngineCoreSpec extends AnyFunSuite {
     val snapBytes = new java.io.File(s"${t.root}/_v1").listFiles()
       .filter(_.getName.endsWith(".parquet")).map(f => f.getName -> f.lastModified).toMap
 
-    t.deleteKeys(spark, Seq(2).toDF("k"))
-    t.deleteKeys(spark, Seq(4).toDF("k"))
-    t.deleteKeys(spark, Seq(4).toDF("k")) // idempotent re-delete
+    t.deleteKeysVersioned(spark, Seq(2).toDF("k"))
+    t.deleteKeysVersioned(spark, Seq(4).toDF("k"))
+    t.deleteKeysVersioned(spark, Seq(4).toDF("k")) // idempotent re-delete
     assert(t.read(spark).select("k").as[Int].collect().toSet == Set(1, 3))
     // the snapshot files themselves were never rewritten (O(deleted) delete)
     val after = new java.io.File(s"${t.root}/_v1").listFiles()
@@ -63,18 +63,18 @@ class EngineCoreSpec extends AnyFunSuite {
     val v2 = t.compact(spark)
     assert(t.read(spark).select("k").as[Int].collect().toSet == Set(1, 3))
     assert(!new java.io.File(s"${t.root}/_tomb_v$v2").exists())
-    // time travel still sees v1 *with its own tombstones applied*
-    assert(t.readVersion(spark, 1).select("k").as[Int].collect().toSet == Set(1, 3))
+    // time travel still sees v4 *with its own tombstones applied*
+    assert(t.readVersion(spark, 4).select("k").as[Int].collect().toSet == Set(1, 3))
     // vacuum drops the old version's tombstone sidecar too
     t.vacuum(spark, keep = 1)
-    assert(!new java.io.File(s"${t.root}/_tomb_v1").exists())
+    assert(!new java.io.File(s"${t.root}/_tomb_v4").exists())
   }
 
   test("SnapshotTable.deleteKeys: composes with stats-pruned reads") {
     val t = new SnapshotTable(tmp("tombstats"))
     t.writeWithStats(spark, (1 to 100).map(i => (i, i * 10)).toDF("k", "v"),
       statsCols = Seq("k"), clusterBy = Seq("k"), clusterPartitions = 4)
-    t.deleteKeys(spark, Seq(10, 15).toDF("k"))
+    t.deleteKeysVersioned(spark, Seq(10, 15).toDF("k"))
     val pruned = t.readIndexed(spark)
     assert(pruned.filter($"k" between (1, 25)).select("k").as[Int].collect().toSet ==
       ((1 to 25).toSet -- Set(10, 15)))
@@ -313,7 +313,7 @@ class EngineCoreSpec extends AnyFunSuite {
 
     // tombstones: pending deletes survive both append and compaction,
     // without disturbing older versions' time-travel reads
-    t.deleteKeys(spark, Seq(0L, 1L).toDF("k"))
+    t.deleteKeysVersioned(spark, Seq(0L, 1L).toDF("k"))
     t.append(spark, Seq((90000L, "z")).toDF("k", "x"))
     t.append(spark, Seq((90001L, "z")).toDF("k", "x"))
     val packed = t.optimizeCompact(spark, targetBytes = 100000)
@@ -662,8 +662,8 @@ class EngineCoreSpec extends AnyFunSuite {
     // broadcast semi-join over the shared files for exactly the keys the
     // new tombstones hid; no full two-snapshot diff, and the delete row
     // carries its true old values
-    t.deleteKeys(spark, Seq(Tuple1(5)).toDF("k"))
-    val del = t.changes(spark, Seq("k"), 1, 3)
+    t.deleteKeysVersioned(spark, Seq(Tuple1(5)).toDF("k"))           // v4
+    val del = t.changes(spark, Seq("k"), 1, 4)
     assert(graft.tables.SnapshotTable.lastDiffMode.get == "tombstone-delta",
       s"delete-then-append window took ${graft.tables.SnapshotTable.lastDiffMode.get}")
     assert(del.select("k", "v", "_change_type").as[(Int, String, String)]
@@ -673,8 +673,8 @@ class EngineCoreSpec extends AnyFunSuite {
     // append COPIES tombstones forward: a window whose tombstone dirs hold
     // the same files stays file-pruned, with the (identical) visibility
     // filter applied on both sides — the tombstoned key never reappears
-    t.append(spark, Seq((1004, "n4")).toDF("k", "v"))                // v4
-    val ch34 = t.changes(spark, Seq("k"), 3, 4)
+    t.append(spark, Seq((1004, "n4")).toDF("k", "v"))                // v5
+    val ch34 = t.changes(spark, Seq("k"), 4, 5)
     assert(ch34.inputFiles.filter(_.contains("/_v")).forall(f =>
       !f.contains("/_v1/") && !f.contains("/_v2/") && !f.contains("/_v3/")),
       s"tombstone-identical append window must stay pruned: ${ch34.inputFiles.mkString(",")}")
@@ -685,8 +685,8 @@ class EngineCoreSpec extends AnyFunSuite {
     // a SHRUNK/replaced tombstone set (maintenance materialized the
     // deletes into a clean rewrite) still falls back to the honest full
     // diff — and stays correct
-    t.compact(spark)                                                 // v5: clean
-    val post = t.changes(spark, Seq("k"), 4, 5)
+    t.compact(spark)                                                 // v6: clean
+    val post = t.changes(spark, Seq("k"), 5, 6)
     assert(graft.tables.SnapshotTable.lastDiffMode.get == "full")
     assert(post.count() == 0, "compaction is content-preserving on visible rows")
   }

@@ -72,9 +72,9 @@ class SnapshotTableProps extends AnyFunSuite {
             val doomed = keys.zipWithIndex.collect {
               case (k, i) if (i + pick) % 3 == 0 => k
             }.toSet
-            t.deleteKeys(spark, doomed.toSeq.toDF("k"))
-            // tombstones change the LIVE version's visible content in place
-            hist = hist.init :+ live.filterNot(r => doomed(r._1))
+            t.deleteKeysVersioned(spark, doomed.toSeq.toDF("k"))
+            // a delete commits a version: the prior one keeps its rows
+            hist :+= live.filterNot(r => doomed(r._1))
           case Optimize =>
             val v = t.optimizeCompact(spark, targetBytes = 64 << 10)
             if (v > hist.size) hist :+= live // content-preserving new version

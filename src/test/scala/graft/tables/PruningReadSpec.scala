@@ -102,7 +102,7 @@ class PruningReadSpec extends AnyFunSuite {
     assert(all == total && kept * 2 <= all)
 
     // delete a key via tombstones: the pruned relation must still hide it
-    t.deleteKeys(spark, Seq(400L).toDF("id"))
+    t.deleteKeysVersioned(spark, Seq(400L).toDF("id"))
     assert(sql(s"SNAPSHOT '$root' WHERE id = 400").count() == 0)
     assert(sql(s"SNAPSHOT '$root' WHERE d BETWEEN 100 AND 120").count() == 21)
   }
@@ -145,7 +145,7 @@ class PruningReadSpec extends AnyFunSuite {
     // ordinary read) and tombstones still anti-join on top
     assert(t.readIndexed(spark).schema("p").dataType ==
       t.read(spark).schema("p").dataType)
-    t.deleteKeys(spark, Seq(401L).toDF("id"))
+    t.deleteKeysVersioned(spark, Seq(401L).toDF("id"))
     assert(sql(s"SNAPSHOT '$root' WHERE p = 1 AND id = 401").count() == 0)
     assert(sql(s"SNAPSHOT '$root' WHERE p = 1").count() == 199)
   }

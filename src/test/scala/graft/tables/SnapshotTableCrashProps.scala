@@ -6,7 +6,7 @@ import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Model-based crash matrix for [[SnapshotTable]]'s one commit path
-  * (`commitNext`): random scripts of `write`, `appendTxn`,
+  * (`commitNext`): random scripts of `write`, `writeIndexed`, `appendTxn`,
   * `deleteKeysVersioned` and `optimizeCompact`, with writers KILLED at
   * each commit step through the `onStep` fault-injection hook, must keep
   * the live and every per-version content equal to an in-memory model
@@ -15,7 +15,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * the pointer replace, "committed") commits fully. A killed `appendTxn`
   * is retried only after the NEXT step's write, delete or compaction, so
   * its leftover txn marker must not come into force with another
-  * writer's commit, and the retried batch lands exactly once.
+  * writer's commit, and the retried batch lands exactly once. After every
+  * kill, each committed version's index-pruned read equals the model.
   */
 class SnapshotTableCrashProps extends AnyFunSuite {
   private lazy val spark = graft.SparkTestSession.spark
@@ -26,6 +27,7 @@ class SnapshotTableCrashProps extends AnyFunSuite {
 
   private sealed trait Op
   private case class Write(tag: Int) extends Op
+  private case class WriteIndexed(tag: Int) extends Op
   private case class AppendTxn(tag: Int) extends Op
   private case class DeleteVersioned(pick: Int) extends Op
   private case object Compact extends Op
@@ -36,6 +38,7 @@ class SnapshotTableCrashProps extends AnyFunSuite {
     steps <- Gen.listOfN(n, for {
       op <- Gen.frequency(
         1 -> Gen.choose(0, 99).map(Write),
+        1 -> Gen.choose(0, 99).map(WriteIndexed),
         4 -> Gen.choose(0, 99).map(AppendTxn),
         2 -> Gen.choose(0, 99).map(DeleteVersioned),
         2 -> Gen.const(Compact))
@@ -91,6 +94,12 @@ class SnapshotTableCrashProps extends AnyFunSuite {
           assert(after == before + 1, s"$ctx: must commit exactly one version")
         if (after == before + 1) hist :+= expect.sorted
         checkLive(ctx)
+        // a kill never leaves a committed version whose index drops rows:
+        // a range read pruned through every dir's index ≡ the model
+        if (killed) (1 to hist.size).foreach { v =>
+          assert(sorted(t.readIndexed(spark, Some(v)).filter(col("k") < 30000L)) ==
+            hist(v - 1).filter(_._1 < 30000L), s"$ctx: indexed read of version $v (script $script)")
+        }
       }
 
       t.writeWithStats(spark, toDF((0 until 4).map(j => (j.toLong, s"seed-$j"))), Seq("k"))
@@ -124,6 +133,13 @@ class SnapshotTableCrashProps extends AnyFunSuite {
             settle(ctx, kill, killed, rs, mayNoop = false)
             if (killed) settle(s"$ctx retry", None, attempt(None)(t.write(spark, toDF(rs))),
               rs, mayNoop = false)
+            retryPending(ctx)
+          case WriteIndexed(tag) =>
+            val rs = (0 until 4).map(j => (10000L * (i + 1) + j, s"i$tag-$j"))
+            def w() = t.writeIndexed(spark, toDF(rs), statsCols = Seq("k"), bloomCols = Seq("x"))
+            val killed = attempt(kill)(w())
+            settle(ctx, kill, killed, rs, mayNoop = false)
+            if (killed) settle(s"$ctx retry", None, attempt(None)(w()), rs, mayNoop = false)
             retryPending(ctx)
           case AppendTxn(tag) =>
             val rs = (0 until 3).map(j => (10000L * (i + 1) + 100 + j, s"a$tag-$j"))

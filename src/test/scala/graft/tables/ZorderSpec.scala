@@ -85,7 +85,7 @@ class ZorderSpec extends AnyFunSuite {
     val t = new SnapshotTable(root)
     t.write(spark, (1 to 256).map(i => (i.toLong, i.toLong % 16, i.toLong / 16))
       .toDF("id", "x", "y"))
-    t.deleteKeys(spark, Seq(7L).toDF("id"))
+    t.deleteKeysVersioned(spark, Seq(7L).toDF("id"))
     t.zorderRewrite(spark, Seq("x", "y"), targetBytes = 4096)
     // the deleted key stays invisible after the rewrite (the rewrite
     // recommitted VISIBLE rows — the tombstone is materialized now)
