@@ -893,9 +893,8 @@ final class BucketedSnapshotTable(
     // carries it and the locked section only re-points its file paths.
     // Index columns come from the writer OR the manifest header
     // (effectiveIndexCols): every commit keeps the table's index fresh
-    val (effStatsC, effBloomC) = if (stagedHasData) effectiveIndexCols(spark, v0) else (Nil, Nil)
-    DirIndex.build(f, new Path(s"$root/$staging"), SnapshotTable.readDir(spark, s"$root/$staging"),
-      effStatsC, effBloomC, BucketedSnapshotTable.BloomFpp)
+    if (stagedHasData) DirIndex.build(f, batchDir(staging), SnapshotTable.readDir(spark,
+      s"$root/$staging"), effectiveIndexCols(spark, v0), BucketedSnapshotTable.BloomFpp)
     // the staged FILE schema (bucket partition column excluded), recorded
     // in the manifest header at commit so planning skips the footer read
     val stagedSchema =

@@ -22,11 +22,13 @@ private[tables] object DirIndex {
   def bloomPath(dir: Path): Path = new Path(dir, "_bloom")
 
   /** Index the data files of `dir` (read as `snap`) over the requested
-    * columns it holds: min/max stats lines, and a Bloom sidecar collapsed
-    * into one offset-indexed blob (probe IO O(1) per dir). Columns a dir
-    * lacks (written before a schema evolution) are skipped. */
-  def build(f: FileSystem, dir: Path, snap: => DataFrame, statsCols: Seq[String],
-      bloomCols: Seq[String], fpp: Double): Unit = if (statsCols.nonEmpty || bloomCols.nonEmpty) {
+    * (stats, Bloom) columns it holds: min/max stats lines, and a Bloom
+    * sidecar collapsed into one offset-indexed blob (probe IO O(1) per
+    * dir). Columns a dir lacks (written before a schema evolution) are
+    * skipped. */
+  def build(f: FileSystem, dir: Path, snap: => DataFrame,
+      cols: (Seq[String], Seq[String]), fpp: Double): Unit = if (cols._1.nonEmpty || cols._2.nonEmpty) {
+    val (statsCols, bloomCols) = cols
     val df = snap
     val stats = statsCols.filter(df.columns.contains)
     val bloom = bloomCols.filter(df.columns.contains)
@@ -45,7 +47,7 @@ private[tables] object DirIndex {
     val (hs, hb) = if (onlyMissing) recorded(f, Seq(dir)) else (Nil, Nil)
     def todo(want: Seq[String], have: Seq[String]) =
       if (onlyMissing && want.forall(have.contains)) Nil else want
-    build(f, dir, snap, todo(statsCols, hs), todo(bloomCols, hb), fpp)
+    build(f, dir, snap, (todo(statsCols, hs), todo(bloomCols, hb)), fpp)
   }
 
   /** Re-point the index a rename moved from the `staging` dir to `dir`: its

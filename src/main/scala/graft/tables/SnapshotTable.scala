@@ -421,10 +421,10 @@ final class SnapshotTable(val root: String,
       bloomFpp: Double = SnapshotTable.BloomFpp): Path = {
     val f = fs(spark)
     stage(f, df, partitionBy, staging => {
-      val (sc, bc) = DirIndex.effective(statsCols, bloomCols,
+      val cols = DirIndex.effective(statsCols, bloomCols,
         DirIndex.recorded(f, currentVersion(spark).toSeq.flatMap(dataDirs(f, _))))
-      if ((sc.nonEmpty || bc.nonEmpty) && walkParquet(f, staging).nonEmpty)
-        DirIndex.build(f, staging, readDir(spark, staging.toString), sc, bc, bloomFpp)
+      if ((cols._1.nonEmpty || cols._2.nonEmpty) && walkParquet(f, staging).nonEmpty)
+        DirIndex.build(f, staging, readDir(spark, staging.toString), cols, bloomFpp)
     })
   }
 

@@ -6,8 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DateType, StringType, TimestampType}
 
 /** Per-file min/max column stats manifest — the Delta-style data-skipping
-  * metadata shared by [[SnapshotTable]] (whole-snapshot manifests) and
-  * [[BucketedSnapshotTable]] (per-batch manifests).
+  * metadata each data dir of both table formats carries ([[DirIndex]]).
   *
   * Format: one line per file, `path\tcol:tag:...` entries per stats column.
   *   - numeric/timestamp/date: `col:n:<minDouble>:<maxDouble>`
@@ -45,13 +44,8 @@ private[tables] object StatsManifest {
     else Some(trimmed.init + (trimmed.last + 1).toChar)
   }
 
-  /** Scan `snap` (one extra pass over the immutable just-written files) and
-    * write the per-file stats manifest for `statsCols` to `out`. */
-  def write(snap: DataFrame, statsCols: Seq[String], fs: FileSystem, out: Path): Unit =
-    writeLines(fs, out, lines(snap, statsCols))
-
-  /** Dump pre-computed manifest lines (compaction carries kept files'
-    * lines forward and computes fresh ones only for rewritten files).
+  /** Dump manifest lines (also a re-pointed index's, and the other
+    * line-per-entry metadata files).
     *
     * Written tmp-then-rename, NOT truncate-in-place: ANALYZE backfills
     * sidecars on LIVE batch dirs while readers (DML discovery, pruned
@@ -72,8 +66,9 @@ private[tables] object StatsManifest {
   def statsColumns(ls: Vector[String]): Seq[String] =
     ls.headOption.toSeq.flatMap(_.split("\t").drop(1).map(_.split(":", 2)(0)))
 
-  /** Per-file manifest lines for `snap` over `statsCols`. */
-  def lines(snap: DataFrame, statsCols: Seq[String]): Seq[String] = {
+  /** Scan `snap` (one extra pass over the immutable just-written files) and
+    * write the per-file stats manifest for `statsCols` to `out`. */
+  def write(snap: DataFrame, statsCols: Seq[String], fs: FileSystem, out: Path): Unit = {
     val isStr = statsCols.map(c =>
       c -> snap.schema(c).dataType.isInstanceOf[StringType]).toMap
     def toD(c: String) = snap.schema(c).dataType match {
@@ -115,7 +110,7 @@ private[tables] object StatsManifest {
       }.mkString("\t")
       s"$file\t$stats"
     }
-    body.toSeq
+    writeLines(fs, out, body.toSeq)
   }
 
   /** Manifest lines at `path`, or None when no manifest was written. */

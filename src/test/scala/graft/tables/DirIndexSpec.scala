@@ -38,6 +38,9 @@ class DirIndexSpec extends AnyFunSuite {
           try t.deleteKeysVersioned(spark, Seq(7).toDF("k"))
           catch { case e: Throwable => failure = Some(e) })
         deleter.start()
+        // let a delete that does not wait for the commit lock land now,
+        // between this carry and the flip; one that waits times out here
+        deleter.join(5000)
       }
     }
     val appended =
