@@ -657,11 +657,11 @@ case class DescribeDetailCommand(path: String) extends LeafRunnableCommand {
         val t = new SnapshotTable(path)
         val files = t.read(spark).inputFiles.toSeq
         val parts = t.partitionColumns(spark)
-        val stats = t.statsColumns(spark)
+        val (stats, bloom) = t.indexColumns(spark)
         Seq(Row("snapshot", t.currentVersion(spark).getOrElse(0), null, null,
           if (parts.isEmpty) null else parts.mkString(","),
           if (stats.isEmpty) null else stats.mkString(","),
-          null, // plain Bloom columns are per data dir, not a header fact
+          if (bloom.isEmpty) null else bloom.mkString(","),
           t.constraints(spark).size, files.size.toLong, sizeOf(files)))
     }
   }

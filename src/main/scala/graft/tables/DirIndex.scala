@@ -63,13 +63,14 @@ private[tables] object DirIndex {
     }
 
   /** The (stats, Bloom) columns EVERY one of `dirs` records — the index
-    * that covers all their files; nothing for no dirs. */
-  def recorded(f: FileSystem, dirs: Seq[Path]): (Seq[String], Seq[String]) =
-    if (dirs.isEmpty) (Nil, Nil)
-    else dirs.map { d =>
-      (StatsManifest.readLines(f, statsPath(d)).map(StatsManifest.statsColumns).getOrElse(Nil),
-        BloomIndex.indexedColumns(f, bloomPath(d)).getOrElse(Nil))
-    }.reduce((a, b) => (a._1.filter(b._1.contains), a._2.filter(b._2.contains)))
+    * that covers all their files; nothing for no dirs. A `_stats` listing
+    * no file (an empty write) names no columns and constrains nothing. */
+  def recorded(f: FileSystem, dirs: Seq[Path]): (Seq[String], Seq[String]) = {
+    def all(cs: Seq[Seq[String]]) = cs.reduceOption((a, b) => a.filter(b.contains)).getOrElse(Nil)
+    val stats = dirs.map(d => StatsManifest.readLines(f, statsPath(d))).filterNot(_.exists(_.isEmpty))
+    (all(stats.map(_.map(StatsManifest.statsColumns).getOrElse(Nil))),
+      all(dirs.map(d => BloomIndex.indexedColumns(f, bloomPath(d)).getOrElse(Nil))))
+  }
 
   /** The columns a commit indexes, per kind: the writer's own, else the
     * ones the table records (`recorded`, read only when a kind needs it) —

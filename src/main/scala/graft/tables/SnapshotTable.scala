@@ -1,6 +1,6 @@
 package graft.tables
 
-import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Versioned parquet table with an atomic current-version pointer — the
@@ -89,6 +89,9 @@ final class SnapshotTable(val root: String,
 
   def exists(spark: SparkSession): Boolean = currentVersion(spark).isDefined
 
+  private def liveVersion(spark: SparkSession): Int = currentVersion(spark).getOrElse(
+    throw new IllegalStateException(s"SnapshotTable $root has no committed version"))
+
   private def filesPath(v: Int) = new Path(root, s"_files_v$v")
   private def dataDir(v: Int) = new Path(root, s"_v$v")
 
@@ -98,7 +101,7 @@ final class SnapshotTable(val root: String,
   /** The version's data file URIs when it carries a `_files_v<N>` manifest
     * (a compacted version referencing a mix of its own and older files);
     * None for plain directory-backed versions. */
-  private def fileManifest(f: org.apache.hadoop.fs.FileSystem, v: Int): Option[Vector[String]] = {
+  private def fileManifest(f: FileSystem, v: Int): Option[Vector[String]] = {
     val p = filesPath(v)
     if (!f.exists(p)) None
     else {
@@ -115,9 +118,8 @@ final class SnapshotTable(val root: String,
     * version listed in 7 s vs 0.07 s for this walk). One LIST call per
     * directory is also the natural shape for a hive-partitioned tree on
     * an object store. */
-  private def walkParquet(f: org.apache.hadoop.fs.FileSystem,
-      dir: Path): Vector[org.apache.hadoop.fs.FileStatus] = {
-    val buf = Vector.newBuilder[org.apache.hadoop.fs.FileStatus]
+  private def walkParquet(f: FileSystem, dir: Path): Vector[FileStatus] = {
+    val buf = Vector.newBuilder[FileStatus]
     val stack = scala.collection.mutable.Stack(dir)
     while (stack.nonEmpty) {
       f.listStatus(stack.pop()).foreach { st =>
@@ -130,14 +132,19 @@ final class SnapshotTable(val root: String,
     buf.result()
   }
 
+  /** The data file URIs of version `v` — manifest-resolved when present,
+    * else a walk of the version dir — with no per-file metadata call. */
+  private def dataFiles(f: FileSystem, v: Int): Vector[String] =
+    fileManifest(f, v).getOrElse(walkParquet(f, dataDir(v)).map(_.getPath.toUri.toString))
+
   /** (uri, bytes) of every data file of version `v` — manifest-resolved
     * when present, else a recursive listing of the version dir (partition
     * subdirs included). */
-  private def listDataFiles(f: org.apache.hadoop.fs.FileSystem, v: Int): Vector[(String, Long)] =
+  private def listDataFiles(f: FileSystem, v: Int): Vector[(String, Long)] =
     fileManifest(f, v) match {
       case Some(uris) => uris.map(u => u -> f.getFileStatus(new Path(u)).getLen)
       case None =>
-        walkParquet(f, new Path(s"$root/_v$v"))
+        walkParquet(f, dataDir(v))
           .map(st => st.getPath.toUri.toString -> st.getLen)
     }
 
@@ -147,11 +154,10 @@ final class SnapshotTable(val root: String,
     * a `Path → uri-string → Path` round trip) must use. Manifest versions
     * pay the same one-getFileStatus-per-file the (uri, len) listing
     * already pays. */
-  private def listDataFileStatuses(f: org.apache.hadoop.fs.FileSystem,
-      v: Int): Vector[org.apache.hadoop.fs.FileStatus] =
+  private def listDataFileStatuses(f: FileSystem, v: Int): Vector[FileStatus] =
     fileManifest(f, v) match {
       case Some(uris) => uris.map(u => f.getFileStatus(new Path(u)))
-      case None => walkParquet(f, new Path(s"$root/_v$v"))
+      case None => walkParquet(f, dataDir(v))
     }
 
   /** The version's snapshot relation, before tombstones: the dir for plain
@@ -209,8 +215,8 @@ final class SnapshotTable(val root: String,
     * the `k=v` path segments of its data files; empty when the version's
     * files are flat. A manifest version mixes partitioned old files with
     * flat increments, so the first file with segments decides. */
-  private def partitionColsOf(f: org.apache.hadoop.fs.FileSystem, v: Int): Seq[String] =
-    listDataFiles(f, v).iterator.map { case (uri, _) =>
+  private def partitionColsOf(f: FileSystem, v: Int): Seq[String] =
+    dataFiles(f, v).iterator.map { uri =>
       val segs = new Path(uri).toUri.getPath.split('/')
       val vIdx = segs.lastIndexWhere(_.matches("_v\\d+"))
       segs.slice(vIdx + 1, segs.length - 1).toSeq
@@ -223,10 +229,10 @@ final class SnapshotTable(val root: String,
   def partitionColumns(spark: SparkSession): Seq[String] =
     currentVersion(spark).map(partitionColsOf(fs(spark), _)).getOrElse(Nil)
 
-  /** Stats columns indexing every data dir of the live version, if any. */
-  def statsColumns(spark: SparkSession): Option[Seq[String]] =
-    currentVersion(spark).map(v => DirIndex.recorded(fs(spark), dataDirs(fs(spark), v))._1)
-      .filter(_.nonEmpty)
+  /** The (stats, Bloom) columns indexing every data dir of the live version. */
+  def indexColumns(spark: SparkSession): (Seq[String], Seq[String]) =
+    currentVersion(spark).fold((Seq.empty[String], Seq.empty[String]))(v =>
+      DirIndex.recorded(fs(spark), dataDirs(fs(spark), v)))
 
   /** ANALYZE: index every data dir of the live version over `statsCols` /
     * `bloomCols`, no data rewritten, no version committed, no lock held
@@ -236,15 +242,13 @@ final class SnapshotTable(val root: String,
   def analyze(spark: SparkSession, statsCols: Seq[String], bloomCols: Seq[String],
       onlyMissing: Boolean = false): Unit = {
     val f = fs(spark)
-    val v = currentVersion(spark).getOrElse(
-      throw new IllegalStateException(s"SnapshotTable $root has no committed version"))
+    val v = liveVersion(spark)
     dataDirs(f, v).foreach(d => DirIndex.backfill(f, d, readDir(spark, d.toString),
       statsCols, bloomCols, SnapshotTable.BloomFpp, onlyMissing))
   }
 
   def read(spark: SparkSession): DataFrame = {
-    val v = currentVersion(spark).getOrElse(
-      throw new IllegalStateException(s"SnapshotTable $root has no committed version"))
+    val v = liveVersion(spark)
     applyTombstones(spark, v, snapshotDF(spark, v))
   }
 
@@ -320,12 +324,11 @@ final class SnapshotTable(val root: String,
     * committed version. */
   def deleteKeysVersioned(spark: SparkSession, keys: DataFrame): Int = {
     val f = fs(spark)
-    if (!exists(spark))
-      throw new IllegalStateException(s"SnapshotTable $root has no committed version")
+    liveVersion(spark)
     val staging = stage(f, keys.dropDuplicates())
     commitNext(spark, staging, None) { (cur, next) =>
       StatsManifest.writeLines(f, filesPath(next),
-        listDataFiles(f, cur).map(_._1).map(canonical))
+        dataFiles(f, cur).map(canonical))
       carryTombstones(f, cur, next)
       f.mkdirs(tombPath(next))
       f.listStatus(staging).filter(_.getPath.getName.endsWith(".parquet"))
@@ -453,7 +456,7 @@ final class SnapshotTable(val root: String,
         }
         val next = cur + 1
         lockH.check()
-        (new Path(s"$root/_v$next") +: sidecars(next))
+        (dataDir(next) +: sidecars(next))
           .foreach(p => if (f.exists(p)) f.delete(p, true))
         f.listStatus(new Path(root)).foreach { st =>
           val n = st.getPath.getName
@@ -583,8 +586,8 @@ final class SnapshotTable(val root: String,
     val committed = commitNext(spark, staging, Some(v0.getOrElse(0)), replayed = applied) {
       (cur, next) =>
         install(f, staging, next)
-        val prior = v0.map(v => listDataFiles(f, v).map(_._1)).getOrElse(Vector.empty)
-        val added = listDataFiles(f, next).map(_._1)
+        val prior = v0.map(dataFiles(f, _)).getOrElse(Vector.empty)
+        val added = dataFiles(f, next)
         StatsManifest.writeLines(f, filesPath(next), (prior ++ added).map(canonical))
         carryTombstones(f, cur, next)
         // The txn watermark is part of the atomic commit: the marker names
@@ -608,8 +611,7 @@ final class SnapshotTable(val root: String,
 
   /** All (version, batch) txn markers recorded for `appId` (committed or
     * not — the caller filters by the live pointer). */
-  private def txnMarkers(f: org.apache.hadoop.fs.FileSystem,
-      appId: String): Seq[(Int, Long)] = {
+  private def txnMarkers(f: FileSystem, appId: String): Seq[(Int, Long)] = {
     val pre = txnPrefix(appId) + "_v"
     if (!f.exists(new Path(root))) return Nil
     f.listStatus(new Path(root)).toSeq.flatMap { st =>
@@ -634,15 +636,14 @@ final class SnapshotTable(val root: String,
     if (committed.isEmpty) None else Some(committed.max)
   }
 
-  private def recordTxn(f: org.apache.hadoop.fs.FileSystem, appId: String,
+  private def recordTxn(f: FileSystem, appId: String,
       batch: Long, version: Int): Unit =
     MetaIO.replace(f, new Path(root, s"${txnPrefix(appId)}_v$version"), batch.toString)
 
   /** Keep only the newest committed marker per app (the skip check needs
     * just the high-water batch); runs after a successful flip, so a crash
     * here merely leaves harmless extra markers. */
-  private def pruneTxnMarkers(f: org.apache.hadoop.fs.FileSystem, appId: String,
-      keepV: Int): Unit =
+  private def pruneTxnMarkers(f: FileSystem, appId: String, keepV: Int): Unit =
     txnMarkers(f, appId).collect { case (v, _) if v < keepV => v }.foreach { v =>
       f.delete(new Path(root, s"${txnPrefix(appId)}_v$v"), false)
     }
@@ -676,8 +677,7 @@ final class SnapshotTable(val root: String,
   def zorderRewrite(spark: SparkSession, zorderBy: Seq[String],
       targetBytes: Long = 128L << 20, bits: Int = 8): Int = {
     val f = fs(spark)
-    val v = currentVersion(spark).getOrElse(
-      throw new IllegalStateException(s"SnapshotTable $root has no committed version"))
+    val v = liveVersion(spark)
     val bytes = listDataFiles(f, v).map(_._2).sum
     val nOut = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
     val df = read(spark)
@@ -692,8 +692,7 @@ final class SnapshotTable(val root: String,
   def optimizeCompact(spark: SparkSession, targetBytes: Long = 128L << 20,
       clusterBy: Seq[String] = Nil): Int = {
     val f = fs(spark)
-    val v = currentVersion(spark).getOrElse(
-      throw new IllegalStateException(s"SnapshotTable $root has no committed version"))
+    val v = liveVersion(spark)
     val files = listDataFiles(f, v)
     val (small, kept) = files.partition(_._2 < targetBytes)
     if (small.size < 2) return v
@@ -712,7 +711,7 @@ final class SnapshotTable(val root: String,
     commitNext(spark, staging, Some(v)) { (_, next) =>
       install(f, staging, next)
       StatsManifest.writeLines(f, filesPath(next),
-        (kept.map(_._1) ++ listDataFiles(f, next).map(_._1)).map(canonical))
+        (kept.map(_._1) ++ dataFiles(f, next)).map(canonical))
       carryTombstones(f, v, next)
     }
   }
@@ -830,8 +829,7 @@ final class SnapshotTable(val root: String,
     * read. `version` = time travel. */
   def readIndexed(spark: SparkSession, version: Option[Int] = None): DataFrame = {
     val f = fs(spark)
-    val v = version.getOrElse(currentVersion(spark).getOrElse(
-      throw new IllegalStateException(s"SnapshotTable $root has no committed version")))
+    val v = version.getOrElse(liveVersion(spark))
     def fallback = version.map(readVersion(spark, _)).getOrElse(read(spark))
     requireVersion(f, v)
     val partCols = partitionColsOf(f, v)
@@ -845,7 +843,7 @@ final class SnapshotTable(val root: String,
     // round per file would double the planning RPCs on an object store
     // (mtime/block metadata are unused by the parquet split planner)
     val statuses = files.map { case (u, len) =>
-      new org.apache.hadoop.fs.FileStatus(len, false, 1, 128L << 20, 0L, new Path(u))
+      new FileStatus(len, false, 1, 128L << 20, 0L, new Path(u))
     }
     // one representative per version dir (files of one write job share a
     // schema); bail to the union-cast read on a type conflict
@@ -875,15 +873,14 @@ final class SnapshotTable(val root: String,
     * cross-dir type conflict, when a flat increment LACKS a partition
     * column, or when a directory value does not parse as the flat side's
     * declared type. */
-  private def readIndexedPartitioned(spark: SparkSession,
-      f: org.apache.hadoop.fs.FileSystem, v: Int,
+  private def readIndexedPartitioned(spark: SparkSession, f: FileSystem, v: Int,
       partCols: Seq[String]): Option[DataFrame] = {
     import org.apache.spark.sql.types.{DataType, DateType, DoubleType, IntegerType, LongType, StringType, StructField, StructType}
     // the listing's OWN FileStatus objects — escaped partition values
     // ("cat 0" → "cat%200") do not survive a Path→string→Path round trip
     val files = listDataFileStatuses(f, v)
     if (files.isEmpty) return None
-    val parsed: Vector[(org.apache.hadoop.fs.FileStatus, Option[Seq[String]])] =
+    val parsed: Vector[(FileStatus, Option[Seq[String]])] =
       files.map { st =>
         val segs = st.getPath.toUri.getPath.split('/')
         val vIdx = segs.lastIndexWhere(_.matches("_v\\d+"))
@@ -956,7 +953,7 @@ final class SnapshotTable(val root: String,
 
   /** The [[PruningFileIndex]] keep-callback over the index of every data
     * dir holding one of `files` (one file per dir suffices). */
-  private def keepFor(f: org.apache.hadoop.fs.FileSystem, files: Seq[String])
+  private def keepFor(f: FileSystem, files: Seq[String])
       (preds: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
       : String => Boolean = {
     val (nB, sB, pS) = BucketedSnapshotTable.extractBounds(
@@ -974,8 +971,7 @@ final class SnapshotTable(val root: String,
     * stats/Bloom keep runs on the survivors. */
   def pruneStats(spark: SparkSession, pred: org.apache.spark.sql.Column): (Int, Int) = {
     val f = fs(spark)
-    val v = currentVersion(spark).getOrElse(
-      throw new IllegalStateException(s"SnapshotTable $root has no committed version"))
+    val v = liveVersion(spark)
     // status-based listing: its decoded paths are what [[partitionKeep]]
     // keys by (escaped partition values break the uri-string round trip)
     val all = listDataFileStatuses(f, v).map(_.getPath.toUri.getPath)
@@ -991,7 +987,7 @@ final class SnapshotTable(val root: String,
     * Keep-all whenever the version is flat, any file lacks the segments,
     * no conjunct is partition-only, or evaluation fails — superset
     * guarantee, same contract as the sidecar keep. */
-  private def partitionKeep(spark: SparkSession, f: org.apache.hadoop.fs.FileSystem,
+  private def partitionKeep(spark: SparkSession, f: FileSystem,
       v: Int, expr: org.apache.spark.sql.catalyst.expressions.Expression)
       : String => Boolean = {
     val keepAll = (_: String) => true
@@ -1161,8 +1157,8 @@ final class SnapshotTable(val root: String,
     // cheap existence guards first — a vacuumed or never-committed version
     // must surface readVersion's named error, not a raw listing failure
     if (missing(f, fromV) || missing(f, toV)) return full
-    val oldFiles = listDataFiles(f, fromV).map(_._1)
-    val newFiles = listDataFiles(f, toV).map(_._1)
+    val oldFiles = dataFiles(f, fromV)
+    val newFiles = dataFiles(f, toV)
     val shared = oldFiles.toSet intersect newFiles.toSet
     if (shared.isEmpty) return full
     def side(uris: Vector[String], v: Int): DataFrame = {
@@ -1320,9 +1316,10 @@ final class SnapshotTable(val root: String,
   }
 
   /** Drop snapshot dirs older than the `keep` most recent (time travel
-    * window), along with their tombstone/file-manifest sidecars. Never touches the live version (`keep >= 1` enforced), and
-    * never a dir that a RETAINED version's file manifest still references
-    * (a compacted version may point into older dirs). */
+    * window), with their tombstone/file-manifest sidecars and index. Never
+    * touches the live version (`keep >= 1` enforced), and never a dir that
+    * a RETAINED version's file manifest still references (a compacted
+    * version may point into older dirs). */
   def vacuum(spark: SparkSession, keep: Int = 2): Unit = {
     require(keep >= 1, s"vacuum keep must be >= 1 (got $keep): keep=0 would delete the live version")
     val f = fs(spark)

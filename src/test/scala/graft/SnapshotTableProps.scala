@@ -131,7 +131,7 @@ class SnapshotTableProps extends AnyFunSuite {
     // increment lacks the stats column m → stats manifest must NOT carry,
     // and a range-filtered read still scans every file
     t.appendEvolving(spark, Seq(Tuple1(3L)).toDF("k").coalesce(1))
-    assert(t.statsColumns(spark).isEmpty, "the stats manifest must not carry")
+    assert(t.indexColumns(spark)._1.isEmpty, "the stats manifest must not carry")
     val pruned = t.readIndexed(spark).filter($"m".between(0.0, 100.0))
     val scanned = graft.ScannedFiles.scannedFiles(pruned)
     assert(scanned == t.read(spark).inputFiles.length, s"pruned read skipped files: $scanned")

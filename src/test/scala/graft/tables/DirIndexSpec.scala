@@ -103,6 +103,22 @@ class DirIndexSpec extends AnyFunSuite {
     assert(t.readIndexed(spark).filter($"k" === 30015L).count() == 1)
   }
 
+  test("an empty append leaves later commits indexing the table's columns; " +
+      "DESCRIBE DETAIL reports them") {
+    val root = tmp("emptyappend")
+    val t = new SnapshotTable(root)
+    t.writeIndexed(spark, rows, statsCols = Seq("d"), bloomCols = Seq("id"),
+      clusterBy = Seq("d"), clusterPartitions = 8)
+    t.append(spark, rows.limit(0))
+    t.append(spark, Seq((801L, 801L, "v801")).toDF("id", "d", "v").coalesce(1))
+    assert(t.indexColumns(spark) == (Seq("d"), Seq("id")))
+    val (kept, total) = t.pruneStats(spark, $"d".between(790, 801))
+    assert(kept < total, s"range probe must prune: $kept of $total")
+    val detail = org.apache.spark.sql.GraftColumnBridge.graftSql(spark, s"DESCRIBE DETAIL '$root'")
+      .select("stats_cols", "bloom_cols").as[(String, String)].collect().toSeq
+    assert(detail == Seq(("d", "id")))
+  }
+
   test("legacy per-version index files: reads stay correct unpruned, vacuum removes them, " +
       "ANALYZE re-indexes") {
     val root = tmp("legacy")
@@ -126,7 +142,7 @@ class DirIndexSpec extends AnyFunSuite {
       n.startsWith("_stats_v") || n.startsWith("_bloom_v"))
     assert(left.isEmpty, s"vacuum must remove legacy index files: ${left.toSeq}")
     t.analyze(spark, Seq("d"), Seq("id"))
-    assert(t.statsColumns(spark).contains(Seq("d")))
+    assert(t.indexColumns(spark) == (Seq("d"), Seq("id")))
     val (kRange, _) = t.pruneStats(spark, $"d".between(100, 120))
     val (kPoint, _) = t.pruneStats(spark, $"id" === 801L)
     assert(kRange < total && kPoint < total, s"ANALYZE must re-index: $kRange, $kPoint of $total")
