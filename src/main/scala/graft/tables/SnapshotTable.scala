@@ -324,7 +324,7 @@ final class SnapshotTable(val root: String,
     * committed version. */
   def deleteKeysVersioned(spark: SparkSession, keys: DataFrame): Int = {
     val f = fs(spark)
-    liveVersion(spark)
+    liveVersion(spark) // an empty table has no rows to delete
     val staging = stage(f, keys.dropDuplicates())
     commitNext(spark, staging, None) { (cur, next) =>
       StatsManifest.writeLines(f, filesPath(next),
