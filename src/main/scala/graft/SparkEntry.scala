@@ -1142,8 +1142,8 @@ object SparkEntry {
     }),
 
     // ── §7 scale: O(increment) APPEND commits + OPTIMIZE-shape compaction.
-    //    Four dribbled appends re-reference all prior files via the
-    //    _files_v manifest (increment-sized IO per commit); optimizeCompact
+    //    Four dribbled appends re-reference all prior data dirs via the
+    //    version manifest (increment-sized IO per commit); optimizeCompact
     //    bin-packs only the small files and carries big ones + their stats
     //    lines in place. The read-back must equal the plain table — the
     //    manifest/commit machinery is what is under test.

@@ -9,6 +9,12 @@ object Verify {
     // dev-only: optional comma-separated query-name filter (driver passes 2 args)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
+    // a filter name that matches no query is a typo, not a smaller run
+    val unknown = only.toSeq.flatten.filterNot(SparkEntry.queries.contains).sorted
+    if (unknown.nonEmpty) {
+      System.err.println(s"[verify] unknown query name(s): ${unknown.mkString(",")}")
+      sys.exit(2)
+    }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

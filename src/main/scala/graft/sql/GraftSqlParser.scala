@@ -56,7 +56,7 @@ import graft.tables.SnapshotTable
   * rewritten snapshot (carrying the table's hive partitioning and stats
   * manifest forward) and DELETE appends key tombstones (O(matched rows));
   * on a BUCKETED root ([[graft.tables.BucketedSnapshotTable]], detected by
-  * its `_manifest_v*`) both rewrite ONLY the buckets containing matches —
+  * its live manifest's header) both rewrite ONLY the buckets containing matches —
   * the O(affected)/100 TB path. All SET expressions evaluate against the
   * PRE-update row (simultaneous assignment: `SET a = b, b = a` swaps).
   * SNAPSHOT is a query (time travel when VERSION AS OF is given) returning
@@ -412,8 +412,8 @@ case class VacuumSnapshotCommand(path: String, keep: Int)
   }
 }
 
-/** Shared root-detection for the DML commands: a root carrying a
-  * `_manifest_v*` is a [[graft.tables.BucketedSnapshotTable]] and DML
+/** Shared root-detection for the DML commands: a root whose live manifest
+  * is a bucketed one is a [[graft.tables.BucketedSnapshotTable]] and DML
   * routes to its O(affected buckets) rewrite paths; anything else is a
   * plain [[SnapshotTable]]. Header parsing (and its corrupt-manifest
   * errors) live in [[graft.tables.BucketedSnapshotTable.layoutOf]]. */
@@ -438,7 +438,7 @@ private[sql] object DmlRouting {
   * [SCD TYPE 1|2] [DELETE WHEN <pred>]` → the auto-CDC merge algebra over
   * the live snapshot + atomic commit: [[graft.cdc.ScdMerge.scd1Upsert]]
   * (type 1, default) or [[graft.cdc.ScdMerge.scd2Merge]] (type 2, full
-  * version chains). A root carrying a `_manifest_v*` (a
+  * version chains). A root with a bucketed live manifest (a
   * [[graft.tables.BucketedSnapshotTable]]) routes to the bucketed merge
   * instead — affected-buckets-only rewrite, with the layout read from the
   * manifest header and ON KEYS validated against the recorded bucket keys

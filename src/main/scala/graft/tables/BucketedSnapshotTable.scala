@@ -32,11 +32,14 @@ import graft.cdc.ScdMerge
   *
   * Layout:
   * {{{
-  *   root/_current                      // one line: live manifest version
-  *   root/_manifest_v<N>                // header + bucket→(batchDir, contentV)
+  *   root/_current                      // one line: live version
+  *   root/<version manifest N>          // header + bucket→(batchDir, contentV), [[Manifest]]
   *   root/_batch_v<N>/__bucket=<b>/...  // immutable bucket snapshots
   *   root/_batch_v<N>/_stats, _bloom/   // the dir's index ([[DirIndex]])
   * }}}
+  * The version listing, time travel, the txn ledger, CHECK constraints,
+  * change-feed consumption and VACUUM are [[VersionedTable]]'s, shared
+  * with the plain format.
   *
   * Commit protocol — ONE path: every data commit (merge, DML, two-phase
   * SCD1, compaction) stages under `_staging_*` through `stageBatch`, then
@@ -53,7 +56,7 @@ import graft.cdc.ScdMerge
   * DimUser.py:20-29 (via [[ScdMerge]]).
   */
 final class BucketedSnapshotTable(
-    val root: String,
+    root: String,
     val numBuckets: Int,
     val keys: Seq[String],
     val statsCols: Seq[String] = Nil,
@@ -67,9 +70,11 @@ final class BucketedSnapshotTable(
     val bloomCols: Seq[String] = Nil,
     /** Lock staleness window (test hook: shrink so paused-writer/steal
       * schedules run in test time; production default [[CommitLock.StaleMs]]). */
-    commitStaleMs: Long = CommitLock.StaleMs) {
+    commitStaleMs: Long = CommitLock.StaleMs) extends VersionedTable(root, commitStaleMs) {
 
   require(numBuckets > 0, "numBuckets must be positive")
+
+  protected def kind = "BucketedSnapshotTable"
 
   val BucketCol = "__bucket"
 
@@ -77,139 +82,40 @@ final class BucketedSnapshotTable(
     * consistent with Spark's own `hash`/shuffle hashing). */
   def bucketExpr: Column = pmod(hash(keys.map(col): _*), lit(numBuckets))
 
-  private def fs(spark: SparkSession) =
-    new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private val pointer = new Path(root, "_current")
-
-  /** Test-only fault injection (no-op in production): invoked at named
-    * commit-protocol steps ("staged", "renamed", "manifest_file",
-    * "mid_flip", "committed"; "compact_staged", "analyze_built") so the
-    * crash-recovery property spec can kill a writer between any two
-    * steps. */
-  private[tables] var onStep: String => Unit = _ => ()
-
-  /** Lock-free: [[MetaIO.readPointer]] rides out a concurrent flip and
-    * adopts a crashed one's tmp — the commit point is the pointer delete,
-    * and the manifest + batch dir precede it. */
-  def currentVersion(spark: SparkSession): Option[Int] =
-    MetaIO.readPointer(fs(spark), pointer)
-
-  def exists(spark: SparkSession): Boolean = currentVersion(spark).isDefined
+  // commit steps named to onStep: "staged", "renamed", "manifest_file",
+  // "mid_flip", "committed"; "compact_staged", "analyze_built"
 
   /** bucket id → batch dir name (relative to root) for the live version. */
   def manifest(spark: SparkSession): Map[Int, String] =
-    readManifest0(spark, currentVersion(spark))
-
-  private def readManifest0(spark: SparkSession, v: Option[Int]): Map[Int, String] =
-    v.map(readManifest(spark, _)).getOrElse(Map.empty)
-
-  private def readManifest(spark: SparkSession, v: Int): Map[Int, String] =
-    readEntries(spark, v).map { case (b, e) => b -> e.dir }
+    manifestAt(spark, currentVersion(spark).getOrElse(0)).bucketDirs
 
   import BucketedSnapshotTable.BucketEntry
-
-  private def readEntries(spark: SparkSession, v: Int): Map[Int, BucketEntry] = {
-    val f = fs(spark)
-    val in = f.open(new Path(root, s"_manifest_v$v"))
-    val lines =
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector
-      finally in.close()
-    // header lines are "name=value" (numBuckets always; keys since r7 —
-    // older manifests without it still parse); entries are
-    // "bucket\tdir[\tcontentV]"
-    lines.dropWhile(l => l.contains("=") && !l.contains("\t")).map { l =>
-      l.split("\t", 3) match {
-        case Array(b, dir, cv) => b.toInt -> BucketEntry(dir, cv.toInt)
-        case Array(b, dir) => b.toInt -> BucketEntry(dir,
-          dir.stripPrefix("_batch_v").toIntOption.getOrElse(Int.MaxValue))
-        case _ => throw new IllegalStateException(
-          s"BucketedSnapshotTable $root: corrupt manifest entry '$l' in _manifest_v$v")
-      }
-    }.toMap
-  }
 
   /** Header fields of the live manifest (numBuckets, keys when present) —
     * lets path-only consumers (the SQL MERGE router) reconstruct and
     * VALIDATE the table identity instead of silently mis-bucketing. */
   def manifestHeader(spark: SparkSession): Map[String, String] =
-    currentVersion(spark).map(headerOf(spark, _)).getOrElse(Map.empty)
+    manifestAt(spark, currentVersion(spark).getOrElse(0)).header.toMap
 
-  private def headerOf(spark: SparkSession, v: Int): Map[String, String] = {
-    val f = fs(spark)
-    val in = f.open(new Path(root, s"_manifest_v$v"))
-    val lines =
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector
-      finally in.close()
-    lines.takeWhile(l => l.contains("=") && !l.contains("\t"))
-      .map { l => val Array(k, vv) = l.split("=", 2); k -> vv }.toMap
-  }
-
-  /** Streaming-transaction watermarks recorded in version `v`'s manifest
-    * header (`txn:<queryId>=<batchId>`): the highest micro-batch each
-    * logical stream has committed — the exactly-once ledger. */
-  private def txnsOf(spark: SparkSession, v: Int): Map[String, Long] =
-    if (v == 0) Map.empty
-    else headerOf(spark, v).collect {
-      case (k, b) if k.startsWith("txn:") => k.stripPrefix("txn:") -> b.toLong
-    }
-
-  /** The highest batch id the live manifest's exactly-once ledger records
-    * for `queryId` (None = never applied) — the committed progress marker
-    * a crashed consumer recovers from. */
-  def appliedTxn(spark: SparkSession, queryId: String): Option[Long] =
-    currentVersion(spark).flatMap(v => txnsOf(spark, v).get(queryId))
-
-  /** The ledger entry for `queryId` as of a SPECIFIC committed version —
-    * lets a reader pin a (state version, ledger value) pair atomically
-    * instead of racing two head reads against a concurrent commit. */
-  private[graft] def appliedTxnAt(spark: SparkSession, queryId: String,
-      version: Int): Option[Long] =
-    txnsOf(spark, version).get(queryId)
-
-  /** Latest committed version whose ledger entry for `queryId` is at most
-    * `value` (absent counts as 0) — the replay-pinned read point for a
-    * multi-table consumer recovering from a crash AFTER this table's own
-    * commit landed but BEFORE a downstream commit did: the recovery run
-    * must re-derive its deltas against this table's pre-crash state, not
-    * its current head. O(versions-scanned) manifest-header reads, crash
-    * paths only. */
-  private[graft] def versionWithTxnAtMost(spark: SparkSession, queryId: String,
-      value: Long): Option[Int] = {
-    val cur = currentVersion(spark).getOrElse(return None)
-    (cur to 1 by -1).find { v =>
-      // skip ONLY a manifest that no longer exists (vacuumed); any other
-      // IO error must propagate — silently skipping a transiently
-      // unreadable version would pin the replay to an OLDER base and
-      // corrupt the recomputed deltas (the refresh is retryable)
-      try txnsOf(spark, v).getOrElse(queryId, 0L) <= value
-      catch { case _: java.io.FileNotFoundException => false }
-    }
-  }
-
-  private def writeManifest(spark: SparkSession, v: Int, m: Map[Int, BucketEntry],
-      txns: Map[String, Long] = Map.empty,
+  /** Write version `v`'s manifest over `prev` (the version it follows) and
+    * flip the pointer to it. */
+  private def writeManifest(spark: SparkSession, v: Int, prev: Manifest,
+      m: Map[Int, BucketEntry], txns: Map[String, Long],
       dirSchemas: Map[String, String] = Map.empty): Unit = {
     val f = fs(spark)
     // indexed-column headers are TABLE properties, not writer properties: a
     // writer constructed without statsCols/bloomCols (a maintenance job, a
     // default-routed merge) must not erase what ANALYZE recorded — inherit
     // the previous header's columns when this instance carries none
-    val prev =
-      if (v <= 1) Map.empty[String, String]
-      else try headerOf(spark, v - 1) catch { case _: java.io.IOException => Map.empty[String, String] }
-    val effStats = if (statsCols.nonEmpty) statsCols
-      else prev.get("statsCols").toSeq.flatMap(_.split(",").map(_.trim).filter(_.nonEmpty))
-    val effBloom = if (bloomCols.nonEmpty) bloomCols
-      else prev.get("bloomCols").toSeq.flatMap(_.split(",").map(_.trim).filter(_.nonEmpty))
+    val effStats = if (statsCols.nonEmpty) statsCols else prev.list("statsCols")
+    val effBloom = if (bloomCols.nonEmpty) bloomCols else prev.list("bloomCols")
     // keys inherit the same way, and an empty key set OMITS the header
     // entirely: a metadata-only commit over a pre-r7 manifest (no keys
     // header) must not write `keys=`, which layoutOf would read back as
     // Some(Nil) — consumers rely on the None-vs-Some(Nil) distinction to
     // raise the explicit "manifest records no bucket keys" error instead
     // of silently proceeding with empty bucket keys.
-    val effKeys = if (keys.nonEmpty) keys
-      else prev.get("keys").toSeq.flatMap(_.split(",").map(_.trim).filter(_.nonEmpty))
+    val effKeys = if (keys.nonEmpty) keys else prev.list("keys")
     // per-batch-dir FILE schemas (r14): recorded at commit time so
     // planning (readIndexed) never reads a parquet footer per batch dir —
     // O(1) metadata instead of O(dirs) IO on a many-dir table. Lines for
@@ -217,22 +123,19 @@ final class BucketedSnapshotTable(
     // growth); dirs committed before the feature simply lack a line and
     // fall back to one footer read each.
     val liveDirs = m.values.map(_.dir).toSet
-    val inherited = prev.collect {
+    val inherited = prev.header.collect {
       case (k, ddl) if k.startsWith("schema:") &&
           liveDirs(k.stripPrefix("schema:")) => k.stripPrefix("schema:") -> ddl
-    }
+    }.toMap
     val schemaLines = (inherited ++ dirSchemas.filter(e => liveDirs(e._1)))
       .toSeq.sortBy(_._1).map { case (d, ddl) => s"schema:$d=$ddl" }
     val header = Seq(s"numBuckets=$numBuckets") ++
       (if (effKeys.isEmpty) Nil else Seq(s"keys=${effKeys.mkString(",")}")) ++
       (if (effStats.isEmpty) Nil else Seq(s"statsCols=${effStats.mkString(",")}")) ++
       (if (effBloom.isEmpty) Nil else Seq(s"bloomCols=${effBloom.mkString(",")}")) ++
-      txns.toSeq.sortBy(_._1).map { case (q, b) => s"txn:$q=$b" } ++
-      schemaLines
-    val body = (header ++
-      m.toSeq.sortBy(_._1).map { case (b, e) => s"$b\t${e.dir}\t${e.contentV}" }).mkString("\n")
-    val out = f.create(new Path(root, s"_manifest_v$v"), true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
+      Manifest.txnLines(txns) ++ schemaLines
+    Manifest.write(f, root, v, header,
+      m.toSeq.sortBy(_._1).map { case (b, e) => s"$b\t${e.dir}\t${e.contentV}" })
     onStep("manifest_file")
     MetaIO.replace(f, pointer, v.toString, () => onStep("mid_flip"))
   }
@@ -264,25 +167,8 @@ final class BucketedSnapshotTable(
             .option("basePath", s"$root/$dir")
             .parquet(entries.keys.toSeq.sorted.map(b => s"$root/$dir/$BucketCol=$b"): _*)
         }
-      Some(unionEvolvingParts(parts))
+      Some(unionEvolving(parts))
     }
-  }
-
-  /** Union per-batch relations to the name-union schema (first-seen type
-    * wins, absent columns null-fill) — how batch dirs written across a
-    * schema change read as one table. */
-  private def unionEvolvingParts(parts: Seq[DataFrame]): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val allCols = scala.collection.mutable.LinkedHashMap
-      .empty[String, org.apache.spark.sql.types.DataType]
-    parts.foreach(_.schema.foreach(fld =>
-      if (!allCols.contains(fld.name)) allCols(fld.name) = fld.dataType))
-    parts.map { p =>
-      p.select(allCols.toSeq.map { case (n, dt) =>
-        if (p.columns.contains(n)) col(n).cast(dt).as(n)
-        else lit(null).cast(dt).as(n)
-      }: _*)
-    }.reduce(_ unionByName _)
   }
 
   /** Version `v`'s VISIBLE relation schema from ONE representative bucket
@@ -292,7 +178,7 @@ final class BucketedSnapshotTable(
     * that only needs the shape should call. */
   private[graft] def versionSchema(spark: SparkSession,
       v: Int): org.apache.spark.sql.types.StructType = {
-    val m = readManifest(spark, v)
+    val m = manifestAt(spark, v).bucketDirs
     val onePerDir: Map[Int, String] =
       m.groupBy(_._2).map { case (dir, entries) => entries.keys.min -> dir }
     fromManifest(spark, onePerDir, None)
@@ -343,78 +229,41 @@ final class BucketedSnapshotTable(
     val probe = keyRows.select(keys.map(col): _*).distinct()
     val wanted = probe.select(bucketExpr.as("__b"))
       .distinct().collect().map(_.getInt(0)).toSet
-    fromManifest(spark, readManifest(spark, version), Some(wanted)) match {
+    fromManifest(spark, manifestAt(spark, version).bucketDirs, Some(wanted)) match {
       case None     => readVersion(spark, version).limit(0)
       case Some(df) => df.drop(BucketCol).join(probe, keys, "left_semi")
     }
   }
 
-  /** Time travel: read manifest version `version`. Old manifests persist
-    * across commits (metadata-sized), so any version whose batch dirs
-    * [[vacuum]] has not yet reaped reads exactly as it was committed;
-    * a vacuumed version raises (same contract as the plain table). */
+  /** Time travel: read manifest version `version` — any version not below
+    * the [[vacuum]] floor reads exactly as it was committed; a vacuumed
+    * version raises (same contract as the plain table). */
   def readVersion(spark: SparkSession, version: Int): DataFrame = {
-    val f = fs(spark)
-    if (!f.exists(new Path(root, s"_manifest_v$version")))
-      throw new IllegalArgumentException(
-        s"BucketedSnapshotTable $root: version $version does not exist")
-    val m = readManifest(spark, version)
-    m.values.toSet.foreach { (dir: String) =>
-      if (!f.exists(new Path(s"$root/$dir")))
-        throw new IllegalArgumentException(
-          s"BucketedSnapshotTable $root: version $version was vacuumed (missing $dir)")
-    }
-    fromManifest(spark, m, None)
+    requireVersion(spark, version)
+    fromManifest(spark, manifestAt(spark, version).bucketDirs, None)
       .getOrElse(throw new IllegalStateException(
         s"BucketedSnapshotTable $root: version $version is empty"))
       .drop(BucketCol)
   }
 
-  /** Timestamp time travel: the newest version whose `_manifest_v<N>` was
-    * committed at or before `tsMillis` (manifest files are written inside
-    * the commit critical section and never touched again — their mtime IS
-    * the commit time). Raises if every retained version is newer. */
-  def versionAt(spark: SparkSession, tsMillis: Long): Int = {
-    val f = fs(spark)
-    val eligible = f.listStatus(new Path(root))
-      .filter(_.getPath.getName.matches("_manifest_v\\d+"))
-      .filter(_.getModificationTime <= tsMillis)
-      .map(_.getPath.getName.stripPrefix("_manifest_v").toInt)
-    if (eligible.isEmpty) throw new IllegalArgumentException(
-      s"BucketedSnapshotTable $root: no version committed at or before " +
-        s"${java.time.Instant.ofEpochMilli(tsMillis)} (earliest retained is newer)")
-    eligible.max
-  }
-
-  /** [[readVersion]] at the newest version committed ≤ `tsMillis`. */
-  def readTimestamp(spark: SparkSession, tsMillis: Long): DataFrame =
-    readVersion(spark, versionAt(spark, tsMillis))
-
-  /** DESCRIBE HISTORY analog: one row per RETAINED (readable) manifest
-    * version — version, visible rows, files, bytes, is_live. Versions
-    * whose batch dirs vacuum already reaped are skipped. */
+  /** DESCRIBE HISTORY analog: one row per readable version — version,
+    * visible rows, files, bytes, is_live. */
   def history(spark: SparkSession): DataFrame = {
     import spark.implicits._
     val f = fs(spark)
     val live = currentVersion(spark).getOrElse(0)
-    val versions = f.listStatus(new Path(root)).map(_.getPath.getName)
-      .filter(_.matches("_manifest_v\\d+"))
-      .map(_.stripPrefix("_manifest_v").toInt).sorted
-    versions.toSeq.flatMap { v =>
-      val m = readManifest(spark, v)
-      val readable = m.values.toSet.forall(d => f.exists(new Path(s"$root/$d")))
-      if (!readable) None
-      else {
-        val files = m.toSeq.flatMap { case (b, dir) =>
-          val p = new Path(s"$root/$dir/$BucketCol=$b")
-          if (!f.exists(p)) Nil
-          else f.listStatus(p).toSeq.filter(_.getPath.getName.endsWith(".parquet"))
-        }
-        val rows = fromManifest(spark, m, None).map(_.count()).getOrElse(0L)
-        Some((v, rows, files.size.toLong, files.map(_.getLen).sum, v == live))
-      }
+    retainedVersions(spark).map { v =>
+      val m = manifestAt(spark, v).bucketDirs
+      val files = m.toSeq.flatMap { case (b, dir) => parquetIn(f, new Path(s"$root/$dir/$BucketCol=$b")) }
+      val rows = fromManifest(spark, m, None).map(_.count()).getOrElse(0L)
+      (v, rows, files.size.toLong, files.map(_.getLen).sum, v == live)
     }.toDF("version", "n_rows", "n_files", "bytes", "is_live")
   }
+
+  /** The parquet files of one bucket dir (none when it is absent). */
+  private def parquetIn(f: org.apache.hadoop.fs.FileSystem, p: Path): Seq[org.apache.hadoop.fs.FileStatus] =
+    try f.listStatus(p).toSeq.filter(_.getPath.getName.endsWith(".parquet"))
+    catch { case _: java.io.FileNotFoundException => Nil }
 
   /** Change data feed between two committed versions, MANIFEST-PRUNED:
     * the two versions' manifests (driver-side metadata, ≤ numBuckets
@@ -436,18 +285,9 @@ final class BucketedSnapshotTable(
       withPreimage: Boolean = false): DataFrame = {
     require(fromV < toV,
       s"BucketedSnapshotTable $root: changes needs fromV < toV (got $fromV, $toV)")
-    val f = fs(spark)
     def checked(v: Int): Map[Int, BucketEntry] = {
-      if (!f.exists(new Path(root, s"_manifest_v$v")))
-        throw new IllegalArgumentException(
-          s"BucketedSnapshotTable $root: version $v does not exist")
-      val m = readEntries(spark, v)
-      m.values.map(_.dir).toSet.foreach { (dir: String) =>
-        if (!f.exists(new Path(s"$root/$dir")))
-          throw new IllegalArgumentException(
-            s"BucketedSnapshotTable $root: version $v was vacuumed (missing $dir)")
-      }
-      m
+      requireVersion(spark, v)
+      manifestAt(spark, v).buckets
     }
     val eFrom = checked(fromV)
     val eTo = checked(toV)
@@ -480,70 +320,18 @@ final class BucketedSnapshotTable(
     * assertions (spec pins that an OPTIMIZE between the versions does not
     * inflate this set). */
   private[graft] def changedBuckets(spark: SparkSession, fromV: Int, toV: Int): Set[Int] = {
-    val eFrom = readEntries(spark, fromV)
-    val eTo = readEntries(spark, toV)
+    val eFrom = manifestAt(spark, fromV).buckets
+    val eTo = manifestAt(spark, toV).buckets
     (eFrom.keySet ++ eTo.keySet)
       .filter(b => BucketedSnapshotTable.contentDiffers(eFrom.get(b), eTo.get(b)))
   }
 
-  // ── CHECK constraints (Delta semantics, plain-table parity) ────────────
-  //
-  // Stored by [[Constraints]], validated against the VISIBLE table on add,
-  // enforced inline in every merge/DML staging write via
-  // assert_true-in-filter (fused into the write plan — no second scan).
-  // Tombstone bookkeeping rows (`__DELETED`) are exempt: a CHECK
-  // constrains the data a reader can see, not the delete marker that
-  // removes it.
-
-  /** Active CHECK constraints, name → SQL predicate. */
-  def constraints(spark: SparkSession): Map[String, String] =
-    Constraints.read(fs(spark), root)
-
-  /** Add a CHECK constraint: the existing VISIBLE snapshot is validated
-    * first (rejecting the constraint, not the data, if any row breaks
-    * it), then every subsequent merge/DML batch is checked inline. */
-  def addConstraint(spark: SparkSession, name: String, predicate: String): Unit = {
-    val f = fs(spark)
-    CommitLock.withLockHandle(f, root, commitStaleMs) { _ =>
-      Constraints.add(f, root, name, predicate)(
-        if (!exists(spark)) 0L
-        else ScdMerge.scd1Current(read(spark))
-          .filter(!coalesce(expr(predicate), lit(false))).count())
-    }
-  }
-
-  /** Drop a CHECK constraint (no-op if absent). */
-  def dropConstraint(spark: SparkSession, name: String): Unit = {
-    val f = fs(spark)
-    CommitLock.withLockHandle(f, root, commitStaleMs)(_ => Constraints.drop(f, root, name))
-  }
-
-  /** Inline enforcement on a staging write's content: raises
-    * CONSTRAINT_VIOLATION on the first visible row breaking any CHECK.
-    * NULL predicate results violate (CHECK must prove the row);
-    * `__DELETED` tombstone rows are exempt. */
-  private def enforceConstraints(spark: SparkSession, df: DataFrame): DataFrame =
-    constraints(spark).foldLeft(df) { case (d, (name, pred)) =>
-      val exempt =
-        if (d.columns.contains(ScdMerge.DeletedCol))
-          coalesce(col(ScdMerge.DeletedCol), lit(false))
-        else lit(false)
-      d.filter(assert_true(exempt || coalesce(expr(pred), lit(false)),
-        lit(s"CONSTRAINT_VIOLATION: CHECK $name ($pred) failed")).isNull)
-    }
-
-  /** Incremental CDF consumption (the consumer side of [[changes]]):
-    * process every change committed since this consumer's checkpoint in
-    * ONE manifest-pruned diff, then advance the checkpoint — the
+  /** Incremental CDF consumption (the consumer side of [[changes]],
+    * [[VersionedTable.consume]]): every change committed since this
+    * consumer's checkpoint in ONE manifest-pruned diff — the
     * downstream-incremental-refresh loop (feed a materialized aggregate,
     * mirror to a search index, …) without the consumer ever re-scanning
-    * the table. `fn` receives the [[ChangeFeed]]-shaped diff (fromV →
-    * live); the checkpoint file records the processed version and is
-    * written only AFTER `fn` returns, so a crashed consumer re-reads the
-    * same window (at-least-once; pair with idempotent apply or a txn
-    * ledger downstream for exactly-once). First call = full bootstrap:
-    * every live row arrives as `insert`. Returns the version the
-    * checkpoint now records. */
+    * the table. */
   def consumeChanges(spark: SparkSession, checkpointFile: String,
       withChangedColumns: Boolean = false)(fn: DataFrame => Unit): Int =
     consumeChangesVersioned(spark, checkpointFile, withChangedColumns) {
@@ -554,57 +342,17 @@ final class BucketedSnapshotTable(
     * to the consumer — what an exactly-once apply needs to stamp its txn
     * ledger entry (fromVersion = 0 on the bootstrap call). */
   def consumeChangesVersioned(spark: SparkSession, checkpointFile: String,
-      withChangedColumns: Boolean = false)(fn: (DataFrame, Int, Int) => Unit): Int = {
-    val f = fs(spark)
-    val ckPath = new Path(checkpointFile)
-    val live = currentVersion(spark).getOrElse(
-      throw new IllegalStateException(s"BucketedSnapshotTable $root is empty"))
-    val last = MetaIO.read(f, ckPath).map(_.trim.toInt).getOrElse(0)
-    if (live > last) {
-      val feed =
-        if (last == 0) {
-          // bootstrap: the whole visible table as inserts, CDF-shaped
-          val base = ScdMerge.scd1Current(read(spark))
-            .withColumn("_change_type", lit("insert"))
-          if (withChangedColumns) base.withColumn("_changed_columns", lit(""))
-          else base
-        } else changes(spark, last, live, withChangedColumns)
-      fn(feed, last, live)
-      MetaIO.replace(f, ckPath, live.toString)
-    }
-    math.max(live, last)
-  }
+      withChangedColumns: Boolean = false)(fn: (DataFrame, Int, Int) => Unit): Int =
+    consume(spark, checkpointFile, withChangedColumns,
+      changes(spark, _, _, withChangedColumns))(fn)
 
-  /** EXACTLY-ONCE incremental mirror into another bucketed table: consume
-    * this table's change feed since `checkpointFile` and merge it into
-    * `target`, the consumer loop that keeps a downstream copy (different
-    * bucket count, different cluster, a serving mirror) in sync without
-    * ever re-scanning the source.
-    *
-    * Exactly-once composition: the merge is stamped into `target`'s
-    * transaction ledger as (`cdf:<consumerId>`, toVersion) in the SAME
-    * manifest commit that applies it, so the ledger — not the checkpoint
-    * file — is the authoritative progress marker. On every call the
-    * checkpoint first HEALS from the ledger: a consumer that crashed after
-    * the merge landed but before its checkpoint advanced resumes from the
-    * version the ledger proves applied, never re-diffing a window the
-    * target already absorbed. (Resuming from the stale checkpoint instead
-    * would be wrong, not just wasteful: if a key changed in the crashed
-    * window and REVERTED before the retry, the wider stale-window diff
-    * reports no change for it and the mirror would keep the crashed
-    * window's value.) Rows arrive in `target` carrying `__cdf_seq` = the
-    * source version that produced them (the merge's ordering column,
-    * monotone across windows); deletes flow as tombstones. Read the mirror
-    * with SNAPSHOT / [[ScdMerge.scd1Current]], which filter tombstones.
-    * Returns the checkpointed source version. */
+  /** EXACTLY-ONCE incremental mirror into another bucketed table
+    * ([[VersionedTable.applyChanges]]): a downstream copy (different
+    * bucket count, different cluster, a serving mirror) kept in sync
+    * without ever re-scanning the source. */
   def applyChangesTo(spark: SparkSession, checkpointFile: String,
-      target: BucketedSnapshotTable, consumerId: String): Int = {
-    BucketedSnapshotTable.healCheckpoint(fs(spark), checkpointFile,
-      target, consumerId)
-    consumeChangesVersioned(spark, checkpointFile) { (feed, _, toV) =>
-      BucketedSnapshotTable.applyFeed(spark, target, feed, toV, consumerId)
-    }
-  }
+      target: BucketedSnapshotTable, consumerId: String): Int =
+    applyChanges(spark, checkpointFile, target, consumerId, changes(spark, _, _))
 
   /** SCD Type 1 merge (last-write-wins upsert, FactStream.py:12-21
     * semantics). Returns the set of bucket ids rewritten. */
@@ -802,7 +550,8 @@ final class BucketedSnapshotTable(
     // cheap replay short-circuit: a micro-batch the exactly-once ledger
     // already records skips before reading or staging anything (the
     // authoritative check re-runs inside the commit lock)
-    if (txnApplied(spark, currentVersion(spark).getOrElse(0), txn)) return Set.empty
+    if (txn.isDefined && manifestAt(spark, currentVersion(spark).getOrElse(0)).applied(txn))
+      return Set.empty
     val upd = updates.withColumn(BucketCol, bucketExpr)
     // driver-side metadata: at most numBuckets ints — NOT row data.
     // `knownBuckets` (r15, job fusion): a coordinator that already probed
@@ -817,10 +566,6 @@ final class BucketedSnapshotTable(
       Some((updBuckets, algebra(readBuckets(spark, Some(updBuckets)), upd)))
     }
   }
-
-  private def txnApplied(spark: SparkSession, v: Int,
-      txn: Option[(String, Long)]): Boolean =
-    txn.exists { case (q, b) => txnsOf(spark, v).get(q).exists(_ >= b) }
 
   /** The optimistic read-modify-write commit loop shared by merges and
     * copy-on-write DML: `stage` reads CURRENT state and returns (affected
@@ -840,13 +585,13 @@ final class BucketedSnapshotTable(
       val v0 = currentVersion(spark).getOrElse(0)
       // manifest AT v0 (immutable once written): the rebase check below
       // compares the affected buckets' entries against it
-      val m0 = if (v0 == 0) Map.empty[Int, BucketEntry] else readEntries(spark, v0)
+      val m0 = manifestAt(spark, v0)
       val (affected, merged) = stage() match {
         case None => return Set.empty
         case Some(x) => x
       }
       val staged = stageBatch(spark, enforceConstraints(spark, merged), v0, m0)
-      lockedCommit(spark, staged, txn)(rebase(affected, m0, wholeTableRead)) match {
+      lockedCommit(spark, staged, txn)(rebase(affected, m0.buckets, wholeTableRead)) match {
         case Some(committed) => return if (committed.isEmpty) Set.empty else affected
         case None => ()
       }
@@ -869,7 +614,7 @@ final class BucketedSnapshotTable(
     * manifest the batch was computed from (the entry rule's base);
     * `sortWithin` sorts each bucket's file on those columns. */
   private def stageBatch(spark: SparkSession, merged: DataFrame, v0: Int,
-      m0: Map[Int, BucketEntry], sortWithin: Seq[String] = Nil)
+      m0: Manifest, sortWithin: Seq[String] = Nil)
       : BucketedSnapshotTable.StagedBatch = {
     val f = fs(spark)
     val staging = s"_staging_${java.util.UUID.randomUUID().toString.take(12)}"
@@ -891,10 +636,12 @@ final class BucketedSnapshotTable(
       .exists(_.getPath.getName.startsWith(s"$BucketCol="))
     // the batch's index is built INSIDE the staging dir, so the rename
     // carries it and the locked section only re-points its file paths.
-    // Index columns come from the writer OR the manifest header
-    // (effectiveIndexCols): every commit keeps the table's index fresh
+    // Index columns come from the writer OR, per kind, the ones the
+    // manifest header records (ANALYZE's): a maintenance writer or a
+    // default-routed merge keeps the index fresh per commit
     if (stagedHasData) DirIndex.build(f, batchDir(staging), SnapshotTable.readDir(spark,
-      s"$root/$staging"), effectiveIndexCols(spark, v0), BucketedSnapshotTable.BloomFpp)
+      s"$root/$staging"), DirIndex.effective(statsCols, bloomCols,
+        (m0.list("statsCols"), m0.list("bloomCols"))), BucketedSnapshotTable.BloomFpp)
     // the staged FILE schema (bucket partition column excluded), recorded
     // in the manifest header at commit so planning skips the footer read
     val stagedSchema =
@@ -934,13 +681,15 @@ final class BucketedSnapshotTable(
     val stagingPath = new Path(s"$root/${s.dir}")
     CommitLock.withLockHandle(f, root, commitStaleMs) { lockH =>
       val cur = currentVersion(spark).getOrElse(0)
-      val mCur = if (cur == s.v0) s.m0 else readEntries(spark, cur)
+      // parsed once: the ledger check, the rule and the next manifest's
+      // inherited header all read it
+      val mCur = if (cur == s.v0) s.m0 else manifestAt(spark, cur)
       val next = cur + 1
       // authoritative exactly-once check, inside the critical section: a
       // racing restart of the same stream that committed this batch
       // first makes ours a clean no-op
-      if (txnApplied(spark, cur, txn)) { f.delete(stagingPath, true); Some(None) }
-      else rule(mCur, next) match {
+      if (mCur.applied(txn)) { f.delete(stagingPath, true); Some(None) }
+      else rule(mCur.buckets, next) match {
         case None => f.delete(stagingPath, true); None
         case Some(replaced) =>
           val batchDir = s"_batch_v$next"
@@ -964,11 +713,11 @@ final class BucketedSnapshotTable(
           DirIndex.repoint(f, batchPath, s.dir,
             line => !dropped.exists(b => line.contains(s"/$batchDir/$BucketCol=$b/")))
           lockH.check() // paused-holder guard: abort rather than double-flip
-          writeManifest(spark, next,
-            (mCur -- replaced.keySet) ++ replaced.collect {
+          writeManifest(spark, next, mCur,
+            (mCur.buckets -- replaced.keySet) ++ replaced.collect {
               case (b, contentV) if written(b) => b -> BucketEntry(batchDir, contentV)
             },
-            txnsOf(spark, cur) ++ txn, // the exactly-once ledger carries forward
+            mCur.txns ++ txn, // the exactly-once ledger carries forward
             s.schema.map(batchDir -> _).toMap)
           onStep("committed")
           Some(Some(next))
@@ -1003,18 +752,18 @@ final class BucketedSnapshotTable(
       knownBuckets: Option[Set[Int]] = None)
       : Option[BucketedSnapshotTable.StagedScd1] = {
     val v0 = currentVersion(spark).getOrElse(0)
-    if (txnApplied(spark, v0, txn)) return None
+    val m0 = manifestAt(spark, v0)
+    if (m0.applied(txn)) return None
     val upd = updates.withColumn(BucketCol, bucketExpr)
     // knownBuckets: see [[merge]] — the coordinator's probe result for
     // EXACTLY this batch's key set; skips one probe job per merge
     val updBuckets = knownBuckets.getOrElse(upd.select(BucketCol).distinct()
       .collect().map(_.getInt(0)).toSet)
     if (updBuckets.isEmpty) return None
-    val m0 = if (v0 == 0) Map.empty[Int, BucketEntry] else readEntries(spark, v0)
     // read the affected buckets AT v0 — the same manifest the rebase check
     // compares against, so read state ≡ rebase base by construction
     val merged = ScdMerge.scd1Upsert(
-      fromManifest(spark, m0.map { case (b, e) => b -> e.dir }, Some(updBuckets)),
+      fromManifest(spark, m0.bucketDirs, Some(updBuckets)),
       upd, keys, seqCol, Nil, applyAsDeletes)
     Some(BucketedSnapshotTable.StagedScd1(
       stageBatch(spark, enforceConstraints(spark, merged), v0, m0),
@@ -1029,7 +778,7 @@ final class BucketedSnapshotTable(
   private[graft] def commitStagedScd1(spark: SparkSession,
       h: BucketedSnapshotTable.StagedScd1): Set[Int] =
     lockedCommit(spark, h.batch, h.txn)(
-        rebase(h.affected, h.batch.m0, wholeTableRead = false)) match {
+        rebase(h.affected, h.batch.m0.buckets, wholeTableRead = false)) match {
       case Some(committed) => if (committed.isEmpty) Set.empty else h.affected
       case None =>
         scd1Merge(spark, h.updates, h.seqCol, Nil, h.applyAsDeletes, h.txn)
@@ -1042,23 +791,6 @@ final class BucketedSnapshotTable(
   // keep their old batch's index — no rewrite, no rescan.
 
   private def batchDir(dir: String) = new Path(s"$root/$dir")
-
-  /** The index columns THIS commit sidecars its staged batch with
-    * ([[DirIndex.effective]]): the writer's own statsCols/bloomCols, else
-    * per kind the columns the manifest header RECORDS (what ANALYZE
-    * declared) — so a maintenance writer or a default-routed merge keeps
-    * the index FRESH per commit (O(staged batch)) instead of leaving
-    * recent batch dirs unindexed until the next hand-run ANALYZE (the r11
-    * soak's stale-dim-leg cost). */
-  private def effectiveIndexCols(spark: SparkSession, v: Int): (Seq[String], Seq[String]) =
-    DirIndex.effective(statsCols, bloomCols,
-      if (v < 1) (Nil, Nil)
-      else try {
-        val h = headerOf(spark, v)
-        def csv(k: String) = h.get(k).toSeq
-          .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty))
-        (csv("statsCols"), csv("bloomCols"))
-      } catch { case _: java.io.IOException => (Nil, Nil) })
 
   /** Pruning-aware read — the general SNAPSHOT relation: a plain parquet
     * scan whose FILE LISTING goes through [[PruningFileIndex]], so ANY
@@ -1076,19 +808,12 @@ final class BucketedSnapshotTable(
     * reader). `version` = time travel over that manifest. */
   def readIndexed(spark: SparkSession, version: Option[Int] = None): DataFrame = {
     val f = fs(spark)
-    version.foreach { x =>
-      if (!f.exists(new Path(root, s"_manifest_v$x")))
-        throw new IllegalArgumentException(
-          s"BucketedSnapshotTable $root: version $x does not exist")
-    }
-    val v = version.orElse(currentVersion(spark)).getOrElse(
-      throw new IllegalStateException(s"BucketedSnapshotTable $root is empty"))
-    val entries = readEntries(spark, v)
-    entries.values.map(_.dir).toSet.foreach { (dir: String) =>
-      if (!f.exists(new Path(s"$root/$dir")))
-        throw new IllegalArgumentException(
-          s"BucketedSnapshotTable $root: version $v was vacuumed (missing $dir)")
-    }
+    // the floor, not a per-dir probe, decides readability — and only for
+    // time travel: the live version is always readable
+    version.foreach(requireVersion(spark, _))
+    val v = version.getOrElse(liveVersion(spark))
+    val m = manifestAt(spark, v)
+    val entries = m.buckets
     def fallback = version.map(readVersion(spark, _)).getOrElse(read(spark))
     if (entries.isEmpty) return fallback // uniform empty-table errors
     val byDir = liveFilesByDir(spark, v, entries)
@@ -1096,10 +821,10 @@ final class BucketedSnapshotTable(
     // commit (r14 — zero footer IO at planning), else one footer probe
     // per legacy dir (instrumented; superset of the old behavior)
     val recorded: Map[String, org.apache.spark.sql.types.StructType] =
-      headerOf(spark, v).collect {
+      m.header.collect {
         case (k, ddl) if k.startsWith("schema:") =>
           k.stripPrefix("schema:") -> BucketedSnapshotTable.parseSchemaDdl(ddl)
-      }
+      }.toMap
     val withSchemas: Seq[(String, Seq[org.apache.hadoop.fs.FileStatus],
         org.apache.spark.sql.types.StructType)] =
       byDir.collect { case (dir, fls) if fls.nonEmpty =>
@@ -1152,7 +877,7 @@ final class BucketedSnapshotTable(
           PruningFileIndex.relation(spark, gByDir.flatMap(_._2), gSchema,
             keepFor(f, gByDir, Some(gSchema)))
         }
-        if (parts.isEmpty) fallback else unionEvolvingParts(parts)
+        if (parts.isEmpty) fallback else unionEvolving(parts)
     }
   }
 
@@ -1166,17 +891,15 @@ final class BucketedSnapshotTable(
       : Seq[(String, Seq[org.apache.hadoop.fs.FileStatus])] = {
     val f = fs(spark)
     val mtime =
-      try f.getFileStatus(new Path(root, s"_manifest_v$v")).getModificationTime
+      try f.getFileStatus(Manifest.path(root, v)).getModificationTime
       catch { case _: java.io.IOException => -1L }
     BucketedSnapshotTable.cachedListing((root, v, mtime), () =>
       entries.groupBy(_._2.dir).toSeq
         .sortBy { case (dir, _) => dir.stripPrefix("_batch_v").toIntOption.getOrElse(0) }
         .map { case (dir, es) =>
           dir -> es.keys.toSeq.sorted.flatMap { b =>
-            val p = new Path(s"$root/$dir/$BucketCol=$b")
             BucketedSnapshotTable.listingCalls.incrementAndGet()
-            if (!f.exists(p)) Nil
-            else f.listStatus(p).toSeq.filter(_.getPath.getName.endsWith(".parquet"))
+            parquetIn(f, new Path(s"$root/$dir/$BucketCol=$b"))
           }
         })
   }
@@ -1273,10 +996,8 @@ final class BucketedSnapshotTable(
     * files, how many survive read-side skipping under `pred` — the
     * scale-independent pin gate queries `require` on. (kept, total). */
   def pruneStats(spark: SparkSession, pred: Column): (Int, Int) = {
-    val v = currentVersion(spark).getOrElse(
-      throw new IllegalStateException(s"BucketedSnapshotTable $root is empty"))
-    val entries = readEntries(spark, v)
-    val byDir = liveFilesByDir(spark, v, entries)
+    val v = liveVersion(spark)
+    val byDir = liveFilesByDir(spark, v, manifestAt(spark, v).buckets)
     val all = byDir.flatMap(_._2).map(_.getPath.toUri.getPath)
     val reps = byDir.flatMap(_._2.headOption).map(_.getPath.toString)
     val schema = PruningFileIndex.unionSchema(spark, reps)
@@ -1305,11 +1026,10 @@ final class BucketedSnapshotTable(
     // the ANALYZE duration (and invite a stale-lock steal that wastes the
     // whole run) — the locked critical section stays metadata-sized, the
     // invariant every other commit path here keeps.
-    val cur0 = currentVersion(spark).getOrElse(
-      throw new IllegalStateException(s"BucketedSnapshotTable $root is empty"))
+    val cur0 = liveVersion(spark)
     // per batch dir, its LIVE buckets read explicitly (`__bucket=…`
     // children are underscore-hidden from a directory-level read)
-    readEntries(spark, cur0).groupBy(_._2.dir).foreach { case (dir, es) =>
+    manifestAt(spark, cur0).buckets.groupBy(_._2.dir).foreach { case (dir, es) =>
       DirIndex.backfill(f, batchDir(dir), spark.read.option("basePath", s"$root/$dir")
           .parquet(es.keys.toSeq.sorted.map(b => s"$root/$dir/$BucketCol=$b"): _*),
         statsCols, bloomCols, BucketedSnapshotTable.BloomFpp, onlyMissing)
@@ -1321,12 +1041,12 @@ final class BucketedSnapshotTable(
       // next ANALYZE … INCREMENTAL — absent sidecars keep all files, the
       // standing superset guarantee.
       val cur = currentVersion(spark).getOrElse(cur0)
-      val entries = readEntries(spark, cur)
+      val mc = manifestAt(spark, cur)
       lockH.check()
       // metadata-only commit: same entries, same contentV (no content
       // changed — the CDF must not re-read anything), header now carries
       // statsCols so path-only consumers (SQL DML routing) see them
-      writeManifest(spark, cur + 1, entries, txnsOf(spark, cur))
+      writeManifest(spark, cur + 1, mc, mc.buckets, mc.txns)
       cur + 1
     }
   }
@@ -1345,8 +1065,8 @@ final class BucketedSnapshotTable(
     * content) or the newer merge's bytes. Returns the committed version. */
   def compact(spark: SparkSession, clusterBy: Seq[String] = Nil): Int = {
     val v0 = currentVersion(spark).getOrElse(0)
-    val m0 = if (v0 == 0) Map.empty[Int, BucketEntry] else readEntries(spark, v0)
-    fromManifest(spark, m0.map { case (b, e) => b -> e.dir }, None).fold(v0) { df =>
+    val m0 = manifestAt(spark, v0)
+    fromManifest(spark, m0.bucketDirs, None).fold(v0) { df =>
       // clusterBy: sort WITHIN each bucket's file so parquet row-group
       // min/max become selective on those columns (the bucket layout is
       // the file-level index; this is the row-group-level one). No CHECK
@@ -1358,41 +1078,20 @@ final class BucketedSnapshotTable(
       // (compaction is content-preserving), so a change-feed window
       // spanning this commit still prunes them as unchanged
       lockedCommit(spark, staged, None) { (mCur, _) =>
-        Some(m0.collect { case (b, e) if mCur.get(b).contains(e) => b -> e.contentV })
+        Some(m0.buckets.collect { case (b, e) if mCur.get(b).contains(e) => b -> e.contentV })
       }.flatten.get
     }
   }
 
-  /** Delete batch dirs unreachable from the newest `keepVersions`
-    * manifests (retention window for [[readVersion]] time travel: KEEP 1
-    * = live only, KEEP n keeps the last n versions readable). Manifests
-    * themselves persist (metadata-sized) — a reaped version raises the
-    * "was vacuumed" travel error. Also clears `_staging_*` orphans from
-    * crashed writers — do not run vacuum concurrently with active writers
-    * (the standard vacuum contract). */
-  def vacuum(spark: SparkSession, keepVersions: Int = 1): Unit = {
-    require(keepVersions >= 1, "vacuum must keep at least the live version")
-    val f = fs(spark)
-    val liveV = currentVersion(spark).getOrElse(return)
-    val retained = f.listStatus(new Path(root)).map(_.getPath.getName)
-      .filter(_.matches("_manifest_v\\d+"))
-      .map(_.stripPrefix("_manifest_v").toInt)
-      .filter(_ <= liveV).sorted.takeRight(keepVersions)
-    val reachable = retained.flatMap(v => readManifest(spark, v).values).toSet
-    val it = f.listStatus(new Path(root)).iterator
-    while (it.hasNext) {
-      val st = it.next()
-      val name = st.getPath.getName
-      if ((name.startsWith("_batch_v") && !reachable.contains(name)) ||
-          name.startsWith("_staging_"))
-        f.delete(st.getPath, true)
-    }
-    // reaped batch dirs make cached listings for old versions stale — drop
-    // them (the unreadable-version guard in readIndexed already rejects
-    // vacuumed versions, this keeps the cache from pinning FileStatus
-    // objects of deleted files)
-    BucketedSnapshotTable.invalidateListings(root)
-  }
+  /** VACUUM ([[VersionedTable.vacuumKeeping]]): KEEP 1 = live only, KEEP
+    * n keeps the last n versions readable; a vacuumed version raises the
+    * travel error. Also clears `_staging_*` orphans from crashed writers —
+    * do not run vacuum concurrently with active writers (the standard
+    * vacuum contract). */
+  def vacuum(spark: SparkSession, keepVersions: Int = 1): Unit = vacuumKeeping(spark, keepVersions)
+
+  protected def reapable(f: org.apache.hadoop.fs.FileSystem,
+      staging: org.apache.hadoop.fs.FileStatus): Boolean = true
 }
 
 object BucketedSnapshotTable {
@@ -1479,7 +1178,7 @@ object BucketedSnapshotTable {
     * version (and its manifest) the batch was computed from, FILE schema
     * DDL (None = no data files). */
   private[tables] final case class StagedBatch(dir: String, v0: Int,
-      m0: Map[Int, BucketEntry], schema: Option[String])
+      m0: Manifest, schema: Option[String])
 
   /** Did a bucket's CONTENT change between two manifest entries? Normally
     * a contentV comparison, with one guard: the legacy 2-field-manifest
@@ -1834,38 +1533,6 @@ object BucketedSnapshotTable {
     }
   }
 
-  /** Merge one CDF window (a [[ChangeFeed]]-shaped relation whose changes
-    * were derived at source version `toV`) into `target` with the
-    * exactly-once ledger stamp — the shared apply step of every
-    * `applyChangesTo` (bucketed OR plain source): deletes flow as
-    * tombstones, `__cdf_seq` = the source version orders windows. */
-  def applyFeed(spark: SparkSession, target: BucketedSnapshotTable,
-      feed: DataFrame, toV: Int, consumerId: String): Unit = {
-    val upd = feed
-      .withColumn(ScdMerge.DeletedCol, col("_change_type") === "delete")
-      .drop("_change_type")
-      .withColumn("__cdf_seq", lit(toV.toLong))
-    target.scd1Merge(spark, upd, "__cdf_seq", Nil,
-      applyAsDeletes = Some(col(ScdMerge.DeletedCol)),
-      txn = Some((s"cdf:$consumerId", toV.toLong)))
-  }
-
-  /** Advance `checkpointFile` to the target ledger's committed progress
-    * when the ledger outran it (the consumer crashed after its merge
-    * landed but before the checkpoint advanced) — resuming from the stale
-    * checkpoint would not just be wasteful but WRONG on an ABA schedule
-    * (a key changed in the crashed window and reverted before the retry
-    * diffs as unchanged over the stale window). */
-  private[tables] def healCheckpoint(f: org.apache.hadoop.fs.FileSystem,
-      checkpointFile: String, target: BucketedSnapshotTable,
-      consumerId: String): Unit = {
-    val spark = SparkSession.active
-    val ckPath = new Path(checkpointFile)
-    val applied = target.appliedTxn(spark, s"cdf:$consumerId").getOrElse(0L).toInt
-    val ckV = MetaIO.read(f, ckPath).map(_.trim.toInt).getOrElse(0)
-    if (applied > ckV) MetaIO.replace(f, ckPath, applied.toString)
-  }
-
   /** Identity of a bucketed table as recorded in its manifest header:
     * bucket count, bucket keys (absent on pre-r7 manifests that did not
     * record them), and stats columns (absent when the table carries no
@@ -1873,35 +1540,20 @@ object BucketedSnapshotTable {
   final case class Layout(numBuckets: Int, keys: Option[Seq[String]],
       statsCols: Seq[String], bloomCols: Seq[String] = Nil)
 
-  /** Probe `root` for a bucketed-table layout: Some(layout) when the
-    * newest `_manifest_v<N>` exists — the path-only table detection the
-    * SQL DML router uses. The header is parsed as key=value pairs; a
+  /** Probe `root` for a bucketed-table layout: Some(layout) when its LIVE
+    * manifest is a bucketed one — the path-only table detection the SQL
+    * DML router uses; None for an empty root or a plain table. A
     * manifest whose `numBuckets` is missing or non-numeric fails with a
     * descriptive error (truncated/corrupt manifest) instead of a bare
     * NumberFormatException. */
-  def layoutOf(spark: SparkSession, root: String): Option[Layout] = {
-    val p = new Path(root)
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(p)) return None
-    val manifests = f.listStatus(p).map(_.getPath.getName)
-      .filter(_.matches("_manifest_v\\d+"))
-    if (manifests.isEmpty) return None
-    val newest = manifests.maxBy(_.stripPrefix("_manifest_v").toInt)
-    val in = f.open(new Path(p, newest))
-    val lines =
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector
-      finally in.close()
-    val header = lines.takeWhile(l => l.contains("=") && !l.contains("\t"))
-      .map { l => val Array(k, v) = l.split("=", 2); k.trim -> v.trim }.toMap
-    def csv(s: String): Seq[String] =
-      s.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val nb = header.get("numBuckets").flatMap(_.toIntOption).filter(_ > 0)
-      .getOrElse(throw new IllegalStateException(
-        s"BucketedSnapshotTable $root: manifest $newest has no parseable " +
-          s"numBuckets header (headers: ${header.keys.toSeq.sorted.mkString(",")}) " +
-          "— truncated or corrupt manifest"))
-    Some(Layout(nb, header.get("keys").map(csv),
-      header.get("statsCols").map(csv).getOrElse(Nil),
-      header.get("bloomCols").map(csv).getOrElse(Nil)))
-  }
+  def layoutOf(spark: SparkSession, root: String): Option[Layout] =
+    Manifest.live(new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration), root)
+      .filterNot(_.plain).map { m =>
+        val nb = m.get("numBuckets").flatMap(_.trim.toIntOption).filter(_ > 0)
+          .getOrElse(throw new IllegalStateException(
+            s"BucketedSnapshotTable $root: the manifest of version ${m.version} has no " +
+              s"parseable numBuckets header (headers: ${m.header.map(_._1).sorted.mkString(",")}) " +
+              "— truncated or corrupt manifest"))
+        Layout(nb, m.get("keys").map(Manifest.csv), m.list("statsCols"), m.list("bloomCols"))
+      }
 }

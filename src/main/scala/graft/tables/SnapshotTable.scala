@@ -1,6 +1,7 @@
 package graft.tables
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import graft.cdc.ScdMerge
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Versioned parquet table with an atomic current-version pointer — the
@@ -11,11 +12,16 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * {{{
   *   root/_v1/part-*.parquet      // immutable data dirs
   *   root/_v1/_stats, _v1/_bloom/ // each dir's own index ([[DirIndex]])
-  *   root/_v2/part-*.parquet
-  *   root/_files_v3               // a version's exact data files (see below)
-  *   root/_tomb_v3/part-*.parquet // key tombstones pending against _v3
+  *   root/_tomb_v3/part-*.parquet // the keys deleted at version 3
+  *   root/<manifest of v3>        // version 3: its data dirs, files, tombstone dirs
   *   root/_current                // one line: the live version number
   * }}}
+  * A version is exactly what its [[Manifest]] lists: data dirs read whole,
+  * single files where [[optimizeCompact]] kept part of a dir, and the
+  * tombstone dirs that apply. Entries are references, so an append, a
+  * delete or a compaction commits O(its own data) IO — older dirs are
+  * re-referenced, never copied — without breaking immutability or time
+  * travel (the Delta OPTIMIZE shape).
   *
   * Commit protocol — ONE path, `commitNext`: every writer ([[writeIf]],
   * [[appendTxn]], [[deleteKeysVersioned]], [[optimizeCompact]]) stages its
@@ -23,23 +29,16 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * critical section guarded by the `_lock` file (atomic create-if-absent,
   * stale-steal after a timeout) — re-reads the pointer, claims `_v(N+1)`
   * (a crashed writer's leftovers for it are removed), moves the staged
-  * data (its index built inside the staging dir, before the lock) and the
-  * version's file list and tombstones into place, and flips `_current`
-  * through [[MetaIO.replace]]. Readers resolve the pointer first, so they
-  * only ever see complete snapshots; concurrent writers serialize on the
+  * data (its index built inside the staging dir, before the lock) into
+  * place, writes the version's manifest and flips `_current` through
+  * [[MetaIO.replace]]. Readers resolve the pointer first, so they only
+  * ever see complete snapshots; concurrent writers serialize on the
   * metadata-sized critical section only (data writes overlap freely).
   * [[writeIf]] adds read-modify-write conflict DETECTION on top: a merge
   * job that read version N commits with `expected = N` and aborts cleanly
   * if someone else advanced the table meanwhile — optimistic concurrency,
   * the same contract Delta gives MERGE (the reference is one daily job,
   * spotify_dab.job.yml:7-11, but a shared 100 TB table is not).
-  *
-  * A version may carry a `_files_v<N>` manifest (one absolute file URI per
-  * line): then the snapshot's data is EXACTLY those files, which may live
-  * in OLDER versions' directories. [[optimizeCompact]] uses this to commit
-  * a compaction that rewrites only the small files and re-references the
-  * big ones — O(small files) IO, the Delta OPTIMIZE shape — without
-  * breaking immutability or time travel.
   *
   * Scale note: snapshots are plain parquet dirs, so a 1000-executor read
   * is an ordinary `FileSourceScanExec` with pushdown/pruning; `write` can
@@ -54,63 +53,34 @@ object SnapshotTable {
   private[graft] val lastDiffMode =
     new java.util.concurrent.atomic.AtomicReference[String]("")
 
-  /** `spark.read.parquet(dir)` for one of a table's own `_`-named dirs
+  /** `spark.read.parquet(dirs)` for a table's own `_`-named dirs
     * (`_v<N>`, `_tomb_v<N>`, `_staging_*`). Spark counts a `_` name as
     * hidden and logs "All paths were ignored" on every read that names
     * one, so the relation is resolved without that existence/hidden-name
-    * pass (the caller knows the dir exists). Listing, schema and hive
+    * pass (the caller knows the dirs exist). Listing, schema and hive
     * partition inference are those of the plain read. */
-  private[tables] def readDir(spark: SparkSession, dir: String): DataFrame =
+  private[tables] def readDir(spark: SparkSession, dirs: String*): DataFrame =
     spark.baseRelationToDataFrame(
       org.apache.spark.sql.execution.datasources.DataSource(spark, "parquet",
-        paths = Seq(dir)).resolveRelation(checkFilesExist = false))
+        paths = dirs).resolveRelation(checkFilesExist = false))
 
   /** Bloom false-positive rate of a plain table's index. */
   val BloomFpp = 0.03
 }
 
-final class SnapshotTable(val root: String,
-    commitStaleMs: Long = CommitLock.StaleMs) {
+final class SnapshotTable(root: String,
+    commitStaleMs: Long = CommitLock.StaleMs) extends VersionedTable(root, commitStaleMs) {
   import SnapshotTable.readDir
 
   // (SQL forms of the maintenance entry points — OPTIMIZE / VACUUM /
   // DESCRIBE HISTORY — live in graft.sql.GraftSqlParser, injected by
   // graft.GraftExtensions.)
 
-  private def fs(spark: SparkSession) =
-    new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  protected def kind = "SnapshotTable"
 
-  private val pointer = new Path(root, "_current")
-
-  /** Lock-free: [[MetaIO.readPointer]] rides out a concurrent flip and
-    * adopts a crashed one's tmp. */
-  def currentVersion(spark: SparkSession): Option[Int] =
-    MetaIO.readPointer(fs(spark), pointer)
-
-  def exists(spark: SparkSession): Boolean = currentVersion(spark).isDefined
-
-  private def liveVersion(spark: SparkSession): Int = currentVersion(spark).getOrElse(
-    throw new IllegalStateException(s"SnapshotTable $root has no committed version"))
-
-  private def filesPath(v: Int) = new Path(root, s"_files_v$v")
   private def dataDir(v: Int) = new Path(root, s"_v$v")
 
-  /** Everything a version carries beside its `_v<N>` dir. */
-  private def sidecars(v: Int) = Seq(filesPath(v), tombPath(v))
-
-  /** The version's data file URIs when it carries a `_files_v<N>` manifest
-    * (a compacted version referencing a mix of its own and older files);
-    * None for plain directory-backed versions. */
-  private def fileManifest(f: FileSystem, v: Int): Option[Vector[String]] = {
-    val p = filesPath(v)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .map(_.trim).filter(_.nonEmpty).toVector)
-      finally in.close()
-    }
-  }
+  private def entriesAt(spark: SparkSession, v: Int): Manifest.Plain = manifestAt(spark, v).entries
 
   /** Recursive parquet listing via per-directory `listStatus` — NOT
     * `FileSystem.listFiles(recursive)`, whose local implementation stats
@@ -132,92 +102,58 @@ final class SnapshotTable(val root: String,
     buf.result()
   }
 
-  /** The data file URIs of version `v` — manifest-resolved when present,
-    * else a walk of the version dir — with no per-file metadata call. */
-  private def dataFiles(f: FileSystem, v: Int): Vector[String] =
-    fileManifest(f, v).getOrElse(walkParquet(f, dataDir(v)).map(_.getPath.toUri.toString))
+  /** Every data file of a version: one walk per data dir (keeping the
+    * listing's own [[FileStatus]] objects — a partition-aware consumer
+    * needs them, since escaped `k=v` values do not survive a `Path →
+    * uri-string → Path` round trip) plus the single files, whose length
+    * the manifest records, so no file costs a metadata call. */
+  private def fileStatuses(f: FileSystem, e: Manifest.Plain): Vector[FileStatus] =
+    e.dirs.toVector.flatMap(d => walkParquet(f, new Path(root, d))) ++
+      e.files.map { case (u, len) => new FileStatus(len, false, 1, 128L << 20, 0L, new Path(u)) }
 
-  /** (uri, bytes) of every data file of version `v` — manifest-resolved
-    * when present, else a recursive listing of the version dir (partition
-    * subdirs included). */
-  private def listDataFiles(f: FileSystem, v: Int): Vector[(String, Long)] =
-    fileManifest(f, v) match {
-      case Some(uris) => uris.map(u => u -> f.getFileStatus(new Path(u)).getLen)
-      case None =>
-        walkParquet(f, dataDir(v))
-          .map(st => st.getPath.toUri.toString -> st.getLen)
+  /** The canonical URIs of a version's data files. */
+  private def dataFiles(f: FileSystem, e: Manifest.Plain): Vector[String] =
+    fileStatuses(f, e).map(uriOf)
+
+  /** The version's relation before tombstones: one read per data dir (its
+    * own partition inference) and one per group of single files (with
+    * their dir as `basePath`, so `k=v` segments — the only place a
+    * partitioned write stores those columns — are not lost), unioned by
+    * name oldest dir first. A one-dir version is the dir's plain read. */
+  private def dataDF(spark: SparkSession, e: Manifest.Plain): DataFrame =
+    if (e.files.isEmpty && e.dirs.size == 1) readDir(spark, s"$root/${e.dirs.head}")
+    else unionEvolving((e.dirs.map(d => dirNum(d) -> readDir(spark, s"$root/$d")) ++
+      filesByDir(spark, e.files.map(_._1))).sortBy(_._1).map(_._2))
+
+  /** Read an explicit file list, grouped by the version dir holding each
+    * file and read with that dir as `basePath` (Spark's ordinary typed
+    * partition inference per group), in dir order. */
+  private def filesByDir(spark: SparkSession, uris: Seq[String]): Seq[(Int, DataFrame)] =
+    uris.groupBy(versionDirOf).toSeq.map { case (v, us) =>
+      v -> spark.read.option("basePath", s"$root/_v$v").parquet(us: _*)
     }
 
-  /** [[listDataFiles]] keeping the listing's own [[FileStatus]] objects —
-    * what a path-sensitive consumer (the partition-aware index, whose
-    * `k=v` values may contain Spark-escaped characters that do NOT survive
-    * a `Path → uri-string → Path` round trip) must use. Manifest versions
-    * pay the same one-getFileStatus-per-file the (uri, len) listing
-    * already pays. */
-  private def listDataFileStatuses(f: FileSystem, v: Int): Vector[FileStatus] =
-    fileManifest(f, v) match {
-      case Some(uris) => uris.map(u => f.getFileStatus(new Path(u)))
-      case None => walkParquet(f, dataDir(v))
-    }
-
-  /** The version's snapshot relation, before tombstones: the dir for plain
-    * versions, the exact manifest file list for compacted ones. */
-  private def snapshotDF(spark: SparkSession, v: Int): DataFrame =
-    fileManifest(fs(spark), v) match {
-      case Some(uris) => readManifest(spark, uris)
-      case None       => readDir(spark, s"$root/_v$v")
-    }
-
-  /** Read an explicit manifest file list WITHOUT losing hive partition
-    * values: a bare `spark.read.parquet(files)` has no `basePath`, so
-    * `k=v` directory segments (the only place a partitioned write stores
-    * those columns) would silently come back null. Files are therefore
-    * grouped by the version dir that physically holds them and each group
-    * is read with that dir as `basePath` — Spark then runs its ordinary
-    * partition inference per group, typed exactly like a plain directory
-    * read. Groups are cast-aligned by name to the first group's schema
-    * (guards against per-dir inference drift, e.g. int vs long) and
-    * unioned. */
-  private def readManifest(spark: SparkSession, uris: Vector[String]): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val byDir = uris.groupBy(versionDirOf).toSeq.sortBy(_._1)
-    val parts = byDir.map { case (v, us) =>
-      spark.read.option("basePath", s"$root/_v$v").parquet(us: _*)
-    }
-    // UNION schema across groups (a schema-evolving append mixes old files
-    // lacking the new columns with new files carrying them): first-seen
-    // type wins, absent columns null-fill — the Delta mergeSchema read.
-    val allCols = scala.collection.mutable.LinkedHashMap
-      .empty[String, org.apache.spark.sql.types.DataType]
-    parts.foreach(_.schema.foreach(f =>
-      if (!allCols.contains(f.name)) allCols(f.name) = f.dataType))
-    parts.map { p =>
-      p.select(allCols.toSeq.map { case (n, dt) =>
-        if (p.columns.contains(n)) col(n).cast(dt).as(n)
-        else lit(null).cast(dt).as(n)
-      }: _*)
-    }.reduce(_ unionByName _)
-  }
+  private def readFiles(spark: SparkSession, uris: Seq[String]): DataFrame =
+    unionEvolving(filesByDir(spark, uris).sortBy(_._1).map(_._2))
 
   private def versionDirOf(uri: String): Int =
-    dirNum(uri).getOrElse(throw new IllegalStateException(
-      s"SnapshotTable $root: manifest file outside any version dir: $uri"))
+    dirNum(Manifest.dirOf(uri).getOrElse(throw new IllegalStateException(
+      s"SnapshotTable $root: data file outside any version dir: $uri")))
 
-  /** The `_v<N>` dir a data file lives in (its innermost such segment). */
-  private def dirNum(uri: String): Option[Int] =
-    uri.split('/').reverseIterator.find(_.matches("_v\\d+")).map(_.drop(2).toInt)
+  private def dirNum(dir: String): Int = dir.stripPrefix("_v").toInt
 
-  /** The data dirs holding version `v`'s files, oldest first (no listing). */
-  private def dataDirs(f: FileSystem, v: Int): Seq[Path] =
-    fileManifest(f, v).fold(Seq(v))(_.flatMap(dirNum).distinct.sorted).map(dataDir)
+  /** The data dirs a version reads, oldest first (no listing). */
+  private def dataDirs(e: Manifest.Plain): Seq[Path] =
+    (e.dirs ++ e.files.flatMap(u => Manifest.dirOf(u._1))).distinct.sortBy(dirNum)
+      .map(new Path(root, _))
 
-  /** Hive partition column names of version `v` (in directory order), from
-    * the `k=v` path segments of its data files; empty when the version's
-    * files are flat. A manifest version mixes partitioned old files with
-    * flat increments, so the first file with segments decides. */
-  private def partitionColsOf(f: FileSystem, v: Int): Seq[String] =
-    dataFiles(f, v).iterator.map { uri =>
-      val segs = new Path(uri).toUri.getPath.split('/')
+  /** Hive partition column names of a version (in directory order), from
+    * the `k=v` path segments of its data files; empty when its files are
+    * flat. A version may mix partitioned old files with flat compacted
+    * output, so the first file with segments decides. */
+  private def partitionColsOf(files: Seq[FileStatus]): Seq[String] =
+    files.iterator.map { st =>
+      val segs = st.getPath.toUri.getPath.split('/')
       val vIdx = segs.lastIndexWhere(_.matches("_v\\d+"))
       segs.slice(vIdx + 1, segs.length - 1).toSeq
         .filter(_.contains('=')).map(_.takeWhile(_ != '='))
@@ -227,12 +163,13 @@ final class SnapshotTable(val root: String,
     * rewrite DML (SQL UPDATE) carry the table's physical layout forward
     * through a copy-on-write commit. */
   def partitionColumns(spark: SparkSession): Seq[String] =
-    currentVersion(spark).map(partitionColsOf(fs(spark), _)).getOrElse(Nil)
+    currentVersion(spark).map(v => partitionColsOf(fileStatuses(fs(spark), entriesAt(spark, v))))
+      .getOrElse(Nil)
 
   /** The (stats, Bloom) columns indexing every data dir of the live version. */
   def indexColumns(spark: SparkSession): (Seq[String], Seq[String]) =
     currentVersion(spark).fold((Seq.empty[String], Seq.empty[String]))(v =>
-      DirIndex.recorded(fs(spark), dataDirs(fs(spark), v)))
+      DirIndex.recorded(fs(spark), dataDirs(entriesAt(spark, v))))
 
   /** ANALYZE: index every data dir of the live version over `statsCols` /
     * `bloomCols`, no data rewritten, no version committed, no lock held
@@ -242,62 +179,25 @@ final class SnapshotTable(val root: String,
   def analyze(spark: SparkSession, statsCols: Seq[String], bloomCols: Seq[String],
       onlyMissing: Boolean = false): Unit = {
     val f = fs(spark)
-    val v = liveVersion(spark)
-    dataDirs(f, v).foreach(d => DirIndex.backfill(f, d, readDir(spark, d.toString),
-      statsCols, bloomCols, SnapshotTable.BloomFpp, onlyMissing))
+    dataDirs(entriesAt(spark, liveVersion(spark))).foreach(d => DirIndex.backfill(f, d,
+      readDir(spark, d.toString), statsCols, bloomCols, SnapshotTable.BloomFpp, onlyMissing))
   }
 
-  def read(spark: SparkSession): DataFrame = {
-    val v = liveVersion(spark)
-    applyTombstones(spark, v, snapshotDF(spark, v))
-  }
+  /** A version's visible rows: its data minus its tombstones. */
+  private def visible(spark: SparkSession, e: Manifest.Plain): DataFrame =
+    applyTombstones(spark, e, dataDF(spark, e))
+
+  def read(spark: SparkSession): DataFrame = visible(spark, entriesAt(spark, liveVersion(spark)))
 
   def readOption(spark: SparkSession): Option[DataFrame] =
-    currentVersion(spark).map(v => applyTombstones(spark, v, snapshotDF(spark, v)))
+    currentVersion(spark).map(v => visible(spark, entriesAt(spark, v)))
 
-  /** Time travel: read a specific committed version (any snapshot dir not
-    * yet vacuumed), minus that version's own tombstones. The live pointer
-    * is untouched. */
+  /** Time travel: read a specific committed version not yet vacuumed,
+    * minus that version's own tombstones. The live pointer is untouched. */
   def readVersion(spark: SparkSession, version: Int): DataFrame = {
-    requireVersion(fs(spark), version)
-    applyTombstones(spark, version, snapshotDF(spark, version))
+    requireVersion(spark, version)
+    visible(spark, entriesAt(spark, version))
   }
-
-  /** Vacuumed (or never committed) versions are unreadable. */
-  private def missing(f: FileSystem, v: Int) = f.exists(new Path(root, s"_gone_v$v")) ||
-    (!f.exists(dataDir(v)) && !f.exists(filesPath(v)))
-
-  private def requireVersion(f: FileSystem, v: Int): Unit = if (missing(f, v))
-    throw new IllegalArgumentException(
-      s"SnapshotTable $root: version $v does not exist (vacuumed or never committed)")
-
-  /** Timestamp time travel (Delta `TIMESTAMP AS OF` analog): the newest
-    * version committed at or before `tsMillis`, by the commit artifact's
-    * filesystem mtime — `_files_v<N>` (written inside the commit critical
-    * section) when present, else the `_v<N>` snapshot dir (claimed by the
-    * commit rename). Raises if every retained version is newer. */
-  def versionAt(spark: SparkSession, tsMillis: Long): Int = {
-    val f = fs(spark)
-    val byName = f.listStatus(new Path(root)).map(s => s.getPath.getName -> s).toMap
-    // manifest-only versions (a versioned delete references the prior
-    // files without a _v dir) count like any other
-    val versions = byName.keys
-      .collect { case n if n.matches("_(v|files_v)\\d+") => n.dropWhile(!_.isDigit).toInt }
-      .toSet
-      .filterNot(v => byName.contains(s"_gone_v$v"))
-    val eligible = versions.filter { v =>
-      val art = byName.get(s"_files_v$v").orElse(byName.get(s"_v$v"))
-      art.exists(_.getModificationTime <= tsMillis)
-    }
-    if (eligible.isEmpty) throw new IllegalArgumentException(
-      s"SnapshotTable $root: no version committed at or before " +
-        s"${java.time.Instant.ofEpochMilli(tsMillis)} (earliest retained is newer)")
-    eligible.max
-  }
-
-  /** [[readVersion]] at the newest version committed ≤ `tsMillis`. */
-  def readTimestamp(spark: SparkSession, tsMillis: Long): DataFrame =
-    readVersion(spark, versionAt(spark, tsMillis))
 
   // ── Row-level deletes via key tombstones (deletion-vector analog) ──────
   //
@@ -313,42 +213,34 @@ final class SnapshotTable(val root: String,
 
   private def tombPath(v: Int) = new Path(root, s"_tomb_v$v")
 
-  /** Row delete — commit a NEW version whose data files are the live
-    * version's BY REFERENCE (`_files_v`, zero data IO; their dirs keep
-    * their index) and whose tombstone set adds `keys` (anti-join on all of
+  /** Row delete — commit a NEW version whose data entries are the live
+    * version's BY REFERENCE (zero data IO; their dirs keep their index)
+    * and whose tombstone dirs add one holding `keys` (anti-join on all of
     * `keys`' columns, matched by name): the delete becomes an EVENT
     * between two versions, so time travel to the prior version still
     * shows the rows and a CDF window spanning the commit reports them as
     * `delete`s through the tombstone-delta diff. Re-deleting a key hides
-    * nothing new. O(deleted + accumulated tombstones) IO. Returns the
-    * committed version. */
+    * nothing new. O(deleted) IO. Returns the committed version. */
   def deleteKeysVersioned(spark: SparkSession, keys: DataFrame): Int = {
     val f = fs(spark)
     liveVersion(spark) // an empty table has no rows to delete
     val staging = stage(f, keys.dropDuplicates())
-    commitNext(spark, staging, None) { (cur, next) =>
-      StatsManifest.writeLines(f, filesPath(next),
-        dataFiles(f, cur).map(canonical))
-      carryTombstones(f, cur, next)
-      f.mkdirs(tombPath(next))
-      f.listStatus(staging).filter(_.getPath.getName.endsWith(".parquet"))
-        .foreach { st =>
-          if (!f.rename(st.getPath, new Path(tombPath(next), st.getPath.getName)))
-            throw new IllegalStateException(
-              s"SnapshotTable $root: tombstone batch move failed")
-        }
-      f.delete(staging, true)
+    val bytes = walkParquet(f, staging).map(_.getLen).sum
+    commitNext(spark, staging, None) { (m, next) =>
+      if (!f.rename(staging, tombPath(next)))
+        throw new IllegalStateException(s"SnapshotTable $root: tombstone batch move failed")
+      m.entries.copy(tombs = m.entries.tombs :+ (tombPath(next).getName -> bytes))
     }
   }
 
-  private def applyTombstones(spark: SparkSession, v: Int, df: DataFrame): DataFrame = {
-    val p = tombPath(v)
-    if (!fs(spark).exists(p)) df
+  /** `df` minus the rows of every tombstone dir `e` lists (one relation
+    * over all of them, so the anti join stays one broadcast). */
+  private def applyTombstones(spark: SparkSession, e: Manifest.Plain, df: DataFrame): DataFrame =
+    if (e.tombs.isEmpty) df
     else {
-      val tombs = readDir(spark, p.toString)
+      val tombs = readDir(spark, e.tombs.map(t => s"$root/${t._1}"): _*)
       df.join(tombs, tombs.columns.toSeq, "left_anti")
     }
-  }
 
   /** Commit `df` as the next full snapshot and atomically advance the
     * pointer. Returns the committed version.
@@ -391,14 +283,9 @@ final class SnapshotTable(val root: String,
             else checked.repartitionByRange(cols: _*))
         .sortWithinPartitions(cols: _*)
     val staging = stageData(spark, prepared, partitionByCols, statsCols, bloomCols, bloomFpp)
-    commitNext(spark, staging, expected)((_, next) => install(fs(spark), staging, next))
+    commitNext(spark, staging, expected)((_, next) =>
+      Manifest.Plain(Seq(install(fs(spark), staging, next)), Nil, Nil))
   }
-
-  /** Test-only fault injection (no-op in production): invoked at the
-    * named steps of [[commitNext]] ("claimed", "carried", "mid_flip",
-    * "committed") so the crash-matrix spec can kill a writer between any
-    * two of them. */
-  private[tables] var onStep: String => Unit = _ => ()
 
   /** Write `df` to a fresh `_staging_*` dir — the expensive distributed
     * half of a commit, run with NO lock held (concurrent writers overlap
@@ -425,29 +312,32 @@ final class SnapshotTable(val root: String,
     val f = fs(spark)
     stage(f, df, partitionBy, staging => {
       val cols = DirIndex.effective(statsCols, bloomCols,
-        DirIndex.recorded(f, currentVersion(spark).toSeq.flatMap(dataDirs(f, _))))
+        DirIndex.recorded(f, currentVersion(spark).toSeq.flatMap(v => dataDirs(entriesAt(spark, v)))))
       if ((cols._1.nonEmpty || cols._2.nonEmpty) && walkParquet(f, staging).nonEmpty)
         DirIndex.build(f, staging, readDir(spark, staging.toString), cols, bloomFpp)
     })
   }
 
-  /** The one commit critical section of this format. Under the commit
-    * lock: re-read the pointer (`cur`; a `replayed` batch drops `staging`
-    * and returns it); check `expected` (moved: raise
-    * ConcurrentModificationException, the caller re-reads and retries);
-    * claim `next = cur + 1` — a `_v<next>`, its sidecars and any
-    * `_txn_*_v<next>` marker are a crashed writer's (the pointer proves
-    * it) and must not attach to this commit; `carry(cur, next)` moves the
-    * staged data and the version's sidecars into place; flip the pointer,
-    * the commit point. The paused-holder guard runs before the first
-    * destructive step and again right before the flip; `staging` never
-    * outlives a failure. */
+  /** The one commit critical section of this format, at the named steps
+    * "claimed", "carried", "mid_flip" and "committed" ([[onStep]]). Under
+    * the commit lock: re-read the pointer (`cur`) and its manifest; a
+    * `txn` batch its ledger already records drops `staging` and returns
+    * `cur`; check `expected` (moved: raise ConcurrentModificationException,
+    * the caller re-reads and retries); claim `next = cur + 1` — a `_v<next>`
+    * or `_tomb_v<next>` is a crashed writer's (the pointer proves it) and
+    * goes, and its `next` manifest is overwritten, so its ledger never
+    * attaches; `carry(manifest, next)` moves the staged data into place and
+    * names the new version's entries; write the manifest (ledger carried
+    * forward plus `txn`); flip the pointer, the commit point. The
+    * paused-holder guard runs before the first destructive step and again
+    * right before the flip; `staging` never outlives a failure. */
   private def commitNext(spark: SparkSession, staging: Path, expected: Option[Int],
-      replayed: => Boolean = false)(carry: (Int, Int) => Unit): Int = {
+      txn: Option[(String, Long)] = None)(carry: (Manifest, Int) => Manifest.Plain): Int = {
     val f = fs(spark)
     try withCommitLock(f) { lockH =>
       val cur = currentVersion(spark).getOrElse(0)
-      if (replayed) { f.delete(staging, true); cur }
+      val m = manifestAt(spark, cur)
+      if (m.applied(txn)) { f.delete(staging, true); cur }
       else {
         expected.filter(_ != cur).foreach { e =>
           throw new java.util.ConcurrentModificationException(
@@ -456,14 +346,10 @@ final class SnapshotTable(val root: String,
         }
         val next = cur + 1
         lockH.check()
-        (dataDir(next) +: sidecars(next))
-          .foreach(p => if (f.exists(p)) f.delete(p, true))
-        f.listStatus(new Path(root)).foreach { st =>
-          val n = st.getPath.getName
-          if (n.startsWith("_txn_") && n.endsWith(s"_v$next")) f.delete(st.getPath, false)
-        }
+        Seq(dataDir(next), tombPath(next)).foreach(p => if (f.exists(p)) f.delete(p, true))
         onStep("claimed")
-        carry(cur, next)
+        val e = carry(m, next)
+        Manifest.write(f, root, next, "format=plain" +: Manifest.txnLines(m.txns ++ txn), e.lines)
         onStep("carried")
         lockH.check()
         MetaIO.replace(f, pointer, next.toString, () => onStep("mid_flip"))
@@ -477,19 +363,13 @@ final class SnapshotTable(val root: String,
     CommitLock.withLockHandle(f, root, commitStaleMs)(body)
 
   /** Carry step: the staged snapshot becomes the `_v<next>` dir, its
-    * index re-pointed at it. */
-  private def install(f: FileSystem, staging: Path, next: Int): Unit = {
+    * index re-pointed at it. Returns the dir's name. */
+  private def install(f: FileSystem, staging: Path, next: Int): String = {
     if (!f.rename(staging, dataDir(next)))
       throw new IllegalStateException(s"SnapshotTable $root: staging rename failed")
     DirIndex.repoint(f, dataDir(next), staging.getName)
+    dataDir(next).getName
   }
-
-  /** Carry step: version `from`'s pending tombstones ride to `next` — COPY,
-    * not move: `from`'s time-travel read still needs its own
-    * (O(deleted keys) bytes). */
-  private def carryTombstones(f: FileSystem, from: Int, next: Int): Unit =
-    if (f.exists(tombPath(from)))
-      FileUtil.copy(f, tombPath(from), f, tombPath(next), false, f.getConf)
 
   /** Compact the live snapshot into `targetFiles` output files (small-file
     * remediation after many incremental commits) — a new version is
@@ -501,13 +381,12 @@ final class SnapshotTable(val root: String,
     write(spark, read(spark).repartition(targetFiles))
 
   /** O(increment) append commit: write ONLY `df`'s rows and commit a new
-    * version whose `_files_v<N>` manifest is the live file list plus the
-    * increment — the 100 TB daily-ingest shape ([[write]]'s full-snapshot
+    * version whose manifest is the live one's entries plus the increment's
+    * dir — the 100 TB daily-ingest shape ([[write]]'s full-snapshot
     * rewrite is right for restatements, ruinous for a 10-row late batch).
-    * Pending tombstones carry forward (copied, so the prior version's
-    * time-travel read keeps its own); only the increment's dir is indexed.
-    * Schema must match the live snapshot (enforced by name: the increment
-    * is aligned to the live column order). */
+    * Pending tombstones carry forward by reference; only the increment's
+    * dir is indexed. Schema must match the live snapshot (enforced by
+    * name: the increment is aligned to the live column order). */
   def append(spark: SparkSession, df: DataFrame): Int =
     appendTxn(spark, df, None)
 
@@ -522,13 +401,16 @@ final class SnapshotTable(val root: String,
     appendTxn(spark, df, None, mergeSchema = true)
 
   /** [[append]] with Delta-style transaction idempotence: `txn = (appId,
-    * batchId)` records the high-water batch per application in the commit
-    * critical section, and a batch at or below the recorded watermark is a
-    * clean NO-OP. Streaming `foreachBatch` is at-least-once on retry;
-    * routing its writes through here makes the table end-to-end
+    * batchId)` records the high-water batch per application in the new
+    * version's manifest ledger, and a batch at or below the recorded
+    * watermark is a clean NO-OP. Streaming `foreachBatch` is at-least-once
+    * on retry; routing its writes through here makes the table end-to-end
     * exactly-once (the streaming sink contract Delta implements with
-    * `txnAppId`/`txnVersion`). An empty table bootstraps from the first
-    * append. */
+    * `txnAppId`/`txnVersion`). The ledger is part of the atomic commit: a
+    * writer that dies before its flip leaves an uncommitted manifest whose
+    * ledger no reader consults (the retry re-appends), and one that dies
+    * after it left the batch recorded (the retry no-ops). An empty table
+    * bootstraps from the first append. */
   def appendTxn(spark: SparkSession, df: DataFrame, txn: Option[(String, Long)],
       mergeSchema: Boolean = false): Int = {
     // A blind append NEVER logically conflicts (Delta's rule: concurrent
@@ -559,112 +441,41 @@ final class SnapshotTable(val root: String,
       spark: SparkSession, df: DataFrame, txn: Option[(String, Long)],
       mergeSchema: Boolean = false): Int = {
     val f = fs(spark)
-    def applied = txn.exists { case (app, batch) => lastTxn(spark, app).exists(_ >= batch) }
+    val v0 = currentVersion(spark).getOrElse(0)
+    val m0 = manifestAt(spark, v0)
+    val e0 = m0.entries
     // fast-path skip outside the lock (authoritative re-check inside)
-    if (applied) return currentVersion(spark).getOrElse(0)
-    val v0 = currentVersion(spark)
+    if (m0.applied(txn)) return v0
     val checked = enforceConstraints(spark, df)
-    val aligned = v0 match {
-      case Some(v) if !mergeSchema =>
-        val liveCols = snapshotDF(spark, v).columns
+    val aligned =
+      if (v0 == 0 || mergeSchema) checked // mergeSchema: files keep their own
+        // schema; the manifest read resolves to the union by name
+      else {
+        val liveCols = dataDF(spark, e0).columns
         require(df.columns.toSet == liveCols.toSet,
           s"append schema mismatch: table has ${liveCols.mkString(",")}, " +
             s"increment has ${df.columns.mkString(",")} " +
             "(use appendEvolving for Delta-mergeSchema semantics)")
         checked.select(liveCols.map(org.apache.spark.sql.functions.col).toSeq: _*)
-      case _ => checked // mergeSchema: files keep their own schema; the
-                        // manifest read resolves to the union by name
-    }
+      }
     // keep the live table's hive partitioning on the increment, so the
     // appended files' partition values live in their paths exactly like
     // the base version's and manifest reads reattach them uniformly
-    val partCols = v0.map(partitionColsOf(f, _)).getOrElse(Nil)
+    val partCols = partitionColsOf(fileStatuses(f, e0))
     require(partCols.forall(df.columns.contains),
       s"append increment must carry the table's partition columns ${partCols.mkString(",")}")
     val staging = stageData(spark, aligned, partCols)
-    var appended = false
-    val committed = commitNext(spark, staging, Some(v0.getOrElse(0)), replayed = applied) {
-      (cur, next) =>
-        install(f, staging, next)
-        val prior = v0.map(dataFiles(f, _)).getOrElse(Vector.empty)
-        val added = dataFiles(f, next)
-        StatsManifest.writeLines(f, filesPath(next), (prior ++ added).map(canonical))
-        carryTombstones(f, cur, next)
-        // The txn watermark is part of the atomic commit: the marker names
-        // the version it rides on and is written BEFORE the pointer flip,
-        // and lastTxn only honors markers whose version is <= the committed
-        // pointer. A crash after the marker but before the flip therefore
-        // reads as "batch not committed" (the retry re-appends — correct;
-        // the next commit's claim removes the marker), and a crash after
-        // the flip reads as committed (the retry no-ops) — no window where
-        // a committed batch is unrecorded.
-        txn.foreach { case (app, batch) => recordTxn(f, app, batch, next) }
-        appended = true
-    }
-    if (appended) txn.foreach { case (app, _) => pruneTxnMarkers(f, app, committed) }
-    committed
-  }
-
-  private def txnPrefix(appId: String) =
-    "_txn_" + appId.map(c =>
-      if (c.isLetterOrDigit || c == '.' || c == '-' || c == '_') c else '_')
-
-  /** All (version, batch) txn markers recorded for `appId` (committed or
-    * not — the caller filters by the live pointer). */
-  private def txnMarkers(f: FileSystem, appId: String): Seq[(Int, Long)] = {
-    val pre = txnPrefix(appId) + "_v"
-    if (!f.exists(new Path(root))) return Nil
-    f.listStatus(new Path(root)).toSeq.flatMap { st =>
-      val n = st.getPath.getName
-      val rest = if (n.startsWith(pre)) n.drop(pre.length) else ""
-      if (rest.nonEmpty && rest.forall(_.isDigit)) {
-        // a marker can vanish between list and open (another process's
-        // pruneTxnMarkers) — a vanished marker is simply not a marker
-        MetaIO.read(f, st.getPath, attempts = 4)
-          .map(b => rest.toInt -> b.trim.toLong).toSeq
-      } else Nil
+    // an empty partitioned increment writes no file: nothing to reference
+    val hasData = walkParquet(f, staging).nonEmpty
+    commitNext(spark, staging, Some(v0), txn) { (m, next) =>
+      val dir = install(f, staging, next)
+      m.entries.copy(dirs = m.entries.dirs ++ Some(dir).filter(_ => hasData))
     }
   }
 
-  /** The highest batch id COMMITTED for `appId`: markers are per-version
-    * (`_txn_<app>_v<N>`) and only count once the pointer has reached their
-    * version — a marker from a writer that crashed before its flip is
-    * correctly invisible. */
-  def lastTxn(spark: SparkSession, appId: String): Option[Long] = {
-    val cur = currentVersion(spark).getOrElse(return None)
-    val committed = txnMarkers(fs(spark), appId).collect { case (v, b) if v <= cur => b }
-    if (committed.isEmpty) None else Some(committed.max)
-  }
+  /** The highest batch id committed for `appId` (the live ledger's entry). */
+  def lastTxn(spark: SparkSession, appId: String): Option[Long] = appliedTxn(spark, appId)
 
-  private def recordTxn(f: FileSystem, appId: String,
-      batch: Long, version: Int): Unit =
-    MetaIO.replace(f, new Path(root, s"${txnPrefix(appId)}_v$version"), batch.toString)
-
-  /** Keep only the newest committed marker per app (the skip check needs
-    * just the high-water batch); runs after a successful flip, so a crash
-    * here merely leaves harmless extra markers. */
-  private def pruneTxnMarkers(f: FileSystem, appId: String, keepV: Int): Unit =
-    txnMarkers(f, appId).collect { case (v, _) if v < keepV => v }.foreach { v =>
-      f.delete(new Path(root, s"${txnPrefix(appId)}_v$v"), false)
-    }
-
-  /** Delta `OPTIMIZE`-shape compaction: bin-pack only the files smaller
-    * than `targetBytes` into ~`targetBytes` outputs and commit a new
-    * version whose `_files_v<N>` manifest references the rewritten files
-    * PLUS the untouched big ones in place — IO is O(small files), never
-    * O(table), which is the difference between a nightly maintenance job
-    * and an impossible one at 100 TB. The rewrite is a shuffle-free
-    * `coalesce` (tasks merge input splits; nothing repartitions).
-    * Pending tombstones carry forward unmaterialized (reads keep
-    * anti-joining them — key-based, so doubly-applied is a no-op); kept
-    * files keep their dirs' index, and only the rewritten output is
-    * indexed, over the columns the live version records. Returns the new
-    * version, or the current one when fewer than 2 files qualify.
-    *
-    * `clusterBy`: range-repartition the REWRITTEN subset on these columns
-    * (a shuffle of the small files only — the big ones never move), so
-    * packed files carry disjoint value ranges and their stats stay
-    * selective; default is a shuffle-free coalesce. */
   /** Z-ORDER rewrite (`OPTIMIZE … ZORDER BY`): recommit the VISIBLE table
     * range-partitioned and sorted by the interleaved z-value of
     * `zorderBy`, sized to `targetBytes` per file, indexed over (recorded
@@ -678,7 +489,8 @@ final class SnapshotTable(val root: String,
       targetBytes: Long = 128L << 20, bits: Int = 8): Int = {
     val f = fs(spark)
     val v = liveVersion(spark)
-    val bytes = listDataFiles(f, v).map(_._2).sum
+    val e = entriesAt(spark, v)
+    val bytes = fileStatuses(f, e).map(_.getLen).sum
     val nOut = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
     val df = read(spark)
     // expected-version commit: a writer landing between the read and the
@@ -686,21 +498,42 @@ final class SnapshotTable(val root: String,
     // contract as optimizeCompact) — an unguarded write would silently
     // revert that writer's rows to version v's content
     writeSnapshot(spark, Zorder.shape(df, zorderBy, nOut, bits), Some(v), Nil, Nil, 0,
-      statsCols = (DirIndex.recorded(f, dataDirs(f, v))._1 ++ zorderBy).distinct)
+      statsCols = (DirIndex.recorded(f, dataDirs(e))._1 ++ zorderBy).distinct)
   }
 
+  /** Delta `OPTIMIZE`-shape compaction: bin-pack only the files smaller
+    * than `targetBytes` into ~`targetBytes` outputs and commit a new
+    * version that references the packed dir PLUS the untouched big files
+    * in place — a dir with no small file stays one entry, a dir partly
+    * rewritten keeps its big files as single-file entries. IO is O(small
+    * files), never O(table), which is the difference between a nightly
+    * maintenance job and an impossible one at 100 TB. The rewrite is a
+    * shuffle-free `coalesce` (tasks merge input splits; nothing
+    * repartitions). Pending tombstones carry forward unmaterialized (reads
+    * keep anti-joining them — key-based, so doubly-applied is a no-op);
+    * kept files keep their dirs' index, and only the rewritten output is
+    * indexed, over the columns the live version records. Returns the new
+    * version, or the current one when fewer than 2 files qualify.
+    *
+    * `clusterBy`: range-repartition the REWRITTEN subset on these columns
+    * (a shuffle of the small files only — the big ones never move), so
+    * packed files carry disjoint value ranges and their stats stay
+    * selective; default is a shuffle-free coalesce. */
   def optimizeCompact(spark: SparkSession, targetBytes: Long = 128L << 20,
       clusterBy: Seq[String] = Nil): Int = {
     val f = fs(spark)
     val v = liveVersion(spark)
-    val files = listDataFiles(f, v)
-    val (small, kept) = files.partition(_._2 < targetBytes)
-    if (small.size < 2) return v
-    val nOut = math.max(1, math.ceil(small.map(_._2).sum.toDouble / targetBytes).toInt)
+    val e = entriesAt(spark, v)
+    val perDir = e.dirs.map(d => d -> walkParquet(f, new Path(root, d)))
+    def small(len: Long) = len < targetBytes
+    val smalls = perDir.flatMap(_._2).filter(st => small(st.getLen)).map(st => uriOf(st) -> st.getLen) ++
+      e.files.filter(x => small(x._2))
+    if (smalls.size < 2) return v
+    val nOut = math.max(1, math.ceil(smalls.map(_._2).sum.toDouble / targetBytes).toInt)
     // partition-aware read: hive partition values of the small files ride
     // along as ordinary columns and are MATERIALIZED into the packed
     // output (flat files), so no value is lost when their dirs vacuum away
-    val smallDf = readManifest(spark, small.map(_._1).map(canonical))
+    val smallDf = readFiles(spark, smalls.map(_._1))
     val packed =
       if (clusterBy.isEmpty) smallDf.coalesce(nOut)
       else {
@@ -709,12 +542,15 @@ final class SnapshotTable(val root: String,
       }
     val staging = stageData(spark, packed)
     commitNext(spark, staging, Some(v)) { (_, next) =>
-      install(f, staging, next)
-      StatsManifest.writeLines(f, filesPath(next),
-        (kept.map(_._1) ++ dataFiles(f, next)).map(canonical))
-      carryTombstones(f, v, next)
+      val (whole, split) = perDir.partition(!_._2.exists(st => small(st.getLen)))
+      Manifest.Plain(whole.map(_._1) :+ install(f, staging, next),
+        split.flatMap(_._2.filterNot(st => small(st.getLen)).map(st => uriOf(st) -> st.getLen)) ++
+          e.files.filterNot(x => small(x._2)),
+        e.tombs)
     }
   }
+
+  private def uriOf(st: FileStatus): String = canonical(st.getPath.toUri.toString)
 
   /** One canonical spelling for a file URI: `input_file_name()` yields
     * `file:///x` while Hadoop listings yield `file:/x` (null vs empty
@@ -741,47 +577,6 @@ final class SnapshotTable(val root: String,
   // dates as epoch days), strings as truncated prefixes. Pair with
   // `clusterBy` on the same column so file ranges are disjoint and pruning
   // is maximally selective.
-
-  // ── CHECK constraints (ALTER TABLE … ADD CONSTRAINT analog) ───────────
-  // Stored by [[Constraints]]; enforced INLINE in every write path via
-  // assert_true inside a filter (one pass, fused into the staging write's
-  // plan — no second scan of the batch, and a filter condition cannot be
-  // pruned away like a dropped projection could).
-
-  /** Active constraints, name → SQL predicate. */
-  def constraints(spark: SparkSession): Map[String, String] =
-    Constraints.read(fs(spark), root)
-
-  /** Add a CHECK constraint. Delta semantics: the EXISTING snapshot is
-    * validated first (one distributed count of violations — rejecting the
-    * constraint, not the data, if any row already breaks it), then the
-    * constraint persists and every subsequent write/append/merge batch is
-    * checked inline. DDL serializes under the commit lock. */
-  def addConstraint(spark: SparkSession, name: String, predicate: String): Unit = {
-    val f = fs(spark)
-    withCommitLock(f) { _ =>
-      Constraints.add(f, root, name, predicate)(readOption(spark).fold(0L)(
-        _.filter(!org.apache.spark.sql.functions.expr(predicate)).count()))
-    }
-  }
-
-  /** Drop a CHECK constraint (no-op if absent). */
-  def dropConstraint(spark: SparkSession, name: String): Unit = {
-    val f = fs(spark)
-    withCommitLock(f)(_ => Constraints.drop(f, root, name))
-  }
-
-  /** Wrap `df` so scanning it raises CONSTRAINT_VIOLATION on the first
-    * row breaking any active CHECK — fused into the write that consumes
-    * it. NULL predicate results count as violations (CHECK must prove the
-    * row, unknown does not pass — Delta's rule for NOT NULL via CHECK). */
-  private def enforceConstraints(spark: SparkSession, df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.{assert_true, coalesce, expr, lit}
-    constraints(spark).foldLeft(df) { case (d, (name, pred)) =>
-      d.filter(assert_true(coalesce(expr(pred), lit(false)),
-        lit(s"CONSTRAINT_VIOLATION: CHECK $name ($pred) failed")).isNull)
-    }
-  }
 
   /** [[write]] + per-file min/max stats over `statsCols` (format and
     * string-truncation rules in [[StatsManifest]]). */
@@ -829,30 +624,25 @@ final class SnapshotTable(val root: String,
     * read. `version` = time travel. */
   def readIndexed(spark: SparkSession, version: Option[Int] = None): DataFrame = {
     val f = fs(spark)
-    val v = version.getOrElse(liveVersion(spark))
-    def fallback = version.map(readVersion(spark, _)).getOrElse(read(spark))
-    requireVersion(f, v)
-    val partCols = partitionColsOf(f, v)
+    version.foreach(requireVersion(spark, _))
+    val e = entriesAt(spark, version.getOrElse(liveVersion(spark)))
+    def fallback = visible(spark, e)
+    // the statuses of single files come from the manifest's lengths — no
+    // getFileStatus per file (mtime/block metadata are unused by the
+    // parquet split planner)
+    val files = fileStatuses(f, e)
+    val partCols = partitionColsOf(files)
     if (partCols.nonEmpty)
-      return readIndexedPartitioned(spark, f, v, partCols).getOrElse(fallback)
-    val files = listDataFiles(f, v)
+      return readIndexedPartitioned(spark, f, e, files, partCols).getOrElse(fallback)
     if (files.isEmpty) return fallback
-    val uris = files.map(_._1)
-    // build the statuses from the (uri, len) listing — listDataFiles
-    // already paid one metadata call per file; a second getFileStatus
-    // round per file would double the planning RPCs on an object store
-    // (mtime/block metadata are unused by the parquet split planner)
-    val statuses = files.map { case (u, len) =>
-      new FileStatus(len, false, 1, 128L << 20, 0L, new Path(u))
-    }
+    val uris = files.map(_.getPath.toString)
     // one representative per version dir (files of one write job share a
     // schema); bail to the union-cast read on a type conflict
     val reps = uris.groupBy(versionDirOf).toSeq.sortBy(_._1).map(_._2.head)
     PruningFileIndex.unionSchema(spark, reps) match {
       case None => fallback
       case Some(schema) =>
-        val base = PruningFileIndex.relation(spark, statuses, schema, keepFor(f, uris))
-        applyTombstones(spark, v, base)
+        applyTombstones(spark, e, PruningFileIndex.relation(spark, files, schema, keepFor(f, uris)))
     }
   }
 
@@ -873,13 +663,9 @@ final class SnapshotTable(val root: String,
     * cross-dir type conflict, when a flat increment LACKS a partition
     * column, or when a directory value does not parse as the flat side's
     * declared type. */
-  private def readIndexedPartitioned(spark: SparkSession, f: FileSystem, v: Int,
-      partCols: Seq[String]): Option[DataFrame] = {
+  private def readIndexedPartitioned(spark: SparkSession, f: FileSystem, e: Manifest.Plain,
+      files: Vector[FileStatus], partCols: Seq[String]): Option[DataFrame] = {
     import org.apache.spark.sql.types.{DataType, DateType, DoubleType, IntegerType, LongType, StringType, StructField, StructType}
-    // the listing's OWN FileStatus objects — escaped partition values
-    // ("cat 0" → "cat%200") do not survive a Path→string→Path round trip
-    val files = listDataFileStatuses(f, v)
-    if (files.isEmpty) return None
     val parsed: Vector[(FileStatus, Option[Seq[String]])] =
       files.map { st =>
         val segs = st.getPath.toUri.getPath.split('/')
@@ -946,7 +732,7 @@ final class SnapshotTable(val root: String,
             hiveDf.unionByName(
               PruningFileIndex.relation(spark, flat, fsch, keepFor(f, flat.map(_.getPath.toString))))
         }
-        Some(applyTombstones(spark, v, combined))
+        Some(applyTombstones(spark, e, combined))
       case _ => None
     }
   }
@@ -959,8 +745,8 @@ final class SnapshotTable(val root: String,
     val (nB, sB, pS) = BucketedSnapshotTable.extractBounds(
       preds.reduce(org.apache.spark.sql.catalyst.expressions.And))
     if (nB.isEmpty && sB.isEmpty && pS.isEmpty) (_: String) => true
-    else DirIndex.keep(f, files.flatMap(dirNum).distinct.map(n => n -> dataDir(n)),
-      dirNum, nB, sB, pS)
+    else DirIndex.keep(f, files.flatMap(Manifest.dirOf).distinct.map(d => d -> new Path(root, d)),
+      Manifest.dirOf, nB, sB, pS)
   }
 
   /** Metadata-only: of the live version's data files, how many survive
@@ -971,13 +757,13 @@ final class SnapshotTable(val root: String,
     * stats/Bloom keep runs on the survivors. */
   def pruneStats(spark: SparkSession, pred: org.apache.spark.sql.Column): (Int, Int) = {
     val f = fs(spark)
-    val v = liveVersion(spark)
     // status-based listing: its decoded paths are what [[partitionKeep]]
     // keys by (escaped partition values break the uri-string round trip)
-    val all = listDataFileStatuses(f, v).map(_.getPath.toUri.getPath)
+    val files = fileStatuses(f, entriesAt(spark, liveVersion(spark)))
+    val all = files.map(_.getPath.toUri.getPath)
     val expr = org.apache.spark.sql.GraftColumnBridge.catalystExpression(pred)
     val k = keepFor(f, all)(Seq(expr))
-    val pk = partitionKeep(spark, f, v, expr)
+    val pk = partitionKeep(spark, files, expr)
     (all.count(p => pk(p) && k(p)), all.size)
   }
 
@@ -987,11 +773,10 @@ final class SnapshotTable(val root: String,
     * Keep-all whenever the version is flat, any file lacks the segments,
     * no conjunct is partition-only, or evaluation fails — superset
     * guarantee, same contract as the sidecar keep. */
-  private def partitionKeep(spark: SparkSession, f: FileSystem,
-      v: Int, expr: org.apache.spark.sql.catalyst.expressions.Expression)
-      : String => Boolean = {
+  private def partitionKeep(spark: SparkSession, files: Vector[FileStatus],
+      expr: org.apache.spark.sql.catalyst.expressions.Expression): String => Boolean = {
     val keepAll = (_: String) => true
-    val partCols = partitionColsOf(f, v)
+    val partCols = partitionColsOf(files)
     if (partCols.isEmpty) return keepAll
     def refs(e: org.apache.spark.sql.catalyst.expressions.Expression): Seq[String] =
       e.collect {
@@ -1013,7 +798,7 @@ final class SnapshotTable(val root: String,
     }
     if (partOnly.isEmpty) return keepAll
     scala.util.Try {
-      val parsed = listDataFileStatuses(f, v).map { st =>
+      val parsed = files.map { st =>
         val norm = st.getPath.toUri.getPath
         val segs = norm.split('/')
         val vIdx = segs.lastIndexWhere(_.matches("_v\\d+"))
@@ -1123,7 +908,7 @@ final class SnapshotTable(val root: String,
     * approximate: [[ChangeFeed.diff]] emits only changed keys, and under
     * the unique-key contract a key's row lives in exactly one file, so a
     * key whose file is shared contributes no feed row either way. On an
-    * append-mostly dim (`_files_v<N>` manifests reference prior files), a
+    * append-mostly dim (each version re-references the prior dirs), a
     * mirror window's diff cost is O(appended files), not O(dim) — the
     * plain-format analog of the bucketed manifest pruning. A window whose
     * tombstone set GREW (a delete landed) adds exactly the newly-hidden
@@ -1139,46 +924,40 @@ final class SnapshotTable(val root: String,
       SnapshotTable.lastDiffMode.set("full")
       (readVersion(spark, fromV), readVersion(spark, toV))
     }
+    requireVersion(spark, fromV)
+    requireVersion(spark, toV)
+    val eFrom = entriesAt(spark, fromV)
+    val eTo = entriesAt(spark, toV)
     // tombstones flip row visibility without touching file bytes — BUT
-    // [[append]] carries the prior version's tombstone batch forward by
-    // file copy and a new delete only ADDS fresh part files, so the
-    // from-side's tombstone files are normally a SUBSET of the to-side's
-    // (name+length). Identical sets → the plain pruned diff; a GROWN set →
-    // the tombstone-delta diff below (the only changes shared files can
-    // contribute are rows the window's NEW tombstones hid); anything else
-    // (a compaction materialized deletes and dropped the dir) → full diff.
-    def tombSig(v: Int): Set[(String, Long)] =
-      if (!f.exists(tombPath(v))) Set.empty
-      else f.listStatus(tombPath(v)).filter(_.getPath.getName.endsWith(".parquet"))
-        .map(st => (st.getPath.getName, st.getLen)).toSet
-    val tFrom = tombSig(fromV)
-    val tTo = tombSig(toV)
-    if (!tFrom.subsetOf(tTo)) return full
-    // cheap existence guards first — a vacuumed or never-committed version
-    // must surface readVersion's named error, not a raw listing failure
-    if (missing(f, fromV) || missing(f, toV)) return full
-    val oldFiles = dataFiles(f, fromV)
-    val newFiles = dataFiles(f, toV)
+    // every commit carries the prior version's tombstone dirs forward by
+    // reference and a new delete only ADDS a dir, so the from-side's
+    // tombstone dirs are normally a SUBSET of the to-side's. Identical sets
+    // → the plain pruned diff; a GROWN set → the tombstone-delta diff below
+    // (the only changes shared files can contribute are rows the window's
+    // NEW tombstones hid); anything else (a compaction materialized
+    // deletes and dropped them) → full diff.
+    if (!eFrom.tombs.toSet.subsetOf(eTo.tombs.toSet)) return full
+    val oldFiles = dataFiles(f, eFrom)
+    val newFiles = dataFiles(f, eTo)
     val shared = oldFiles.toSet intersect newFiles.toSet
     if (shared.isEmpty) return full
-    def side(uris: Vector[String], v: Int): DataFrame = {
+    def side(uris: Vector[String], e: Manifest.Plain): DataFrame = {
       val base =
         if (uris.isEmpty)
           // schema-correct TRULY empty relation (not a limit(0) over the
           // snapshot scan, which would still schedule the shared files)
           spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            snapshotDF(spark, v).schema)
-        else readManifest(spark, uris)
-      applyTombstones(spark, v, base)
+            dataDF(spark, e).schema)
+        else readFiles(spark, uris)
+      applyTombstones(spark, e, base)
     }
-    val fromSide = side(oldFiles.filterNot(shared.contains).toVector, fromV)
-    val toSide = side(newFiles.filterNot(shared.contains).toVector, toV)
-    val newTombs0 = (tTo -- tFrom).toSeq
+    val fromSide = side(oldFiles.filterNot(shared.contains), eFrom)
+    val toSide = side(newFiles.filterNot(shared.contains), eTo)
+    val newTombs0 = eTo.tombs.filterNot(eFrom.tombs.contains)
     // the delta path BROADCASTS the new tombstone batch — a mass delete
-    // (file-size metadata says so, no scan) takes the full diff instead
+    // (the manifest's byte counts say so, no scan) takes the full diff
     if (newTombs0.map(_._2).sum > (64L << 20)) return full
-    val newTombFiles = newTombs0.map(_._1).sorted
-    if (newTombFiles.isEmpty) {
+    if (newTombs0.isEmpty) {
       SnapshotTable.lastDiffMode.set("pruned")
       (fromSide, toSide)
     } else {
@@ -1191,77 +970,41 @@ final class SnapshotTable(val root: String,
       // downstream stays O(changed) instead of O(two snapshots) — the
       // pre-r10 cost of any delete-carrying mirror window.
       SnapshotTable.lastDiffMode.set("tombstone-delta")
-      val newTombs = spark.read
-        .parquet(newTombFiles.map(n => s"${tombPath(toV)}/$n"): _*)
-        .dropDuplicates()
-      val sharedRel = readManifest(spark, shared.toVector.sorted)
-      val hidden = applyTombstones(spark, fromV, sharedRel)
+      val newTombs = readDir(spark, newTombs0.map(t => s"$root/${t._1}"): _*).dropDuplicates()
+      val hidden = applyTombstones(spark, eFrom, readFiles(spark, shared.toVector.sorted))
         .join(org.apache.spark.sql.functions.broadcast(newTombs),
           newTombs.columns.toSeq, "left_semi")
       (fromSide.unionByName(hidden, allowMissingColumns = true), toSide)
     }
   }
 
-  /** Incremental CDF consumption for PLAIN roots — parity with
-    * [[BucketedSnapshotTable.consumeChangesVersioned]]: one diff covering
-    * everything committed since the consumer's checkpoint (over VISIBLE
-    * rows — SCD tombstone state filtered, same contract as the bucketed
-    * feed), checkpoint advanced only after `fn` returns. Windows between
-    * versions that SHARE data files (append-mostly dims, whose
-    * `_files_v<N>` manifests reference prior files) diff only the
-    * files unique to each side — O(appended data) per window
-    * ([[diffInputs]]); full-rewrite or tombstone-carrying windows fall
-    * back to the honest two-full-snapshot diff. First call = full
-    * bootstrap (every visible row as `insert`). */
+  /** Incremental CDF consumption for PLAIN roots ([[VersionedTable.consume]]):
+    * one diff covering everything committed since the consumer's
+    * checkpoint, over VISIBLE rows (SCD tombstone state filtered, the
+    * bucketed feed's contract). Windows between versions that SHARE data
+    * files (append-mostly dims) diff only the files unique to each side —
+    * O(appended data) per window ([[diffInputs]]); full-rewrite windows
+    * fall back to the honest two-full-snapshot diff. */
   def consumeChangesVersioned(spark: SparkSession, keys: Seq[String],
       checkpointFile: String, withChangedColumns: Boolean = false)
-      (fn: (DataFrame, Int, Int) => Unit): Int = {
-    import org.apache.spark.sql.functions.lit
-    val f = fs(spark)
-    val ckPath = new Path(checkpointFile)
-    val live = currentVersion(spark).getOrElse(
-      throw new IllegalStateException(s"SnapshotTable $root is empty"))
-    val last = MetaIO.read(f, ckPath).map(_.trim.toInt).getOrElse(0)
-    if (live > last) {
-      val feed =
-        if (last == 0) {
-          val base = graft.cdc.ScdMerge.scd1Current(read(spark))
-            .withColumn("_change_type", lit("insert"))
-          if (withChangedColumns) base.withColumn("_changed_columns", lit(""))
-          else base
-        } else {
-          // file-level pruned on append-mostly dims (see [[diffInputs]]):
-          // scd1Current is a row-local visibility filter, so applying it
-          // to the pruned sides is exact — shared files' rows carry
-          // identical __DELETED flags in both versions
-          val (a, b) = diffInputs(spark, last, live)
-          ChangeFeed.diff(
-            graft.cdc.ScdMerge.scd1Current(a),
-            graft.cdc.ScdMerge.scd1Current(b),
-            keys, withChangedColumns)
-        }
-      fn(feed, last, live)
-      MetaIO.replace(f, ckPath, live.toString)
-    }
-    math.max(live, last)
+      (fn: (DataFrame, Int, Int) => Unit): Int =
+    consume(spark, checkpointFile, withChangedColumns, feed(spark, keys, withChangedColumns))(fn)
+
+  /** The visible-row diff of a window: scd1Current is a row-local
+    * visibility filter, so applying it to the pruned sides is exact —
+    * shared files' rows carry identical __DELETED flags in both versions. */
+  private def feed(spark: SparkSession, keys: Seq[String], withChangedColumns: Boolean)
+      (fromV: Int, toV: Int): DataFrame = {
+    val (a, b) = diffInputs(spark, fromV, toV)
+    ChangeFeed.diff(ScdMerge.scd1Current(a), ScdMerge.scd1Current(b), keys, withChangedColumns)
   }
 
-  /** EXACTLY-ONCE mirror of a plain root into a bucketed serving copy —
-    * the [[BucketedSnapshotTable.applyChangesTo]] loop with a plain
-    * SOURCE (reference dims live in plain snapshots; their mirrors want
-    * the keyed format). Same guarantees, same machinery: the target's txn
-    * ledger is the committed progress marker and heals the checkpoint
-    * across crash windows; deletes flow as tombstones; `__cdf_seq` = the
-    * source version orders windows. Returns the checkpointed version. */
+  /** EXACTLY-ONCE mirror of a plain root into a bucketed serving copy
+    * ([[VersionedTable.applyChanges]]) — reference dims live in plain
+    * snapshots; their mirrors want the keyed format. */
   def applyChangesTo(spark: SparkSession, keys: Seq[String],
-      checkpointFile: String, target: graft.tables.BucketedSnapshotTable,
-      consumerId: String): Int = {
-    BucketedSnapshotTable.healCheckpoint(fs(spark), checkpointFile,
-      target, consumerId)
-    consumeChangesVersioned(spark, keys, checkpointFile) { (feed, _, toV) =>
-      BucketedSnapshotTable.applyFeed(spark, target, feed, toV, consumerId)
-    }
-  }
+      checkpointFile: String, target: BucketedSnapshotTable, consumerId: String): Int =
+    applyChanges(spark, checkpointFile, target, consumerId, feed(spark, keys, withChangedColumns = false))
 
   /** RESTORE (Delta `RESTORE TABLE ... TO VERSION` analog): commit a NEW
     * version whose content is an older version's — history moves forward,
@@ -1270,25 +1013,20 @@ final class SnapshotTable(val root: String,
   def restore(spark: SparkSession, version: Int): Int =
     write(spark, readVersion(spark, version))
 
-  /** DESCRIBE HISTORY analog: one row per retained version — version,
-    * rows, files, bytes, whether tombstones are pending against it, and
-    * whether it is the live one. Driver-side listing of the version dirs
-    * (metadata-only; row counts come from parquet footers via count()). */
+  /** DESCRIBE HISTORY analog: one row per readable version — version,
+    * rows, files, bytes, whether tombstones apply to it, and whether it is
+    * the live one (metadata plus one count() per version). */
   def history(spark: SparkSession): DataFrame = {
     import spark.implicits._
     val f = fs(spark)
     val live = currentVersion(spark).getOrElse(0)
-    val names = f.listStatus(new Path(root)).toSeq.map(_.getPath.getName)
-    val gone = names.filter(_.matches("_gone_v\\d+")).map(_.drop(7).toInt).toSet
-    val versions = names
-      .collect { case n if n.matches("_(v|files_v)\\d+") => n.dropWhile(!_.isDigit).toInt }
-      .distinct.filterNot(gone).sorted
-    versions.map { v =>
-      val files = listDataFiles(f, v)
+    retainedVersions(spark).map { v =>
+      val e = entriesAt(spark, v)
+      val files = fileStatuses(f, e)
       // n_rows = VISIBLE rows of the version (tombstones applied) — what a
       // reader of that version gets, not raw file contents
-      val rows = applyTombstones(spark, v, snapshotDF(spark, v)).count()
-      (v, rows, files.size.toLong, files.map(_._2).sum, f.exists(tombPath(v)), v == live)
+      (v, visible(spark, e).count(), files.size.toLong, files.map(_.getLen).sum,
+        e.tombs.nonEmpty, v == live)
     }.toDF("version", "n_rows", "n_files", "bytes", "has_tombstones", "is_live")
   }
 
@@ -1315,46 +1053,19 @@ final class SnapshotTable(val root: String,
     write(spark, df, partitionByCols, clusterBy)
   }
 
-  /** Drop snapshot dirs older than the `keep` most recent (time travel
-    * window), with their tombstone/file-manifest sidecars and index. Never
-    * touches the live version (`keep >= 1` enforced), and never a dir that
-    * a RETAINED version's file manifest still references (a compacted
-    * version may point into older dirs). */
-  def vacuum(spark: SparkSession, keep: Int = 2): Unit = {
-    require(keep >= 1, s"vacuum keep must be >= 1 (got $keep): keep=0 would delete the live version")
-    val f = fs(spark)
-    currentVersion(spark).foreach { cur =>
-      val referenced: Set[Int] =
-        (math.max(1, cur - keep + 1) to cur).toSet.flatMap { (v: Int) =>
-          fileManifest(f, v).getOrElse(Vector.empty).flatMap(dirNum).toSet
-        }
-      (1 to cur - keep).foreach { v =>
-        val dirs = if (referenced(v)) sidecars(v) else dataDir(v) +: sidecars(v)
-        dirs.foreach { p => if (f.exists(p)) f.delete(p, true) }
-        // a dir kept only because a retained manifest points into it is no
-        // longer a readable VERSION — mark it so history/readVersion skip it
-        if (referenced(v) && f.exists(dataDir(v)))
-          f.create(new Path(root, s"_gone_v$v"), true).close()
-      }
-      // Reap _staging_* orphans from crashed writers (the bucketed table's
-      // rule). Age-gated by commitStaleMs so an ACTIVE writer mid-stage is
-      // never clobbered — and gated on the MAX mtime across the dir tree,
-      // not the root's: Spark writes task files under _staging_*/_temporary
-      // without bumping the staging root's mtime, so a root-mtime gate
-      // would reap a healthy long-running write mid-job. Per-version index
-      // files of the legacy layout (nothing reads them) go too.
-      val now = System.currentTimeMillis()
-      f.listStatus(new Path(root)).foreach { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("_stats_v") || n.startsWith("_bloom_v")) f.delete(st.getPath, true)
-        else if (n.startsWith("_staging_")) {
-          var newest = st.getModificationTime
-          val files = f.listFiles(st.getPath, true)
-          while (files.hasNext) newest = math.max(newest, files.next().getModificationTime)
-          if (now - newest > commitStaleMs) f.delete(st.getPath, true)
-        }
-      }
-    }
+  /** VACUUM ([[VersionedTable.vacuumKeeping]]): keep the `keep` newest
+    * versions readable; dirs only older versions read go. */
+  def vacuum(spark: SparkSession, keep: Int = 2): Unit = vacuumKeeping(spark, keep)
+
+  /** A `_staging_*` orphan of a crashed writer, age-gated by commitStaleMs
+    * so an ACTIVE writer mid-stage is never clobbered — on the MAX mtime
+    * across the dir tree, not the root's: Spark writes task files under
+    * a staging dir's `_temporary` without bumping the staging root's mtime, so a
+    * root-mtime gate would reap a healthy long-running write mid-job. */
+  protected def reapable(f: FileSystem, staging: FileStatus): Boolean = {
+    var newest = staging.getModificationTime
+    val files = f.listFiles(staging.getPath, true)
+    while (files.hasNext) newest = math.max(newest, files.next().getModificationTime)
+    System.currentTimeMillis() - newest > commitStaleMs
   }
 }
-

@@ -363,7 +363,7 @@ object ScaleSoak {
       results("bucketed_bloom_probe_io_reads") = ioReads.toDouble
 
       // r9: plain-dim mirror with FILE-LEVEL window pruning — an
-      // append-mostly dim's `_files_v<N>` manifests share prior files, so
+      // append-mostly dim's version manifests share prior files, so
       // the window diff reads only the appended files: flat in dim size
       // (the pre-r9 cost was two full snapshot reads per window)
       val dim = new graft.tables.SnapshotTable(s"$work/dim")

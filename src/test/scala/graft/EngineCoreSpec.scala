@@ -1103,13 +1103,16 @@ class EngineCoreSpec extends AnyFunSuite {
     t.appendTxn(spark, Seq(1).toDF("x"), Some(("app", 0L))) // v1 committed
     val f = new org.apache.hadoop.fs.Path(t.root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def plant(name: String, batch: Long): Unit = {
-      val out = f.create(new org.apache.hadoop.fs.Path(t.root, name), true)
-      try out.write(batch.toString.getBytes("UTF-8")) finally out.close()
+    // what a writer leaves when it dies after writing version `v`'s
+    // manifest, its ledger carrying `app -> batch`, and before the flip
+    def plant(v: Int, app: String, batch: Long): Unit = {
+      val out = f.create(new org.apache.hadoop.fs.Path(t.root, s"_manifest_v$v"), true)
+      try out.write(s"format=plain\ntxn:$app=$batch\ndir\t_v1".getBytes("UTF-8"))
+      finally out.close()
     }
     // a writer that crashed AFTER recording its marker for v2 but BEFORE
     // the pointer flip: the marker rides an uncommitted version → invisible
-    plant("_txn_app_v2", 1L)
+    plant(2, "app", 1L)
     assert(t.lastTxn(spark, "app").contains(0L), "uncommitted marker must not count")
     // so the retry of batch 1 lands instead of skipping — exactly-once
     assert(t.appendTxn(spark, Seq(2).toDF("x"), Some(("app", 1L))) == 2)
@@ -1117,7 +1120,7 @@ class EngineCoreSpec extends AnyFunSuite {
     assert(t.lastTxn(spark, "app").contains(1L))
     // a DIFFERENT app's orphan marker for the next version must be purged
     // when some other writer claims that version — not spring to life
-    plant("_txn_other_v3", 9L)
+    plant(3, "other", 9L)
     t.append(spark, Seq(3).toDF("x")) // commits v3
     assert(t.lastTxn(spark, "other").isEmpty, "foreign orphan marker must be purged")
     assert(t.appendTxn(spark, Seq(4).toDF("x"), Some(("other", 9L))) == 4) // lands
@@ -1131,7 +1134,8 @@ class EngineCoreSpec extends AnyFunSuite {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // what appendTxn leaves when it dies after recording its marker for v2
     // and before the pointer flip
-    graft.tables.MetaIO.replace(f, new org.apache.hadoop.fs.Path(t.root, "_txn_app_v2"), "7")
+    graft.tables.MetaIO.replace(f, new org.apache.hadoop.fs.Path(t.root, "_manifest_v2"),
+      "format=plain\ntxn:app=7\ndir\t_v1")
     assert(t.deleteKeysVersioned(spark, Seq(1L).toDF("k")) == 2)
     assert(t.lastTxn(spark, "app").isEmpty,
       "the crashed append's marker must not come into force with the delete's commit")

@@ -11,8 +11,8 @@ import graft.tables.SnapshotTable
   * discipline, applied to the table layer): random interleavings of
   * restatement writes, O(increment) appends, key deletes, OPTIMIZE
   * compactions, and restores must keep every committed version's visible
-  * content equal to a trivial in-memory model — across the `_files_v`
-  * manifest, tombstone-carry, and stats-carry machinery the ops compose.
+  * content equal to a trivial in-memory model — across the version
+  * manifest, tombstone-reference, and stats-carry machinery the ops compose.
   */
 class SnapshotTableProps extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark

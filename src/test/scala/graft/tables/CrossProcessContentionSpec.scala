@@ -92,7 +92,7 @@ class CrossProcessContentionSpec extends AnyFunSuite {
     // The child JVM reads in a tight loop (pointer resolve + manifest
     // resolve + full scan + prefix-completeness check) while this JVM
     // interleaves appends with optimizeCompact (the q228 path, which
-    // rewrites small files and re-references the rest via `_files_v<N>`).
+    // rewrites small files and re-references the rest in its manifest).
     // The child exits 0 only if every read saw the seed row, a gapless
     // append prefix, and a never-shrinking row count.
     val work = java.nio.file.Files.createTempDirectory("xprocr").toString

@@ -16,7 +16,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * is retried only after the NEXT step's write, delete or compaction, so
   * its leftover txn marker must not come into force with another
   * writer's commit, and the retried batch lands exactly once. After every
-  * kill, each committed version's index-pruned read equals the model.
+  * kill, each committed version's index-pruned read equals the model,
+  * time travel to now resolves to the pointer's version and the txn
+  * ledger holds the model's high-water batch.
   */
 class SnapshotTableCrashProps extends AnyFunSuite {
   private lazy val spark = graft.SparkTestSession.spark
@@ -164,6 +166,13 @@ class SnapshotTableCrashProps extends AnyFunSuite {
             if (killed) settle(s"$ctx retry", None,
               attempt(None)(t.optimizeCompact(spark, targetBytes = 64 << 10)), live, mayNoop = true)
             retryPending(ctx)
+        }
+        // a kill leaves no trace in time travel or the ledger: TIMESTAMP AS
+        // OF now is the pointer's version, the ledger the model's
+        if (kill.isDefined) {
+          assert(t.versionAt(spark, System.currentTimeMillis()) == version,
+            s"$ctx: time travel to now (script $script)")
+          assert(t.lastTxn(spark, "app") == applied.maxOption, s"$ctx: ledger (script $script)")
         }
       }
       retryPending("end")
